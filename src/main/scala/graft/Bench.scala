@@ -200,15 +200,7 @@ object Bench {
         Seq("sample_loading" -> timed("sample_loading") {
           sampleLoadingPhase(spark, csvDir)
         })
-      } finally {
-        // best-effort temp cleanup; never lose the JSON line over it
-        try {
-          val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(csvDir))
-          try stream.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-          finally stream.close()
-        } catch { case _: Throwable => () }
-      }
+      } finally Tables.deleteRecursively(csvDir) // never throws: keeps the JSON line
 
     // --- Streaming-engine overhead probe (round-13) ---
     // Each of the 14 streaming rows pays micro-batch engine init (query
@@ -574,9 +566,11 @@ object Bench {
     * verdict item 7): the sf1 leg has had a 3×-median trip wire since
     * round 16, but the sf0.1 suite rows — the driver's primary
     * round-over-round comparison — had none, so transient host tilt on a
-    * headline row (e.g. r17's agg_incremental_rollup_streamed reading
-    * 9.7 s in one leg vs 2.68 s quiet, code byte-identical) could only
-    * be adjudicated by re-running by hand. The suite now FLAGS any
+    * row (e.g. r17's agg_incremental_rollup_streamed reading 9.7 s in
+    * one leg vs 2.68 s quiet, code byte-identical) could only be
+    * adjudicated by re-running by hand. The flag covers HEADLINE rows
+    * only — that motivating row is not one, so a recurrence of its tilt
+    * is not flagged. The suite FLAGS any
     * sf0.1 headline row above 3× its archived quiet median
     * (`sf01_row_trips` + quiet-median context in both JSON lines) — a
     * flag only, deliberately no extra rerun machinery: the suite-level

@@ -103,8 +103,7 @@ object Plans {
     import org.apache.spark.sql.functions._
     val spark = t.spark
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_plans_ivf_").toString
-    Tables.deleteRecursivelyOnExit(dir)
+    val dir = Tables.scratchDir("graft_plans_ivf_")
     (0 until 256).map(c => (c, (0 until 64).map(j => math.sin(c * 31 + j * 7) * 10.0)))
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
@@ -121,8 +120,7 @@ object Plans {
     import org.apache.spark.sql.functions._
     val spark = t.spark
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_plans_ivf_h_").toString
-    Tables.deleteRecursivelyOnExit(dir)
+    val dir = Tables.scratchDir("graft_plans_ivf_h_")
     (0 until 256).map(c => (c, (0 until 64).map(j => math.sin(c * 31 + j * 7) * 10.0)))
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")

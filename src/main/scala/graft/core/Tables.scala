@@ -111,11 +111,6 @@ final case class Tables(spark: SparkSession, dir: String) {
     */
   private def balancedByKey(name: String, key: String): DataFrame = {
     val df = t(name)
-    // SPARK_GRAFT_SCAN_REBALANCE=off is the A/B kill switch: it
-    // reproduces the pre-round-17 plans exactly (used for the committed
-    // before/after plan dumps and for isolating the rebalance in perf
-    // triage).
-    if (sys.env.get("SPARK_GRAFT_SCAN_REBALANCE").contains("off")) return df
     val par = spark.sparkContext.defaultParallelism
     // numPartitions passed EXPLICITLY: a bare repartition(col) is
     // AQE-optimizable and the advisory size (64 MB) coalesces a small
@@ -148,8 +143,10 @@ object Tables {
 
   /** Generation stamp of a fixture file (or directory of part-files):
     * max mtime, total bytes and file count mixed into one long; 0 when
-    * unreadable. Cache keys that include it survive the driver
-    * regenerating fixtures in-place under a running JVM — the round-8
+    * unreadable, with a stderr warning (every generation of an
+    * unreadable fixture shares that one cache key). Cache keys that
+    * include it survive the driver regenerating fixtures in-place
+    * under a running JVM — the round-8
     * events.ts NANOS→MICROS drift happened exactly that way, and a cache
     * keyed on the path alone would keep serving the stale physical
     * encoding until a restart. Byte size and file count are folded in
@@ -171,20 +168,13 @@ object Tables {
         }
         mtime ^ (bytes * 0x9E3779B97F4A7C15L) ^ java.lang.Long.rotateLeft(n, 32)
       } finally stream.close()
-    } catch { case _: Throwable => 0L }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[graft] fixtureStamp: cannot stamp $path ($e); " +
+          "using generation 0")
+        0L
+    }
 
-  /** getOrElseUpdate keyed on (dir, CURRENT generation stamp of
-    * `dir/fixture`), evicting other generations of the same dir on sight
-    * — the shared contract behind `EventStream.tsTypeCache`,
-    * `DedupStream.docSchemaCache` and `DedupOps.pairGraphs` (the latter
-    * keeps a wider key for session identity and threshold, so it inlines
-    * the same eviction rule rather than calling here).
-    */
-  /** Best-effort recursive delete for evicted derivation dirs (temp
-    * parquet the per-generation caches materialized); IO failures are
-    * swallowed — a leaked dir is the pre-fix status quo, never an error
-    * — but fatal VM errors and interrupts propagate.
-    */
   /** Sorted non-recursive listing of a LOCAL directory's parquet data
     * files — the shared helper for staging/feed temp dirs the engine
     * itself just wrote (WAP staging, CDC feed publication), so the
@@ -202,15 +192,24 @@ object Tables {
     } finally stream.close()
   }
 
-  /** Best-effort recursive delete of `path` at JVM exit — the cleanup
-    * every per-generation temp index/feed dir registers so repeated runs
-    * can't strand directories under /tmp (round-13 advice). Idempotent
-    * with [[cachedPathPerGeneration]]'s evict-with-delete: a dir already
-    * removed by eviction makes the hook a no-op.
+  /** A fresh local temp directory named `prefix…`, deleted recursively
+    * at JVM exit — the one way engine code takes scratch space, so
+    * repeated runs can't strand directories under the temp root
+    * (round-13 advice). The exit hook is idempotent with
+    * [[cachedPathPerGeneration]]'s evict-with-delete: a dir already
+    * removed by eviction makes it a no-op.
     */
-  def deleteRecursivelyOnExit(path: String): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(path)))
+  def scratchDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(dir)))
+    dir
+  }
 
+  /** Best-effort recursive delete of a local path; a missing path is a
+    * no-op. An IO failure never throws — a leaked dir is never an
+    * error — but it warns once on stderr with the path; fatal VM errors
+    * and interrupts propagate.
+    */
   def deleteRecursively(path: String): Unit =
     try {
       val root = java.nio.file.Paths.get(path)
@@ -220,7 +219,10 @@ object Tables {
           .forEach(p => java.nio.file.Files.deleteIfExists(p))
         finally stream.close()
       }
-    } catch { case scala.util.control.NonFatal(_) => () }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[graft] could not delete $path: $e")
+    }
 
   /** [[cachedPerGeneration]] for values that ARE on-disk paths: evicting
     * a stale generation also DELETES its materialized directory, so a
@@ -250,6 +252,13 @@ object Tables {
     }
   }
 
+  /** getOrElseUpdate keyed on (dir, CURRENT generation stamp of
+    * `dir/fixture`), evicting other generations of the same dir on sight
+    * — the shared contract behind `EventStream.tsTypeCache`,
+    * `DedupStream.docSchemaCache` and `DedupOps.pairGraphs` (the latter
+    * keeps a wider key for session identity and threshold, so it inlines
+    * the same eviction rule rather than calling here).
+    */
   def cachedPerGeneration[V](
       cache: scala.collection.concurrent.TrieMap[(String, Long), V],
       dir: String, fixture: String)(compute: => V): V = {

@@ -52,9 +52,9 @@ object TextFunctions {
     * padding nulls exactly the last n−1 slots, and `array_distinct` of a
     * non-empty array is non-empty), so "any shingle survives" is
     * precisely "at least n whitespace tokens" — one `split` at the scan
-    * instead of the full shingle/hash chain. Null text: `size(tokens)`
-    * is null, the comparison is null, the row drops — identical to
-    * `size(null shingle array) > 0`.
+    * instead of the full shingle/hash chain. Null text: under non-ANSI
+    * `size(tokens(null))` is −1, so `-1 >= n` is false and the row drops
+    * — identical to `size(null shingle array) > 0`.
     */
   def hasShingles(text: Column, n: Int): Column = size(tokens(text)) >= n
 

@@ -233,10 +233,8 @@ object PricePipeline {
                   // and nothing changes. Gradient accumulation order
                   // shifts with partitioning; the gate's verdict booleans
                   // are partition-independent (oracle re-proved).
-                  // SPARK_GRAFT_FM_REGRAIN=off is the A/B kill switch.
                   val par = sc.defaultParallelism
                   val regrain = n == "FMRegressor" &&
-                    !sys.env.get("SPARK_GRAFT_FM_REGRAIN").contains("off") &&
                     train.rdd.getNumPartitions < par
                   val fitTrain =
                     if (regrain) train.repartition(par).persist() else train

@@ -168,21 +168,13 @@ object MultimodalOps {
     */
   val pngFileCount = 64
   private lazy val pngDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_png_")
+    val dir = Tables.scratchDir("graft_png_")
     (0 until pngFileCount).foreach { i =>
       val (w, h) = assetDims(i.toLong)
       java.nio.file.Files.write(
-        dir.resolve(f"asset_$i%05d.png"), renderPng(i.toLong, w, h))
+        java.nio.file.Paths.get(dir, f"asset_$i%05d.png"), renderPng(i.toLong, w, h))
     }
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try {
-        val stream = java.nio.file.Files.walk(dir)
-        try stream.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally stream.close()
-      } catch { case _: Throwable => () }
-    }))
-    dir.toString
+    dir
   }
 
   /** PNG files on disk → `binaryFile` source → typed assets. The production

@@ -11,43 +11,33 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Round-17 landed the convergence scalars on the eager checkpoint via
-    * `observe()` (one driver-synchronized job per round instead of two);
-    * round-18 A/Bs that fusion per the verdict. `SPARK_GRAFT_GRAPH_OBSERVE=off`
-    * pins the pre-fusion path — scalar computed by a SEPARATE aggregate
-    * action after the checkpoint — reproducing the round-16 job structure
-    * exactly (the kill switch for plan dumps and perf triage).
-    */
-  private def observeFusion: Boolean =
-    !sys.env.get("SPARK_GRAFT_GRAPH_OBSERVE").contains("off")
-
-  /** Round-18 per-round plan fusions (guide §2.4 "remove shuffles
-    * outright", verdict item 3): fewer exchanges per driver-synchronized
-    * round in the three iterative loops, with the per-round edge/label
-    * SETS — and therefore the convergence scalars, the round counts and
-    * the output — provably unchanged (see each site's comment).
-    * `SPARK_GRAFT_GRAPH_FUSE=off` pins the round-17 shapes (the A/B kill
-    * switch for plan dumps and perf triage).
-    */
-  private def roundFusion: Boolean =
-    !sys.env.get("SPARK_GRAFT_GRAPH_FUSE").contains("off")
+  /** Process-wide count of [[observedRow]] fallbacks — the observable
+    * face of a degraded convergence-scalar read. */
+  private[graft] val observedFallbacks = new java.util.concurrent.atomic.AtomicLong
 
   /** The observed metrics row, with the wait BOUNDED (round-18 advice):
     * `Observation.get` blocks on the listener bus delivering the metrics
     * event, so a dropped event (bus overload) would hang the driver where
-    * the old separate `count()` action could not. After 60 s the scalar
-    * is recomputed with `fallback` — an explicit aggregate over the
-    * already-checkpointed frame, whose lineage is truncated, so the
-    * fallback is one cheap job over materialized rows and is value-
-    * identical (same aggregates over the same rows).
+    * a separate `count()` action could not. When the wait times out or the
+    * observation fails, the scalar is recomputed with `fallback` — an
+    * explicit aggregate over the already-checkpointed frame, whose lineage
+    * is truncated, so the fallback is one cheap job over materialized rows
+    * and is value-identical (same aggregates over the same rows). Every
+    * fallback warns on stderr and bumps [[observedFallbacks]].
     */
-  private def observedRow(obs: org.apache.spark.sql.Observation,
-                          fallback: => org.apache.spark.sql.Row)
-      : org.apache.spark.sql.Row =
+  private[operators] def observedRow(
+      observed: scala.concurrent.Future[org.apache.spark.sql.Row],
+      fallback: => org.apache.spark.sql.Row): org.apache.spark.sql.Row =
     try {
       import scala.concurrent.duration._
-      scala.concurrent.Await.result(obs.future, 60.seconds)
-    } catch { case _: java.util.concurrent.TimeoutException => fallback }
+      scala.concurrent.Await.result(observed, 60.seconds)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        observedFallbacks.incrementAndGet()
+        System.err.println(s"[graft] GraphOps: observed metrics unavailable " +
+          s"($e); recomputing the convergence scalar with an explicit aggregate")
+        fallback
+    }
 
   /** Connected components by min-label propagation.
     *
@@ -119,9 +109,8 @@ object GraphOps {
       // the changed-label count rides the checkpoint job via observe()
       // (round-17, same rationale as the star-contraction checksum): the
       // separate filter().count() action per round doubled the loop's
-      // synchronized job count for the same scalar. Wait bounded +
-      // SPARK_GRAFT_GRAPH_OBSERVE=off kill switch — see observedRow /
-      // observeFusion.
+      // synchronized job count for the same scalar. Wait bounded — see
+      // observedRow.
       val changedExpr = coalesce(sum(
         when(col("label") < col("old_label"), 1L).otherwise(0L)), lit(0L))
         .as("changed")
@@ -133,40 +122,20 @@ object GraphOps {
       // rides the self branch (null on neighbour rows; min over one
       // non-null recovers it — every node HAS a self row, so it is never
       // null). Same values, one join + one aggregate per round.
-      val next =
-        if (roundFusion) {
-          val self = labels.select(col("id"), col("label"),
-            col("label").as("old_label"))
-          val neighbor = edges
-            .join(labels, edges("dst") === labels("id"))
-            .select(edges("src").as("id"), col("label"),
-              lit(null).cast(labels.schema("label").dataType).as("old_label"))
-          self.union(neighbor)
-            .groupBy("id")
-            .agg(min("label").as("label"), min("old_label").as("old_label"))
-            .select(col("id"), col("old_label"), col("label"))
-        } else {
-          val neighborMin = edges
-            .join(labels, edges("dst") === labels("id"))
-            .groupBy(edges("src"))
-            .agg(min("label").as("nmin"))
-          labels
-            .join(neighborMin, labels("id") === neighborMin("src"), "left")
-            .select(
-              col("id"),
-              col("label").as("old_label"),
-              least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-        }
-      val (updated, changedNow) =
-        if (observeFusion) {
-          val obs = org.apache.spark.sql.Observation(s"graft_cc_changed_$rounds")
-          val out = next.observe(obs, changedExpr).localCheckpoint(true)
-          (out, observedRow(obs, out.agg(changedExpr).head())
-            .getAs[Long]("changed"))
-        } else {
-          val out = next.localCheckpoint(true)
-          (out, out.agg(changedExpr).head().getAs[Long]("changed"))
-        }
+      val self = labels.select(col("id"), col("label"),
+        col("label").as("old_label"))
+      val neighbor = edges
+        .join(labels, edges("dst") === labels("id"))
+        .select(edges("src").as("id"), col("label"),
+          lit(null).cast(labels.schema("label").dataType).as("old_label"))
+      val next = self.union(neighbor)
+        .groupBy("id")
+        .agg(min("label").as("label"), min("old_label").as("old_label"))
+        .select(col("id"), col("old_label"), col("label"))
+      val obs = org.apache.spark.sql.Observation(s"graft_cc_changed_$rounds")
+      val updated = next.observe(obs, changedExpr).localCheckpoint(true)
+      val changedNow = observedRow(obs.future, updated.agg(changedExpr).head())
+        .getAs[Long]("changed")
       changed2 = prev
       prev = changed
       changed = changedNow
@@ -222,16 +191,10 @@ object GraphOps {
     def checkpointWithSig(e: DataFrame, round: Int): (DataFrame, (Long, Long)) = {
       val nExpr = count(lit(1)).as("n")
       val hExpr = coalesce(sum(xxhash64(col("src"), col("dst"))), lit(0L)).as("h")
-      if (observeFusion) {
-        val obs = org.apache.spark.sql.Observation(s"graft_cc_sig_$round")
-        val out = e.observe(obs, nExpr, hExpr).localCheckpoint(true)
-        val m = observedRow(obs, out.agg(nExpr, hExpr).head())
-        (out, (m.getAs[Long]("n"), m.getAs[Long]("h")))
-      } else {
-        val out = e.localCheckpoint(true)
-        val m = out.agg(nExpr, hExpr).head()
-        (out, (m.getAs[Long]("n"), m.getAs[Long]("h")))
-      }
+      val obs = org.apache.spark.sql.Observation(s"graft_cc_sig_$round")
+      val out = e.observe(obs, nExpr, hExpr).localCheckpoint(true)
+      val m = observedRow(obs.future, out.agg(nExpr, hExpr).head())
+      (out, (m.getAs[Long]("n"), m.getAs[Long]("h")))
     }
 
     var (edges, sig) = checkpointWithSig(p0.distinct(), 0)
@@ -260,22 +223,21 @@ object GraphOps {
     val sym = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
     val mins = sym.groupBy("src").agg(min("dst").as("mn"))
       .select(col("src"), least(col("src"), col("mn")).as("m"))
-    val attached = sym.filter(col("dst") > col("src"))
-      .join(mins, "src")
-      .select(col("dst").as("src"), col("m").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    // round-18 fusion: the intermediate dedup is redundant — every round
+    // round-18 fusion: no intermediate dedup — every round
     // ends in smallStar's distinct(), whose output SET (and thus the
     // convergence signature and the final star map) is identical with or
     // without it: min/groupBy/union-distinct are multiset-insensitive.
     // Duplicates here cannot explode — the join emits exactly ONE row per
     // oriented input edge (the filter keeps one direction per undirected
     // edge, and `mins` has one row per src), so the multiset size equals
-    // the round's input edge count regardless — so dropping the distinct
-    // removes one full edge-list exchange per contraction round for a
+    // the round's input edge count regardless — so skipping the distinct
+    // saves one full edge-list exchange per contraction round for a
     // bounded extra row count into smallStar's aggregate, which dedups
     // anyway.
-    if (roundFusion) attached else attached.distinct()
+    sym.filter(col("dst") > col("src"))
+      .join(mins, "src")
+      .select(col("dst").as("src"), col("m").as("dst"))
+      .filter(col("src") =!= col("dst"))
   }
 
   /** Small-star: every node attaches its smaller-or-equal neighbours (and
@@ -428,11 +390,10 @@ object GraphOps {
     // u- and v-side copies dedup via ReuseExchange, and the final
     // aggregate job). Recomputing the agg there costs one extra stage per
     // job; the eager checkpoint cost a whole extra driver-synchronized
-    // job. SPARK_GRAFT_GRAPH_FUSE=off pins the round-17 shape.
-    val degPlain = edges.select(col("u").as("id"))
+    // job.
+    val deg = edges.select(col("u").as("id"))
       .union(edges.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
-    val deg = if (roundFusion) degPlain else degPlain.localCheckpoint(true)
     val withDeg = edges
       .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")

@@ -111,21 +111,10 @@ object LayoutOps {
     * deleted files if a caller interleaved lazily — per-call dirs make
     * every returned frame's files immutable for the JVM's lifetime).
     */
-  private lazy val layoutRoot: java.nio.file.Path = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try {
-        val stream = java.nio.file.Files.walk(dir)
-        try stream.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally stream.close()
-      } catch { case _: Throwable => () }
-    }))
-    dir
-  }
+  private lazy val layoutRoot: String = Tables.scratchDir("graft_zorder_")
   private val writeSeq = new java.util.concurrent.atomic.AtomicLong(0L)
   private def freshLayoutDir(): String =
-    layoutRoot.resolve(s"w${writeSeq.incrementAndGet()}").toString
+    s"$layoutRoot/w${writeSeq.incrementAndGet()}"
 
   /** The actual layout write: orders range-partitioned AND sorted by z,
     * one parquet file per range — contiguous files are z-curve segments,
@@ -263,11 +252,8 @@ object LayoutOps {
     // hash-scattered fragments. Which rows land in which fragment is not
     // part of any contract: every consumer (the compaction gates, the
     // specs) treats the dir as an unordered row bag.
-    val frag =
-      if (sys.env.get("SPARK_GRAFT_FRAG_HASH").contains("off"))
-        t.lineitem.repartition(files) // pre-round-18 shape, for A/B
-      else t.lineitem.repartition(files, col("l_orderkey"))
-    frag.write.mode("overwrite").parquet(dir)
+    t.lineitem.repartition(files, col("l_orderkey"))
+      .write.mode("overwrite").parquet(dir)
     dir
   }
 

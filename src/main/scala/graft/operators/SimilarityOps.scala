@@ -166,8 +166,7 @@ object SimilarityOps {
     scala.collection.concurrent.TrieMap.empty[(String, Int), String]
   private def ivfIndexFor(t: Tables, nlist: Int): String =
     ivfIndexDirs.getOrElseUpdate((t.dir, nlist), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_").toString
-      Tables.deleteRecursivelyOnExit(dir)
+      val dir = Tables.scratchDir("graft_ivf_")
       buildIvfIndex(t, dir, nlist)
       dir
     })
@@ -509,8 +508,7 @@ object SimilarityOps {
     scala.collection.concurrent.TrieMap.empty[(String, Long), String]
   private[operators] def ivfAppendIndexFor(t: Tables, nlist: Int): String =
     Tables.cachedPathPerGeneration(ivfAppendDirs, t.dir, "embeddings.parquet") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_append_").toString
-      Tables.deleteRecursivelyOnExit(dir)
+      val dir = Tables.scratchDir("graft_ivf_append_")
       val emb = t.embeddings
         .select(col("vec_id"), col("label"), toDoubleArr(col("embedding")).as("emb"))
       buildIvfIndexOf(emb.filter(col("vec_id") % 7 =!= 0), t.spark, dir, nlist)
@@ -592,9 +590,7 @@ object SimilarityOps {
         t.dir, "embeddings.parquet") {
       val spark = t.spark
       import spark.implicits._
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_ivf_hier_").toString
-      Tables.deleteRecursivelyOnExit(dir)
+      val dir = Tables.scratchDir("graft_ivf_hier_")
       t.embeddings
         .select(col("vec_id"), toDoubleArr(col("embedding")).as("emb"))
         .orderBy("vec_id").limit(nlist)
@@ -1050,9 +1046,7 @@ object SimilarityOps {
         t.dir, "embeddings.parquet") {
       val spark = t.spark
       import spark.implicits._
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_ivf_routed_").toString
-      Tables.deleteRecursivelyOnExit(dir)
+      val dir = Tables.scratchDir("graft_ivf_routed_")
       val dim = t.embeddings.select(size(col("embedding"))).head().getInt(0)
       isotropicCentroids(nlist, dim)
         .map { case (c, a) => (c, a.toSeq) }.toSeq

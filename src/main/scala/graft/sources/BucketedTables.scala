@@ -59,25 +59,12 @@ object BucketedTables {
       val oti = s"graft_ord_bucketed_$suffix"
       // the default in-memory catalog forgets tables at JVM exit but
       // leaves their warehouse directories; a stale location makes the
-      // next JVM's CREATE fail (LOCATION_ALREADY_EXISTS) — sweep it
+      // next JVM's CREATE fail (LOCATION_ALREADY_EXISTS) — sweep it (a
+      // failed delete warns on stderr: the only trace of why the CREATE
+      // below would then die)
+      val wh = java.net.URI.create(spark.conf.get("spark.sql.warehouse.dir")).getPath
       Seq(lti, oti).filterNot(spark.catalog.tableExists).foreach { name =>
-        try {
-          val wh = java.net.URI.create(
-            spark.conf.get("spark.sql.warehouse.dir")).getPath
-          val stale = java.nio.file.Paths.get(wh, name)
-          if (java.nio.file.Files.exists(stale)) {
-            val stream = java.nio.file.Files.walk(stale)
-            try stream.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-            finally stream.close()
-          }
-        } catch { case e: Throwable =>
-          // best-effort sweep, but never silently: if warehouse resolution
-          // or deletion fails the CREATE below dies with
-          // LOCATION_ALREADY_EXISTS and this is the only trace of why
-          System.err.println(
-            s"[bucketed] WARN: stale-warehouse sweep for $name failed: $e")
-        }
+        graft.core.Tables.deleteRecursively(java.nio.file.Paths.get(wh, name).toString)
       }
       writeBucketed(
         t.lineitem.select("l_orderkey", "l_extendedprice", "l_discount"),

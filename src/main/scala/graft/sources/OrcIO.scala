@@ -29,18 +29,7 @@ object OrcIO {
     * [[JsonIO.roundtripDir]]: overwrite-in-place so Verify + Bench's
     * min-of-2 never leak copies; deleted on exit).
     */
-  private lazy val roundtripDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try {
-        val stream = java.nio.file.Files.walk(dir)
-        try stream.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally stream.close()
-      } catch { case _: Throwable => () }
-    }))
-    dir.toString
-  }
+  private lazy val roundtripDir: String = Tables.scratchDir("graft_orc_")
 
   /** Gate query: documents → ORC → read-back → per-(lang, source) rollup.
     * The oracle computes the same rollup straight from the parquet source,

@@ -25,18 +25,7 @@ object PartitionedParquet {
     * DataFrame lazy — deleting eagerly after the call would require
     * materializing inside it.
     */
-  private lazy val roundtripDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try {
-        val stream = java.nio.file.Files.walk(dir)
-        try stream.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally stream.close()
-      } catch { case _: Throwable => () }
-    }))
-    dir.toString
-  }
+  private lazy val roundtripDir: String = Tables.scratchDir("graft_part_")
 
   /** Gate query: orders → partitioned-by-year parquet → read back with a
     * partition filter → per-status rollup. The oracle computes the same

@@ -50,9 +50,7 @@ object AnnIngestStream {
     val dir = Tables.cachedPathPerGeneration(
         ingestedDirs, t.dir, "embeddings.parquet") {
       val spark = t.spark
-      val index = java.nio.file.Files
-        .createTempDirectory("graft_ivf_stream_").toString
-      Tables.deleteRecursivelyOnExit(index)
+      val index = Tables.scratchDir("graft_ivf_stream_")
       val emb = t.embeddings
         .select(col("vec_id"), col("label"), toDoubleArr(col("embedding")).as("emb"))
       SimilarityOps.buildIvfIndexOf(

@@ -66,15 +66,13 @@ object DedupStream {
     * pipeline's own `repartition(doc_id)` only parallelizes the
     * signature stage, not the shingling below it). Same contract as the
     * batch seam: fires ONLY when the footer row-group count is below the
-    * session's cores — on production layouts no exchange is added — and
-    * `SPARK_GRAFT_SCAN_REBALANCE=off` is the shared kill switch.
+    * session's cores — on production layouts no exchange is added.
     * Partitioning never affects the emitted pair set (state keys on band
     * content; pairs are order-canonicalized and deduped).
     */
   private def rebalancedDocs(spark: SparkSession, dir: String,
                              docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SCAN_REBALANCE").contains("off")) return docs
     val par = spark.sparkContext.defaultParallelism
     if (graft.core.Tables(spark, dir).scanUnits("documents") >= par) docs
     else docs.repartition(par, col("doc_id"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.NumericFunctions.{decSum, roundN}
 import org.apache.spark.sql.functions._
@@ -171,21 +172,8 @@ object EventStream {
   private val fileSinkDirs =
     scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   private def fileSinkDirsFor(dir: String): (String, String) =
-    fileSinkDirs.getOrElseUpdate(dir, {
-      def tmp(prefix: String): String = {
-        val d = java.nio.file.Files.createTempDirectory(prefix)
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          try {
-            val stream = java.nio.file.Files.walk(d)
-            try stream.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-            finally stream.close()
-          } catch { case _: Throwable => () }
-        }))
-        d.toString
-      }
-      (tmp("graft_fsink_out_"), tmp("graft_fsink_ckpt_"))
-    })
+    fileSinkDirs.getOrElseUpdate(dir,
+      (Tables.scratchDir("graft_fsink_out_"), Tables.scratchDir("graft_fsink_ckpt_")))
 
   /** Streaming parquet FILE sink roundtrip — the continuous-ingest landing
     * path (readStream → stateless transform → exactly-once parquet files).
@@ -571,14 +559,7 @@ object EventStream {
     // v is committed; v-1 is garbage nobody can still be handed — drop it
     // now so repeated invocations (Verify + Bench min-of-2) keep at most
     // two versions on disk instead of one per micro-batch until JVM exit
-    prev.foreach { p =>
-      try {
-        val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        try stream.sorted(java.util.Comparator.reverseOrder())
-          .forEach(x => { java.nio.file.Files.deleteIfExists(x); () })
-        finally stream.close()
-      } catch { case _: Throwable => () }
-    }
+    prev.foreach(Tables.deleteRecursively)
     out
   }
 
@@ -600,21 +581,8 @@ object EventStream {
     * no-op) and a fresh version namespace under the shared target; old
     * versions are pruned as soon as their successor commits.
     */
-  private lazy val upsertDirs: (String, String) = {
-    def tmp(prefix: String): String = {
-      val d = java.nio.file.Files.createTempDirectory(prefix)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        try {
-          val stream = java.nio.file.Files.walk(d)
-          try stream.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-          finally stream.close()
-        } catch { case _: Throwable => () }
-      }))
-      d.toString
-    }
-    (tmp("graft_upsert_"), tmp("graft_upsert_ckpt_"))
-  }
+  private lazy val upsertDirs: (String, String) =
+    (Tables.scratchDir("graft_upsert_"), Tables.scratchDir("graft_upsert_ckpt_"))
   private val upsertCalls = new java.util.concurrent.atomic.AtomicLong(0)
 
   def foreachBatchUpsert(spark: SparkSession, dir: String): DataFrame =
@@ -624,15 +592,7 @@ object EventStream {
     // the previous call's final version is dead once a new call begins
     // (its returned frame has been consumed) — sweep it so repeated calls
     // hold at most one final version plus the in-flight one
-    if (call > 1) {
-      try {
-        val old = java.nio.file.Paths.get(s"$targetRoot/call${call - 1}")
-        val stream = java.nio.file.Files.walk(old)
-        try stream.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally stream.close()
-      } catch { case _: Throwable => () }
-    }
+    if (call > 1) Tables.deleteRecursively(s"$targetRoot/call${call - 1}")
     val targetDir = s"$targetRoot/call$call"
     val ckptDir   = s"$ckptRoot/call$call"
     @volatile var current: Option[String] = None

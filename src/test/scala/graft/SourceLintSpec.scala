@@ -1,0 +1,55 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-level lint over `src/main/scala`, beside [[PlanLintSpec]]'s plan
+  * lint: settled A/B kill switches and hand-rolled temp-dir deletes stay
+  * deleted. Every `SPARK_GRAFT_*` name the engine reads must be one of the
+  * live knobs below, and the `Files.walk` → reverse-sort → `deleteIfExists`
+  * loop exists once, in `Tables.deleteRecursively` — everything else calls
+  * it (or `Tables.scratchDir`), so the one copy carries the warning and
+  * the missing-path rule.
+  */
+class SourceLintSpec extends AnyFunSuite {
+  import scala.jdk.CollectionConverters._
+
+  private val liveEnvNames = Set(
+    "SPARK_GRAFT_BENCH_CSV", "SPARK_GRAFT_BENCH_ONLY",
+    "SPARK_GRAFT_CALIB_BW_REF", "SPARK_GRAFT_CALIB_REF",
+    "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY", "SPARK_GRAFT_SCHEDULER",
+    "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_STREAM_PLAN",
+    "SPARK_GRAFT_STREAM_SHUFFLE")
+
+  /** (path relative to src/main/scala, file text) for every main source. */
+  private lazy val sources: Seq[(String, String)] = {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val stream = java.nio.file.Files.walk(root)
+    try stream.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> new String(
+        java.nio.file.Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8))
+      .toVector
+    finally stream.close()
+  }
+
+  test("main sources are found") {
+    assert(sources.exists(_._1 == "graft/core/Tables.scala"))
+  }
+
+  test("only the live SPARK_GRAFT_* names appear in main sources") {
+    val stray = for {
+      (file, text) <- sources
+      name <- "SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(text)
+      if !liveEnvNames(name)
+    } yield s"$file: $name"
+    assert(stray.isEmpty, s"settled or unknown env switches read: ${stray.distinct}")
+  }
+
+  test("the recursive walk-delete loop lives only in Tables.deleteRecursively") {
+    val walkDelete = """Files\.walk[\s\S]{0,400}?deleteIfExists""".r
+    val copies = sources.map { case (f, text) => f -> walkDelete.findAllIn(text).size }
+      .filter(_._2 > 0).toMap
+    assert(copies == Map("graft/core/Tables.scala" -> 1),
+      s"hand-rolled recursive deletes: route through Tables.deleteRecursively ($copies)")
+  }
+}

@@ -79,6 +79,27 @@ class GraphOpsSpec extends SparkTestBase {
         "reuse the checkpointed edges, not replay the upstream pipeline")
   }
 
+  test("observedRow: a failed observation falls back to the same value, warns and counts") {
+    val edges = (0L until 50L).map(i => (i, i % 7)).toDF("src", "dst")
+    val nExpr = count(lit(1)).as("n")
+    val hExpr = coalesce(sum(xxhash64(col("src"), col("dst"))), lit(0L)).as("h")
+    val obs = org.apache.spark.sql.Observation("graft_spec_sig")
+    val out = edges.observe(obs, nExpr, hExpr).localCheckpoint(true)
+    val observed = GraphOps.observedRow(obs.future, fail("observation must deliver"))
+    val before = GraphOps.observedFallbacks.get()
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val fellBack =
+      try GraphOps.observedRow(
+        scala.concurrent.Future.failed(new IllegalStateException("bus dropped")),
+        out.agg(nExpr, hExpr).head())
+      finally System.setErr(saved)
+    assert(fellBack == observed, "fallback must be value-identical to the observation")
+    assert(GraphOps.observedFallbacks.get() == before + 1)
+    assert(err.toString("UTF-8").contains("bus dropped"))
+  }
+
   test("star contraction agrees with label propagation on a multi-component graph") {
     // components: {1,2,3,4} (clique-ish), {10,11,12} (chain), {20,21}
     val edges = Seq(

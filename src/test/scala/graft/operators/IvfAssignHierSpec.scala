@@ -31,9 +31,7 @@ class IvfAssignHierSpec extends SparkTestBase {
     * quantizer fit.
     */
   private def writeCentroids(nlist: Int): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_hier_spec_").toString
-    graft.core.Tables.deleteRecursivelyOnExit(dir)
+    val dir = graft.core.Tables.scratchDir("graft_ivf_hier_spec_")
     (0 until nlist)
       .map(c => (c, (0 until dim).map(j => math.sin(c * 31 + j * 7) * 10.0)))
       .toDF("cell", "centroid")
