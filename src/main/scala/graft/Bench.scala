@@ -2,6 +2,7 @@ package graft
 
 import graft.core.Tables
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
@@ -151,7 +152,7 @@ object Bench {
         val c0 = osBean.getProcessCpuTime
         val t0 = System.nanoTime()
         try body
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           failed += name
           return (-1.0, -1.0, -1.0)
@@ -234,7 +235,7 @@ object Bench {
           spark.catalog.dropTempView(name)
           ()
         })
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[bench] streaming_overhead setup failed: ${e.getMessage}")
           Seq.empty
         } finally {
@@ -300,7 +301,8 @@ object Bench {
         val tt = Tables(spark, sf1Dir)
         Seq(tt.lineitem, tt.orders, tt.documents, tt.embeddings)
           .foreach(_.write.format("noop").mode("overwrite").save())
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] sf1 replica warm-up failed: $e") }
       // Leg-level calibration (round-13, both axes since round 16): the
       // suite-level probes bracket ~175 s of sf0.1 rows; contention
       // arriving DURING this leg was invisible to them (r12's
@@ -676,7 +678,9 @@ object Bench {
         } finally ch.close()
       }
       md.digest().map("%02x".format(_)).mkString.take(16)
-    } catch { case _: Throwable => "unavailable" }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] fixture digest unavailable: $e")
+      "unavailable" }
 
   /** The workload counts behind the band-sensitive rows: corpus volume
     * (docs/chars/ws-tokens/embeddings) always; the minhash candidate-pair
@@ -709,7 +713,8 @@ object Bench {
           s""""doc_chars":${doc.getLong(1)},"doc_ws_tokens":${doc.getLong(2)},""" +
           s""""n_embeddings":$nEmb,"minhash_candidate_pairs":$cand,""" +
           s""""dup_clusters":$clus}""")
-    } catch { case _: Throwable =>
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] workload counts unavailable: $e")
       ("unavailable", s"""{"fixture_digest":"unavailable"}""") }
 
   def main(args: Array[String]): Unit = {
@@ -756,7 +761,8 @@ object Bench {
       graft.streaming.EventStream
         .dedupCounts(spark, sfDir, s"bench_warm_${System.nanoTime()}")
         .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] engine warm-up failed: $e") }
 
     // SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the suite to the named
     // queries — the targeted-scale legs (sf10 dedup/ANN scaling) time a
@@ -807,7 +813,9 @@ object Bench {
         try stream.filter(java.nio.file.Files.isRegularFile(_))
           .mapToLong(java.nio.file.Files.size(_)).sum()
         finally stream.close()
-      } catch { case _: Throwable => -1L }
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] fixture size walk failed: $e")
+        -1L }
     val failedJson = run.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qcpu = run.queryCpu.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")

@@ -85,9 +85,14 @@ object BenchCalibration {
     val sink = new java.util.concurrent.atomic.AtomicLong(0L)
     def once(): Double = {
       val barrier = new java.util.concurrent.CyclicBarrier(threads + 1)
+      // the span starts when the first spinner leaves the barrier: a clock
+      // read on this thread after its own await can land after every spin
+      // finished if this thread is descheduled, reading near zero
+      val t0 = new java.util.concurrent.atomic.AtomicLong(Long.MaxValue)
       val ts = (0 until threads).map { _ =>
         val th = new Thread(() => {
           barrier.await()
+          t0.accumulateAndGet(System.nanoTime(), (a, b) => math.min(a, b))
           sink.getAndAdd(spin(rounds))
           ()
         })
@@ -96,9 +101,8 @@ object BenchCalibration {
         th
       }
       barrier.await()
-      val t0 = System.nanoTime()
       ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
+      (System.nanoTime() - t0.get) / 1e9
     }
     // warm the JIT outside the measurement
     require(spin(defaultRounds) == expectedChecksum,

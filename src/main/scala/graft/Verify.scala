@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -48,7 +49,7 @@ object Verify {
           java.util.Arrays.asList(rows: _*), df.schema)
         GateInvariants.check(name, local, fn, spark, sfDir)
         local.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -132,37 +132,45 @@ object VehiclesPipelines {
   }
 
   /** Pipeline 3 — price prediction (`notebook_to_py/price-prediction.py`):
-    * the reference's feature pipeline (per-column StringIndexer loop M1,
-    * VectorAssembler with handleInvalid=skip M2) + one representative
-    * regressor fit/eval from graft.ml.PricePipeline's configs.
+    * the reference's feature pipeline (StringIndexer labels M1, fitted as
+    * one multi-column pass whose labels equal the reference's per-column
+    * loop at `price-prediction.py:159-167`; VectorAssembler with
+    * handleInvalid=skip M2) + one representative regressor fit/eval from
+    * graft.ml.PricePipeline's configs.
     */
   object PricePrediction {
 
-    /** Feature engineering (ref :49-190), returning (features, label). */
-    def featurize(df: DataFrame): DataFrame = {
-      val base = Cleaning.clean(df)
+    /** The seven indexed categoricals (ref :159-167). */
+    val stringCols: Seq[String] = Seq("manufacturer", "model", "condition",
+      "fuel", "title_status", "transmission", "type")
+
+    /** The assembled numeric features (ref :178-190). */
+    val numericCols: Seq[String] = Seq("odometer", "age", "year")
+
+    /** Cleaned, typed and funnel-filtered rows the features come from. */
+    def base(df: DataFrame): DataFrame =
+      Cleaning.clean(df)
         .withColumn("price", col("price").cast(LongType))        // ref :150
         .withColumn("odometer", col("odometer").cast(DoubleType)) // ref :152
         .withColumn("year", col("year").cast(IntegerType))
         .filter(col("condition") =!= "new" &&
                 col("condition") =!= "parts only")                // ref :89-113 funnel
         .na.drop(Seq("price", "odometer", "year"))
-      val stringCols = Seq("manufacturer", "model", "condition", "fuel",
-        "title_status", "transmission", "type")
-      val indexed = stringCols.foldLeft(base) { (d, c) =>
-        new StringIndexer()
-          .setInputCol(c).setOutputCol(s"${c}_indexed")
-          .setHandleInvalid("skip")
-          .fit(d).transform(d)                                    // ref :159-167
-      }
-      new VectorAssembler()
-        .setInputCols(Array("odometer", "age", "year") ++
-          stringCols.map(_ + "_indexed"))
-        .setOutputCol("features")
-        .setHandleInvalid("skip")                                 // ref :178-190
-        .transform(indexed)
-        .select(col("features"), col("price").cast(DoubleType).as("label"))
-    }
+
+    /** Feature engineering (ref :49-190), returning (features, label). The
+      * indexer fit runs eagerly, as one aggregate pass over `base`.
+      */
+    def featurize(df: DataFrame): DataFrame =
+      graft.ml.PricePipeline.indexAndAssemble(base(df), numericCols,
+        stringCols, col("price").cast(DoubleType))              // ref :159-190
+
+    /** `featurize` persisted at session width for the fit loop: the
+      * ~25k-row frame would otherwise keep the dedup exchange's
+      * `spark.sql.shuffle.partitions` (200 by default), and every fit and
+      * evaluator job would run one task per partition. Caller unpersists.
+      */
+    def cachedFeatures(spark: SparkSession, df: DataFrame): DataFrame =
+      featurize(df).repartition(spark.sparkContext.defaultParallelism).persist()
 
     /** Fit + evaluate the named reference model configs on the vehicles
       * features; returns the comparison-table shape (ref :503-527,
@@ -171,7 +179,7 @@ object VehiclesPipelines {
     def metrics(spark: SparkSession, df: DataFrame,
                 models: Seq[String] = Seq("LinearRegression", "DecisionTree")): DataFrame = {
       import spark.implicits._
-      val data = featurize(df).cache()
+      val data = cachedFeatures(spark, df)
       try {
         val Array(train, test) = data.randomSplit(Array(0.8, 0.2), seed = 42)
         graft.ml.PricePipeline.regressors

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.streaming.StreamingQuery
+import scala.util.control.NonFatal
 
 /** Per-gate streaming-run telemetry (round-14 verdict item 6): every
   * streaming gate drains its query through [[drain]], which records the
@@ -84,13 +85,15 @@ object StreamMeter {
       val bos = new java.io.ByteArrayOutputStream()
       Console.withOut(new java.io.PrintStream(bos, true, "UTF-8"))(q.explain())
       plans.put(gate, bos.toString("UTF-8"))
-    } catch { case scala.util.control.NonFatal(_) => () }
+    } catch { case NonFatal(_) => () }
     q.stop()
     val prog = q.recentProgress
     val retention =
       try q.sparkSession.conf
         .get("spark.sql.streaming.numRecentProgressUpdates", "100").toInt
-      catch { case _: Throwable => 100 }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[graft] StreamMeter: progress retention unreadable ($e); assuming 100")
+        100 }
     val idCount = prog.lastOption.map(_.batchId + 1L).getOrElse(0L)
     // the engine's progress buffer dequeues WHILE length >= retention
     // after each append, so it retains at most retention − 1 events —

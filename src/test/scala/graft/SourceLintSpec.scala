@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * live knobs below, and the `Files.walk` → reverse-sort → `deleteIfExists`
   * loop exists once, in `Tables.deleteRecursively` — everything else calls
   * it (or `Tables.scratchDir`), so the one copy carries the warning and
-  * the missing-path rule.
+  * the missing-path rule. No handler catches `Throwable`: a catch-and-
+  * continue site matches `NonFatal` and says on stderr that it fired.
   */
 class SourceLintSpec extends AnyFunSuite {
   import scala.jdk.CollectionConverters._
@@ -51,5 +52,15 @@ class SourceLintSpec extends AnyFunSuite {
       .filter(_._2 > 0).toMap
     assert(copies == Map("graft/core/Tables.scala" -> 1),
       s"hand-rolled recursive deletes: route through Tables.deleteRecursively ($copies)")
+  }
+
+  test("no catch handler matches Throwable") {
+    val throwableCase = """case\s+\w+\s*:\s*Throwable\s*=>""".r
+    val sites = for {
+      (file, text) <- sources
+      (line, n) <- text.linesIterator.zipWithIndex
+      if throwableCase.findFirstIn(line).isDefined
+    } yield s"$file:${n + 1}"
+    assert(sites.isEmpty, s"catch NonFatal and warn on stderr instead: $sites")
   }
 }

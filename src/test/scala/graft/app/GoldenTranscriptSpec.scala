@@ -201,6 +201,10 @@ class GoldenTranscriptSpec extends SparkTestBase {
     } finally { rec.unpersist(); () }
   }
 
+  test("price-prediction features: one multi-column indexer fit equals the per-column loop") {
+    VehiclesPipelinesSpec.assertLoopEquivalent(vehicles)
+  }
+
   /** Price-prediction comparison table (`price-prediction.py:503-527`):
     * the reference's exact schema — superscript-² column names, R²/
     * Adjusted R²/RMSE/MAE as 2-dp-rounded DOUBLE, and MSE rounded by a

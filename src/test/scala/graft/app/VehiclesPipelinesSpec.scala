@@ -74,6 +74,35 @@ class VehiclesPipelinesSpec extends SparkTestBase {
 
   private lazy val df: DataFrame = VehiclesPipelines.load(spark, csvPath)
 
+  /** Spark jobs started while `body` runs. A sentinel job submitted after
+    * `body` marks the end: listener events arrive in order, so once the
+    * sentinel's end is delivered every earlier job start has been counted.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val key = "graft.test.sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    @volatile var sentinelId = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) != null)) sentinelId = e.jobId
+        else { jobs.incrementAndGet(); () }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelId) done.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(key, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "sentinel job end not delivered within 60 s")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("load: all 26 columns arrive as nullable strings") {
     assert(df.columns.toSeq == VehiclesPipelines.columns)
     assert(df.schema.fields.forall(_.dataType.typeName == "string"))
@@ -128,6 +157,31 @@ class VehiclesPipelinesSpec extends SparkTestBase {
     assert(m(0).getDouble(1) == m(0).getDouble(2))             // r2adj == r2 quirk
   }
 
+  test("price prediction: one multi-column indexer fit equals the per-column loop") {
+    VehiclesPipelinesSpec.assertLoopEquivalent(df)
+  }
+
+  test("price prediction: featurize fits in one pass, fit loop runs at session width") {
+    import VehiclesPipelines.PricePrediction
+    df.columns // the CSV is written on first use; keep its jobs out of the count
+    val onePass = jobsStartedBy { PricePrediction.featurize(df); () }
+    val perColumn = jobsStartedBy {
+      graft.ml.PerColumnIndexing.fold(PricePrediction.base(df), PricePrediction.stringCols); ()
+    }
+    // one aggregate pass (scan + dedup stages + collect) vs one pass per column
+    assert(onePass <= 4, s"featurize started $onePass jobs")
+    assert(perColumn >= PricePrediction.stringCols.size, s"per-column loop started $perColumn jobs")
+
+    // a shuffle width unlike the session's, so a frame that kept the dedup
+    // exchange's partitioning would show it
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "13")
+    val data = try PricePrediction.cachedFeatures(spark, df) finally spark.conf.set(key, prev)
+    try assert(data.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    finally { data.unpersist(); () }
+  }
+
   test("recommendation: derived features + recommend() returns same-group cars") {
     val rec = VehiclesPipelines.Recommendation.deriveFeatures(df)
     assert(rec.columns.contains("Made") && rec.columns.contains("type_group")
@@ -169,5 +223,18 @@ class VehiclesPipelinesSpec extends SparkTestBase {
       legacy(col("v"), col("q")).as("udf")).collect()
     rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1),
       s"native ${r.getDouble(0)} != udf ${r.getDouble(1)}"))
+  }
+}
+
+object VehiclesPipelinesSpec {
+  import VehiclesPipelines.PricePrediction
+
+  /** `PricePrediction.featurize`'s one multi-column indexer fit against the
+    * reference's per-column loop over the same base.
+    */
+  def assertLoopEquivalent(df: DataFrame): Unit = {
+    val base = PricePrediction.base(df)
+    graft.ml.PerColumnIndexing.assertMatches(base, PricePrediction.numericCols,
+      PricePrediction.stringCols, col("price").cast("double"), PricePrediction.featurize(df))
   }
 }
