@@ -56,19 +56,13 @@ final case class Tables(spark: SparkSession, dir: String) {
     * REAL scan-parallelism ceiling (Spark can split a parquet file no
     * finer than its row groups: a 1-row-group file yields byte-range
     * splits but every row lands in the one split holding the group's
-    * midpoint). Footer-only reads, cached per (dir, name, generation
-    * stamp) so a fixture regeneration under a running JVM invalidates it
-    * like the other per-generation caches. Unreadable layouts report
+    * midpoint). Footer-only reads, cached per table generation.
+    * Unreadable layouts report
     * Int.MaxValue — "assume parallel", so [[balancedByKey]] never adds
     * an exchange on a layout it can't see.
     */
-  private[graft] def scanUnits(name: String): Int = {
-    val stamp = Tables.fixtureStamp(s"$dir/$name.parquet")
-    val key = (dir, name, stamp)
-    Tables.scanUnitCache.keys
-      .filter(k => k._1 == dir && k._2 == name && k._3 != stamp)
-      .foreach(Tables.scanUnitCache.remove)
-    Tables.scanUnitCache.getOrElseUpdate(key,
+  private[graft] def scanUnits(name: String): Int =
+    Tables.rowGroupCounts(dir, name) {
       try {
         val conf = spark.sessionState.newHadoopConf()
         val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
@@ -90,8 +84,8 @@ final case class Tables(spark: SparkSession, dir: String) {
           try reader.getRowGroups.size
           finally reader.close()
         }.sum
-      } catch { case scala.util.control.NonFatal(_) => Int.MaxValue })
-  }
+      } catch { case scala.util.control.NonFatal(_) => Int.MaxValue }
+    }
 
   /** `name`.parquet re-parallelized when (and only when) its file layout
     * under-parallelizes the session — the optimization-guide §2.5 "input
@@ -136,10 +130,10 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
-  /** (dir, table name, generation stamp) → total parquet row-group count;
-    * see [[Tables.scanUnits]]. */
-  private[core] val scanUnitCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long), Int]
+  /** (dir, table name) → total parquet row-group count of the table's
+    * current generation; see [[Tables.scanUnits]]. */
+  private val rowGroupCounts =
+    new GenerationCache[String, Int](name => s"$name.parquet", _ => ())
 
   /** Generation stamp of a fixture file (or directory of part-files):
     * max mtime, total bytes and file count mixed into one long; 0 when
@@ -196,8 +190,8 @@ object Tables {
     * at JVM exit — the one way engine code takes scratch space, so
     * repeated runs can't strand directories under the temp root
     * (round-13 advice). The exit hook is idempotent with
-    * [[cachedPathPerGeneration]]'s evict-with-delete: a dir already
-    * removed by eviction makes it a no-op.
+    * [[GenerationCache.Dirs]]' evict-with-delete: a dir already removed
+    * by eviction makes it a no-op.
     */
   def scratchDir(prefix: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toString
@@ -223,61 +217,4 @@ object Tables {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[graft] could not delete $path: $e")
     }
-
-  /** [[cachedPerGeneration]] for values that ARE on-disk paths: evicting
-    * a stale generation also DELETES its materialized directory, so a
-    * long-running JVM doesn't strand one full derivation per fixture
-    * regeneration. One stamp read serves both the evict-with-delete and
-    * the lookup, so no eviction can slip through without its delete.
-    * Caveat (the `LayoutOps.layoutDir` posture): a caller that held a
-    * LAZY frame over the old generation's dir across a regeneration
-    * would scan deleted files — Verify/Bench evaluate promptly and
-    * fixture regeneration is quiescent during gate runs.
-    */
-  def cachedPathPerGeneration(
-      cache: scala.collection.concurrent.TrieMap[(String, Long), String],
-      dir: String, fixture: String)(compute: => String): String = {
-    val key = (dir, fixtureStamp(s"$dir/$fixture"))
-    cache.keys.filter(k => k._1 == dir && k._2 != key._2)
-      .foreach(k => cache.remove(k).foreach(deleteRecursively))
-    cache.get(key) match {
-      case Some(v) => v
-      case None =>
-        val v = compute
-        // same stale-compute guard as cachedPerGeneration: never cache a
-        // value computed against files a regeneration just replaced
-        if (fixtureStamp(s"$dir/$fixture") == key._2)
-          cache.putIfAbsent(key, v).getOrElse(v)
-        else v
-    }
-  }
-
-  /** getOrElseUpdate keyed on (dir, CURRENT generation stamp of
-    * `dir/fixture`), evicting other generations of the same dir on sight
-    * — the shared contract behind `EventStream.tsTypeCache`,
-    * `DedupStream.docSchemaCache` and `DedupOps.pairGraphs` (the latter
-    * keeps a wider key for session identity and threshold, so it inlines
-    * the same eviction rule rather than calling here).
-    */
-  def cachedPerGeneration[V](
-      cache: scala.collection.concurrent.TrieMap[(String, Long), V],
-      dir: String, fixture: String)(compute: => V): V = {
-    val key = (dir, fixtureStamp(s"$dir/$fixture"))
-    cache.keys.filter(k => k._1 == dir && k._2 != key._2)
-      .foreach(cache.remove)
-    cache.get(key) match {
-      case Some(v) => v
-      case None =>
-        val v = compute
-        // re-read the stamp before caching (round-10 advice): a fixture
-        // regeneration landing DURING a long compute would otherwise
-        // cache the pre-regeneration value under the new generation's
-        // key and serve it until yet another regeneration. The value is
-        // still returned (this caller computed against the old files,
-        // same as before), it just never enters the cache.
-        if (fixtureStamp(s"$dir/$fixture") == key._2)
-          cache.putIfAbsent(key, v).getOrElse(v)
-        else v
-    }
-  }
 }

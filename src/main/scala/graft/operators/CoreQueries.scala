@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{GenerationCache, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import graft.functions.NumericFunctions.{decAvg, decSum, roundN}
@@ -950,25 +950,21 @@ object CoreQueries {
   }
 
   private val hllSketchDirCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Int]("documents.parquet", "graft_hll_sketch_table")
 
   /** Per-source HLL sketches persisted as a parquet table — the storage
     * hop [[sketchHllMerge]] only claims: at 100 TB the per-shard/day
     * sketches land as a BINARY column in a stats table and corpus-wide
     * distinct counts are answered from the STORED sketches, never
-    * rescanning values. One tiny table per fixture generation
-    * (#sources rows × ~2^lgK bytes), cached/evicted via
-    * [[Tables.cachedPathPerGeneration]].
+    * rescanning values. One tiny table per (fixture generation, lgK)
+    * (#sources rows × ~2^lgK bytes).
     */
   def hllSketchTableDir(t: Tables, lgK: Int = 12): String =
-    Tables.cachedPathPerGeneration(hllSketchDirCache, t.dir, "documents.parquet") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_hll_sketch_table").toString
+    hllSketchDirCache(t.dir, lgK) { dir =>
       t.documents.filter(col("text").isNotNull)
         .groupBy("source")
         .agg(hll_sketch_agg(col("text"), lgK).as("sk"))
         .write.mode("overwrite").parquet(dir)
-      dir
     }
 
   /** Gate query: the persisted-sketch round trip. Reads the parquet

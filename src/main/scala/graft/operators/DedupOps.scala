@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{GenerationCache, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import graft.functions.NumericFunctions.roundN
@@ -436,28 +436,19 @@ object DedupOps {
     * pairs in block storage. Sound to share because the seeded minhash
     * pipeline is deterministic for a given (dir, threshold).
     *
-    * Cache key (round-8 verdict #5): session + input dir + the corpus
-    * files' latest mtime + threshold — NOT (dir, threshold) alone. A
-    * localCheckpoint belongs to the session's block manager (stale after
-    * a session restart), and the driver regenerates fixtures in-place
-    * under a running JVM (the round-8 ts drift did exactly that), so both
-    * the session identity and the file mtimes must invalidate the entry.
-    * Dead entries from old sessions/generations are evicted on sight to
-    * keep the map bounded.
+    * Cache key (round-8 verdict #5): session + corpus generation +
+    * threshold — NOT (dir, threshold) alone. A localCheckpoint belongs to
+    * the session's block manager (stale after a session restart), so
+    * entries of other sessions are evicted on sight like other
+    * generations, keeping the map bounded.
     */
   private val pairGraphs =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, Long, Double), DataFrame]
-
-  private def corpusStamp(dir: String): Long =
-    graft.core.Tables.fixtureStamp(s"$dir/documents.parquet")
+    GenerationCache[(Int, Double), DataFrame]("documents.parquet")
 
   def pairGraph(t: Tables, minJaccard: Double): DataFrame = {
-    val key = (System.identityHashCode(t.spark), t.dir,
-      corpusStamp(t.dir), minJaccard)
-    pairGraphs.keys
-      .filter(k => (k._1 != key._1 || k._3 != key._3) && k._2 == key._2 && k._4 == key._4)
-      .foreach(pairGraphs.remove)
-    pairGraphs.getOrElseUpdate(key,
+    val session = System.identityHashCode(t.spark)
+    pairGraphs.evictWhere((dir, k) => dir == t.dir && k._1 != session)
+    pairGraphs(t.dir, (session, minJaccard))(
       minhashDupPairs(t, minJaccard)
         .select("doc_a", "doc_b")
         .localCheckpoint(true))

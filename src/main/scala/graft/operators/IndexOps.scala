@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{GenerationCache, Tables}
 import graft.functions.TextFunctions.tokens
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -22,21 +22,18 @@ import org.apache.spark.sql.functions._
 object IndexOps {
 
   private val indexDirCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Unit]("documents.parquet", "graft_inverted_index")
 
   /** Materialize the inverted index for the fixture's documents (one
     * (token, doc_id, n_chars) row per DISTINCT token per doc), once per
     * fixture generation.
     */
   def invertedIndexDir(t: Tables): String =
-    Tables.cachedPathPerGeneration(indexDirCache, t.dir, "documents.parquet") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_inverted_index").toString
+    indexDirCache(t.dir, ()) { dir =>
       t.documents.filter(col("text").isNotNull)
         .select(col("doc_id"), col("n_chars"),
           explode(array_distinct(tokens(col("text")))).as("token"))
         .write.mode("overwrite").parquet(dir)
-      dir
     }
 
   /** Keyword lookup answered from the STORED index — per probe token,
@@ -69,7 +66,7 @@ object IndexOps {
   // ---------------------------------------------------------------------
 
   private val clusteredDirCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Unit]("documents.parquet", "graft_index_clustered")
 
   /** The inverted index rewritten range-clustered by token (8 files,
     * sorted within files), once per fixture generation — per-file token
@@ -77,14 +74,11 @@ object IndexOps {
     * only the file(s) whose extent can contain the probe.
     */
   def clusteredIndexDir(t: Tables): String =
-    Tables.cachedPathPerGeneration(clusteredDirCache, t.dir, "documents.parquet") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_index_clustered").toString
+    clusteredDirCache(t.dir, ()) { dir =>
       t.spark.read.parquet(invertedIndexDir(t))
         .repartitionByRange(8, col("token"))
         .sortWithinPartitions("token")
         .write.mode("overwrite").parquet(dir)
-      dir
     }
 
   /** Gate query: one keyword lookup answered by pruning the clustered

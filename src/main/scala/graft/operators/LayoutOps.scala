@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{GenerationCache, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -334,7 +334,7 @@ object LayoutOps {
   // ---------------------------------------------------------------------
 
   private val rangeCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Int]("orders.parquet", "graft_rangelay")
 
   /** Orders written range-clustered by `o_orderkey`: one balanced range
     * per output file, rows sorted inside each. This is THE layout a
@@ -344,16 +344,13 @@ object LayoutOps {
     * so the exact split points are run-dependent — which is why
     * [[rangeWriteStats]] gates the layout's CONTRACT (disjoint ranges,
     * balanced files, exact row conservation), not the boundary values.
-    * Derived once per fixture generation and reused.
+    * Derived once per (fixture generation, buckets) and reused.
     */
   def rangeLayoutDir(t: Tables, buckets: Int = 8): String =
-    Tables.cachedPathPerGeneration(rangeCache, t.dir, "orders.parquet") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_rangelay").toString
+    rangeCache(t.dir, buckets) { dir =>
       t.orders.repartitionByRange(buckets, col("o_orderkey"))
         .sortWithinPartitions("o_orderkey")
         .write.mode("overwrite").parquet(dir)
-      dir
     }
 
   /** Gate query: write the range-clustered layout, then judge it from

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{GenerationCache, Tables}
 import graft.functions.NumericFunctions.roundN
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -47,7 +47,7 @@ object QuantileOps {
       .select("source", "doc_id", "n_chars")
 
   private val sampleDirCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Unit]("documents.parquet", "graft_quantile_sample")
 
   /** The persisted sample table, written ONCE per fixture generation,
     * partitioned by source — the production layout where every shard
@@ -55,12 +55,9 @@ object QuantileOps {
     * reading the directory (no coordination, no rescan).
     */
   def quantileSampleTableDir(t: Tables): String =
-    Tables.cachedPathPerGeneration(sampleDirCache, t.dir, "documents.parquet") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_quantile_sample").toString
+    sampleDirCache(t.dir, ()) { dir =>
       hashSample(t.documents)
         .write.partitionBy("source").mode("overwrite").parquet(dir)
-      dir
     }
 
   /** Gate query: quantiles of `n_chars` from the STORED merged sample vs

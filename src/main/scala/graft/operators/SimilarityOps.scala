@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{GenerationCache, Tables}
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.DataFrame
 import graft.functions.NumericFunctions.{decAvg, roundN}
@@ -157,19 +157,15 @@ object SimilarityOps {
       .select("vec_id", "label", "cos_sim")
   }
 
-  /** One persisted index per (embeddings dir, nlist) per JVM — the gate
-    * entry point: builds on first use, every later call is probe-only
-    * (Bench's min-of-2 and repeated queries reuse the same index). Temp
-    * dirs are removed on JVM exit like PartitionedParquet's.
+  /** One persisted index per (embeddings dir, generation, nlist) — the
+    * gate entry point: builds on first use, every later call is
+    * probe-only (Bench's min-of-2 and repeated queries reuse the same
+    * index).
     */
   private val ivfIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), String]
+    GenerationCache.dirs[Int]("embeddings.parquet", "graft_ivf_")
   private def ivfIndexFor(t: Tables, nlist: Int): String =
-    ivfIndexDirs.getOrElseUpdate((t.dir, nlist), {
-      val dir = Tables.scratchDir("graft_ivf_")
-      buildIvfIndex(t, dir, nlist)
-      dir
-    })
+    ivfIndexDirs(t.dir, nlist)(buildIvfIndex(t, _, nlist))
 
   def ivfTopK(t: Tables, queryId: Long = 0L, k: Int = 10,
               nlist: Int = 16, nprobe: Int = 4): DataFrame = {
@@ -419,8 +415,8 @@ object SimilarityOps {
 
   /** The resolved per-index assignment plan — which regime, carrying the
     * already-built centroid payload. Cached per (index dir, centroids
-    * generation) within each (thresholds, pcoarse) setting: the
-    * streaming ingest calls [[ivfAssignForIngest]] once per MICRO-BATCH,
+    * generation, thresholds, pcoarse): the streaming ingest calls
+    * [[ivfAssignForIngest]] once per MICRO-BATCH,
     * and without the cache every batch would re-read the O(nlist)
     * centroid parquet and — above the hier threshold — re-run the
     * driver-side Lloyd quantizer (~1 s at 16384 cells, the exact
@@ -436,25 +432,20 @@ object SimilarityOps {
       extends IngestAssign
   private[operators] val ingestPlanBuilds =
     new java.util.concurrent.atomic.AtomicLong(0L)
-  private val ingestAssignCache = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int, Int),
-      scala.collection.concurrent.TrieMap[(String, Long), IngestAssign]]
+  private val ingestAssignPlans =
+    GenerationCache[(Int, Int, Int), IngestAssign]("centroids")
   private def ingestAssignPlanFor(spark: org.apache.spark.sql.SparkSession,
                                   path: String, hierThreshold: Int,
                                   maxInlineCells: Int,
                                   pcoarse: Int): IngestAssign = {
-    val perSetting = ingestAssignCache.getOrElseUpdate(
-      (hierThreshold, maxInlineCells, pcoarse),
-      scala.collection.concurrent.TrieMap.empty)
     // Evict entries whose index dir no longer exists (round-15 advice):
-    // cachedPerGeneration only evicts stale GENERATIONS of the dir being
-    // queried, so plans for distinct — often temp, later-deleted — index
-    // dirs would otherwise accumulate for the JVM's lifetime, each
-    // IngestTable pinning O(nlist·dim) doubles (~8 MB at 16384×64).
-    perSetting.keys
-      .filter(k => !java.nio.file.Files.isDirectory(java.nio.file.Paths.get(k._1)))
-      .foreach(perSetting.remove)
-    Tables.cachedPerGeneration(perSetting, path, "centroids") {
+    // a lookup only evicts stale GENERATIONS of the dir being queried, so
+    // plans for distinct — often temp, later-deleted — index dirs would
+    // otherwise accumulate for the JVM's lifetime, each IngestTable
+    // pinning O(nlist·dim) doubles (~8 MB at 16384×64).
+    ingestAssignPlans.evictWhere((dir, _) =>
+      !java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir)))
+    ingestAssignPlans(path, (hierThreshold, maxInlineCells, pcoarse)) {
       ingestPlanBuilds.incrementAndGet()
       val cents = readCentroids(spark, path)
       if (cents.length >= hierThreshold) {
@@ -501,19 +492,17 @@ object SimilarityOps {
   }
 
   /** One subset-built-then-appended index per (embeddings dir,
-    * generation): built over vec_id % 7 ≠ 0, the remainder appended —
-    * same corpus as the full index, different ingest history.
+    * generation, nlist): built over vec_id % 7 ≠ 0, the remainder
+    * appended — same corpus as the full index, different ingest history.
     */
   private val ivfAppendDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Int]("embeddings.parquet", "graft_ivf_append_")
   private[operators] def ivfAppendIndexFor(t: Tables, nlist: Int): String =
-    Tables.cachedPathPerGeneration(ivfAppendDirs, t.dir, "embeddings.parquet") {
-      val dir = Tables.scratchDir("graft_ivf_append_")
+    ivfAppendDirs(t.dir, nlist) { dir =>
       val emb = t.embeddings
         .select(col("vec_id"), col("label"), toDoubleArr(col("embedding")).as("emb"))
       buildIvfIndexOf(emb.filter(col("vec_id") % 7 =!= 0), t.spark, dir, nlist)
       appendToIvfIndex(t.spark, dir, emb.filter(col("vec_id") % 7 === 0))
-      dir
     }
 
   /** Hash-gated face of the append path. One row of verdicts over the
@@ -576,21 +565,14 @@ object SimilarityOps {
     * ids in vec_id order. Deterministic per generation with NO KMeans fit
     * — the hier gate tests the two-level ASSIGNMENT operator, not the
     * quantizer training ([[buildIvfIndex]] owns that), and a data-derived
-    * table gives the coarse grouping real geometry to work with. The
-    * cache nests one generation-keyed map PER nlist (round-14 advice: the
-    * old single map silently served the first caller's nlist to every
-    * later nlist in the same session).
+    * table gives the coarse grouping real geometry to work with.
     */
-  private val hierQuantDirs = scala.collection.concurrent.TrieMap
-    .empty[Int, scala.collection.concurrent.TrieMap[(String, Long), String]]
+  private val hierQuantDirs =
+    GenerationCache.dirs[Int]("embeddings.parquet", "graft_ivf_hier_")
   private[operators] def hierQuantCentroidsFor(t: Tables, nlist: Int): String =
-    Tables.cachedPathPerGeneration(
-        hierQuantDirs.getOrElseUpdate(nlist,
-          scala.collection.concurrent.TrieMap.empty),
-        t.dir, "embeddings.parquet") {
+    hierQuantDirs(t.dir, nlist) { dir =>
       val spark = t.spark
       import spark.implicits._
-      val dir = Tables.scratchDir("graft_ivf_hier_")
       t.embeddings
         .select(col("vec_id"), toDoubleArr(col("embedding")).as("emb"))
         .orderBy("vec_id").limit(nlist)
@@ -598,7 +580,6 @@ object SimilarityOps {
         .map { case (r, i) => (i, r.getSeq[Double](1)) }
         .toSeq.toDF("cell", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-      dir
     }
 
   /** Verdicts behind [[ivfAssignHierGate]], all from one distributed pass
@@ -1028,8 +1009,8 @@ object SimilarityOps {
     }
   }
 
-  /** One routed-ingest index per (embeddings dir, generation): synthetic
-    * isotropic centroids at `nlist` ≥ the hier threshold, ALL fixture
+  /** One routed-ingest index per (embeddings dir, generation, nlist):
+    * synthetic isotropic centroids at `nlist` ≥ the hier threshold, ALL fixture
     * vectors ingested through [[appendToIvfIndex]] — i.e. the PRODUCTION
     * two-level `pcoarse = 4` assignment, the path every real append and
     * streaming micro-batch takes at production cell counts. The gate
@@ -1037,16 +1018,12 @@ object SimilarityOps {
     * shows up in the gated floor, on the centroid distribution where the
     * cost is largest.
     */
-  private val routedIndexDirs = scala.collection.concurrent.TrieMap
-    .empty[Int, scala.collection.concurrent.TrieMap[(String, Long), String]]
+  private val routedIndexDirs =
+    GenerationCache.dirs[Int]("embeddings.parquet", "graft_ivf_routed_")
   private[graft] def routedIngestIndexFor(t: Tables, nlist: Int): String =
-    Tables.cachedPathPerGeneration(
-        routedIndexDirs.getOrElseUpdate(nlist,
-          scala.collection.concurrent.TrieMap.empty),
-        t.dir, "embeddings.parquet") {
+    routedIndexDirs(t.dir, nlist) { dir =>
       val spark = t.spark
       import spark.implicits._
-      val dir = Tables.scratchDir("graft_ivf_routed_")
       val dim = t.embeddings.select(size(col("embedding"))).head().getInt(0)
       isotropicCentroids(nlist, dim)
         .map { case (c, a) => (c, a.toSeq) }.toSeq
@@ -1058,7 +1035,6 @@ object SimilarityOps {
         t.embeddings.select(col("vec_id"), col("label"),
           toDoubleArr(col("embedding")).as("emb")),
         coalesceCells = true)
-      dir
     }
 
   /** Recall curve over the ROUTED-ingest index. The contract: exact

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{GenerationCache, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -274,8 +274,8 @@ object SnapshotOps {
       syntheticChangesWithImages(t))
       .orderBy("source")
 
-  private val refreshInputCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Long), (String, String)]
+  private val refreshInputDirs =
+    GenerationCache.dirs[Int]("documents.parquet", "graft_refresh_inputs")
 
   /** Bench probe for `agg_incremental_rollup`: the REFRESH alone. The
     * gate's fixture→feed derivation (rollup(A) recomputed from the corpus,
@@ -288,53 +288,20 @@ object SnapshotOps {
     * delta aggregate, one per-source full-outer join. The decade legs
     * should therefore read FLAT — the cost is delta-bound, independent of
     * corpus size, which is the entire point of maintaining the aggregate.
+    * A spec's 50-row batch and the bench's 2000-row batch get separate
+    * dirs.
     */
   def incrementalRollupProbe(t: Tables, maxChanges: Int = 2000): DataFrame = {
-    // Tables.cachedPerGeneration's eviction contract with maxChanges
-    // folded into the key (the DedupOps.pairGraphs wider-key pattern):
-    // a spec's 50-row batch and the bench's 2000-row batch must not
-    // share dirs, and a fixture regeneration evicts every batch size
-    val key = (t.dir, maxChanges,
-      Tables.fixtureStamp(s"${t.dir}/documents.parquet"))
-    refreshInputCache.keys
-      .filter(k => k._1 == t.dir && k._3 != key._3)
-      .foreach { k =>
-        // evicting a stale generation also deletes its materialized
-        // temp base (both subdirs live under rollupDir's parent)
-        refreshInputCache.remove(k).foreach { case (rollupDir, _) =>
-          Tables.deleteRecursively(
-            java.nio.file.Paths.get(rollupDir).getParent.toString)
-        }
-      }
-    val (rollupDir, changesDir) = refreshInputCache.get(key) match {
-      case Some(v) => v
-      case None =>
-        val base = java.nio.file.Files
-          .createTempDirectory("graft_refresh_inputs").toString
-        val v = (s"$base/rollup_a", s"$base/changes")
-        rollupStats(t.documents.select("doc_id", "source", "text"))
-          .write.mode("overwrite").parquet(v._1)
-        syntheticChangesWithImages(t)
-          .orderBy("doc_id").limit(maxChanges)
-          .write.mode("overwrite").parquet(v._2)
-        // Tables.cachedPathPerGeneration's stale-compute guard, inlined
-        // for this wider key (round-11 advice): a fixture regeneration
-        // landing DURING the materialization must not cache
-        // pre-regeneration inputs under the new generation's key, and a
-        // concurrent double-materialization must not leak its losing
-        // temp dir — the loser serves its own files this once and
-        // deletes them lazily on the next eviction sweep, so delete the
-        // non-cached copy only when another value won the race.
-        if (Tables.fixtureStamp(s"${t.dir}/documents.parquet") == key._3)
-          refreshInputCache.putIfAbsent(key, v) match {
-            case None => v
-            case Some(winner) => Tables.deleteRecursively(base); winner
-          }
-        else v
+    val base = refreshInputDirs(t.dir, maxChanges) { dir =>
+      rollupStats(t.documents.select("doc_id", "source", "text"))
+        .write.mode("overwrite").parquet(s"$dir/rollup_a")
+      syntheticChangesWithImages(t)
+        .orderBy("doc_id").limit(maxChanges)
+        .write.mode("overwrite").parquet(s"$dir/changes")
     }
     incrementalRollup(
-      t.spark.read.parquet(rollupDir),
-      t.spark.read.parquet(changesDir))
+      t.spark.read.parquet(s"$base/rollup_a"),
+      t.spark.read.parquet(s"$base/changes"))
       .orderBy("source")
   }
 
@@ -442,8 +409,8 @@ object SnapshotOps {
       .orderBy("source")
   }
 
-  private val checkpointDirCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+  private val checkpointDirs =
+    GenerationCache.dirs[Unit]("documents.parquet", "graft_checkpoint")
 
   /** Snapshot B (= apply(A, Δ₁)) MATERIALIZED to parquet once per fixture
     * generation — the checkpoint a version chain writes so history before
@@ -456,14 +423,10 @@ object SnapshotOps {
     * resets "base" forward).
     */
   def checkpointDir(t: Tables): String =
-    Tables.cachedPathPerGeneration(checkpointDirCache, t.dir,
-      "documents.parquet") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_checkpoint").toString
+    checkpointDirs(t.dir, ()) { dir =>
       mergeApply(t.documents.select("doc_id", "source", "text"),
         syntheticChanges(t))
         .write.mode("overwrite").parquet(dir)
-      dir
     }
 
   /** Gate query: apply Δ₂ to the STORED checkpoint — the post-expiry

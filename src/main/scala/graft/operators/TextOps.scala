@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{GenerationCache, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.DataFrame
 import graft.functions.NumericFunctions.{decAvg, decSum, roundN}
@@ -414,15 +414,11 @@ object TextOps {
     * rounds per consumer would triple the only iterative cost in the
     * text family.
     */
-  private val bpeTrainCache = scala.collection.concurrent.TrieMap.empty[
-    (String, Long),
-    scala.collection.concurrent.TrieMap[Int, (DataFrame, Seq[(Int, String, String, Long)])]]
+  private val bpeTrainCache = GenerationCache[
+    Int, (DataFrame, Seq[(Int, String, String, Long)])]("documents.parquet")
   private def bpeTrain(t: Tables, nMerges: Int)
       : (DataFrame, Seq[(Int, String, String, Long)]) =
-    Tables.cachedPerGeneration(bpeTrainCache, t.dir, "documents.parquet")(
-        scala.collection.concurrent.TrieMap
-          .empty[Int, (DataFrame, Seq[(Int, String, String, Long)])])
-      .getOrElseUpdate(nMerges, bpeTrainUncached(t, nMerges))
+    bpeTrainCache(t.dir, nMerges)(bpeTrainUncached(t, nMerges))
 
   /** Above this merge count the training loop finishes DRIVER-SIDE
     * (round-14 verdict item 3): once the corpus has been folded into the
@@ -857,16 +853,12 @@ object TextOps {
     * exhaust at 47 learnable merges (measured across all three fixture
     * generations) and can never cross [[bpeEncodeExprThreshold]].
     */
-  private val bpeTrainOovCache = scala.collection.concurrent.TrieMap.empty[
-    (String, Long),
-    scala.collection.concurrent.TrieMap[(Int, String), (DataFrame, Seq[(Int, String, String, Long)])]]
+  private val bpeTrainOovCache = GenerationCache[
+    (Int, String), (DataFrame, Seq[(Int, String, String, Long)])]("documents.parquet")
   private[graft] def bpeTrainOovCached(t: Tables, nMerges: Int,
                                        vocabPredChar: String = "7")
       : (DataFrame, Seq[(Int, String, String, Long)]) =
-    Tables.cachedPerGeneration(bpeTrainOovCache, t.dir, "documents.parquet")(
-        scala.collection.concurrent.TrieMap
-          .empty[(Int, String), (DataFrame, Seq[(Int, String, String, Long)])])
-      .getOrElseUpdate((nMerges, vocabPredChar), bpeTrainFromDict0(t.spark,
+    bpeTrainOovCache(t.dir, (nMerges, vocabPredChar))(bpeTrainFromDict0(t.spark,
         bpeDict0(t).filter(substring(md5(col("w")), 1, 1) <= vocabPredChar),
         nMerges))
 

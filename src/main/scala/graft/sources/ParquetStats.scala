@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.Tables
+import graft.core.{GenerationCache, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -209,21 +209,17 @@ object ParquetStats {
     clusteringDepth(t, s"${t.dir}/documents.parquet", Seq("doc_id", "n_chars"))
 
   private val rangeDirCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Unit]("orders.parquet", "graft_range_orders")
 
   /** A 8-file range-clustered copy of `orders` derived once per fixture
     * generation — the layout under which zone maps actually prune
     * (an unclustered layout keeps every file; correctness is identical,
     * only the skip count differs — both measured in `ParquetStatsSpec`).
     */
-  def rangeClusteredOrdersDir(t: Tables): String = Tables.cachedPathPerGeneration(
-    rangeDirCache, t.dir, "orders.parquet") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_range_orders").toString
+  def rangeClusteredOrdersDir(t: Tables): String = rangeDirCache(t.dir, ()) { base =>
     t.orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
       .repartitionByRange(8, col("o_orderkey"))
       .write.mode("overwrite").parquet(base)
-    base
   }
 
   /** Gate query: manifest-pruned scan of the range-clustered orders copy
@@ -406,7 +402,7 @@ object ParquetStats {
   // ---------------------------------------------------------------------
 
   private val bucketLayoutCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Unit]("orders.parquet", "graft_bucket_layouts")
 
   /** Two DETERMINISTIC 8-file layouts of `orders`, derived once per
     * fixture generation, whose per-file key spans an oracle can restate
@@ -424,10 +420,7 @@ object ParquetStats {
     * per-FILE footer min/max equals per-BUCKET true min/max — which is
     * what lets the oracle recompute the depth meter exactly.
     */
-  def bucketLayoutsDir(t: Tables): String = Tables.cachedPathPerGeneration(
-    bucketLayoutCache, t.dir, "orders.parquet") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_bucket_layouts").toString
+  def bucketLayoutsDir(t: Tables): String = bucketLayoutCache(t.dir, ()) { base =>
     val bounds = t.orders.agg(
       min("o_orderkey").cast("long"), max("o_orderkey").cast("long")).head()
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
@@ -440,7 +433,6 @@ object ParquetStats {
     src.withColumn("bucket", expr("CAST(o_orderkey % 8 AS INT)"))
       .repartition(8, col("bucket"))
       .write.partitionBy("bucket").mode("overwrite").parquet(s"$base/scatter")
-    base
   }
 
   /** Gate query: the clustering-depth meter over BOTH deterministic
@@ -470,7 +462,7 @@ object ParquetStats {
   // ---------------------------------------------------------------------
 
   private val typedLayoutCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Unit]("orders.parquet", "graft_typed_layouts")
 
   /** Three more deterministic layouts of `orders`, one per typed-pruning
     * gate, each hive-bucketed by a value-derived expression so the file
@@ -488,10 +480,7 @@ object ParquetStats {
     *    and ONLY the bloom probe can skip; exactly the high-cardinality
     *    point-lookup case manifests can't serve.
     */
-  def typedLayoutsDir(t: Tables): String = Tables.cachedPathPerGeneration(
-    typedLayoutCache, t.dir, "orders.parquet") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_typed_layouts").toString
+  def typedLayoutsDir(t: Tables): String = typedLayoutCache(t.dir, ()) { base =>
     val src = t.orders.select("o_orderkey", "o_orderstatus",
       "o_orderpriority", "o_totalprice", "o_orderdate")
     src.withColumn("bucket", year(col("o_orderdate")))
@@ -506,7 +495,6 @@ object ParquetStats {
       .write.partitionBy("bucket").mode("overwrite")
       .option("parquet.bloom.filter.enabled#o_orderkey", "true")
       .parquet(s"$base/bloom")
-    base
   }
 
   /** Date-window file pruning over TIMESTAMP(MICROS) zone maps: files

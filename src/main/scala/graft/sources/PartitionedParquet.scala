@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.Tables
+import graft.core.{GenerationCache, Tables}
 import graft.functions.NumericFunctions.{decSum, roundN}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -62,16 +62,13 @@ object PartitionedParquet {
   // ---------------------------------------------------------------------
 
   private val specCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Unit]("orders.parquet", "graft_pspec")
 
   /** Two-spec layout derived once per fixture generation: years ≤ 1997
     * under `spec1/order_year=Y/…`, years ≥ 1998 under
     * `spec2/order_year=Y/order_month=M/…`.
     */
-  def evolvedSpecLayout(t: Tables): String = Tables.cachedPathPerGeneration(
-    specCache, t.dir, "orders.parquet") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_pspec").toString
+  def evolvedSpecLayout(t: Tables): String = specCache(t.dir, ()) { base =>
     val o = t.orders
       .withColumn("order_year", year(col("o_orderdate")))
       .withColumn("order_month", month(col("o_orderdate")))
@@ -81,7 +78,6 @@ object PartitionedParquet {
     o.filter(col("order_year") >= 1998)
       .write.mode("overwrite").partitionBy("order_year", "order_month")
       .parquet(s"$base/spec2")
-    base
   }
 
   /** Per-spec reads unioned by name. The old spec's missing grain is
@@ -140,7 +136,7 @@ object PartitionedParquet {
   // ---------------------------------------------------------------------
 
   private val dppCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Unit]("orders.parquet", "graft_dpp")
 
   /** Star fixture derived once per fixture generation: `fact/` = orders
     * partitioned by order_year; `dim/` = one row per year with a keep
@@ -152,10 +148,7 @@ object PartitionedParquet {
     * `isLikelySelective` test — the EqualTo comparison is what keeps the
     * dim filter DPP-eligible.
     */
-  def dppLayout(t: Tables): String = Tables.cachedPathPerGeneration(
-    dppCache, t.dir, "orders.parquet") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_dpp").toString
+  def dppLayout(t: Tables): String = dppCache(t.dir, ()) { base =>
     val o = t.orders.withColumn("order_year", year(col("o_orderdate")))
     o.write.mode("overwrite").partitionBy("order_year")
       .parquet(s"$base/fact")
@@ -163,7 +156,6 @@ object PartitionedParquet {
       .withColumn("keep_flag",
         when(col("order_year").isin(1996, 1997), 1).otherwise(0))
       .write.mode("overwrite").parquet(s"$base/dim")
-    base
   }
 
   /** Gate query: fact ⋈ (dim WHERE keep) rolled up per (year, status).

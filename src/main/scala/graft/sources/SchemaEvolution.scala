@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.Tables
+import graft.core.{GenerationCache, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -25,20 +25,16 @@ import org.apache.spark.sql.types._
 object SchemaEvolution {
 
   private val dirCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Unit]("documents.parquet", "graft_evolved")
 
   /** Two-generation parquet dir derived once per fixture generation. */
-  def evolvedDir(t: Tables): String = Tables.cachedPathPerGeneration(
-    dirCache, t.dir, "documents.parquet") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_evolved").toString
+  def evolvedDir(t: Tables): String = dirCache(t.dir, ()) { base =>
     val docs = t.documents.select("doc_id", "source", "text", "lang", "n_chars")
     docs.filter(col("doc_id") % 2 === 0)
       .select("doc_id", "source", "text")
       .write.mode("append").parquet(base)
     docs.filter(col("doc_id") % 2 === 1)
       .write.mode("append").parquet(base)
-    base
   }
 
   /** The union schema a schema-first reader states (what one
@@ -84,7 +80,7 @@ object SchemaEvolution {
   // ---------------------------------------------------------------------
 
   private val widenCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Unit]("documents.parquet", "graft_widened")
 
   /** Two-generation dir where generation 1 (doc_id ≡ 0 mod 2) stores
     * `n_chars` as INT32 and `score` as FLOAT, generation 2 as INT64 /
@@ -93,10 +89,7 @@ object SchemaEvolution {
     * any fixture length (< 2²³), so the widened read's values are
     * restatable by the oracle without float-rounding hazards.
     */
-  def widenedDir(t: Tables): String = Tables.cachedPathPerGeneration(
-    widenCache, t.dir, "documents.parquet") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_widened").toString
+  def widenedDir(t: Tables): String = widenCache(t.dir, ()) { base =>
     val docs = t.documents
       .select(col("doc_id"), col("source"), col("n_chars"))
       .withColumn("score", col("n_chars").cast("double") * 0.5)
@@ -107,7 +100,6 @@ object SchemaEvolution {
       .write.mode("append").parquet(base)
     docs.filter(col("doc_id") % 2 === 1)
       .write.mode("append").parquet(base)
-    base
   }
 
   /** The WIDE schema a schema-first reader states over [[widenedDir]]:

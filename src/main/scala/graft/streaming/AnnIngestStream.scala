@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.Tables
+import graft.core.{GenerationCache, Tables}
 import graft.functions.VectorFunctions.toDoubleArr
 import graft.operators.SimilarityOps
 import org.apache.spark.sql.DataFrame
@@ -38,19 +38,17 @@ object AnnIngestStream {
     StructField("label", IntegerType)))
 
   private val ingestedDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    GenerationCache.dirs[Int]("embeddings.parquet", "graft_ivf_stream_")
 
-  /** One streamed-ingest index per (embeddings dir, generation): centroids
-    * batch-built over vec_id % 7 ≠ 0, the remainder staged as 4 feed
+  /** One streamed-ingest index per (embeddings dir, generation, nlist):
+    * centroids batch-built over vec_id % 7 ≠ 0, the remainder staged as 4 feed
     * files and appended by 4 micro-batches. Returns (index dir,
     * micro-batch count) — the count is cached alongside via the dir
     * naming so re-entry (GateInvariants re-derivation) doesn't re-ingest.
     */
   def ingestedIndexFor(t: Tables, nlist: Int = 16): (String, Int) = {
-    val dir = Tables.cachedPathPerGeneration(
-        ingestedDirs, t.dir, "embeddings.parquet") {
+    val dir = ingestedDirs(t.dir, nlist) { index =>
       val spark = t.spark
-      val index = Tables.scratchDir("graft_ivf_stream_")
       val emb = t.embeddings
         .select(col("vec_id"), col("label"), toDoubleArr(col("embedding")).as("emb"))
       SimilarityOps.buildIvfIndexOf(
@@ -84,7 +82,6 @@ object AnnIngestStream {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(index, "ingest_batches.txt"),
         batches.get().toString.getBytes("UTF-8"))
-      index
     }
     val n = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "ingest_batches.txt")), "UTF-8").trim.toInt

@@ -45,17 +45,13 @@ object DedupStream {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** Keyed on (dir, fixture generation stamp) so an in-place regeneration
-    * under a running JVM invalidates the cached schema — keying and
-    * eviction shared via [[graft.core.Tables.cachedPerGeneration]] (same
-    * contract as `EventStream.tsTypeCache` / `DedupOps.pairGraph`).
+  /** Cached per fixture generation so an in-place regeneration under a
+    * running JVM invalidates the cached schema.
     */
   private val docSchemaCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), StructType]
+    graft.core.GenerationCache[Unit, StructType]("documents.parquet")
   private def probedDocSchema(spark: SparkSession, dir: String): StructType =
-    graft.core.Tables.cachedPerGeneration(
-      docSchemaCache, dir, "documents.parquet")(
-      spark.read.parquet(s"$dir/documents.parquet").schema)
+    docSchemaCache(dir, ())(spark.read.parquet(s"$dir/documents.parquet").schema)
 
   /** The round-17 conditional scan rebalance ([[graft.core.Tables]]
     * `balancedByKey`), applied to the STREAMING documents source

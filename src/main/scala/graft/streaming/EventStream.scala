@@ -52,17 +52,14 @@ object EventStream {
     * The stamp in the key makes an in-place fixture regeneration (the
     * driver does this between rounds, under a running JVM — round-8 ts
     * drift) invalidate the cached encoding instead of requiring a
-    * restart; keying and eviction live in
-    * [[graft.core.Tables.cachedPerGeneration]] (shared with
-    * `DedupStream.docSchemaCache`).
+    * restart.
     */
-  private val tsTypeCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), org.apache.spark.sql.types.DataType]
+  private val tsTypeCache = graft.core.GenerationCache[
+    Unit, org.apache.spark.sql.types.DataType]("events.parquet")
 
   private def readEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = graft.core.Tables.cachedPerGeneration(
-      tsTypeCache, dir, "events.parquet")(
+    val tsType = tsTypeCache(dir, ())(
       spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType)
     val schema = StructType(eventSchema.map(f =>
       if (f.name == "ts") f.copy(dataType = tsType) else f))

@@ -39,10 +39,10 @@ object StreamTuning {
     * path — the replay volume the partition count is derived from.
     */
   private val bytesCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Long]
+    new graft.core.GenerationCache[String, Long](identity, _ => ())
 
   private[streaming] def inputBytes(dir: String, fixture: String): Long =
-    graft.core.Tables.cachedPerGeneration(bytesCache, dir, fixture) {
+    bytesCache(dir, fixture) {
       try {
         val stream = java.nio.file.Files.walk(
           java.nio.file.Paths.get(s"$dir/$fixture"))

@@ -229,7 +229,7 @@ class PlanShapeSpec extends SparkTestBase {
     // balanced accessor WITHOUT any exchange — at 100 TB the condition is
     // false and no corpus bytes may cross an added shuffle.
     val par = spark.sparkContext.defaultParallelism
-    val dir = java.nio.file.Files.createTempDirectory("graft_rgtest").toString
+    val dir = graft.core.Tables.scratchDir("graft_rgtest")
     try {
       t.documents.repartition(par, col("doc_id"))
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")

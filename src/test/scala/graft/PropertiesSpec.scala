@@ -90,7 +90,7 @@ class PropertiesSpec extends SparkTestBase {
   }
 
   private def writeDocs(df: org.apache.spark.sql.DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-prop-").toString
+    val dir = graft.core.Tables.scratchDir("graft-prop-")
     df.withColumn("lang", lit("en")).withColumn("source", lit("gen"))
       .withColumn("n_chars", length(col("text")))
       .write.parquet(s"$dir/documents.parquet")

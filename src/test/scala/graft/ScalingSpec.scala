@@ -31,7 +31,7 @@ class ScalingSpec extends SparkTestBase {
   private lazy val t1 = Tables(spark, "/root/testdata/sf0.01")
 
   private lazy val t3: Tables = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_scale3_").toString
+    val dir = Tables.scratchDir("graft_scale3_")
     GenScale.replicateDocuments(t1.documents, 3)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     GenScale.replicateEmbeddings(t1.embeddings, 3)
@@ -71,7 +71,7 @@ class ScalingSpec extends SparkTestBase {
     assume(sys.env.contains("SPARK_GRAFT_SLOW"),
       "10x scaling leg runs only with SPARK_GRAFT_SLOW=1")
     val t10: Tables = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_scale10_").toString
+      val dir = Tables.scratchDir("graft_scale10_")
       GenScale.replicateDocuments(t1.documents, 10)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       Tables(spark, dir)
@@ -96,7 +96,7 @@ class ScalingSpec extends SparkTestBase {
     // and one length band — 400 docs at 1×, 1200 at 3×
     import spark.implicits._
     def hotTables(n: Int): Tables = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_scale_hot_").toString
+      val dir = Tables.scratchDir("graft_scale_hot_")
       (0L until n.toLong)
         .map(i => (i, f"LICENSE_HEADER_A standard preamble $i%06d", "en", "s0", 40L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")

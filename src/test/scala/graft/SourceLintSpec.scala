@@ -10,6 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * it (or `Tables.scratchDir`), so the one copy carries the warning and
   * the missing-path rule. No handler catches `Throwable`: a catch-and-
   * continue site matches `NonFatal` and says on stderr that it fired.
+  * Fixture generations are read only inside `graft/core/` (through
+  * `GenerationCache`), and the only temp dirs engine code creates by
+  * hand are `Tables.scratchDir`'s and the few that delete their own.
   */
 class SourceLintSpec extends AnyFunSuite {
   import scala.jdk.CollectionConverters._
@@ -62,5 +65,37 @@ class SourceLintSpec extends AnyFunSuite {
       if throwableCase.findFirstIn(line).isDefined
     } yield s"$file:${n + 1}"
     assert(sites.isEmpty, s"catch NonFatal and warn on stderr instead: $sites")
+  }
+
+  test("fixture generation stamps are read only inside graft/core") {
+    val sites = for {
+      (file, text) <- sources
+      if !file.startsWith("graft/core/")
+      (line, n) <- text.linesIterator.zipWithIndex
+      if line.contains("fixtureStamp(")
+    } yield s"$file:${n + 1}"
+    assert(sites.isEmpty, s"cache fixture-derived values in a GenerationCache: $sites")
+  }
+
+  test("createTempDirectory appears only in scratchDir and self-deleting sites") {
+    // Tables.scratchDir, plus dirs their creator deletes and keeps itself:
+    // Bench's CSV copies and stream output, the CDC feed, WAP staging and
+    // the streamed-ingest feed
+    val allowed = Map(
+      "graft/core/Tables.scala" -> 1, "graft/Bench.scala" -> 3,
+      "graft/streaming/CdcStream.scala" -> 1,
+      "graft/operators/PublishOps.scala" -> 1,
+      "graft/streaming/AnnIngestStream.scala" -> 1)
+    val counts = sources
+      .map { case (f, text) => f -> "createTempDirectory".r.findAllIn(text).size }
+      .filter(_._2 > 0).toMap
+    val stray = for {
+      (file, text) <- sources
+      if counts.get(file) != allowed.get(file)
+      (line, n) <- text.linesIterator.zipWithIndex
+      if line.contains("createTempDirectory")
+    } yield s"$file:${n + 1}"
+    assert(counts == allowed,
+      s"take scratch space via Tables.scratchDir or a GenerationCache.dirs: $stray")
   }
 }

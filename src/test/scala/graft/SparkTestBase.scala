@@ -17,7 +17,7 @@ object TestSpark {
       .config("spark.scheduler.mode", "FAIR") // per-fit pools share cores fairly (PricePipeline.metricsTable); single-pool queries behave as FIFO
     .config("spark.sql.ansi.enabled", "false") // reference dirty-CSV semantics: bad casts -> null (SURVEY 1.2/7.3)
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse-").toString)
+      Tables.scratchDir("graft-warehouse-"))
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

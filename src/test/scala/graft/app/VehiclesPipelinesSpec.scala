@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class VehiclesPipelinesSpec extends SparkTestBase {
 
   private lazy val csvPath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vehicles-").toString + "/vehicles"
+    val dir = graft.core.Tables.scratchDir("graft-vehicles-") + "/vehicles"
     val manufacturers = array(Seq("ford", "toyota", "bmw", "kia", "volvo").map(lit): _*)
     val conditions = array(Seq("good", "excellent", "fair").map(lit): _*)
     val fuels = array(Seq("gas", "diesel", "electric").map(lit): _*)

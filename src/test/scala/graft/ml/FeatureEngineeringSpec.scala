@@ -124,7 +124,7 @@ class FeatureEngineeringSpec extends SparkTestBase {
     // oracle's ORDER BY n DESC, value ASC restates. The sf0.01 driver
     // fixture ties 2-HIGH/3-MEDIUM at 3003, so this contract carries a
     // real gate, not just this synthetic.
-    val dir = java.nio.file.Files.createTempDirectory("graft_tie_").toString
+    val dir = graft.core.Tables.scratchDir("graft_tie_")
     val rows = (1L to 60L).map(i => (i, "c-common")) ++
       (61L to 100L).map(i => (i, "b-tied")) ++
       (101L to 140L).map(i => (i, "a-tied"))

@@ -34,8 +34,7 @@ class DataQualityOpsSpec extends SparkTestBase {
   }
 
   test("injected violations are each caught by exactly the right constraint") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dq_doctored").toString
+    val dir = Tables.scratchDir("graft_dq_doctored")
     // orders: duplicate pk, null custkey, bad status, zero price, orphan FK
     Seq(
       (1L, Some(10L), "F", "1-URGENT", 100.0),

@@ -13,7 +13,7 @@ class DedupSimilaritySpec extends SparkTestBase {
 
   /** Tables over a temp dir holding the given literal frames as parquet. */
   private def litTables(docs: DataFrame = null, embs: DataFrame = null): Tables = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-test-").toString
+    val dir = Tables.scratchDir("graft-test-")
     if (docs != null) docs.write.parquet(s"$dir/documents.parquet")
     if (embs != null) embs.write.parquet(s"$dir/embeddings.parquet")
     Tables(spark, dir)
@@ -384,7 +384,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     // negative control: hand-built index with 9/10 of the vectors in one
     // cell, plus a cell id that no persisted centroid knows about — the
     // meter must trip BOTH the rebuild trigger and probe-reachability
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift-").toString
+    val dir = Tables.scratchDir("graft-drift-")
     val skewed = (0L until 9L).map(i => (i, 0, Array(1.0, 0.0), 7)) :+
       (9L, 0, Array(0.0, 1.0), 99)
     skewed.toDF("vec_id", "label", "emb", "cell")

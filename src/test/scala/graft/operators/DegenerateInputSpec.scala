@@ -19,7 +19,7 @@ class DegenerateInputSpec extends SparkTestBase {
     * reproduced by a plain write, and no spec here needs it).
     */
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty_").toString
+    val dir = Tables.scratchDir("graft_empty_")
     // nanosAsLong keeps this robust to fixture drift: whatever encoding
     // events.ts uses (long nanos or native micros), the empty copy carries
     // the same physical type, which Tables.events dispatches on
@@ -172,7 +172,7 @@ class DegenerateInputSpec extends SparkTestBase {
 
   test("bm25 on a corpus without the query terms returns no rows, not zeros") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_miss").toString
+    val dir = Tables.scratchDir("graft_bm25_miss")
     Seq((1L, "wholly unrelated words", "en", "s", 22L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
@@ -192,7 +192,7 @@ class DegenerateInputSpec extends SparkTestBase {
     import spark.implicits._
     val one = Seq((1L, "hello", "en", "srcX", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_onedoc_").toString
+    val dir = Tables.scratchDir("graft_onedoc_")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "embeddings").foreach { name =>
       spark.read.parquet(s"/root/testdata/sf0.001/$name.parquet")

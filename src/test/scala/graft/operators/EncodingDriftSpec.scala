@@ -33,7 +33,7 @@ class EncodingDriftSpec extends SparkTestBase {
       (i.toLong, sec, i.toLong % 3,
         if (i % 2 == 0) "click" else "purchase", i * 1.25, s"""{"k":$i}""")
     }
-    val root = java.nio.file.Files.createTempDirectory("graft_enc_").toString
+    val root = Tables.scratchDir("graft_enc_")
 
     // 1) raw INT64 nanos — what a TIMESTAMP(NANOS) file surfaces as under
     // legacy.parquet.nanosAsLong (Spark cannot author real NANOS parquet,
@@ -99,7 +99,7 @@ class EncodingDriftSpec extends SparkTestBase {
       (2L, "alpha beta gamma delta epsilon zeta eta theta"),
       (3L, "totally different words in this other document here"),
       (4L, "alpha beta gamma delta epsilon zeta eta iota"))
-    val root = java.nio.file.Files.createTempDirectory("graft_docenc_").toString
+    val root = Tables.scratchDir("graft_docenc_")
     docs.map { case (id, tx) => (id, tx, "en", "s0", tx.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$root/wide/documents.parquet")
@@ -134,7 +134,7 @@ class EncodingDriftSpec extends SparkTestBase {
     // physical encoding must be picked up without a restart. With a
     // dir-only key the second read below would apply the stale NTZ schema
     // to raw int64 nanos — the silent 1000× compression class.
-    val root = java.nio.file.Files.createTempDirectory("graft_regen_").toString
+    val root = Tables.scratchDir("graft_regen_")
     val base = (0 until 12).map { i =>
       val sec = 1700000000L + i * 540L
       (i.toLong, sec, i.toLong % 3,
@@ -165,7 +165,7 @@ class EncodingDriftSpec extends SparkTestBase {
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta"),
       (3L, "totally different words in this other document here"))
-    val droot = java.nio.file.Files.createTempDirectory("graft_regen_doc_").toString
+    val droot = Tables.scratchDir("graft_regen_doc_")
     docs.map { case (id, tx) => (id, tx, "en", "s0", tx.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$droot/documents.parquet")
@@ -180,6 +180,28 @@ class EncodingDriftSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(widePairs == narrowPairs && widePairs.nonEmpty,
       "regenerated documents width served through a stale cached schema")
+  }
+
+  test("in-place regeneration of embeddings.parquet rebuilds the IVF index") {
+    // ivfTopK persists its index once per fixture generation; a rewrite
+    // of embeddings.parquet under a running JVM must not keep probing
+    // the index built over the replaced rows
+    val root = Tables.scratchDir("graft_regen_emb_")
+    def writeEmbeddings(idOffset: Long): Unit =
+      t.embeddings.withColumn("vec_id", col("vec_id") + idOffset)
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/embeddings.parquet")
+    def topIds(queryId: Long): Set[Long] =
+      SimilarityOps.ivfTopK(Tables(spark, root), queryId, k = 5)
+        .collect().map(_.getLong(0)).toSet
+
+    writeEmbeddings(0L)
+    val before = topIds(0L)
+    assert(before.nonEmpty && before.forall(_ < 1000000L))
+    writeEmbeddings(1000000L) // regeneration-in-place: every vec_id moves
+    val after = topIds(1000000L)
+    assert(after.nonEmpty, "query row missing from the regenerated table")
+    assert(after.forall(_ >= 1000000L),
+      s"ivfTopK probed an index built over the replaced rows: $after")
   }
 
   test("batch and streaming agree on every encoding") {

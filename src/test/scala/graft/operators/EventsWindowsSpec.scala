@@ -172,7 +172,7 @@ class EventsWindowsSpec extends SparkTestBase {
   test("streaming dedup drops replayed events: duplicated input, single-copy counts") {
     // write every event twice into a temp stream source; the deduplicated
     // per-type counts must equal the single-copy batch counts
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-").toString
+    val dir = graft.core.Tables.scratchDir("graft-dedup-")
     // plain (schema-inferred) read: the duplicated copy keeps the fixture's
     // own ts encoding, so EventStream's adaptive dispatch sees the same
     // physical type the real table has
@@ -499,7 +499,7 @@ class EventsWindowsSpec extends SparkTestBase {
       (0 until per).map(i =>
         (new Timestamp((h * 3600L + i * 60L + 1) * 1000), "click"))
     }.toDF("ts", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("graft_anom").toString
+    val dir = graft.core.Tables.scratchDir("graft_anom")
     rows.withColumn("event_id", monotonically_increasing_id())
       .withColumn("user_id", lit(1L)).withColumn("value", lit(1.0))
       .withColumn("props", lit("{}"))
@@ -528,7 +528,7 @@ class EventsWindowsSpec extends SparkTestBase {
       (0 until 4).map(i => (new Timestamp((h * 3600L + i * 60 + 1) * 1000), "view"))) ++
       (0 until 4).map(i => (new Timestamp((30 * 3600L + i * 60 + 1) * 1000), "view")))
       .toDF("ts", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("graft_anom_gap").toString
+    val dir = graft.core.Tables.scratchDir("graft_anom_gap")
     rows.withColumn("event_id", monotonically_increasing_id())
       .withColumn("user_id", lit(1L)).withColumn("value", lit(1.0))
       .withColumn("props", lit("{}"))
@@ -553,7 +553,7 @@ class EventsWindowsSpec extends SparkTestBase {
       (3L, 5L, "view"))
       .map { case (u, s, ty) => (u, new Timestamp(s * 1000), ty) }
       .toDF("user_id", "ts", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel").toString
+    val dir = graft.core.Tables.scratchDir("graft_funnel")
     rows.withColumn("event_id", col("user_id"))
       .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
       .write.parquet(s"$dir/events.parquet")

@@ -96,8 +96,7 @@ class HllMergeSpec extends SparkTestBase {
       .toDF("source", "text")
     val shards = docs.groupBy("source")
       .agg(hll_sketch_agg(col("text"), 12).as("sk"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_hll_store").toString
+    val dir = graft.core.Tables.scratchDir("graft_hll_store")
     shards.write.mode("overwrite").parquet(dir)
     val fromStore = spark.read.parquet(dir)
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est"))

@@ -14,7 +14,7 @@ class RoundSixOpsSpec extends SparkTestBase {
 
   /** Literal orders/documents fixture exercising hand-checkable cases. */
   private lazy val fixDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r6_").toString
+    val dir = Tables.scratchDir("graft_r6_")
     // customer 7: days 0 / 10 / 10 (same-day peers) / 40 from 1992-01-01;
     // customer 8: a single order
     Seq(
@@ -89,7 +89,7 @@ class RoundSixOpsSpec extends SparkTestBase {
   }
 
   test("doc chunks: starts every stride while start < n_tokens; tail chunk truncated") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r6_chunks_").toString
+    val dir = Tables.scratchDir("graft_r6_chunks_")
     Seq((1L, "a b c d e", "en", "s0", 9L), (2L, "x", "en", "s0", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -223,7 +223,7 @@ class RoundSixOpsSpec extends SparkTestBase {
       .map { case ((l, id, h), i) => (l, id, h, i + 1) }
     assert(got.toSeq == expected)
     // layout independence: a differently-partitioned copy gives identical rows
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_r6_hs_").toString
+    val dir2 = Tables.scratchDir("graft_r6_hs_")
     ft.documents.repartition(7).write.mode("overwrite").parquet(s"$dir2/documents.parquet")
     val got2 = TextOps.hashSamplePerLang(Tables(spark, dir2), k = 2)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getInt(3)))

@@ -62,7 +62,7 @@ class SkewStressSpec extends SparkTestBase {
   /** Writes a documents fixture and returns Tables over it. */
   private def docTables(rows: Seq[(Long, String)]): graft.core.Tables = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew_docs_").toString
+    val dir = graft.core.Tables.scratchDir("graft_skew_docs_")
     rows.map { case (id, text) => (id, text, "en", "s0", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

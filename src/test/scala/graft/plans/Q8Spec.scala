@@ -125,7 +125,7 @@ class Q8Spec extends SparkTestBase {
       call_function("graft_q8_pack", col("arr")).as("q8")).cache()
     dense.count(); packed.count()
     def diskBytes(df: DataFrame): Long = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q8_ab_")
+      val dir = java.nio.file.Paths.get(graft.core.Tables.scratchDir("graft_q8_ab_"))
       df.write.mode("overwrite").parquet(dir.toString)
       val sz = dir.toFile.listFiles().filter(_.getName.endsWith(".parquet"))
         .map(_.length).sum

@@ -172,7 +172,7 @@ class ZOrderSpec extends SparkTestBase {
     // is stretched 50000x), so the curve degenerates to a date sort;
     // clamped P1/P99 spreads the regular keys over the full cell range.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_zoutlier_").toString
+    val dir = graft.core.Tables.scratchDir("graft_zoutlier_")
     val rows = (1 to 2000).map { i =>
       (i.toLong, (i % 1000 + 1).toLong, f"${1995 + i % 4}%04d-${i % 12 + 1}%02d-${i % 28 + 1}%02d")
     } :+ ((2001L, 50_000_000L, "1997-06-15"))

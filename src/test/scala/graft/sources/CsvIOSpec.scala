@@ -8,7 +8,7 @@ class CsvIOSpec extends SparkTestBase {
   import spark.implicits._
 
   private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-csv-").toString
+    graft.core.Tables.scratchDir("graft-csv-")
 
   test("csv roundtrip: write orders sample, read back inferred") {
     val dir = s"${tmpDir()}/orders_csv"

@@ -18,7 +18,7 @@ class JsonIOSpec extends SparkTestBase {
       (4L, "{\"looks\":\"like json\"}"),
       (5L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_json_spec_").toString
+    val dir = graft.core.Tables.scratchDir("graft_json_spec_")
     try {
       JsonIO.write(nasty, dir)
       val back = JsonIO.read(spark, dir, schema)

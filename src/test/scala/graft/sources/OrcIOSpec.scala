@@ -14,7 +14,7 @@ class OrcIOSpec extends SparkTestBase {
       (3L, null.asInstanceOf[String], 0L),
       (4L, "repeated repeated repeated", 26L))
       .toDF("doc_id", "text", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc_spec_").toString
+    val dir = graft.core.Tables.scratchDir("graft_orc_spec_")
     try {
       OrcIO.write(rows, dir)
       val back = OrcIO.read(spark, dir)
@@ -34,7 +34,7 @@ class OrcIOSpec extends SparkTestBase {
   }
 
   test("ORC scans get predicate pushdown and column pruning like parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc_plan_").toString
+    val dir = graft.core.Tables.scratchDir("graft_orc_plan_")
     try {
       OrcIO.write(t.orders.select("o_orderkey", "o_orderstatus", "o_totalprice"), dir)
       val p = OrcIO.read(spark, dir)

@@ -27,8 +27,7 @@ class ParquetStatsSpec extends SparkTestBase {
   test("multi-file engine-written dir: per-file footer stats == per-file data scan") {
     // ground truth per physical file via input_file_name(), the zone maps
     // a min/max-pruned scan would actually consult
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stats_multi").toString
+    val dir = graft.core.Tables.scratchDir("graft_stats_multi")
     t.documents.select("doc_id", "n_chars")
       .repartitionByRange(4, col("doc_id"))
       .write.mode("overwrite").parquet(dir)
@@ -80,8 +79,7 @@ class ParquetStatsSpec extends SparkTestBase {
     // hand-build a stats row with null min/max and run the keep predicate
     // indirectly: a dir whose column has all-null values yields null
     // min/max in footers and must NOT be skipped
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stats_noskip").toString
+    val dir = graft.core.Tables.scratchDir("graft_stats_noskip")
     import spark.implicits._
     Seq[(java.lang.Long, String)]((null, "a"), (null, "b"))
       .toDF("v", "k").coalesce(1).write.mode("overwrite").parquet(dir)
@@ -96,8 +94,7 @@ class ParquetStatsSpec extends SparkTestBase {
 
   test("clustering depth separates a range-clustered layout from a shuffled one") {
     val clustered = ParquetStats.rangeClusteredOrdersDir(t)
-    val shuffled = java.nio.file.Files
-      .createTempDirectory("graft_shuffled_orders").toString
+    val shuffled = graft.core.Tables.scratchDir("graft_shuffled_orders")
     t.orders.select("o_orderkey", "o_orderstatus")
       .repartition(8)   // hash-ish round-robin: every file spans ~everything
       .write.mode("overwrite").parquet(shuffled)
@@ -123,8 +120,7 @@ class ParquetStatsSpec extends SparkTestBase {
     // complete=true must imply a usable min/max — a pruning consumer
     // trusting the flag on a column-less file would skip rows it never
     // proved absent (round-11 advice)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stats_absent").toString
+    val dir = graft.core.Tables.scratchDir("graft_stats_absent")
     Seq((1L, "a"), (2L, "b")).toDF("v", "k")
       .coalesce(1).write.mode("overwrite").parquet(dir)
     val row = ParquetStats.footerStats(t, dir, Seq("nope")).head()
@@ -297,8 +293,7 @@ class ParquetStatsSpec extends SparkTestBase {
   }
 
   test("metadata-only aggregation: nulls excluded from min/max, counted exactly") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_meta_nulls").toString
+    val dir = graft.core.Tables.scratchDir("graft_meta_nulls")
     Seq[(java.lang.Long, String)]((5L, "a"), (null, "b"), (9L, "c"))
       .toDF("v", "k").repartition(2).write.mode("overwrite").parquet(dir)
     val r = ParquetStats.metadataAgg(t, dir, "v").head()
@@ -312,15 +307,13 @@ class ParquetStatsSpec extends SparkTestBase {
     // an all-null chunk has no min/max → stats_complete=false for that
     // file → the DIR-level answer must NOT claim metadata_only (a
     // production caller falls back to a data scan)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_meta_incomplete").toString
+    val dir = graft.core.Tables.scratchDir("graft_meta_incomplete")
     Seq[(java.lang.Long, String)]((1L, "a"), (2L, "b"))
       .toDF("v", "k").coalesce(1).write.parquet(s"$dir/p1")
     Seq[(java.lang.Long, String)]((null, "c"), (null, "d"))
       .toDF("v", "k").coalesce(1).write.parquet(s"$dir/p2")
     // flatten the two files into one dir
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_meta_incomplete_flat").toString
+    val out = graft.core.Tables.scratchDir("graft_meta_incomplete_flat")
     Seq("p1", "p2").foreach { p =>
       new java.io.File(s"$dir/$p").listFiles()
         .filter(_.getName.endsWith(".parquet")).foreach { f =>
@@ -363,8 +356,7 @@ class ParquetStatsSpec extends SparkTestBase {
   }
 
   test("null counts surface in the stats table") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stats_nulls").toString
+    val dir = graft.core.Tables.scratchDir("graft_stats_nulls")
     Seq[(java.lang.Long, String)]((1L, "a"), (null, "b"), (3L, "c"), (null, "d"))
       .toDF("v", "k").coalesce(1).write.mode("overwrite").parquet(dir)
     val row = ParquetStats.footerStats(t, dir, Seq("v")).head()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class PartitionedParquetSpec extends SparkTestBase {
 
   test("partition filter prunes directories at planning time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part_spec_").toString
+    val dir = graft.core.Tables.scratchDir("graft_part_spec_")
     PartitionedParquet.writePartitioned(
       t.orders.withColumn("order_year", year(col("o_orderdate"))),
       dir, "order_year")

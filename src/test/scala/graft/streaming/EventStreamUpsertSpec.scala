@@ -12,7 +12,7 @@ class EventStreamUpsertSpec extends SparkTestBase {
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000)
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val df = mem.toDF.toDF("user_id", "ts", "event_id", "event_type", "value")
-    val target = java.nio.file.Files.createTempDirectory("graft_upsert_spec_").toString
+    val target = graft.core.Tables.scratchDir("graft_upsert_spec_")
     @volatile var current: Option[String] = None
     val q = df.writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>

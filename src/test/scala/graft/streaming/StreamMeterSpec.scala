@@ -85,8 +85,7 @@ class StreamMeterSpec extends SparkTestBase {
   test("resumed capped run reports the window, not the cross-run id span") {
     withRetention(3) {
       import spark.implicits._
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_meter_resume_").toString
+      val work = graft.core.Tables.scratchDir("graft_meter_resume_")
       val feed = s"$work/feed"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(feed))
       def publish(tag: String, v: Long): Unit = {

@@ -26,8 +26,8 @@ class StreamRestartSpec extends SparkTestBase {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .count()
       .select(col("window.start").as("win_start"), col("event_type"), col("count"))
-    val out = java.nio.file.Files.createTempDirectory("graft_restart_out_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_restart_ck_").toString
+    val out = graft.core.Tables.scratchDir("graft_restart_out_")
+    val ckpt = graft.core.Tables.scratchDir("graft_restart_ck_")
     def start() = counts.writeStream
       .format("parquet").option("path", out)
       .option("checkpointLocation", ckpt)
