@@ -112,6 +112,7 @@ object Bench {
     // resets them, so the reported pass's breakdown ships, not the mix
     graft.ml.PricePipeline.resetModelFitWalls()
     graft.streaming.StreamMeter.reset()
+    graft.operators.GraphOps.observedFallbacks.set(0L)
     // X2 (ref wraps every query in psutil.cpu_percent spans): process-CPU
     // time around the suite via the JVM's OS bean
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
@@ -720,16 +721,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FAIR")) // per-fit pools share cores fairly (PricePipeline.metricsTable); single-pool queries behave as FIFO; env override for A/B
-      .config("spark.sql.ansi.enabled", "false") // reference dirty-CSV semantics: bad casts -> null (SURVEY 1.2/7.3)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm up session-level one-time costs (JIT, codegen, collation
@@ -940,7 +932,7 @@ object Bench {
     //    fit the tail window whole.
     val sf01MediansAllJson =
       if (sfDir.contains("sf0.1")) sf01MediansJsonOf(headline) else "{}"
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","input_bytes":$sfBytes,"cpu_percent":${math.round(run.cpuPct * 10) / 10.0},$calibJson,$sf1CalibJson,"sf1_row_quiet_medians":$sf1MediansAllJson,$sf01TripsJson,"sf01_row_quiet_medians":$sf01MediansAllJson,$floorJson,"ceiling_rows":$ceilingJson,"variance_rows":$varianceJson,"workload":$workload,"workload_sf1":$workloadSf1,"ml_model_fit_secs":$mlWallsJson,"streaming_meter":$streamMeterJson,"query_cpu_percent":$qcpu,"query_gc_sec":$qgc,"runs_per_query":2,"aggregation":"min","probe_benched":$probeBenchedJson,"failed_queries":$failedJson,"queries_sf1":$sf1Json,"queries_sf1_runs":$sf1RunsJson,"queries":$qs}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","input_bytes":$sfBytes,"cpu_percent":${math.round(run.cpuPct * 10) / 10.0},$calibJson,$sf1CalibJson,"sf1_row_quiet_medians":$sf1MediansAllJson,$sf01TripsJson,"sf01_row_quiet_medians":$sf01MediansAllJson,$floorJson,"ceiling_rows":$ceilingJson,"variance_rows":$varianceJson,"workload":$workload,"workload_sf1":$workloadSf1,"ml_model_fit_secs":$mlWallsJson,"streaming_meter":$streamMeterJson,"graph_observed_fallbacks":${graft.operators.GraphOps.observedFallbacks.get},"query_cpu_percent":$qcpu,"query_gc_sec":$qgc,"runs_per_query":2,"aggregation":"min","probe_benched":$probeBenchedJson,"failed_queries":$failedJson,"queries_sf1":$sf1Json,"queries_sf1_runs":$sf1RunsJson,"queries":$qs}""")
     val resultMap = results.toMap
     val headQs = headline.flatMap(k => resultMap.get(k).map(v =>
         "\"" + k + "\":" + math.round(v * 1000) / 1000.0))

@@ -1,7 +1,6 @@
 package graft
 
 import graft.core.Tables
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection main: prints `explain("formatted")` for a representative
   * query per operator family — the artifact behind PLANS.md. Usage:
@@ -131,14 +130,7 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = core.LocalSession.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val t = Tables(spark, sfDir)
 

@@ -456,8 +456,8 @@ object SparkEntry {
     "dedup_cluster_histogram" -> q(t => DedupOps.clusterSizeHistogram(t)),
     "dedup_cluster_resolve" -> q(t => DedupOps.resolveClusters(t, 0.5)),
     // drifting-revision chain clusters (round-13): per-source chain graph
-    // with diameter > the propagation round budget — the gate that
-    // exercises connectedComponents' O(log n) star-contraction fallback
+    // with diameter > 20 hops — the gate that holds connectedComponents'
+    // star contraction to O(log n) rounds on a high-diameter graph
     "dedup_revision_chains" -> q(GraphOps.revisionChainClusters),
     // leakage-safe eval split (round-12): split key = md5 of the near-dup
     // cluster representative, so no cluster spans train and holdout
@@ -648,7 +648,7 @@ object SparkEntry {
 
   /** DuckDB replay of GraphOps.communityLeaders: the recursive closure
     * gives each node its component (min reachable id, self included —
-    * identical to min-label propagation's output), the unrolled integer
+    * identical to GraphOps.connectedComponents' label), the unrolled integer
     * iterations its rank; the leader is the per-community rank argmax.
     */
   private def communityLeadersSql(iters: Int): String =
@@ -2823,7 +2823,7 @@ object SparkEntry {
     // Duplicate-cluster resolution over the same verified pair graph at
     // threshold 0.5: a recursive CTE computes each node's transitive
     // closure, the cluster representative is the component-min doc_id —
-    // the oracle for the engine's min-label-propagation loop.
+    // the oracle for the engine's star-contraction components.
     "dedup_clusters" ->
       s"""WITH RECURSIVE $minhashPairsCte,
          |jp AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),

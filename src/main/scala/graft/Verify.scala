@@ -18,16 +18,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FAIR")) // per-fit pools share cores fairly (PricePipeline.metricsTable); single-pool queries behave as FIFO; env override for A/B
-      .config("spark.sql.ansi.enabled", "false") // reference dirty-CSV semantics: bad casts -> null (SURVEY 1.2/7.3)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = core.LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter (comma-separated names); unset = everything,
@@ -1087,19 +1078,16 @@ object GateInvariants {
           s"invariant: encoded token count below word count in lang ${r.get(0)}")
       }
     case "dedup_revision_chains" =>
-      // the gate exists to exercise star contraction on a shape that
-      // genuinely NEEDS the O(log n) algorithm (round 14: the operator
-      // now calls it directly — clustersStar — instead of discovering
-      // the shape via the propagation bail every run). The invariant is
-      // unchanged: if a fixture reshape shrinks the chains below the
-      // propagation round budget (20), plain propagation could have
-      // satisfied the gate and the O(log n) path would no longer be
-      // load-bearing — fail loudly instead of silently regressing.
+      // the gate exists to run connected components on a HIGH-DIAMETER
+      // graph, the shape whose round count star contraction keeps at
+      // O(log n). If a fixture reshape shrinks the chains to 20 hops or
+      // fewer, the gate would only ever see shallow components — fail
+      // loudly instead of silently losing that coverage.
       val maxSize = df.agg(max(col("cluster_size"))).head().getLong(0)
       require(maxSize > 21,
         s"invariant: longest revision chain has $maxSize docs (diameter " +
-          s"${maxSize - 1}) — must exceed the 20-round propagation budget " +
-          "for the star-contraction path to be load-bearing")
+          s"${maxSize - 1}) — must exceed 20 hops for the gate to stay " +
+          "high-diameter")
     case "layout_range_write" =>
       // the gate judged the layout from FOOTERS; recompute every verdict
       // from the DATA (per-file min/max/count via input_file_name) so a

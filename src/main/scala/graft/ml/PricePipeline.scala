@@ -219,8 +219,8 @@ object PricePipeline {
                 // tiny treeAggregate jobs wait behind its neighbors'
                 // stages, inflating FMRegressor's in-pool wall to 34-38 s
                 // vs ~24.6 s isolated (r15 fit walls). With
-                // spark.scheduler.mode=FAIR (set in the Bench/Verify
-                // sessions) each fit's jobs schedule in their own pool at
+                // spark.scheduler.mode=FAIR (set by core.LocalSession)
+                // each fit's jobs schedule in their own pool at
                 // equal share, so the row's makespan approaches the
                 // whale's isolated wall. Results are unaffected: every
                 // fit is seeded and scheduling never changes arithmetic.

@@ -39,146 +39,38 @@ object GraphOps {
         fallback
     }
 
-  /** Connected components by min-label propagation.
-    *
-    * Input: an undirected edge list as (a, b) pairs (any column names,
-    * positional). Output: one row per node — `id`, `label` (= the minimum
-    * node id in its component).
-    *
-    * Every node starts labelled with itself; each round takes the min of
-    * its own and its neighbours' labels; converged when nothing changes.
-    * Rounds = component diameter, so near-dup graphs (near-cliques,
-    * diameter ≲ 3) converge in 2–4 rounds; each round is one shuffle of
-    * the cached edge list joined to current labels. `localCheckpoint`
-    * truncates lineage so round N's plan does not replay rounds 1..N-1.
-    * The driver loop reads ONE scalar per round (changed-label count) —
-    * data stays on the executors. If the graph has not converged after
-    * `maxRounds` (component diameter > maxRounds — e.g. a chain of
-    * drifting near-duplicate revisions a→b→c→…), the method falls back to
-    * [[starContractionComponents]], which needs only O(log n) rounds
-    * regardless of diameter, instead of failing.
-    *
-    * Early-stagnation bail (round 13): propagation is the optimistic path
-    * for the near-clique graphs dedup produces — they converge in ≤3
-    * rounds after the neighbourhood-min seed. On a long-chain graph the
-    * changed count stays FLAT (each chain advances its min label one hop
-    * per round), so riding out all `maxRounds` before falling back just
-    * burns maxRounds driver-synchronized shuffles to learn what round 4
-    * already knew. After round 4, if the changed count has not at least
-    * halved over the last two rounds, the loop bails to star contraction
-    * immediately. Output is IDENTICAL either way (both algorithms produce
-    * the component-min labelling); only the round count changes —
-    * measured 19 s → ~7 s on the revision-chain gate at sf1.
+  /** Round bound of [[connectedComponents]], far above the ~log n rounds
+    * star contraction takes (about 10 on a 1,000-node chain): running out
+    * fails loudly instead of returning unconverged labels.
     */
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 20): DataFrame =
-    connectedComponentsWithStats(pairs, maxRounds)._1
-
-  /** [[connectedComponents]] plus (propagation rounds run, fallback
-    * fired) — the observable face of the round budget and the
-    * early-stagnation bail, so the spec can pin WHICH path produced the
-    * labels instead of inferring it from timing.
-    */
-  private[operators] def connectedComponentsWithStats(
-      pairs: DataFrame, maxRounds: Int = 20): (DataFrame, Int, Boolean) = {
-    val Array(ca, cb) = pairs.columns.take(2)
-    // materialize the (possibly expensive) pair pipeline ONCE before the
-    // union doubles it into an edge list — without this the upstream query
-    // (e.g. the whole minhash pipeline) executes twice to fill the cache
-    val p = pairs.select(col(ca).as("src"), col(cb).as("dst")).localCheckpoint(true)
-    val edges = p
-      .union(p.select(col("dst").as("src"), col("src").as("dst")))
-      .cache()
-
-    // seed labels with the closed-neighbourhood min: one aggregation over
-    // the edge list performs what used to be a distinct() PLUS the whole
-    // first propagation round (3 shuffles + a checkpoint) — cliques are
-    // fully labelled at seed time and only pay the convergence check.
-    // Every node appears as `src` in the symmetrised edge list, so
-    // coverage is complete, and the seed is a node id from the same
-    // component, so min-propagation still converges to the component min.
-    var labels = edges.groupBy("src")
-      .agg(min("dst").as("nmin"))
-      .select(col("src").as("id"), least(col("src"), col("nmin")).as("label"))
-      .localCheckpoint(true)
-    var changed  = 1L
-    var changed2 = Long.MaxValue // changed count two rounds ago
-    var prev     = Long.MaxValue
-    var rounds   = 0
-    var stagnant = false
-    while (changed > 0 && !stagnant && rounds < maxRounds) {
-      // the changed-label count rides the checkpoint job via observe()
-      // (round-17, same rationale as the star-contraction checksum): the
-      // separate filter().count() action per round doubled the loop's
-      // synchronized job count for the same scalar. Wait bounded — see
-      // observedRow.
-      val changedExpr = coalesce(sum(
-        when(col("label") < col("old_label"), 1L).otherwise(0L)), lit(0L))
-        .as("changed")
-      // round-18 fusion (verdict item 3, guide §2.4): the round-17 body
-      // was join → agg → LEFT JOIN back to labels (the re-attach of each
-      // node's own label). Unioning the self-labels INTO the aggregate
-      // removes that second join: per id, min(label) over {own label} ∪
-      // {neighbour labels} is exactly least(own, nmin), and old_label
-      // rides the self branch (null on neighbour rows; min over one
-      // non-null recovers it — every node HAS a self row, so it is never
-      // null). Same values, one join + one aggregate per round.
-      val self = labels.select(col("id"), col("label"),
-        col("label").as("old_label"))
-      val neighbor = edges
-        .join(labels, edges("dst") === labels("id"))
-        .select(edges("src").as("id"), col("label"),
-          lit(null).cast(labels.schema("label").dataType).as("old_label"))
-      val next = self.union(neighbor)
-        .groupBy("id")
-        .agg(min("label").as("label"), min("old_label").as("old_label"))
-        .select(col("id"), col("old_label"), col("label"))
-      val obs = org.apache.spark.sql.Observation(s"graft_cc_changed_$rounds")
-      val updated = next.observe(obs, changedExpr).localCheckpoint(true)
-      val changedNow = observedRow(obs.future, updated.agg(changedExpr).head())
-        .getAs[Long]("changed")
-      changed2 = prev
-      prev = changed
-      changed = changedNow
-      labels = updated.select("id", "label")
-      rounds += 1
-      // not halving every two rounds after the optimistic window ⇒ a
-      // high-diameter graph; bail to the O(log n) algorithm (see doc)
-      stagnant = rounds > 4 && changed > 0 && changed * 2 > changed2
-    }
-    edges.unpersist()
-    if (changed == 0) (labels, rounds, false)
-    // high diameter: O(log n)-round algorithm. Fed the already-checkpointed
-    // pair frame (round-13 advice): passing the raw `pairs` would re-execute
-    // the full upstream pipeline (e.g. the whole minhash derivation) from
-    // scratch to rebuild an edge list the loop already materialized.
-    else (starContractionComponents(p), rounds, true)
-  }
+  private val maxStarRounds = 50
 
   /** Connected components by alternating large-star / small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14 — public algorithm). Same output contract as
-    * [[connectedComponents]]: one row per node, (`id`, `label` = min node
-    * id in its component).
+    * Beyond", SoCC'14 — public algorithm).
     *
-    * Unlike min-label propagation (rounds = diameter), star contraction
-    * halves every path each round, so a 1,000-node chain converges in
-    * ~O(log n) ≈ 10 rounds. Each round is two grouped aggregations + two
-    * joins on the current edge list — all hash-partitioned on the node id,
-    * no driver-side data. Convergence is detected from two scalars per
-    * round (edge count + sum of xxhash64 over the canonicalized edge set);
-    * a false positive needs a 64-bit hash-sum collision between
-    * consecutive rounds, which is negligible against the cost of an exact
-    * `EXCEPT` every round at 100 TB.
+    * Input: an undirected edge list as (a, b) pairs (any column names,
+    * positional). Output: one row per id that appears in the pairs — `id`,
+    * `label` (= the minimum node id in its component). An id whose only
+    * pairs are self-loops is its own singleton component.
+    *
+    * Star contraction halves every path each round, so rounds grow with
+    * O(log n) whatever the diameter: a 1,000-node chain converges in ~10
+    * rounds, a near-clique in two (one contraction, one confirming round).
+    * Each round is two per-node window minima and one distinct over the
+    * current edge list — three exchanges, all hash-partitioned on node
+    * ids, no driver-side data. Convergence is detected from two scalars per round (edge
+    * count + sum of xxhash64 over the canonicalized edge set), read from
+    * the round's own checkpoint job through [[observedRow]]; a false
+    * positive needs a 64-bit hash-sum collision between consecutive
+    * rounds, which is negligible against the cost of an exact `EXCEPT`
+    * every round at 100 TB.
     */
-  def starContractionComponents(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     val Array(ca, cb) = pairs.columns.take(2)
-    val p0 = pairs.select(col(ca).as("src"), col(cb).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .localCheckpoint(true)
-    val allNodes = p0.select(col("src").as("id"))
-      .union(p0.select(col("dst").as("id")))
-      .distinct()
-      .localCheckpoint(true)
+    // materialize the (possibly expensive) pair pipeline ONCE: both the
+    // node set and the first contraction round read it
+    val p = pairs.select(col(ca).as("src"), col(cb).as("dst")).localCheckpoint(true)
 
     // convergence scalars ride the checkpoint job via observe()
     // (round-17): the loop is driver-latency-bound on a small edge list,
@@ -186,8 +78,7 @@ object GraphOps {
     // job count. CollectMetrics evaluates during the eager checkpoint's
     // own pass, so each round is ONE job; the checkpointed frame's
     // lineage is already truncated past the metrics node, so downstream
-    // consumers never re-fire it. Metric values are identical to the
-    // old separate aggregate (count + hash-sum over the same rows).
+    // consumers never re-fire it.
     def checkpointWithSig(e: DataFrame, round: Int): (DataFrame, (Long, Long)) = {
       val nExpr = count(lit(1)).as("n")
       val hExpr = coalesce(sum(xxhash64(col("src"), col("dst"))), lit(0L)).as("h")
@@ -197,45 +88,55 @@ object GraphOps {
       (out, (m.getAs[Long]("n"), m.getAs[Long]("h")))
     }
 
-    var (edges, sig) = checkpointWithSig(p0.distinct(), 0)
+    // round 1 reads the raw pairs straight from `p`: largeStar and
+    // smallStar drop self-loops and smallStar ends in a distinct(), so
+    // neither needs a pass of its own, and a round-0 signature would only
+    // match round 1's when the input is already a star forest
+    var edges  = p
+    var sig    = Option.empty[(Long, Long)]
     var rounds = 0
     var done   = false
-    while (!done && rounds < maxRounds) {
+    while (!done && rounds < maxStarRounds) {
       val (next, nextSig) = checkpointWithSig(smallStar(largeStar(edges)), rounds + 1)
-      done = nextSig == sig
+      done = sig.contains(nextSig)
       edges = next
-      sig = nextSig
+      sig = Some(nextSig)
       rounds += 1
     }
-    require(done, s"star contraction did not converge in $maxRounds rounds")
+    require(done, s"star contraction did not converge in $maxStarRounds rounds")
     // converged edge set is a star forest: every edge is (child, root) with
-    // child > root; roots (and any node only ever seen as a root) label themselves
-    val starMap = edges.select(col("src").as("id"), col("dst").as("label"))
-    allNodes.join(starMap, Seq("id"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+    // child > root. Every id of `p` (self-loop-only ids included) labels
+    // itself, and the min with its root, if it has one, is the label
+    p.select(explode(array(col("src"), col("dst"))).as("id"))
+      .select(col("id"), col("id").as("label"))
+      .union(edges.select(col("src").as("id"), col("dst").as("label")))
+      .groupBy("id").agg(min("label").as("label"))
   }
 
+  /** Per-node window over an edge list keyed by `src`: each edge row gets
+    * its `src`'s minimum in one exchange, where a grouped min joined back
+    * to the edges takes two.
+    */
+  private val bySrc = org.apache.spark.sql.expressions.Window.partitionBy("src")
+
   /** Large-star: every node attaches its strictly-larger neighbours to the
-    * minimum of its closed neighbourhood. One agg + one join, both hash
-    * partitioned on `src`.
+    * minimum of its closed neighbourhood. One exchange, hash partitioned
+    * on `src`.
     */
   private def largeStar(edges: DataFrame): DataFrame = {
     val sym = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
-    val mins = sym.groupBy("src").agg(min("dst").as("mn"))
-      .select(col("src"), least(col("src"), col("mn")).as("m"))
-    // round-18 fusion: no intermediate dedup — every round
-    // ends in smallStar's distinct(), whose output SET (and thus the
-    // convergence signature and the final star map) is identical with or
-    // without it: min/groupBy/union-distinct are multiset-insensitive.
-    // Duplicates here cannot explode — the join emits exactly ONE row per
-    // oriented input edge (the filter keeps one direction per undirected
-    // edge, and `mins` has one row per src), so the multiset size equals
-    // the round's input edge count regardless — so skipping the distinct
-    // saves one full edge-list exchange per contraction round for a
-    // bounded extra row count into smallStar's aggregate, which dedups
-    // anyway.
-    sym.filter(col("dst") > col("src"))
-      .join(mins, "src")
+    // round-18 fusion: no intermediate dedup — every round ends in
+    // smallStar's distinct(), whose output SET (and thus the convergence
+    // signature and the final star map) is identical with or without it:
+    // min/window/union-distinct are multiset-insensitive. Duplicates here
+    // cannot explode — the filter keeps one direction per undirected edge,
+    // so the output has exactly one row per input edge — so skipping the
+    // distinct saves one full edge-list exchange per contraction round.
+    // The filter sits above the window: `m` is the min over EVERY
+    // neighbour, not only the larger ones.
+    sym.select(col("src"), col("dst"),
+        least(col("src"), min("dst").over(bySrc)).as("m"))
+      .filter(col("dst") > col("src"))
       .select(col("dst").as("src"), col("m").as("dst"))
       .filter(col("src") =!= col("dst"))
   }
@@ -243,17 +144,18 @@ object GraphOps {
   /** Small-star: every node attaches its smaller-or-equal neighbours (and
     * itself) to the minimum among them. Edges are first oriented
     * large→small so each undirected edge is processed at its larger
-    * endpoint.
+    * endpoint. Two exchanges: the window on `src`, then the distinct.
     */
   private def smallStar(edges: DataFrame): DataFrame = {
     val oriented = edges.select(
       greatest(col("src"), col("dst")).as("src"),
       least(col("src"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
-    val mins = oriented.groupBy("src").agg(min("dst").as("m")) // m <= every dst <= src
-    oriented.join(mins, "src")
-      .select(col("dst").as("v"), col("m"))
-      .union(mins.select(col("src").as("v"), col("m")))
+    // every oriented row links its smaller end to `m`, and repeats the
+    // larger end's own link, which the distinct folds to one
+    oriented.select(col("src"), col("dst"),
+        min("dst").over(bySrc).as("m")) // m <= every dst <= src
+      .select(explode(array(col("dst"), col("src"))).as("v"), col("m"))
       .filter(col("v") =!= col("m"))
       .select(col("v").as("src"), col("m").as("dst"))
       .distinct()
@@ -262,25 +164,11 @@ object GraphOps {
   /** [[connectedComponents]] plus per-component sizes, in the dedup output
     * shape: (doc_id, cluster_rep, cluster_size) ordered by doc_id.
     */
-  def clusters(pairs: DataFrame): DataFrame =
-    clustersOf(connectedComponents(pairs))
-
-  /** [[clusters]] with the labelling computed DIRECTLY by
-    * [[starContractionComponents]] — for callers that KNOW the graph is
-    * high-diameter (e.g. revision chains). The propagation-first path
-    * exists for unknown shapes, where near-clique graphs converge in ≤3
-    * rounds; when the caller can see the shape up front, riding the
-    * optimistic window just burns ~5 driver-synchronized shuffle rounds
-    * to learn what the caller already knew. Output contract identical
-    * (both algorithms produce the component-min labelling).
-    */
-  def clustersStar(pairs: DataFrame): DataFrame =
-    clustersOf(starContractionComponents(pairs))
-
-  private def clustersOf(labels: DataFrame): DataFrame = {
-    val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "label")
-      .select(col("id").as("doc_id"), col("label").as("cluster_rep"), col("cluster_size"))
+  def clusters(pairs: DataFrame): DataFrame = {
+    val byLabel = org.apache.spark.sql.expressions.Window.partitionBy("label")
+    connectedComponents(pairs)
+      .select(col("id").as("doc_id"), col("label").as("cluster_rep"),
+        count(lit(1)).over(byLabel).as("cluster_size"))
       .orderBy("doc_id")
   }
 
@@ -288,26 +176,18 @@ object GraphOps {
     * within each source, consecutive documents (doc_id order) are linked
     * as revision edges a→b→c→…, modelling a document that drifts one
     * small edit at a time — each adjacent pair is a near-dup, the chain's
-    * ends share nothing. This is the adversarial shape for min-label
-    * propagation (rounds = component diameter = chain length − 1, 24+
-    * even at the smallest fixture), so THIS gate is what exercises
-    * the O(log n) [[starContractionComponents]] path on the gated
-    * surface — the path the 100 TB story depends on, where a revision
-    * chain can be millions long. Because the chain shape is KNOWN at
-    * this call site, the clustering goes straight to star contraction
-    * ([[clustersStar]], round-13 verdict item 3) instead of paying ~5
-    * propagation rounds + the stagnation bail to re-discover it every
-    * run — the row's 5.6 ↔ 10.2 s swing at sf0.1 was those extra
-    * driver-synchronized rounds, not the data. The bail inside
-    * [[connectedComponents]] stays, for graphs whose shape is unknown
-    * (pinned by GraphOpsSpec). The components are
-    * still exactly oracle-restatable without any recursive closure: a
-    * per-source chain's component is the source itself, so cluster_rep =
+    * ends share nothing. Component diameter = chain length − 1 (24+ even
+    * at the smallest fixture), so THIS gate is what holds
+    * [[connectedComponents]] to its O(log n)-rounds claim on the gated
+    * surface — the claim the 100 TB story depends on, where a revision
+    * chain can be millions long. The components are exactly
+    * oracle-restatable without any recursive closure: a per-source
+    * chain's component is the source itself, so cluster_rep =
     * min(doc_id) over the source and cluster_size = the source's doc
     * count (sources with a single document have no edge and don't
-    * appear). Verify.GateInvariants requires the longest chain to exceed
-    * the propagation round budget, so the gate can never silently stop
-    * exercising the fallback if the fixture shape changes.
+    * appear). Verify.GateInvariants requires the longest chain to span
+    * more than 20 hops, so the gate can never silently stop being
+    * high-diameter if the fixture shape changes.
     */
   def revisionChainClusters(t: graft.core.Tables): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -316,7 +196,7 @@ object GraphOps {
       .withColumn("prev", lag(col("doc_id"), 1).over(w))
       .filter(col("prev").isNotNull)
       .select(col("prev").as("a"), col("doc_id").as("b"))
-    clustersStar(edges)
+    clusters(edges)
   }
 
   // ---------------------------------------------------------------------

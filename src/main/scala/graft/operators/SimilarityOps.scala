@@ -1295,7 +1295,7 @@ object SimilarityOps {
     (1 to 16).find(b => targetBucket * (1L << b) >= n).getOrElse(16)
 
   /** Cluster resolution over the embedding near-dup pair graph (same
-    * GraphOps label propagation as DedupOps.dupClusters): each vector in a
+    * [[GraphOps.clusters]] as DedupOps.dupClusters): each vector in a
     * near-dup component labelled with its component-min vec_id + size.
     */
   def embNearDupClusters(t: Tables, minCos: Double = 0.35, bits: Int = 8): DataFrame =

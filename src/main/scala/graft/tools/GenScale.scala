@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic fixture scale-up for the scaling bench (round-5 verdict
@@ -94,13 +94,7 @@ object GenScale {
     val k = factorStr.toInt
     require(k >= 1, "factor must be >= 1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 

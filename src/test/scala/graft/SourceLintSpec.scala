@@ -13,6 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Fixture generations are read only inside `graft/core/` (through
   * `GenerationCache`), and the only temp dirs engine code creates by
   * hand are `Tables.scratchDir`'s and the few that delete their own.
+  * Every local session starts from `core.LocalSession.builder`.
   */
 class SourceLintSpec extends AnyFunSuite {
   import scala.jdk.CollectionConverters._
@@ -20,9 +21,8 @@ class SourceLintSpec extends AnyFunSuite {
   private val liveEnvNames = Set(
     "SPARK_GRAFT_BENCH_CSV", "SPARK_GRAFT_BENCH_ONLY",
     "SPARK_GRAFT_CALIB_BW_REF", "SPARK_GRAFT_CALIB_REF",
-    "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY", "SPARK_GRAFT_SCHEDULER",
-    "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_STREAM_PLAN",
-    "SPARK_GRAFT_STREAM_SHUFFLE")
+    "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY",
+    "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_STREAM_PLAN")
 
   /** (path relative to src/main/scala, file text) for every main source. */
   private lazy val sources: Seq[(String, String)] = {
@@ -75,6 +75,17 @@ class SourceLintSpec extends AnyFunSuite {
       if line.contains("fixtureStamp(")
     } yield s"$file:${n + 1}"
     assert(sites.isEmpty, s"cache fixture-derived values in a GenerationCache: $sites")
+  }
+
+  test("local sessions are built only by core.LocalSession") {
+    val sites = for {
+      (file, text) <- sources
+      if file != "graft/core/LocalSession.scala"
+      (line, n) <- text.linesIterator.zipWithIndex
+      if line.contains("SparkSession.builder")
+      if !line.trim.startsWith("*") && !line.trim.startsWith("//")
+    } yield s"$file:${n + 1}"
+    assert(sites.isEmpty, s"start from core.LocalSession.builder: $sites")
   }
 
   test("createTempDirectory appears only in scratchDir and self-deleting sites") {

@@ -8,17 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * is ~5 s, so per-suite sessions would dominate the run.
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.core.LocalSession.builder("4")
     .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.scheduler.mode", "FAIR") // per-fit pools share cores fairly (PricePipeline.metricsTable); single-pool queries behave as FIFO
-    .config("spark.sql.ansi.enabled", "false") // reference dirty-CSV semantics: bad casts -> null (SURVEY 1.2/7.3)
     .config("spark.sql.warehouse.dir",
       Tables.scratchDir("graft-warehouse-"))
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   lazy val sf0001: Tables = Tables(spark, "/root/testdata/sf0.001")

@@ -3,11 +3,10 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Connected components: min-label propagation vs large-star/small-star
-  * contraction. The path graph is the adversarial case the round-3 verdict
-  * called out — diameter 999 means label propagation needs 999 rounds, so
-  * `connectedComponents` (default maxRounds = 20) must fall back to star
-  * contraction instead of throwing.
+/** Connected components by star contraction, checked against a
+  * driver-side union-find. The path graph is the adversarial case the
+  * round-3 verdict called out: diameter 999, which star contraction must
+  * cover in O(log n) rounds.
   */
 class GraphOpsSpec extends SparkTestBase {
   import spark.implicits._
@@ -18,65 +17,24 @@ class GraphOpsSpec extends SparkTestBase {
 
   test("star contraction converges on a 1,000-node path graph in O(log n) rounds") {
     val path = (0L until 999L).map(i => (i, i + 1)).toDF("a", "b")
-    val labels = labelMap(GraphOps.starContractionComponents(path))
+    val labels = labelMap(GraphOps.connectedComponents(path))
     assert(labels.size == 1000)
     assert(labels.values.toSet == Set(0L)) // one component, min-id label
   }
 
-  test("connectedComponents falls back (not throws) past maxRounds on a long chain") {
-    val path = (0L until 999L).map(i => (i, i + 1)).toDF("a", "b")
-    val labels = labelMap(GraphOps.connectedComponents(path)) // default 20 rounds << diameter 999
-    assert(labels.size == 1000)
-    assert(labels.values.toSet == Set(0L))
-  }
-
-  test("early-stagnation bail: a chain falls back by round 5, a clique set never falls back") {
-    // diameter-99 chain: the changed count stays flat, so the bail must
-    // fire right after the optimistic window instead of riding out all 20
-    // rounds — and the star-contraction result must still be exact
-    val chain = (0L until 99L).map(i => (i, i + 1)).toDF("a", "b")
-    val (chainLabels, chainRounds, chainFellBack) =
-      GraphOps.connectedComponentsWithStats(chain)
-    assert(chainFellBack, "high-diameter chain must take the fallback")
-    assert(chainRounds <= 6,
-      s"stagnation bail should fire right after round 4, ran $chainRounds")
-    assert(labelMap(chainLabels).values.toSet == Set(0L))
-
-    // near-clique components (the shape dedup graphs actually have):
-    // propagation converges inside the optimistic window — no fallback
-    val cliques = (0L until 30L).flatMap(i =>
-      Seq((i * 10, i * 10 + 1), (i * 10, i * 10 + 2), (i * 10 + 1, i * 10 + 2)))
-      .toDF("a", "b")
-    val (cliqueLabels, cliqueRounds, cliqueFellBack) =
-      GraphOps.connectedComponentsWithStats(cliques)
-    assert(!cliqueFellBack, "cliques must converge by propagation alone")
-    assert(cliqueRounds <= 4, s"cliques should converge early, ran $cliqueRounds")
-    assert(labelMap(cliqueLabels) ==
-      (0L until 30L).flatMap(i => Seq(i * 10 -> i * 10, i * 10 + 1 -> i * 10,
-        i * 10 + 2 -> i * 10)).toMap)
-  }
-
-  test("slow-decay converging graph: bail fires early, labels stay exact, edges are not recomputed from the raw pairs") {
-    // a mid-diameter chain WOULD converge by propagation alone (~11 more
-    // rounds), but its changed count decays slower than 2x per two
-    // rounds, so the stagnation bail fires — the heuristic's documented
-    // false positive. Pin its cost envelope: the bail hands off early
-    // (<= 6 propagation rounds paid) and the star fallback reuses the
-    // already-checkpointed edge frame (round-13 advice) instead of
-    // re-executing the upstream pair pipeline — counted by an
-    // accumulator on the pair source: exactly ONE full evaluation.
+  test("connectedComponents evaluates the upstream pair pipeline exactly once") {
+    // counted by an accumulator on the pair source: the node set and the
+    // contraction rounds must read the checkpointed pairs, not replay the
+    // upstream pipeline (e.g. the whole minhash derivation)
     val acc = spark.sparkContext.longAccumulator("pairEvals")
     val tap = udf((x: Long) => { acc.add(1L); x })
     val chain = (0L until 99L).map(i => (i, i + 1)).toDF("a0", "b")
       .select(tap(col("a0")).as("a"), col("b"))
-    val (labels, rounds, fellBack) =
-      GraphOps.connectedComponentsWithStats(chain)
-    assert(fellBack, "slow-decay chain must trip the stagnation bail")
-    assert(rounds <= 6, s"bail should fire right after round 4, ran $rounds")
-    assert(labelMap(labels).values.toSet == Set(0L), "fallback labels must be exact")
+    val labels = labelMap(GraphOps.connectedComponents(chain))
+    assert(labels == (0L to 99L).map(_ -> 0L).toMap)
     assert(acc.value == 99L,
-      s"pair pipeline evaluated ${acc.value}/99 rows — the fallback must " +
-        "reuse the checkpointed edges, not replay the upstream pipeline")
+      s"pair pipeline evaluated ${acc.value}/99 rows — connectedComponents " +
+        "must reuse its checkpointed pairs, not replay the upstream pipeline")
   }
 
   test("observedRow: a failed observation falls back to the same value, warns and counts") {
@@ -100,20 +58,35 @@ class GraphOpsSpec extends SparkTestBase {
     assert(err.toString("UTF-8").contains("bus dropped"))
   }
 
-  test("star contraction agrees with label propagation on a multi-component graph") {
-    // components: {1,2,3,4} (clique-ish), {10,11,12} (chain), {20,21}
-    val edges = Seq(
-      (2L, 1L), (3L, 2L), (4L, 1L), (3L, 4L),
-      (10L, 11L), (11L, 12L),
-      (21L, 20L)
-    ).toDF("a", "b")
-    val star = labelMap(GraphOps.starContractionComponents(edges))
-    val prop = labelMap(GraphOps.connectedComponents(edges))
-    assert(star == prop)
-    assert(star == Map(
-      1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L,
-      20L -> 20L, 21L -> 20L))
+  test("connected components agree with a driver-side union-find on a mixed graph") {
+    // near-cliques (triangles missing one edge of a 4-clique), a 99-node
+    // chain whose ids are not monotone along it, duplicate and reversed
+    // edges, a self-loop inside a component and one self-loop-only id
+    val cliques = (0L until 20L).flatMap { i =>
+      val b = i * 10
+      Seq((b, b + 1), (b + 1, b + 2), (b, b + 2), (b + 2, b + 3), (b + 1, b + 3))
+    }
+    val order = (0L until 99L).map(i => 1000L + (i * 37) % 99)
+    val chain = order.zip(order.tail)
+    val extra = Seq((1001L, 1000L), (1000L, 1001L), (11L, 10L), (1037L, 1037L),
+      (5000L, 5000L))
+    val pairs = cliques ++ chain ++ chain.map(_.swap) ++ extra
+    val got = labelMap(GraphOps.connectedComponents(pairs.toDF("a", "b")))
+
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val expect = parent.keys.toSeq.map(x => x -> find(x)).toMap
+    assert(expect.size == 20 * 4 + 99 + 1)
+    assert(got == expect)
+    assert(got(5000L) == 5000L, "a self-loop-only id is its own singleton")
+    assert(got.values.toSet.size == 20 + 1 + 1)
   }
 
   test("revision-chain clusters: components match the per-source window derivation and exceed the round budget") {
@@ -130,16 +103,15 @@ class GraphOpsSpec extends SparkTestBase {
         ids.map(id => (id, ids.min, ids.length.toLong))
       }.toSet
     assert(got.toSet == expect)
-    // the gate's reason to exist: diameter must exceed the 20-round
-    // propagation budget so the star-contraction fallback actually fires
+    // the gate's reason to exist: a high-diameter component (> 20 hops)
     assert(got.map(_._3).max > 21)
   }
 
   test("star contraction handles self-loops, duplicate and reversed edges") {
     val edges = Seq((5L, 5L), (1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L)).toDF("a", "b")
-    val star = labelMap(GraphOps.starContractionComponents(edges))
-    // self-loop-only node 5 drops out of the edge list entirely (no pairs)
-    assert(star == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    val labels = labelMap(GraphOps.connectedComponents(edges))
+    // self-loop-only node 5 is an id of the input, so it keeps its row
+    assert(labels == Map(5L -> 5L, 1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
   test("cluster-size histogram: sizes×counts conserve the labelled docs and match a driver recompute") {

@@ -1,0 +1,43 @@
+package graft.streaming
+
+import graft.SparkTestBase
+
+/** [[StreamTuning]]'s input-derived state partition count, including the
+  * fallback when the fixture path cannot be walked: the configured
+  * partition count is used, and a warning on stderr names the path.
+  */
+class StreamTuningSpec extends SparkTestBase {
+
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  test("a missing fixture reads as Long.MaxValue, warns with its path and keeps the configured partitions") {
+    val dir = graft.core.Tables.scratchDir("graft_stream_tuning_")
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val bytes =
+      try StreamTuning.inputBytes(dir, "missing.parquet")
+      finally System.setErr(saved)
+    assert(bytes == Long.MaxValue)
+    assert(err.toString("UTF-8").linesIterator.exists(l =>
+      l.contains("StreamTuning") && l.contains(s"$dir/missing.parquet")),
+      s"no StreamTuning warning naming the path in: $err")
+    withShufflePartitions(64) {
+      assert(StreamTuning.statePartitions(spark, bytes) == 64)
+    }
+  }
+
+  test("small inputs get the floor of 4, large ones one partition per 16 MB up to the configured count") {
+    withShufflePartitions(64) {
+      assert(StreamTuning.statePartitions(spark, 0L) == 4)
+      assert(StreamTuning.statePartitions(spark, 2L << 20) == 4)
+      assert(StreamTuning.statePartitions(spark, (160L << 20) + 1) == 11)
+      assert(StreamTuning.statePartitions(spark, 1L << 40) == 64)
+    }
+  }
+}
