@@ -948,6 +948,6 @@ object Bench {
       graft.sources.CsvIO.write(
         results.toDF("query", "seconds").orderBy("query"), out)
     }
-    spark.stop()
+    core.LocalSession.stop(spark)
   }
 }

@@ -289,6 +289,16 @@ object VehiclesPipelines {
       * (:168-170) is replaced with a Dataset-native sparse dot + orderBy/
       * limit (TakeOrderedAndProject); its price-keyed retrieval (ties
       * fetch extra rows — SURVEY §3.3.5) is preserved deliberately.
+      *
+      * One CSV scan per call, and eager: the filtered group feeds five
+      * consumers (CountVectorizer fit, IDF fit, query vector, top-6
+      * scoring, price-keyed retrieval), each of which would otherwise
+      * re-parse the CSV and re-run `deriveFeatures`' dedup shuffle. The
+      * group is persisted once, repartitioned to `defaultParallelism`
+      * (a persisted frame would keep the dedup exchange's shuffle width,
+      * 200 near-empty partitions by default, scanned by every consumer),
+      * and the ≤5 result rows come back as a local frame so the cache can
+      * be released before returning.
       */
     def recommend(spark: SparkSession, recDf: DataFrame, madeV: String,
                   colorGroup: String, typeGroup: String,
@@ -298,7 +308,16 @@ object VehiclesPipelines {
         col("type_group") === typeGroup &&
         col("price") >= priceRange._1 && col("price") <= priceRange._2 &&
         col("Made") === madeV)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .persist()
+      try {
+        val out = recommendFrom(data)
+        spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+      } finally { data.unpersist(); () }
+    }
 
+    /** [[recommend]]'s body over an already filtered group, lazy. */
+    private def recommendFrom(data: DataFrame): DataFrame = {
       val pipeline = new Pipeline().setStages(Array(
         new RegexTokenizer().setInputCol("Made").setOutputCol("words").setPattern("\\W"),
         new StopWordsRemover().setInputCol("words").setOutputCol("filtered"),

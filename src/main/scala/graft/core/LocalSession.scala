@@ -19,4 +19,13 @@ object LocalSession {
       // reference dirty-CSV semantics: bad casts -> null (SURVEY 1.2/7.3)
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
+
+  /** Stops `spark` after its state-store maintenance task. That task
+    * outlives `spark.stop()` otherwise, and its next run fails with
+    * "SparkEnv not active, cannot do maintenance on StateStores".
+    */
+  def stop(spark: SparkSession): Unit = {
+    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    spark.stop()
+  }
 }

@@ -137,19 +137,12 @@ object PricePipeline {
   def fitEval(name: String, reg: org.apache.spark.ml.Estimator[_],
               train: DataFrame, test: DataFrame): (String, Double, Double, Double, Double, Double) = {
     val model = reg.fit(train).asInstanceOf[org.apache.spark.ml.Transformer]
-    // cache the scored frame: each RegressionEvaluator.evaluate would
-    // otherwise re-run model.transform + a full scan per metric (4 scoring
-    // passes per model); values are bit-identical either way
-    val pred = model.transform(test)
-      .select("label", "prediction").persist()
-    try {
-      def m(metric: String): Double =
-        new RegressionEvaluator().setMetricName(metric)
-          .setLabelCol("label").setPredictionCol("prediction")
-          .evaluate(pred)
-      val r2 = m("r2")
-      (name, r2, r2, m("mse"), m("rmse"), m("mae"))
-    } finally { pred.unpersist(); () }
+    // one summary pass serves all four metrics: `evaluate(metricName)`
+    // computes the same RegressionMetrics and returns one field of it
+    val m = new RegressionEvaluator()
+      .setLabelCol("label").setPredictionCol("prediction")
+      .getMetrics(model.transform(test))
+    (name, m.r2, m.r2, m.meanSquaredError, m.rootMeanSquaredError, m.meanAbsoluteError)
   }
 
   /** Per-model fit+eval wall seconds from [[metricsTable]] loops —

@@ -131,15 +131,25 @@ object DedupOps {
     * hash-invariant modulo ~n²/2⁶⁴ collisions (same argument as
     * [[ngramJaccardPairs]]), so the query hash-gates against a text-shingle
     * DuckDB oracle.
+    *
+    * The shingle sets are built after the scan-rebalance exchange only.
+    * A plain `explode` over the `sh` attribute makes Spark infer a
+    * `size(sh) > 0` filter, which predicate pushdown inlines into the
+    * whole shingle pipeline and moves below the exchange, onto the single
+    * scan task of a one-row-group file. So empty sets are dropped up front
+    * by the scan-cheap [[hasShingles]], and `explode_outer` (from which no
+    * filter is inferred) emits the same rows: every remaining set is
+    * non-empty.
     */
   def decontaminate(t: Tables, evalSource: String = "src15", n: Int = 3): DataFrame = {
-    val docs = t.documentsBalanced.select(
-      col("doc_id"), col("source"), shingleHashSet(col("text"), n).as("sh"))
+    val docs = t.documentsBalanced
+      .filter(hasShingles(col("text"), n))
+      .select(col("doc_id"), col("source"), shingleHashSet(col("text"), n).as("sh"))
     val evalShingles = docs.filter(col("source") === evalSource)
-      .select(explode(col("sh")).as("s")).distinct()
+      .select(explode_outer(col("sh")).as("s")).distinct()
     val train = docs.filter(col("source") =!= evalSource)
       .select(col("doc_id"), col("source"), size(col("sh")).as("n_shingles"),
-        explode(col("sh")).as("s"))
+        explode_outer(col("sh")).as("s"))
     train.join(broadcast(evalShingles), Seq("s"))
       .groupBy("doc_id", "source", "n_shingles")
       // sh is distinct per doc, so the join emits each leaked shingle once
@@ -246,16 +256,18 @@ object DedupOps {
     * text. One hash exchange on the shingle key serves the df-guard
     * aggregate, the guard semi-join and both self-join sides
     * (ReuseExchange); the df ≤ maxDf guard bounds candidates against hot
-    * boilerplate shingles.
+    * boilerplate shingles. Empty sets are dropped by [[hasShingles]]
+    * and exploded with `explode_outer`, so no shingle-array filter runs on
+    * the scan task (see [[decontaminate]]).
     */
   private def shingleCandidatePairs(t: Tables, maxDf: Int): DataFrame = {
     val docs = t.documentsBalanced
+      .filter(hasShingles(col("text"), 3))
       .select(col("doc_id"), shingleHashSet(col("text"), 3).as("sh"))
       .withColumn("n_sh", size(col("sh")))
-      .filter(col("n_sh") > 0)
 
     val exploded = docs
-      .select(col("doc_id"), col("n_sh"), explode(col("sh")).as("s"))
+      .select(col("doc_id"), col("n_sh"), explode_outer(col("sh")).as("s"))
       .repartition(col("s"))
 
     val rare = exploded
@@ -323,7 +335,12 @@ object DedupOps {
     * split→shingle→distinct→hash chain re-evaluated k× per row (measured
     * 8× slower at sf0.1). (An explode + k-min-aggregate formulation was
     * measured too: the extra sig⋈docs join it needs costs more than the
-    * interpreted lambda saves.)
+    * interpreted lambda saves.) Its partition count is explicit, as in
+    * `Tables.balancedByKey`: a bare `repartition(col)` is AQE-coalesced
+    * (to 2 tasks on 4 cores for 2,500 documents), which leaves the md5
+    * signature stages on half the cores. With the same count as `documentsBalanced`' exchange on the
+    * same key, Spark drops the physical shuffle and keeps the logical
+    * barrier.
     */
   def bandedDocs(documents: DataFrame, k: Int = 16, bands: Int = 8,
                  carry: Seq[String] = Nil): DataFrame = {
@@ -339,7 +356,7 @@ object DedupOps {
       .filter(hasShingles(col("text"), 3))
       .select(col("doc_id") +: carry.map(col) :+
         shingleSet(col("text"), 3).as("sh_txt"): _*)
-      .repartition(col("doc_id"))
+      .repartition(documents.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .withColumn("sig", md5MinhashSignature(col("sh_txt"), k))
       .withColumn("band", explode(md5BandKeys(col("sig"), bands, rows)))
       // hash the shingles to longs AFTER the signature: downstream

@@ -259,6 +259,43 @@ class PlanShapeSpec extends SparkTestBase {
       "the explicit count must survive to runtime (AQE must not coalesce it)")
   }
 
+  test("shingle sets and minhash signatures run after the scan rebalance, at session width") {
+    import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val par = spark.sparkContext.defaultParallelism
+    // a shuffle width unlike the session's, so a repartition without an
+    // explicit count would plan its own (AQE-coalesced) exchange
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "13")
+    try {
+      Seq("decontaminate" -> DedupOps.decontaminate(t, "src15"),
+          "minhashDupPairs" -> DedupOps.minhashDupPairs(t),
+          "ngramJaccardPairs" -> DedupOps.ngramJaccardPairs(t)).foreach { case (name, df) =>
+        df.collect()
+        val all = nodes(df.queryExecution.executedPlan)
+        for {
+          ex <- all.collect { case e: Exchange => e }
+          f <- nodes(ex.child).collect { case f: FilterExec => f }
+        } assert(!Seq("zip_with", "array_distinct").exists(f.condition.toString.contains),
+          s"$name: a shingle-array filter runs below an exchange: ${f.condition}")
+        if (name == "minhashDupPairs") {
+          val sig = all.collect { case p: ProjectExec
+            if p.projectList.exists(e => e.toString.contains("array_min") && e.toString.contains("md5")) => p }
+          assert(sig.nonEmpty, s"no signature projection in\n${df.queryExecution.executedPlan}")
+          sig.foreach(p => assert(p.execute().getNumPartitions >= par,
+            s"signature projection runs on ${p.execute().getNumPartitions} partitions, session has $par"))
+        }
+      }
+    } finally spark.conf.set(key, prev)
+  }
+
   test("routed-recall probe: partition-pruned to the probed cells, top-k without a global sort") {
     // the production probe of the routed index (round 16): nprobe = 64 of
     // 4096 cells must reach the scan as PARTITION filters (the probe

@@ -10,7 +10,10 @@ import org.apache.spark.sql.functions._
   */
 class VehiclesPipelinesSpec extends SparkTestBase {
 
-  private lazy val csvPath: String = {
+  private lazy val csvPath: String = vehiclesCsv(60)
+
+  /** A dirty vehicles CSV of `n` clean rows plus 3 junk rows. */
+  private def vehiclesCsv(n: Int): String = {
     val dir = graft.core.Tables.scratchDir("graft-vehicles-") + "/vehicles"
     val manufacturers = array(Seq("ford", "toyota", "bmw", "kia", "volvo").map(lit): _*)
     val conditions = array(Seq("good", "excellent", "fair").map(lit): _*)
@@ -26,7 +29,7 @@ class VehiclesPipelinesSpec extends SparkTestBase {
     def pick(arr: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
       element_at(arr, (pmod(i, size(arr)) + 1).cast("int"))
 
-    val clean = spark.range(60).select(
+    val clean = spark.range(n).select(
       col("id").cast("string").as("id"),
       concat(lit("http://l/"), col("id")).as("url"),
       lit("r").as("region"), lit("http://r").as("region_url"),
@@ -78,17 +81,28 @@ class VehiclesPipelinesSpec extends SparkTestBase {
     * `body` marks the end: listener events arrive in order, so once the
     * sentinel's end is delivered every earlier job start has been counted.
     */
-  private def jobsStartedBy(body: => Unit): Int = {
+  private def jobsStartedBy(body: => Unit): Int = observe(body)._1
+
+  /** (jobs started, stages completed) while `body` runs; see
+    * [[jobsStartedBy]] for how the end is marked.
+    */
+  private def observe(body: => Unit): (Int, Seq[org.apache.spark.scheduler.StageInfo]) = {
     import org.apache.spark.scheduler._
     val sc = spark.sparkContext
     val key = "graft.test.sentinel"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
     val done = new java.util.concurrent.CountDownLatch(1)
     @volatile var sentinelId = -1
+    @volatile var sentinelStages = Set.empty[Int]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) != null)) sentinelId = e.jobId
-        else { jobs.incrementAndGet(); () }
+        if (Option(e.properties).exists(_.getProperty(key) != null)) {
+          sentinelStages = e.stageIds.toSet
+          sentinelId = e.jobId
+        } else { jobs.incrementAndGet(); () }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (!sentinelStages.contains(e.stageInfo.stageId)) { stages.add(e.stageInfo); () }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == sentinelId) done.countDown()
     }
@@ -99,7 +113,7 @@ class VehiclesPipelinesSpec extends SparkTestBase {
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
       assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "sentinel job end not delivered within 60 s")
-      jobs.get()
+      (jobs.get(), stages.toArray(Array.empty[StageInfo]).toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -193,6 +207,45 @@ class VehiclesPipelinesSpec extends SparkTestBase {
     val got = out.collect()
     assert(got.length <= 5)
     got.foreach(r => assert(r.getAs[String]("Made") == "American"))
+  }
+
+  test("recommend reads its input once per call") {
+    import VehiclesPipelines.Recommendation
+    // one large (Made, colour, type) group: ids with id % 20 == 0 are
+    // American (ford), white and sedan
+    val rec = Recommendation.deriveFeatures(VehiclesPipelines.load(spark, vehiclesCsv(800)))
+    rec.columns // the CSV is written on first use; keep its jobs out of the count
+    val (made, color, kind, prices) = ("American", "light color", "luxury_small", (0, 1000000))
+    var got = Array.empty[org.apache.spark.sql.Row]
+    val (_, stages) = observe {
+      got = Recommendation.recommend(spark, rec, made, color, kind, prices).collect()
+    }
+    // the stages that parse the CSV: bytes read through a file scan (a
+    // cache read also counts input bytes, but scans no file)
+    val scans = stages.filter(s => s.taskMetrics.inputMetrics.bytesRead > 0 &&
+      s.rddInfos.exists(_.name == "FileScanRDD"))
+    assert(scans.size == 1, s"recommend scanned the CSV in ${scans.size} stages")
+    assert(got.nonEmpty && got.length <= 5)
+    assert(got.toSeq == LazyRecommend(rec, made, color, kind, prices).collect().toSeq)
+  }
+
+  test("fitEval: one summary pass gives the four metrics bit-identical to four evaluate calls") {
+    import org.apache.spark.ml.evaluation.RegressionEvaluator
+    val data = VehiclesPipelines.PricePrediction.cachedFeatures(spark, df)
+    try {
+      // one partition each: a multi-partition summary merges task results
+      // in completion order, so two passes may differ in the last bit
+      val Array(train, test) = data.randomSplit(Array(0.8, 0.2), seed = 42).map(_.coalesce(1))
+      graft.ml.PricePipeline.regressors
+        .filter { case (n, _) => Seq("LinearRegression", "DecisionTree").contains(n) }
+        .foreach { case (name, reg) =>
+          val (_, r2, r2adj, mse, rmse, mae) = graft.ml.PricePipeline.fitEval(name, reg, train, test)
+          val pred = reg.fit(train).asInstanceOf[org.apache.spark.ml.Transformer].transform(test)
+          def m(metric: String): Double = new RegressionEvaluator().setMetricName(metric)
+            .setLabelCol("label").setPredictionCol("prediction").evaluate(pred)
+          assert((r2, r2adj, mse, rmse, mae) == ((m("r2"), m("r2"), m("mse"), m("rmse"), m("mae"))), name)
+        }
+    } finally { data.unpersist(); () }
   }
 
   test("recommend() scoring: graft_dot equals the sparse-merge udf it replaced") {
