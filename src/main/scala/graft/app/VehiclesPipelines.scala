@@ -2,8 +2,6 @@ package graft.app
 
 import graft.functions.TextFunctions.dealerCategory
 import graft.sources.CsvIO
-import org.apache.spark.ml.Pipeline
-import org.apache.spark.ml.feature._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -318,14 +316,8 @@ object VehiclesPipelines {
 
     /** [[recommend]]'s body over an already filtered group, lazy. */
     private def recommendFrom(data: DataFrame): DataFrame = {
-      val pipeline = new Pipeline().setStages(Array(
-        new RegexTokenizer().setInputCol("Made").setOutputCol("words").setPattern("\\W"),
-        new StopWordsRemover().setInputCol("words").setOutputCol("filtered"),
-        new CountVectorizer().setInputCol("filtered").setOutputCol("raw_features")
-          .setVocabSize(1 << 16).setMinDF(1.0),
-        new IDF().setInputCol("raw_features").setOutputCol("features").setMinDocFreq(5),
-        new Normalizer().setInputCol("features").setOutputCol("features_norm").setP(2.0)))
-      val normalized = pipeline.fit(data).transform(data)
+      val normalized =
+        graft.ml.Recommender.tfidfPipeline("Made").fit(data).transform(data)
 
       // NOTE: TF-IDF over the constant `Made` column is degenerate — every
       // document in the filtered set has the same single term, so IDF is 0

@@ -21,17 +21,24 @@ import org.apache.spark.sql.functions._
   */
 object Recommender {
 
-  /** Fit the TF-IDF pipeline and return normalized document vectors. */
-  def tfidfVectors(t: Tables): DataFrame = {
-    val pipeline = new Pipeline().setStages(Array(
-      new RegexTokenizer().setInputCol("text").setOutputCol("words").setPattern("\\W"),
+  /** The reference's TF-IDF stages over the text column `input`, ending
+    * in the L2-normalized `features_norm`; the intermediate columns are
+    * `words`, `filtered`, `tf` and `tfidf`. Shared by [[tfidfVectors]]
+    * and the vehicles recommender.
+    */
+  def tfidfPipeline(input: String): Pipeline =
+    new Pipeline().setStages(Array(
+      new RegexTokenizer().setInputCol(input).setOutputCol("words").setPattern("\\W"),
       new StopWordsRemover().setInputCol("words").setOutputCol("filtered"),
       new CountVectorizer().setInputCol("filtered").setOutputCol("tf")
         .setVocabSize(1 << 16).setMinDF(1.0),
       new IDF().setInputCol("tf").setOutputCol("tfidf").setMinDocFreq(5),
       new Normalizer().setInputCol("tfidf").setOutputCol("features_norm").setP(2.0)))
+
+  /** Fit the TF-IDF pipeline and return normalized document vectors. */
+  def tfidfVectors(t: Tables): DataFrame = {
     val docs = t.documentsBalanced.select("doc_id", "text", "lang", "source")
-    pipeline.fit(docs).transform(docs)
+    tfidfPipeline("text").fit(docs).transform(docs)
       .select("doc_id", "lang", "source", "features_norm")
   }
 

@@ -1,10 +1,10 @@
 package graft.streaming
 
+import graft.core.Tables
 import graft.operators.DedupOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 /** Streaming near-duplicate detection: the MinHash+LSH band join as a
   * STATEFUL streaming operator — the "is this incoming document a near-dup
@@ -20,7 +20,8 @@ import org.apache.spark.sql.types._
   * self-join, so over a finite replay the emitted pair set EQUALS the
   * batch result and shares its oracle — regardless of how the stream is
   * micro-batched (a pair collides whenever the later document arrives, in
-  * whichever batch).
+  * whichever batch). The replay source is [[Tables.documentsStream]]:
+  * the batch table's cached schema and scan rebalance.
   *
   * Scale notes: state per band key is the band's collision bucket — the
   * same quantity that bounds the batch join's bucket sizes; shingle sets
@@ -31,48 +32,6 @@ import org.apache.spark.sql.types._
   * [[EventStream.dedupCounts]].
   */
 object DedupStream {
-
-  /** Reference shape of the documents fixture. The streaming reads do NOT
-    * hard-code it: they probe the batch footer per input dir (cached), the
-    * same drift defense `EventStream.readEvents` applies after round 8's
-    * events regeneration changed a hard-coded type under a declared
-    * streaming schema and produced silently wrong rows.
-    */
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
-  /** Cached per fixture generation so an in-place regeneration under a
-    * running JVM invalidates the cached schema.
-    */
-  private val docSchemaCache =
-    graft.core.GenerationCache[Unit, StructType]("documents.parquet")
-  private def probedDocSchema(spark: SparkSession, dir: String): StructType =
-    docSchemaCache(dir, ())(spark.read.parquet(s"$dir/documents.parquet").schema)
-
-  /** The round-17 conditional scan rebalance ([[graft.core.Tables]]
-    * `balancedByKey`), applied to the STREAMING documents source
-    * (round-18): a parquet file splits no finer than its row groups, so
-    * the per-doc shingle pass of [[DedupOps.bandedDocs]] otherwise runs
-    * on ≤ rowGroups tasks inside each micro-batch (AQE is disabled for
-    * stateful workloads, so nothing re-spreads it later — the banding
-    * pipeline's own `repartition(doc_id)` only parallelizes the
-    * signature stage, not the shingling below it). Same contract as the
-    * batch seam: fires ONLY when the footer row-group count is below the
-    * session's cores — on production layouts no exchange is added.
-    * Partitioning never affects the emitted pair set (state keys on band
-    * content; pairs are order-canonicalized and deduped).
-    */
-  private def rebalancedDocs(spark: SparkSession, dir: String,
-                             docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val par = spark.sparkContext.defaultParallelism
-    if (graft.core.Tables(spark, dir).scanUnits("documents") >= par) docs
-    else docs.repartition(par, col("doc_id"))
-  }
 
   case class BandDoc(doc_id: Long, band: String, sh: Array[Long])
   case class TsBandDoc(doc_id: Long, band: String, sh: Array[Long],
@@ -95,9 +54,7 @@ object DedupStream {
   def minhashPairs(spark: SparkSession, dir: String, queryName: String,
                    minJaccard: Double = 0.3): DataFrame = {
     import spark.implicits._
-    val docs = rebalancedDocs(spark, dir, spark.readStream
-      .schema(probedDocSchema(spark, dir))
-      .parquet(s"$dir/{documents}.parquet"))
+    val docs = Tables(spark, dir).documentsStream
     val banded = DedupOps.bandedDocs(docs).as[BandDoc]
     val out = banded
       .groupByKey(_.band)
@@ -207,9 +164,7 @@ object DedupStream {
                            minJaccard: Double = 0.3,
                            windowSec: Long = 200): DataFrame = {
     import spark.implicits._
-    val docs = rebalancedDocs(spark, dir, spark.readStream
-      .schema(probedDocSchema(spark, dir))
-      .parquet(s"$dir/{documents}.parquet"))
+    val docs = Tables(spark, dir).documentsStream
       .withColumn("ts", timestamp_seconds(col("doc_id") + 86400L))
     val banded = DedupOps.bandedDocs(docs, carry = Seq("ts"))
       .withWatermark("ts", "1 hour")

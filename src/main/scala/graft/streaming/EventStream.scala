@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.NumericFunctions.{decSum, roundN}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 /** Structured Streaming over the `events` table (extension surface —
   * SURVEY.md §2.11: the reference has no streaming; the fixtures' `ts`
@@ -13,26 +12,12 @@ import org.apache.spark.sql.types._
   *
   * The batch twins live in [[graft.operators.EventOps]]; Spark's unified
   * model means the same Column expressions run in both modes. For local
-  * verification the parquet file is replayed through `readStream` and
-  * drained synchronously with `processAllAvailable()` into a memory sink.
+  * verification the parquet file is replayed through
+  * [[Tables.eventsStream]] (the batch read's cached schema and `ts`
+  * dispatch, with `ts` as `timestamp`) and drained synchronously with
+  * `processAllAvailable()` into a memory sink.
   */
 object EventStream {
-
-  /** Raw schema template; the `ts` field's type is substituted at read
-    * time from the actual parquet footer (see [[readEvents]]) because the
-    * fixture's physical encoding has drifted across generations (NANOS →
-    * MICROS, round-8 verdict #2): a streaming schema that hard-codes
-    * LongType against a MICROS file reads raw micros "successfully" and
-    * then silently compresses every timestamp 1000× — the worst failure
-    * class, wrong answers with no error.
-    */
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
 
   /** Capture a drained memory-sink table and DROP its temp view: Dataset
     * analysis is eager, so the returned plan holds the sink's rows
@@ -47,46 +32,13 @@ object EventStream {
     out
   }
 
-  /** Cached per (input dir, fixture generation stamp): one cheap batch
-    * footer probe decides which ts rebuild the streaming schema needs.
-    * The stamp in the key makes an in-place fixture regeneration (the
-    * driver does this between rounds, under a running JVM — round-8 ts
-    * drift) invalidate the cached encoding instead of requiring a
-    * restart.
-    */
-  private val tsTypeCache = graft.core.GenerationCache[
-    Unit, org.apache.spark.sql.types.DataType]("events.parquet")
-
-  private def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = tsTypeCache(dir, ())(
-      spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType)
-    val schema = StructType(eventSchema.map(f =>
-      if (f.name == "ts") f.copy(dataType = tsType) else f))
-    // the file-stream source rejects a literal file path (basePath must be
-    // a directory) — a glob that matches only events.parquet sidesteps it
-    val raw = spark.readStream
-      .schema(schema)
-      .parquet(s"$dir/{events}.parquet")
-    // downstream contract: ts is TimestampType (watermarks, Ev's
-    // java.sql.Timestamp); the session is pinned UTC so NTZ↔LTZ casts
-    // preserve wall-clock time
-    tsType match {
-      case LongType          => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType  => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType     => raw
-      case other => throw new IllegalStateException(
-        s"events.ts: unsupported physical encoding $other")
-    }
-  }
-
   /** Windowed streaming aggregation with a watermark: hourly counts + value
     * sums per event type. Late events beyond 2 hours are dropped — state
     * stays bounded however long the stream runs.
     */
   def hourlyCounts(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir, "events.parquet") {
-    val agg = readEvents(spark, dir)
+    StreamTuning.withStatePartitions(spark, dir) {
+    val agg = Tables(spark, dir).eventsStream
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour").getField("start").as("hour_start"),
         col("event_type"))
@@ -110,8 +62,8 @@ object EventStream {
     * distinct count, which the oracle checks.
     */
   def dedupCounts(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir, "events.parquet") {
-    val agg = readEvents(spark, dir)
+    StreamTuning.withStatePartitions(spark, dir) {
+    val agg = Tables(spark, dir).eventsStream
       .withWatermark("ts", "2 hours")
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy("event_type")
@@ -140,10 +92,10 @@ object EventStream {
     * gate keeps the distinct-user column).
     */
   def intervalJoinStreaming(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir, "events.parquet") {
+    StreamTuning.withStatePartitions(spark, dir) {
     val wb = graft.operators.EventOps
       .busyWindowBuckets(graft.core.Tables(spark, dir), 20)
-    val agg = readEvents(spark, dir)
+    val agg = Tables(spark, dir).eventsStream
       .withColumn("ts", col("ts").cast("timestamp_ntz"))
       .withColumn("bucket", date_trunc("hour", col("ts")))
       .join(wb, Seq("bucket"))
@@ -183,7 +135,7 @@ object EventStream {
     */
   def fileSinkRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val (outDir, ckptDir) = fileSinkDirsFor(dir)
-    val q = readEvents(spark, dir)
+    val q = Tables(spark, dir).eventsStream
       .select("event_id", "event_type", "value")
       .writeStream
       .format("parquet")
@@ -214,12 +166,12 @@ object EventStream {
     * directly; the per-user rollup runs in batch on the drained sink.
     */
   def clickPurchaseJoin(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir, "events.parquet") {
-    val clicks = readEvents(spark, dir)
+    StreamTuning.withStatePartitions(spark, dir) {
+    val clicks = Tables(spark, dir).eventsStream
       .filter(col("event_type") === "click")
       .select(col("user_id").as("u"), col("ts").as("click_ts"))
       .withWatermark("click_ts", "2 hours")
-    val buys = readEvents(spark, dir)
+    val buys = Tables(spark, dir).eventsStream
       .filter(col("event_type") === "purchase")
       .select(col("user_id").as("u2"), col("ts").as("buy_ts"))
       .withWatermark("buy_ts", "2 hours")
@@ -266,9 +218,9 @@ object EventStream {
     * QUALIFY session_id < max(session_id) per user.
     */
   def sessionize(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir, "events.parquet") {
+    StreamTuning.withStatePartitions(spark, dir) {
     import spark.implicits._
-    val ds = readEvents(spark, dir).as[Ev]
+    val ds = Tables(spark, dir).eventsStream.as[Ev]
     val out = ds
       .withWatermark("ts", "2 hours")
       .groupByKey(_.user_id)
@@ -324,8 +276,8 @@ object EventStream {
     * session twin exercises).
     */
   def slidingCounts(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir, "events.parquet") {
-    val agg = readEvents(spark, dir)
+    StreamTuning.withStatePartitions(spark, dir) {
+    val agg = Tables(spark, dir).eventsStream
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "2 hours", "1 hour").getField("start").as("win_start"),
         col("event_type"))
@@ -353,8 +305,8 @@ object EventStream {
     * states that closed-window predicate directly.
     */
   def hourlyCountsAppend(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir, "events.parquet") {
-    val agg = readEvents(spark, dir)
+    StreamTuning.withStatePartitions(spark, dir) {
+    val agg = Tables(spark, dir).eventsStream
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), roundN(decSum(col("value")), 2).as("total_value"))
@@ -378,8 +330,8 @@ object EventStream {
     * at most (delay + width) / slide windows per key are live.
     */
   def slidingCountsAppend(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir, "events.parquet") {
-    val agg = readEvents(spark, dir)
+    StreamTuning.withStatePartitions(spark, dir) {
+    val agg = Tables(spark, dir).eventsStream
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), roundN(decSum(col("value")), 2).as("total_value"))
@@ -411,12 +363,12 @@ object EventStream {
     * pair count and closed unmatched count.
     */
   def clickPurchaseLeftJoin(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir, "events.parquet") {
-    val clicks = readEvents(spark, dir)
+    StreamTuning.withStatePartitions(spark, dir) {
+    val clicks = Tables(spark, dir).eventsStream
       .filter(col("event_type") === "click")
       .select(col("user_id").as("u"), col("ts").as("click_ts"))
       .withWatermark("click_ts", "2 hours")
-    val buys = readEvents(spark, dir)
+    val buys = Tables(spark, dir).eventsStream
       .filter(col("event_type") === "purchase")
       .select(col("user_id").as("u2"), col("ts").as("buy_ts"))
       .withWatermark("buy_ts", "2 hours")
@@ -454,12 +406,12 @@ object EventStream {
     * purchases.
     */
   def clickPurchaseFullJoin(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir, "events.parquet") {
-    val clicks = readEvents(spark, dir)
+    StreamTuning.withStatePartitions(spark, dir) {
+    val clicks = Tables(spark, dir).eventsStream
       .filter(col("event_type") === "click")
       .select(col("user_id").as("u"), col("ts").as("click_ts"))
       .withWatermark("click_ts", "2 hours")
-    val buys = readEvents(spark, dir)
+    val buys = Tables(spark, dir).eventsStream
       .filter(col("event_type") === "purchase")
       .select(col("user_id").as("u2"), col("ts").as("buy_ts"))
       .withWatermark("buy_ts", "2 hours")
@@ -500,8 +452,8 @@ object EventStream {
     * oracle states that closed-session predicate directly.
     */
   def sessionizeNativeWindows(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir, "events.parquet") {
-    val agg = readEvents(spark, dir)
+    StreamTuning.withStatePartitions(spark, dir) {
+    val agg = Tables(spark, dir).eventsStream
       .withWatermark("ts", "2 hours")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
       .agg(
@@ -583,7 +535,7 @@ object EventStream {
   private val upsertCalls = new java.util.concurrent.atomic.AtomicLong(0)
 
   def foreachBatchUpsert(spark: SparkSession, dir: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir, "events.parquet") {
+    StreamTuning.withStatePartitions(spark, dir) {
     val call = upsertCalls.incrementAndGet()
     val (targetRoot, ckptRoot) = upsertDirs
     // the previous call's final version is dead once a new call begins
@@ -593,7 +545,7 @@ object EventStream {
     val targetDir = s"$targetRoot/call$call"
     val ckptDir   = s"$ckptRoot/call$call"
     @volatile var current: Option[String] = None
-    val q = readEvents(spark, dir)
+    val q = Tables(spark, dir).eventsStream
       .select("user_id", "ts", "event_id", "event_type", "value")
       .writeStream
       .option("checkpointLocation", ckptDir)
@@ -632,9 +584,9 @@ object EventStream {
     */
   def progressLedger(spark: SparkSession, dir: String,
                      queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir, "events.parquet") {
+    StreamTuning.withStatePartitions(spark, dir) {
     import spark.implicits._
-    val counts = readEvents(spark, dir)
+    val counts = Tables(spark, dir).eventsStream
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))
     val q = counts.writeStream

@@ -34,24 +34,24 @@ object StreamTuning {
 
   private val bytesPerPartition = 16L << 20
 
-  /** Cached per (dir, fixture generation): total bytes under the fixture
-    * path — the replay volume the partition count is derived from. A path
-    * that cannot be walked reads as `Long.MaxValue`, so the configured
-    * partition count is used; that fallback warns on stderr with the path.
+  /** Cached per (dir, `events.parquet` generation): total bytes of the
+    * events fixture — the replay volume the partition count is derived
+    * from (every stateful gate replays `events`). A path that cannot be
+    * walked reads as `Long.MaxValue`, so the configured partition count
+    * is used; that fallback warns on stderr with the path.
     */
-  private val bytesCache =
-    new graft.core.GenerationCache[String, Long](identity, _ => ())
+  private val bytesCache = graft.core.GenerationCache[Unit, Long]("events.parquet")
 
-  private[streaming] def inputBytes(dir: String, fixture: String): Long =
-    bytesCache(dir, fixture) {
+  private[streaming] def inputBytes(dir: String): Long =
+    bytesCache(dir, ()) {
+      val path = s"$dir/events.parquet"
       try {
-        val stream = java.nio.file.Files.walk(
-          java.nio.file.Paths.get(s"$dir/$fixture"))
+        val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
         try stream.filter(java.nio.file.Files.isRegularFile(_))
           .mapToLong(java.nio.file.Files.size(_)).sum()
         finally stream.close()
       } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft] StreamTuning: cannot size $dir/$fixture " +
+        System.err.println(s"[graft] StreamTuning: cannot size $path " +
           s"($e); using the configured shuffle partitions")
         Long.MaxValue
       }
@@ -81,12 +81,10 @@ object StreamTuning {
     * parallelizes gates must scope the override via `spark.newSession()`
     * instead.
     */
-  def withStatePartitions[T](spark: SparkSession, dir: String,
-                             fixture: String)(body: => T): T = {
+  def withStatePartitions[T](spark: SparkSession, dir: String)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key,
-      statePartitions(spark, inputBytes(dir, fixture)).toString)
+    spark.conf.set(key, statePartitions(spark, inputBytes(dir)).toString)
     try body finally spark.conf.set(key, prev)
   }
 }

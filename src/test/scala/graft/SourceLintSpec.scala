@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Fixture generations are read only inside `graft/core/` (through
   * `GenerationCache`), and the only temp dirs engine code creates by
   * hand are `Tables.scratchDir`'s and the few that delete their own.
-  * Every local session starts from `core.LocalSession.builder`.
+  * Every local session starts from `core.LocalSession.builder`, and
+  * every fixture table is opened by `core.Tables`.
   */
 class SourceLintSpec extends AnyFunSuite {
   import scala.jdk.CollectionConverters._
@@ -75,6 +76,25 @@ class SourceLintSpec extends AnyFunSuite {
       if line.contains("fixtureStamp(")
     } yield s"$file:${n + 1}"
     assert(sites.isEmpty, s"cache fixture-derived values in a GenerationCache: $sites")
+  }
+
+  test("fixture tables are opened only by core.Tables") {
+    // a batch or streaming parquet read whose path is `$dir/<table>.parquet`
+    // (the path may sit a few lines below `read`/`readStream`), or a write
+    // of the nanosAsLong conf that the events schema is inferred under
+    val fixturePath = """\$\{?\w+\}?/\{?\w+\}?\.parquet"""".r
+    val sites = for {
+      (file, text) <- sources
+      if !file.startsWith("graft/core/") && !file.startsWith("graft/tools/")
+      lines = text.linesIterator.toVector
+      (line, n) <- lines.zipWithIndex
+      if !line.trim.startsWith("*") && !line.trim.startsWith("//")
+      opensFixture = (line.contains(".read") || line.contains("readStream")) &&
+        lines.slice(n, n + 6).find(_.contains(".parquet(")).exists(l =>
+          fixturePath.findFirstIn(l).isDefined)
+      if opensFixture || line.contains("nanosAsLong")
+    } yield s"$file:${n + 1}"
+    assert(sites.isEmpty, s"read fixture tables through core.Tables: $sites")
   }
 
   test("local sessions are built only by core.LocalSession") {

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * dispatch supports — raw INT64 nanos, TIMESTAMP(MICROS) NTZ, and
   * UTC-adjusted TIMESTAMP — and both the batch reader (`Tables.events` →
   * `EventOps.hourlyTypeCounts`) and the streaming reader
-  * (`EventStream.hourlyCounts`) must produce identical results across them.
+  * (`EventStream.hourlyCounts` → `Tables.eventsStream`) must produce
+  * identical results across them.
   * If the adaptive dispatch in either reader is removed, the nanos variant
   * throws (batch) or the row sets diverge (streaming), so this spec fails
   * before the driver's gates do on the next regeneration.
@@ -92,7 +93,7 @@ class EncodingDriftSpec extends SparkTestBase {
     import spark.implicits._
     // same micro corpus in two physical widths: the current fixture shape
     // (int64 ids/counts) and a narrowed regeneration (int32) — the
-    // DedupStream footer probe must absorb either, and the emitted pair
+    // streaming documents schema must absorb either, and the emitted pair
     // set must equal the batch operator's on both
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -129,11 +130,12 @@ class EncodingDriftSpec extends SparkTestBase {
   test("in-place fixture regeneration invalidates the streaming schema caches") {
     import spark.implicits._
     // The driver regenerates fixtures IN-PLACE under a running JVM (the
-    // round-8 ts drift arrived exactly that way), so the streaming schema
-    // caches key on (dir, fixture generation stamp): a rewrite with a different
-    // physical encoding must be picked up without a restart. With a
-    // dir-only key the second read below would apply the stale NTZ schema
-    // to raw int64 nanos — the silent 1000× compression class.
+    // round-8 ts drift arrived exactly that way), so the cached table
+    // schemas key on (dir, fixture generation stamp): a rewrite with a
+    // different physical encoding must be picked up without a restart, by
+    // the streaming and the batch reader alike. With a dir-only key the
+    // second reads below would apply the stale NTZ schema to raw int64
+    // nanos — the silent 1000× compression class.
     val root = Tables.scratchDir("graft_regen_")
     val base = (0 until 12).map { i =>
       val sec = 1700000000L + i * 540L
@@ -153,14 +155,19 @@ class EncodingDriftSpec extends SparkTestBase {
     writeMicros()
     val before = canon(EventStream.hourlyCounts(spark, root,
       s"regen_a_${System.nanoTime()}"))
+    val batchBefore = canon(EventOps.hourlyTypeCounts(Tables(spark, root)))
     writeNanos() // regeneration-in-place: same dir, different physical type
     val after = canon(EventStream.hourlyCounts(spark, root,
       s"regen_b_${System.nanoTime()}"))
     assert(before == after,
       "regenerated encoding served through a stale cached streaming schema")
     assert(before.nonEmpty)
+    val batchAfter = canon(EventOps.hourlyTypeCounts(Tables(spark, root)))
+    assert(batchBefore == batchAfter,
+      "regenerated encoding served through a stale cached batch schema")
+    assert(batchBefore.nonEmpty)
 
-    // same contract for the documents schema probe in DedupStream
+    // same contract for the streaming documents schema (DedupStream)
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta"),

@@ -16,16 +16,17 @@ class StreamTuningSpec extends SparkTestBase {
   }
 
   test("a missing fixture reads as Long.MaxValue, warns with its path and keeps the configured partitions") {
+    // a dir without events.parquet
     val dir = graft.core.Tables.scratchDir("graft_stream_tuning_")
     val err = new java.io.ByteArrayOutputStream()
     val saved = System.err
     System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
     val bytes =
-      try StreamTuning.inputBytes(dir, "missing.parquet")
+      try StreamTuning.inputBytes(dir)
       finally System.setErr(saved)
     assert(bytes == Long.MaxValue)
     assert(err.toString("UTF-8").linesIterator.exists(l =>
-      l.contains("StreamTuning") && l.contains(s"$dir/missing.parquet")),
+      l.contains("StreamTuning") && l.contains(s"$dir/events.parquet")),
       s"no StreamTuning warning naming the path in: $err")
     withShufflePartitions(64) {
       assert(StreamTuning.statePartitions(spark, bytes) == 64)
