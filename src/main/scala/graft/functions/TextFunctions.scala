@@ -2,44 +2,44 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import graft.functions.NumericFunctions.roundN
+import graft.plans.{CountInSet, HashEach, Md5BandKeys, Md5MinhashSignature, ShingleHashes, Shingles}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Column-level text primitives used by the text-analysis and dedup
-  * operators. Everything here is built from `org.apache.spark.sql.functions`
-  * higher-order array functions, so it stays inside whole-stage codegen —
-  * no UDFs, no Python workers (the reference's per-row Python UDF boundary,
-  * SURVEY.md §2.9, is exactly what we're designing out).
+  * operators — no UDFs, no Python workers (the reference's per-row Python
+  * UDF boundary, SURVEY.md §2.9, is exactly what we're designing out).
+  *
+  * Shingles, shingle hashes, the md5 MinHash signature, band keys and
+  * the stopword count are compiled kernels ([[graft.plans.TextKernels]]):
+  * one plain loop per row, called from whole-stage generated code. The
+  * rest are built-in `org.apache.spark.sql.functions` expressions. The
+  * higher-order functions left here (`simhashBits`, `rollingHash`,
+  * `minShingleFingerprint`) are CodegenFallback: their lambdas run
+  * interpreted, element by element.
   */
 object TextFunctions {
+
+  /** A kernel expression over a column, resolvable in any session. */
+  private def kernel(c: Column)(e: Expression => Expression): Column =
+    ColumnBridge.column(e(ColumnBridge.expression(c)))
 
   /** Whitespace tokens. The synthetic corpus is single-space word soup;
     * `\s+` keeps it robust to real text.
     */
   def tokens(text: Column): Column = split(text, "\\s+")
 
-  /** Word n-gram shingles as space-joined strings: the token array zipped
-    * with its own shifted suffixes, null-padded tails filtered out (a doc
-    * with fewer than n tokens yields an empty array).
-    *
-    * Why zip_with and not `transform(sequence(0, size-n), i -> concat_ws(
-    * slice(tk, i+1, n)))`: higher-order lambdas run interpreted, and a
-    * lambda's free-variable expression (`tk` = the regex split) is
-    * RE-EVALUATED per element — the transform/slice formulation re-split
-    * the document once per shingle position (measured 8× slower at sf0.1).
-    * zip_with takes the arrays as operands, evaluated once per row.
+  /** Word n-gram shingles as space-joined strings, in text order (a doc
+    * with fewer than n tokens yields an empty array). One kernel pass per
+    * row: tokenize once, then join each window of n tokens. The element
+    * type is nullable for n > 1 (never null in fact), as the `zip_with`
+    * formulation typed it.
     */
-  def shingles(text: Column, n: Int): Column = {
-    val tk = tokens(text)
-    val joined = (2 to n).foldLeft(tk)((acc, k) =>
-      // slice length = full array size (clamped internally); start+length
-      // must not overflow Int, so no Int.MaxValue here
-      zip_with(acc, slice(tk, lit(k), size(tk)), (a, b) =>
-        when(a.isNull || b.isNull, lit(null)).otherwise(concat(a, lit(" "), b))))
-    filter(joined, s => s.isNotNull)
-  }
+  def shingles(text: Column, n: Int): Column = kernel(text)(Shingles(_, n, distinct = false))
 
-  /** Distinct shingle set (for Jaccard). */
-  def shingleSet(text: Column, n: Int): Column = array_distinct(shingles(text, n))
+  /** Distinct shingle set (for Jaccard), first occurrences in order. */
+  def shingleSet(text: Column, n: Int): Column = kernel(text)(Shingles(_, n, distinct = true))
 
   /** Cheap scan-side equivalent of `size(shingleSet(text, n)) > 0` /
     * `size(shingleHashSet(text, n)) > 0` (round-18, guide §1.2 "per-task
@@ -48,13 +48,13 @@ object TextFunctions {
     * it re-evaluates the whole shingle pipeline ON THE SCAN TASK — the
     * exact serial pass the rebalance exists to avoid — while the
     * projection above the exchange computes it again. The shingle count
-    * is `max(0, n_tokens − (n−1))` by construction (the zip_with tail
-    * padding nulls exactly the last n−1 slots, and `array_distinct` of a
-    * non-empty array is non-empty), so "any shingle survives" is
-    * precisely "at least n whitespace tokens" — one `split` at the scan
-    * instead of the full shingle/hash chain. Null text: under non-ANSI
-    * `size(tokens(null))` is −1, so `-1 >= n` is false and the row drops
-    * — identical to `size(null shingle array) > 0`.
+    * is `max(0, n_tokens − (n−1))` by construction (one per window of n
+    * tokens, and a distinct set of a non-empty array is non-empty), so
+    * "any shingle survives" is precisely "at least n whitespace tokens"
+    * — one `split` at the scan instead of the full shingle/hash kernel.
+    * Null text: under non-ANSI `size(tokens(null))` is −1, so `-1 >= n`
+    * is false and the row drops — identical to `size(null shingle
+    * array) > 0`.
     */
   def hasShingles(text: Column, n: Int): Column = size(tokens(text)) >= n
 
@@ -64,8 +64,12 @@ object TextFunctions {
     * of shingle text: at 100 TB the explode/self-join traffic shrinks ~3×
     * and comparisons become integer equality.
     */
-  def shingleHashSet(text: Column, n: Int): Column =
-    array_distinct(transform(shingles(text, n), s => xxhash64(s)))
+  def shingleHashSet(text: Column, n: Int): Column = kernel(text)(ShingleHashes(_, n))
+
+  /** `xxhash64` of each string in an array (a null element hashes to
+    * the seed, 42, as `xxhash64(null)` does).
+    */
+  def hashEach(strings: Column): Column = kernel(strings)(HashEach(_))
 
   /** Exact Jaccard similarity of two pre-deduplicated shingle arrays. */
   def jaccard(a: Column, b: Column): Column = {
@@ -81,26 +85,20 @@ object TextFunctions {
     * end-to-end; the min is a lexicographic min over lowercase-hex
     * strings, identically ordered in both engines (pure ASCII, binary
     * collation). O(k·|shingles|) hashing — ~2× an xxhash64-based variant
-    * (round 1 used one; traded for oracle checkability in round 2).
+    * (round 1 used one; traded for oracle checkability in round 2). The
+    * kernel compares raw digests and hex-encodes only the k winners; an
+    * entry with no shingle to hash (empty or null input) is null.
     */
   def md5MinhashSignature(shingleTexts: Column, k: Int): Column =
-    transform(
-      sequence(lit(0), lit(k - 1)),
-      j => array_min(transform(shingleTexts, s =>
-        md5(concat(j.cast("string"), lit(":"), s)))))
+    kernel(shingleTexts)(Md5MinhashSignature(_, k))
 
   /** LSH band keys from a minhash signature: md5 of each r-row band with
     * the band index prefixed (`b || '_' || md5(sig[b·r+1] || ',' ...)`).
     * Equal band key ⇒ candidate pair. bands·rows must equal the signature
-    * length.
+    * length. Null entries are skipped, as `concat_ws` skips them.
     */
   def md5BandKeys(sig: Column, bands: Int, rows: Int): Column =
-    transform(
-      sequence(lit(0), lit(bands - 1)),
-      b => concat_ws(
-        "_",
-        b.cast("string"),
-        md5(concat_ws(",", slice(sig, b * rows + 1, lit(rows))))))
+    kernel(sig)(Md5BandKeys(_, bands, rows))
 
   /** Bit i (0-based, MSB-first per hex digit) of an md5 hex string: decode
     * the nibble at position i/4 via its index in "0123456789abcdef" (the
@@ -228,7 +226,10 @@ object TextFunctions {
 
   def stopwordRatio(text: Column): Column = {
     val tk = tokens(text)
-    val hits = size(filter(tk, t => t.isin(stopwords.map(x => x: Any): _*)))
+    // null text: size(null) is −1 under non-ANSI, so the ratio is
+    // (−1)/(−1) = 1.0; the coalesce keeps that quirk of the original
+    // size(filter(tokens, isin)) formulation
+    val hits = coalesce(kernel(tk)(CountInSet(_, stopwords)), size(tk))
     when(size(tk) === 0, 0.0).otherwise(hits.cast("double") / size(tk).cast("double"))
   }
 

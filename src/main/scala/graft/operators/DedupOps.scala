@@ -329,18 +329,16 @@ object DedupOps {
     * and the streaming stateful variant (Spark's unified model: the same
     * Column pipeline plans in both modes).
     *
-    * The repartition barrier after `sh_txt` is load-bearing, not cosmetic:
-    * CollapseProject would otherwise inline the shingle pipeline into the
-    * signature's per-permutation lambda — the whole
-    * split→shingle→distinct→hash chain re-evaluated k× per row (measured
-    * 8× slower at sf0.1). (An explode + k-min-aggregate formulation was
-    * measured too: the extra sig⋈docs join it needs costs more than the
-    * interpreted lambda saves.) Its partition count is explicit, as in
-    * `Tables.balancedByKey`: a bare `repartition(col)` is AQE-coalesced
-    * (to 2 tasks on 4 cores for 2,500 documents), which leaves the md5
-    * signature stages on half the cores. With the same count as `documentsBalanced`' exchange on the
-    * same key, Spark drops the physical shuffle and keeps the logical
-    * barrier.
+    * The repartition barrier after `sh_txt` spreads the md5 signature
+    * over `defaultParallelism` tasks. The shingle set and signature are
+    * compiled kernels with no lambda that could re-evaluate the shingle
+    * set per permutation, so the barrier no longer guards against that;
+    * dropping it still needs a traced A/B run. Its partition count
+    * is explicit, as in `Tables.balancedByKey`: a bare `repartition(col)`
+    * is AQE-coalesced (to 2 tasks on 4 cores for 2,500 documents), which
+    * leaves the md5 signature stages on half the cores. With the same
+    * count as `documentsBalanced`' exchange on the same key, Spark drops
+    * the physical shuffle and keeps the logical barrier.
     */
   def bandedDocs(documents: DataFrame, k: Int = 16, bands: Int = 8,
                  carry: Seq[String] = Nil): DataFrame = {
@@ -363,7 +361,7 @@ object DedupOps {
       // exchanges never carry shingle text or the signature — only
       // (doc_id, band, array<long>) + any carried metadata (the streaming
       // windowed variant carries its event-time column through here)
-      .withColumn("sh", transform(col("sh_txt"), s => xxhash64(s)))
+      .withColumn("sh", hashEach(col("sh_txt")))
       .select(col("doc_id") +: col("band") +: col("sh") +: carry.map(col): _*)
   }
 

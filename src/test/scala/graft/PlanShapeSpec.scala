@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators._
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape assertions: the properties that keep these plans
@@ -10,6 +11,16 @@ class PlanShapeSpec extends SparkTestBase {
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Every node of a physical plan, adaptive query stages included. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+  }
 
   test("range filters reach the parquet scan as PushedFilters") {
     val p = plan(CoreQueries.filterRange(t))
@@ -260,14 +271,8 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("shingle sets and minhash signatures run after the scan rebalance, at session width") {
-    import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.{FilterExec, ProjectExec}
     import org.apache.spark.sql.execution.exchange.Exchange
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => nodes(s.plan)
-      case _ => p.children.flatMap(nodes)
-    })
     val par = spark.sparkContext.defaultParallelism
     // a shuffle width unlike the session's, so a repartition without an
     // explicit count would plan its own (AQE-coalesced) exchange
@@ -283,17 +288,29 @@ class PlanShapeSpec extends SparkTestBase {
         for {
           ex <- all.collect { case e: Exchange => e }
           f <- nodes(ex.child).collect { case f: FilterExec => f }
-        } assert(!Seq("zip_with", "array_distinct").exists(f.condition.toString.contains),
+        } assert(!Seq("graft_shingle", "array_distinct").exists(f.condition.toString.contains),
           s"$name: a shingle-array filter runs below an exchange: ${f.condition}")
         if (name == "minhashDupPairs") {
           val sig = all.collect { case p: ProjectExec
-            if p.projectList.exists(e => e.toString.contains("array_min") && e.toString.contains("md5")) => p }
+            if p.projectList.exists(_.exists(_.isInstanceOf[graft.plans.Md5MinhashSignature])) => p }
           assert(sig.nonEmpty, s"no signature projection in\n${df.queryExecution.executedPlan}")
           sig.foreach(p => assert(p.execute().getNumPartitions >= par,
             s"signature projection runs on ${p.execute().getNumPartitions} partitions, session has $par"))
         }
       }
     } finally spark.conf.set(key, prev)
+  }
+
+  test("text kernels: no higher-order function in the dedup and intake plans") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    Seq("intakeDecisions" -> PipelineOps.intakeDecisions(t),
+        "minhashDupPairs" -> DedupOps.minhashDupPairs(t),
+        "decontaminate" -> DedupOps.decontaminate(t, "src15"),
+        "repetitionStats" -> TextOps.repetitionStats(t)).foreach { case (name, df) =>
+      val hofs = nodes(df.queryExecution.executedPlan)
+        .flatMap(_.expressions.flatMap(_.collect { case h: HigherOrderFunction => h }))
+      assert(hofs.isEmpty, s"$name evaluates interpreted lambdas: ${hofs.map(_.prettyName).distinct}")
+    }
   }
 
   test("routed-recall probe: partition-pruned to the probed cells, top-k without a global sort") {
