@@ -86,19 +86,18 @@ object Plans {
         operators.SnapshotOps.antiEntropyGate(t),
       "partition_spec_pruned (per-spec scans: year dirs pruned in both, month dirs in spec2)" ->
         sources.PartitionedParquet.specPrunedCounts(t),
-      "ivf_assign_cells expression regime (nlist 256 > 64: graft_ivf_assign reference-object table, join-free single Project)" ->
-        ivfAssignBroadcastPick(t),
+      "ivf_assign_cells (flat graft_ivf_assign reference-object table at nlist 256, join-free single Project)" ->
+        ivfAssignFlatPick(t),
       "ivf_assign_cells_hier (two-level reference-object table: coarse top-p + pruned fine argmin in one codegen call, join-free)" ->
         ivfAssignHierPick(t))
 
-  /** The nlist-above-threshold assignment plan: 256 deterministic
-    * synthetic centroids (KMeans at k=256 needs more vectors than the
-    * plan fixture holds, and the pick documents the ASSIGNMENT plan, not
-    * the quantizer fit) written once per run, then the production
-    * [[operators.SimilarityOps.ivfAssignCells]] call at its default
-    * threshold — 256 > 64 selects the reference-object expression.
+  /** The flat assignment plan: 256 deterministic synthetic centroids
+    * (KMeans at k=256 needs more vectors than the plan fixture holds, and
+    * the pick documents the ASSIGNMENT plan, not the quantizer fit)
+    * written once per run, then the production
+    * [[operators.SimilarityOps.ivfAssignCells]] call.
     */
-  private def ivfAssignBroadcastPick(t: Tables): org.apache.spark.sql.DataFrame = {
+  private def ivfAssignFlatPick(t: Tables): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     val spark = t.spark
     import spark.implicits._

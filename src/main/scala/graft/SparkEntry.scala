@@ -258,9 +258,9 @@ object SparkEntry {
     // toward exhaustion fails loudly instead of silently NULLing the
     // oracle's replace chain
     "text_bpe_encode_oov_replay" -> q(t => TextOps.bpeEncodeOov(t, 66, "c")),
-    // thresholded training-path parity (round-15): the production
-    // driver-side merge loop vs the reference cluster loop at 12 merges
-    // (above the threshold), merge tables + final dicts compared; the
+    // training-path parity (round-15): the production driver-side merge
+    // loop vs the reference cluster loop at 12 merges, merge tables +
+    // final dicts compared; the
     // oracle states vocab count + constant verdicts, GateInvariants
     // re-runs both paths
     "text_bpe_path_parity"  -> q(t => TextOps.bpePathParityGate(t)),
@@ -507,11 +507,11 @@ object SparkEntry {
     // the worst case for coarse pruning — with measured per-width floors
     // and an exact close at the full sweep
     "ann_ivf_recall_routed" -> q(t => SimilarityOps.ivfRecallRoutedGate(t)),
-    // the same contract ABOVE the hier threshold (round-16 verdict item
-    // 3): nlist = 16384 — ncoarse = 128, pcoarse = 4, the regime where
-    // the two-level assignment is the measured production win (8.0 s
-    // flat vs 0.5 s routed per 200k vectors) — with floors measured on
-    // the sparse fixture indexes and an exact close at the full sweep
+    // the same contract deep in the two-level ingest range (round-16
+    // verdict item 3): nlist = 16384 — ncoarse = 128, pcoarse = 4, where
+    // the two-level table is the measured production win (8.0 s flat vs
+    // 0.5 s routed per 200k vectors) — with floors measured on the
+    // sparse fixture indexes and an exact close at the full sweep
     "ann_ivf_recall_routed_hier" ->
       q(t => SimilarityOps.ivfRecallRoutedHierGate(t)),
     // incremental IVF maintenance (round-13): subset-built index +
@@ -528,9 +528,9 @@ object SparkEntry {
     // per vector instead of O(nlist·dim); full-sweep identity theorem +
     // pruned-agreement floor verdicts
     "ann_ivf_assign_hier" -> q(t => SimilarityOps.ivfAssignHierGate(t)),
-    // above-inline-threshold assignment regime (round-15): the codegen
-    // graft_ivf_assign expression over a 256-cell closed-form surrogate —
-    // per-cell histogram, FULL hash gate (the oracle replays the argmin)
+    // flat assignment at 256 cells (round-15): graft_ivf_assign over a
+    // closed-form surrogate table — per-cell histogram, FULL hash gate
+    // (the oracle replays the argmin)
     "ann_ivf_assign_expr" -> q(t => SimilarityOps.ivfAssignExprGate(t)),
     "ann_brp_lsh"        -> q(t => SimilarityOps.brpLshVerdictGate(t)),
     // int8-quantized scoring (round-11): exact IEEE quantization rule ⇒
@@ -942,7 +942,7 @@ object SparkEntry {
     // production cost is one pruned two-level assignment over the batch
     "ann_ivf_assign_hier" -> q(t => SimilarityOps.ivfAssignHierProbe(t)),
     // the histogram aggregate is the gate's verification device; the
-    // production cost is the raw expression-path assignment projection
+    // production cost is the raw flat assignment projection
     "ann_ivf_assign_expr" -> q(t => SimilarityOps.ivfAssignExprProbe(t)),
     "ann_brp_lsh"         -> q(t => SimilarityOps.brpLshTopK(t, 0L, 10)),
     "dedup_minhash_mllib" -> q(t => DedupOps.minhashDupPairsMllib(t, 0.7)),

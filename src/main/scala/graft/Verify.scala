@@ -1028,7 +1028,7 @@ object GateInvariants {
         row.getAs[Boolean]("dicts_identical") == dictsOk,
         s"invariant: gate verdicts disagree with recompute ($mergesOk, $dictsOk)")
       require(mergesOk && dictsOk,
-        "invariant: thresholded BPE training paths diverged")
+        "invariant: driver and reference BPE training paths diverged")
     case "text_bpe_encode_oov" =>
       // the gate exists to prove unseen words are ENCODED, not silently
       // dropped (the round-15 inner-join data-loss finding) — so the

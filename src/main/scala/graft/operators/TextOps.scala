@@ -381,15 +381,16 @@ object TextOps {
     * training over the WORD-FREQUENCY dictionary: the corpus is touched
     * exactly once (whitespace words → counts); every merge round then
     * works on the |vocab|-bounded dict — adjacent-symbol pairs weighted
-    * by word frequency, one groupBy per round, argmax pair (ties to the
+    * by word frequency, argmax pair (ties to the
     * lexicographically smallest — binary collation on both engines), and
     * a literal leftmost-non-overlapping `replace` of `"a b"` with `"ab"`
     * over the space-separated symbol sequences (Spark's `replace` and
     * DuckDB's agree on the scan order, which makes the whole derivation
-    * hash-gateable). The driver reads ONE (pair, count) row per round —
-    * the merge table IS driver-sized by definition (a 50k-merge
-    * production vocabulary is 50k tiny rows); the dict stays distributed
-    * and is checkpointed per round so round N never replays rounds 1..N−1.
+    * hash-gateable). The merge rounds run driver-side over the collected
+    * dict ([[bpeTrainOnDriver]]): the dict is |vocab|-bounded and the
+    * merge table driver-sized by definition (a 50k-merge production
+    * vocabulary is 50k tiny rows), so per merge the loop pays
+    * milliseconds, not a Spark job.
     *
     * Output: one row per learned merge — (rank, pair, merged, cnt).
     */
@@ -409,31 +410,15 @@ object TextOps {
     * that word in, so encode needs no second pass over the merges.
     *
     * Cached per (documents fixture generation, nMerges): three gates now
-    * consume the training, and the dict is a localCheckpoint'd
-    * |vocab|-bounded frame — re-deriving the 5 driver-synchronized merge
-    * rounds per consumer would triple the only iterative cost in the
-    * text family.
+    * consume the training, and re-collecting the dictionary and
+    * replaying the merges per consumer would triple the only iterative
+    * cost in the text family.
     */
   private val bpeTrainCache = GenerationCache[
     Int, (DataFrame, Seq[(Int, String, String, Long)])]("documents.parquet")
   private def bpeTrain(t: Tables, nMerges: Int)
       : (DataFrame, Seq[(Int, String, String, Long)]) =
     bpeTrainCache(t.dir, nMerges)(bpeTrainUncached(t, nMerges))
-
-  /** Above this merge count the training loop finishes DRIVER-SIDE
-    * (round-14 verdict item 3): once the corpus has been folded into the
-    * (word, freq) dictionary — ONE distributed pass, the only part that
-    * touches the data — every merge round works on a |vocab|-bounded
-    * table that is ≪ corpus by definition. The cluster loop pays one
-    * driver-synchronized Spark job PER merge (honest at the gated
-    * nMerges = 5, a fixed ~0.2 s job quantum × 32k at a production
-    * vocabulary); the driver loop replays the identical semantics with
-    * pair-count deltas, so per-merge cost is O(affected words), not a
-    * job. The gated regime (nMerges ≤ threshold) keeps the on-cluster
-    * loop — no gate hash moves — and `BpeTrainPathSpec` pins the two
-    * paths merge-for-merge and dict-for-dict equal across the threshold.
-    */
-  private[operators] val bpeDriverMergeThreshold = 8
 
   /** The ONE distributed corpus pass both training paths share: whitespace
     * words → (word, char-split seq, corpus frequency).
@@ -448,24 +433,13 @@ object TextOps {
 
   private def bpeTrainUncached(t: Tables, nMerges: Int)
       : (DataFrame, Seq[(Int, String, String, Long)]) =
-    bpeTrainFromDict0(t.spark, bpeDict0(t), nMerges)
+    bpeTrainOnDriver(t.spark, bpeDict0(t), nMerges)
 
-  /** The threshold-routed training entry over an explicit (w, seq, freq)
-    * dictionary — the seam [[bpeEncodeOov]] uses to train on a vocabulary
-    * SUBSET (frozen-tokenizer semantics) with the exact production
-    * routing.
-    */
-  private[graft] def bpeTrainFromDict0(
-      spark: org.apache.spark.sql.SparkSession, dict0: DataFrame,
-      nMerges: Int): (DataFrame, Seq[(Int, String, String, Long)]) =
-    if (nMerges <= bpeDriverMergeThreshold) bpeTrainOnCluster(dict0, nMerges)
-    else bpeTrainOnDriver(spark, dict0, nMerges)
-
-  /** Hash-gated face of the THRESHOLDED training loop (round 15): runs
-    * BOTH paths at `nMerges` ABOVE [[bpeDriverMergeThreshold]] — the
-    * production driver-side path and the reference cluster loop — over
-    * the same dictionary, and emits the parity verdicts the oracle
-    * states constant:
+  /** Hash-gated face of the driver-side training loop (round 15): runs
+    * BOTH paths at `nMerges` — the production driver-side loop and the
+    * reference cluster loop [[bpeTrainOnCluster]], one Spark job per
+    * merge — over the same dictionary, and emits the parity verdicts the
+    * oracle states constant:
     *
     *  - `n_vocab`: distinct corpus words (the oracle recomputes it
     *    directly, so the shared corpus pass is conserved);
@@ -475,7 +449,7 @@ object TextOps {
     *    every word (compared distributed via a full outer join; the
     *    driver path's local dict broadcasts).
     *
-    * This puts the production large-merge path itself on the gated
+    * This puts the production training path itself on the gated
     * surface (BpeTrainPathSpec pins the same laws in-suite);
     * Verify.GateInvariants re-runs both paths independently and
     * recomputes all three facts.
@@ -490,9 +464,6 @@ object TextOps {
 
   private[graft] def bpePathParityVerdicts(t: Tables, nMerges: Int)
       : (Long, Boolean, Boolean) = {
-    require(nMerges > bpeDriverMergeThreshold,
-      s"parity gate must exercise the driver path: nMerges=$nMerges <= " +
-        s"threshold $bpeDriverMergeThreshold")
     val dict0 = bpeDict0(t)
     val nVocab = dict0.count()
     val (clusterDict, clusterMerges) = bpeTrainOnCluster(dict0, nMerges)
@@ -516,6 +487,11 @@ object TextOps {
       .toDF("rank", "pair", "merged", "cnt")
   }
 
+  /** The reference training loop behind [[bpePathParityGate]] and
+    * BpeTrainPathSpec: the merge rounds as Spark jobs over the
+    * distributed dict — one groupBy + argmax per round, the dict
+    * checkpointed per round so round N never replays rounds 1..N−1.
+    */
   private[graft] def bpeTrainOnCluster(dict0: DataFrame, nMerges: Int)
       : (DataFrame, Seq[(Int, String, String, Long)]) = {
     var dict = dict0
@@ -526,9 +502,7 @@ object TextOps {
       // headOption, not head: a pair-exhausted dictionary (every word a
       // single symbol — possible past Σ(len−1) merges) must stop at the
       // last real merge exactly like the driver path, not throw on the
-      // empty argmax (round-15 advice: routing is by nMerges, so the same
-      // degenerate corpus truncated silently above the threshold but
-      // crashed at or below it, and the parity gate would crash there
+      // empty argmax (round-15 advice: the parity gate would crash there
       // instead of reporting divergence).
       val bestOpt = dict
         .select(col("freq"), split(col("seq"), " ").as("syms"))
@@ -582,8 +556,7 @@ object TextOps {
     * the dictionary runs out of mergeable pairs before `nMerges` (only
     * possible past Σ(len−1) merges, far beyond any gated or benched
     * setting), training stops at the last real merge — the SAME
-    * exhaustion rule the cluster loop follows, so routing by nMerges
-    * can't change degenerate-corpus behavior (BpeTrainPathSpec pins it).
+    * exhaustion rule the cluster loop follows (BpeTrainPathSpec pins it).
     */
   private[graft] def bpeTrainOnDriver(
       spark: org.apache.spark.sql.SparkSession, dict0: DataFrame,
@@ -858,7 +831,7 @@ object TextOps {
   private[graft] def bpeTrainOovCached(t: Tables, nMerges: Int,
                                        vocabPredChar: String = "7")
       : (DataFrame, Seq[(Int, String, String, Long)]) =
-    bpeTrainOovCache(t.dir, (nMerges, vocabPredChar))(bpeTrainFromDict0(t.spark,
+    bpeTrainOovCache(t.dir, (nMerges, vocabPredChar))(bpeTrainOnDriver(t.spark,
         bpeDict0(t).filter(substring(md5(col("w")), 1, 1) <= vocabPredChar),
         nMerges))
 

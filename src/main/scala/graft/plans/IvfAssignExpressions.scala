@@ -26,14 +26,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * same seam `graft_bloom_contains` and Spark's own InjectRuntimeFilter
   * use), rows stay narrow, and the per-row cost is the arithmetic alone.
   *
-  * Arithmetic contract (the cross-path identity theorem): per cell,
-  * d2 = |c|² − 2·v·c with |c|² a driver-side ascending-index left fold
-  * and the dot an ascending-index left fold — the exact op order of the
-  * literal-inline path and of `graft_dot` — and the winner is the
-  * (d2, cell) struct-min total order (lowest d2, ties to lowest cell id).
-  * Two-level probing every group therefore assigns BIT-identically to the
-  * flat scan; pruned probing differs only by cells hidden in unprobed
-  * groups (IvfAssignHierSpec pins both).
+  * Arithmetic contract: per cell, d2 = |c|² − 2·v·c with |c|² a
+  * driver-side ascending-index left fold and the dot an ascending-index
+  * left fold — the op order of `graft_dot` — and the winner is the
+  * (d2, cell) total order: lowest d2, NaN after every number, ties to the
+  * lowest cell id. Two-level probing every group therefore assigns
+  * BIT-identically to the flat scan; pruned probing differs only by cells
+  * hidden in unprobed groups (IvfAssignPathSpec pins the flat scan
+  * against a driver-side argmin, IvfAssignHierSpec the two-level one).
   */
 final class IvfCentroidTable(
     val coarseN2: Array[Double],
@@ -106,10 +106,9 @@ final class IvfCentroidTable(
     if (bestCell == Int.MaxValue) {
       // Non-finite embedding: every d2 is NaN, so no comparison above
       // fired (round-14 advice — this used to mint the invalid cell id
-      // Int.MaxValue). Mirror the literal-inline path's (d2, cell)
-      // struct-min total order, where NaN compares equal to NaN and the
-      // tie-break picks the LOWEST probed cell id — under a full sweep
-      // that is the global minimum cell, bit-matching the literal path.
+      // Int.MaxValue). In the (d2, cell) total order NaN equals NaN, so
+      // the tie-break picks the LOWEST probed cell id — under a full
+      // sweep, the global minimum cell.
       var t2 = 0
       while (t2 < filled) {
         val gi = topG(t2)

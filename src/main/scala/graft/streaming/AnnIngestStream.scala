@@ -53,9 +53,9 @@ object AnnIngestStream {
         .select(col("vec_id"), col("label"), toDoubleArr(col("embedding")).as("emb"))
       SimilarityOps.buildIvfIndexOf(
         emb.filter(col("vec_id") % 7 =!= 0), spark, index, nlist)
-      // stage the ingest feed as 4 parquet files → 4 micro-batches
-      val feed = java.nio.file.Files
-        .createTempDirectory("graft_ivf_feed_").toString
+      // stage the ingest feed as 4 parquet files → 4 micro-batches; a
+      // failed write or drain leaves it to the scratch dir's exit hook
+      val feed = Tables.scratchDir("graft_ivf_feed_")
       t.embeddings.filter(col("vec_id") % 7 === 0)
         .repartition(4).write.mode("overwrite").parquet(feed)
       val batches = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -26,6 +26,25 @@ object StreamMeter {
   private val meters =
     scala.collection.concurrent.TrieMap.empty[String, Meter]
 
+  /** The last drained run's micro-batch execution and its gate
+    * (round-17): its executed streaming plan — state-store operators and
+    * exchange partition counts included — is the only place the
+    * state-partition sizing ([[StreamTuning]]) is observable; batch
+    * `DataFrame.explain` on a gate's drained output never shows the
+    * stream side. The reference is taken before `stop()`; the plan
+    * renders only when [[lastPlan]] asks (rendering a banded
+    * flatMapGroupsWithState plan costs 0.3–0.6 s, which a timed drain
+    * must not pay). One slot, not one per gate: an execution reaches its
+    * sink, so a memory sink's rows stay reachable while it is kept, and
+    * the last drain's rows are the ones its caller still holds.
+    */
+  @volatile private var lastExecution: Option[
+    (String, org.apache.spark.sql.execution.streaming.runtime.IncrementalExecution)] = None
+
+  /** The micro-batch plan of `gate`'s run, if it was the last one drained. */
+  def lastPlan(gate: String): Option[String] =
+    lastExecution.collect { case (g, e) if g == gate => e.simpleString }
+
   /** `processAllAvailable()` + `stop()` + record the run's progress
     * telemetry under `gate`. Exactly the drain idiom every streaming
     * gate already used, with the metering attached at the one seam they
@@ -58,34 +77,13 @@ object StreamMeter {
     * trips `capped`, and the id recovery would have shipped the
     * cross-run total; StreamMeterSpec drives that case live).
     */
-  /** Last drained run's micro-batch physical plan per gate (round-17):
-    * `q.explain()` renders the executed streaming plan — state-store
-    * operators and exchange partition counts included — which is the
-    * only place the state-partition sizing ([[StreamTuning]]) is
-    * observable; batch `DataFrame.explain` on a gate's drained output
-    * never shows the stream side. Captured before `stop()` (the plan is
-    * gone afterwards), kept for the plan-evidence dumps.
-    */
-  private val plans =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def lastPlan(gate: String): Option[String] = plans.get(gate)
-
-  /** Plan capture is opt-in (`SPARK_GRAFT_STREAM_PLAN=1`, set by the
-    * PlanDump tool): rendering a complex micro-batch plan costs real
-    * milliseconds inside the gates' timed drain, and the bench must not
-    * pay for evidence it isn't collecting (measured ~0.3–0.6 s on the
-    * banded flatMapGroupsWithState gates).
-    */
-  private val capturePlans = sys.env.get("SPARK_GRAFT_STREAM_PLAN").contains("1")
-
   def drain(q: StreamingQuery, gate: String, resumed: Boolean = false): Unit = {
     q.processAllAvailable()
-    if (capturePlans) try {
-      val bos = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(bos, true, "UTF-8"))(q.explain())
-      plans.put(gate, bos.toString("UTF-8"))
-    } catch { case NonFatal(_) => () }
+    lastExecution = q match {
+      case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
+        Option(w.streamingQuery.lastExecution).map(gate -> _)
+      case _ => None
+    }
     q.stop()
     val prog = q.recentProgress
     val retention =

@@ -6,10 +6,8 @@ package graft.tools
   *
   * `sbt 'runMain graft.tools.PlanDump <outDir> <suffix> <name>[,<name>…] [sfDir]'`
   *
-  * For streaming gates, additionally set `SPARK_GRAFT_STREAM_PLAN=1` so
-  * StreamMeter captures the micro-batch plan (it is opt-in — the capture
-  * costs milliseconds inside the gates' timed drains, which the bench
-  * must not pay).
+  * For streaming gates the dump also carries the drained query's last
+  * micro-batch plan, rendered from StreamMeter's kept execution.
   *
   * Each query lands at `<outDir>/<name>_<suffix>.txt`. The session mirrors
   * Bench's (extensions, UTC, ANSI off, shuffle partitions = cores) so the
@@ -35,7 +33,7 @@ object PlanDump {
       val df = fn(spark, sfDir)
       // streaming gates: the stream side (state-store operators, state
       // exchange partition counts) only exists in the drained query's
-      // own executed plan, which StreamMeter captures at drain time —
+      // own executed plan, which StreamMeter keeps at drain time —
       // constructing `df` above already ran the stream. The batch plan
       // of the drained sink is appended after it for completeness.
       val streamPlan = graft.streaming.StreamMeter.lastPlan(n)

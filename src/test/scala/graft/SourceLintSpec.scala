@@ -23,7 +23,7 @@ class SourceLintSpec extends AnyFunSuite {
     "SPARK_GRAFT_BENCH_CSV", "SPARK_GRAFT_BENCH_ONLY",
     "SPARK_GRAFT_CALIB_BW_REF", "SPARK_GRAFT_CALIB_REF",
     "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY",
-    "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_STREAM_PLAN")
+    "SPARK_GRAFT_SF_DIR")
 
   /** (path relative to src/main/scala, file text) for every main source. */
   private lazy val sources: Seq[(String, String)] = {
@@ -110,13 +110,11 @@ class SourceLintSpec extends AnyFunSuite {
 
   test("createTempDirectory appears only in scratchDir and self-deleting sites") {
     // Tables.scratchDir, plus dirs their creator deletes and keeps itself:
-    // Bench's CSV copies and stream output, the CDC feed, WAP staging and
-    // the streamed-ingest feed
+    // Bench's CSV copies and stream output, the CDC feed and WAP staging
     val allowed = Map(
       "graft/core/Tables.scala" -> 1, "graft/Bench.scala" -> 3,
       "graft/streaming/CdcStream.scala" -> 1,
-      "graft/operators/PublishOps.scala" -> 1,
-      "graft/streaming/AnnIngestStream.scala" -> 1)
+      "graft/operators/PublishOps.scala" -> 1)
     val counts = sources
       .map { case (f, text) => f -> "createTempDirectory".r.findAllIn(text).size }
       .filter(_._2 > 0).toMap

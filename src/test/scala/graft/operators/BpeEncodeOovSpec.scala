@@ -22,7 +22,7 @@ class BpeEncodeOovSpec extends SparkTestBase {
   private def trained(n: Int) = {
     val d0 = TextOps.bpeDict0(t)
       .filter(substring(md5(col("w")), 1, 1) <= "7")
-    TextOps.bpeTrainFromDict0(spark, d0, n)
+    TextOps.bpeTrainOnDriver(spark, d0, n)
   }
 
   test("replay theorem: rank-ordered merge application reproduces every trained word's dict seq") {

@@ -3,16 +3,17 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** The thresholded BPE training loop (round-14 verdict item 3): at or
-  * below [[TextOps.bpeDriverMergeThreshold]] merges the training runs
-  * on-cluster (one job per merge — the gated regime, hashes pinned by
-  * `text_bpe_*`); above it the merge rounds finish DRIVER-side over the
-  * collected |vocab|-bounded dictionary with pair-count deltas.
+/** BPE training (round-14 verdict item 3) runs DRIVER-side at every
+  * merge count: after the one distributed dictionary pass, the merge
+  * rounds replay over the collected |vocab|-bounded dictionary with
+  * pair-count deltas. The cluster loop — one Spark job per merge — is
+  * kept as the reference.
   *
-  * Pinned here: the two paths are semantically IDENTICAL — same merges
+  * Pinned here: the two loops are semantically IDENTICAL — same merges
   * in the same order with the same counts, and the same final dictionary
-  * state — on the real fixture corpus, across the threshold, including
-  * the cluster loop's string-level replace quirk and its UTF-8 tie-break.
+  * state — on the real fixture corpus, at the gated and the larger merge
+  * counts, including the cluster loop's string-level replace quirk and
+  * its UTF-8 tie-break.
   */
 class BpeTrainPathSpec extends SparkTestBase {
 
@@ -25,7 +26,7 @@ class BpeTrainPathSpec extends SparkTestBase {
       .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
 
   test("driver-side merge training replays the cluster loop merge-for-merge and dict-for-dict") {
-    val n = 12 // above the threshold (8): the production path
+    val n = 12 // the parity gate's count
     val d0 = dict0
     val (clusterDict, clusterMerges) = TextOps.bpeTrainOnCluster(d0, n)
     val (driverDict, driverMerges) = TextOps.bpeTrainOnDriver(spark, d0, n)
@@ -35,13 +36,15 @@ class BpeTrainPathSpec extends SparkTestBase {
       "final dictionaries diverge")
   }
 
-  test("the gated small-merge regime routes on-cluster; both paths agree there too") {
-    val n = 4 // the text_bpe_* gates run at 5 <= threshold
+  test("at the gated merge count the driver loop matches the cluster loop, merges and dict") {
+    val n = 4 // the text_bpe_* gates run at 5
     val d0 = dict0
-    val (_, clusterMerges) = TextOps.bpeTrainOnCluster(d0, n)
-    val (_, driverMerges) = TextOps.bpeTrainOnDriver(spark, d0, n)
+    val (clusterDict, clusterMerges) = TextOps.bpeTrainOnCluster(d0, n)
+    val (driverDict, driverMerges) = TextOps.bpeTrainOnDriver(spark, d0, n)
     assert(driverMerges == clusterMerges)
-    // and the public entry at the gated count yields the cluster result
+    assert(dictMap(driverDict) == dictMap(clusterDict),
+      "final dictionaries diverge")
+    // and the public entry at the gated count yields the reference result
     assert(TextOps.bpeMerges(t, n).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toSeq == clusterMerges)

@@ -6,21 +6,20 @@ import org.apache.spark.sql.functions._
 
 /** The routed production-ingest assignment (round-14 verdict item 1):
   * [[SimilarityOps.ivfAssignForIngest]] — what [[SimilarityOps.appendToIvfIndex]]
-  * and the streaming ingest call — picks flat-exact assignment below the
-  * hier threshold and the two-level coarse-quantized scan at/above it.
+  * and the streaming ingest call — picks the flat exact table below the
+  * hier threshold and the two-level coarse-quantized table at/above it,
+  * both through the one `graft_ivf_assign` projection.
   *
   * Pinned here:
-  *  - at nlist = 4096 the routed plan is the two-level `graft_ivf_assign`
-  *    expression (ncoarse = √4096 = 64), join-free, exchange-free;
-  *  - between the inline cap and the hier threshold (256) the routed plan
-  *    is the FLAT expression path (ncoarse = 1) and assigns bit-identically
-  *    to [[SimilarityOps.ivfAssignCells]];
-  *  - at the gated nlist = 16 the routed plan stays the literal projection
-  *    and assigns bit-identically — which is why no append/ingest gate
-  *    hash moved when the routing landed;
-  *  - a non-finite embedding assigns to the same deterministic valid cell
-  *    on the literal and expression paths (round-14 advice: the expression
-  *    used to mint Int.MaxValue when every distance was NaN).
+  *  - at nlist = 4096 the routed plan carries the two-level table
+  *    (ncoarse = √4096 = 64), join-free, exchange-free;
+  *  - below the hier threshold (256 cells, and the gated 16) the routed
+  *    plan carries the FLAT table (ncoarse = 1) and assigns
+  *    bit-identically to [[SimilarityOps.ivfAssignCells]];
+  *  - a non-finite embedding assigns to the cell the (d2, cell) order
+  *    names — NaN after every number, ties to the lowest cell — on the
+  *    flat and the two-level table alike (round-14 advice: the
+  *    expression used to mint Int.MaxValue when every distance was NaN).
   */
 class IvfAppendRoutingSpec extends SparkTestBase {
   import spark.implicits._
@@ -61,30 +60,30 @@ class IvfAppendRoutingSpec extends SparkTestBase {
     assert(!plan.contains("Join"), "routed ingest assignment must not plan a join")
     assert(exchangeInputs(df).isEmpty,
       "routed ingest assignment must not shuffle the batch")
-    // the routed frame IS the hier frame at the ingest default
-    // pcoarse = 4 (measured exact on the structured bench table;
+    // the routed frame IS the hier frame at the ingest pcoarse = 4
+    // (measured exact on the structured bench table;
     // r15_assign_scale.jsonl agreement fields): identical assignment
     assert(cellsOf(df) ==
       cellsOf(SimilarityOps.ivfAssignCellsHier(spark, dir, batch, pcoarse = 4)))
   }
 
-  test("between inline cap and hier threshold the route is the flat expression, bit-identical to ivfAssignCells") {
+  test("256 cells route to the flat table (ncoarse=1), bit-identical to ivfAssignCells") {
     val dir = writeCentroids(256)
     val df = SimilarityOps.ivfAssignForIngest(spark, dir, batch)
     val plan = planOf(df)
-    assert(plan.contains("IvfCentroidTable(nlist=256, ncoarse=1"),
-      s"256 cells must route to the FLAT expression (one group):\n$plan")
+    assert(plan.contains("IvfCentroidTable(nlist=256, ncoarse=1, pcoarse=1)"),
+      s"256 cells must route to the FLAT table (one group):\n$plan")
     assert(!plan.contains("Join") && exchangeInputs(df).isEmpty)
     assert(cellsOf(df) == cellsOf(SimilarityOps.ivfAssignCells(spark, dir, batch)),
-      "flat expression route must assign bit-identically to ivfAssignCells")
+      "the flat route must assign bit-identically to ivfAssignCells")
   }
 
-  test("the gated nlist=16 route stays the literal projection, bit-identical (gate hashes cannot move)") {
+  test("16 cells route to the flat table (ncoarse=1), bit-identical to ivfAssignCells") {
     val dir = writeCentroids(16)
     val df = SimilarityOps.ivfAssignForIngest(spark, dir, batch)
     val plan = planOf(df)
-    assert(!plan.contains("graft_ivf_assign"),
-      "below the inline cap the route must stay the literal projection")
+    assert(plan.contains("IvfCentroidTable(nlist=16, ncoarse=1, pcoarse=1)"),
+      s"16 cells must route to the FLAT table (one group):\n$plan")
     assert(!plan.contains("Join") && exchangeInputs(df).isEmpty)
     assert(cellsOf(df) == cellsOf(SimilarityOps.ivfAssignCells(spark, dir, batch)))
   }
@@ -114,8 +113,8 @@ class IvfAppendRoutingSpec extends SparkTestBase {
     val df = SimilarityOps.ivfAssignForIngest(spark, dir, batch)
     assert(SimilarityOps.ingestPlanBuilds.get() == after + 1,
       "a regenerated centroids dir must rebuild the ingest plan")
-    assert(!planOf(df).contains("graft_ivf_assign"),
-      "the rebuilt 16-cell index must route back to the literal path")
+    assert(planOf(df).contains("IvfCentroidTable(nlist=16, ncoarse=1, pcoarse=1)"),
+      "the rebuilt 16-cell index must route to the flat table")
   }
 
   test("the 16384-cell routed-recall gate's OWN ingest plans the deep two-level expression") {
@@ -123,7 +122,7 @@ class IvfAppendRoutingSpec extends SparkTestBase {
     // (ann_ivf_recall_routed_hier) must be probing an index whose ingest
     // actually took the two-level path — pin the routed plan on the
     // gate's own index dir, not a synthetic surrogate: ncoarse = √16384
-    // = 128 at the ingest default pcoarse = 4, join-free, exchange-free
+    // = 128 at the ingest pcoarse = 4, join-free, exchange-free
     val dir = SimilarityOps.routedIngestIndexFor(t, 16384)
     val df = SimilarityOps.ivfAssignForIngest(spark, dir, batch)
     val plan = planOf(df)
@@ -164,16 +163,27 @@ class IvfAppendRoutingSpec extends SparkTestBase {
       (2L, 0, Array.tabulate(dim)(j => if (j == 0) Double.PositiveInfinity else 1.0)),
       (3L, 0, Array.tabulate(dim)(_.toDouble)))
       .toDF("vec_id", "label", "emb")
-    val viaLiteral = cellsOf(
-      SimilarityOps.ivfAssignCells(spark, dir, bad, maxInlineCells = Int.MaxValue))
-    val viaExpr = cellsOf(
-      SimilarityOps.ivfAssignCells(spark, dir, bad, maxInlineCells = 0))
-    assert(viaLiteral == viaExpr,
-      s"NaN/Inf handling must match the literal path: $viaLiteral vs $viaExpr")
-    // all-NaN distances tie ⇒ the struct-min tie-break picks the LOWEST
-    // cell id (0 here) — a real cell, never Int.MaxValue
-    assert(viaExpr(1L) == 0, s"all-NaN vector must land in cell 0, got ${viaExpr(1L)}")
-    assert(viaExpr.values.forall(c => c >= 0 && c < 16),
-      s"every assigned cell must be a real cell id: $viaExpr")
+    // the expected cells by value, from the (d2, cell) total order: a
+    // NaN distance sorts after every number, ties go to the lowest cell
+    val cents = (0 until 16)
+      .map(c => (0 until dim).map(j => math.sin(c * 31 + j * 7) * 10.0).toArray)
+    def expected(v: Array[Double]): Int =
+      cents.zipWithIndex.map { case (c, cell) =>
+        var dp = 0.0; var j = 0
+        while (j < dim) { dp += v(j) * c(j); j += 1 }
+        (c.map(x => x * x).sum - 2.0 * dp, cell)
+      }.sortWith { case ((d1, c1), (d2, c2)) =>
+        val o = java.lang.Double.compare(d1, d2)
+        if (d1 == d2 || (d1.isNaN && d2.isNaN)) c1 < c2 else o < 0
+      }.head._2
+    val want = bad.collect().map(r => r.getLong(0) -> expected(r.getSeq[Double](2).toArray)).toMap
+    // all-NaN distances tie ⇒ the LOWEST cell id (0 here) — a real cell,
+    // never Int.MaxValue
+    assert(want(1L) == 0)
+    val flat = cellsOf(SimilarityOps.ivfAssignCells(spark, dir, bad))
+    val twoLevel = cellsOf(SimilarityOps.ivfAssignCellsHier(spark, dir, bad,
+      pcoarse = Int.MaxValue))
+    assert(flat == want, s"flat table: $flat, expected $want")
+    assert(twoLevel == want, s"full-sweep two-level table: $twoLevel, expected $want")
   }
 }

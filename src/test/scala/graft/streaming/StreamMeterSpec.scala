@@ -125,4 +125,12 @@ class StreamMeterSpec extends SparkTestBase {
       } finally graft.core.Tables.deleteRecursively(work)
     }
   }
+
+  test("a drained stateful gate's lastPlan shows its state-store operator with no env switch") {
+    assert(!sys.env.contains("SPARK_GRAFT_STREAM_PLAN"))
+    EventStream.hourlyCounts(spark, t.dir, s"meter_spec_plan_${System.nanoTime}")
+    val plan = StreamMeter.lastPlan("events_hourly_streaming")
+    assert(plan.exists(_.contains("StateStoreSave")),
+      s"the kept execution must render the stream side's state store: $plan")
+  }
 }
