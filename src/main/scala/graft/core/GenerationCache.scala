@@ -34,6 +34,7 @@ final class GenerationCache[K, V](fixtureOf: K => String, evict: V => Unit) {
     entries.get(k) match {
       case Some(v) => v
       case None =>
+        GenerationCache.misses.incrementAndGet()
         val v = compute
         if (Tables.fixtureStamp(s"$dir/$fixture") != stamp) v
         else entries.putIfAbsent(k, v) match {
@@ -52,6 +53,11 @@ final class GenerationCache[K, V](fixtureOf: K => String, evict: V => Unit) {
 }
 
 object GenerationCache {
+  /** Lookups that had to compute their value, over every cache in the
+    * process: a delta across a timed span counts what the span built.
+    */
+  val misses = new java.util.concurrent.atomic.AtomicLong()
+
   /** Values derived from `dir/<fixture>`; eviction just drops them. */
   def apply[K, V](fixture: String): GenerationCache[K, V] =
     new GenerationCache[K, V](_ => fixture, _ => ())

@@ -26,12 +26,9 @@ object VectorFunctions {
 
   def l2Norm(v: Column): Column = call_function("graft_l2norm", v)
 
-  /** Built-in-only formulations (no session extension needed). */
+  /** Built-in-only formulation (no session extension needed). */
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def l2NormHof(v: Column): Column =
-    sqrt(aggregate(v, lit(0.0), (acc, x) => acc + x * x))
 
   /** Cosine similarity of two double arrays; 0 when either norm is 0. */
   def cosine(a: Column, b: Column): Column = {

@@ -942,17 +942,19 @@ object SimilarityOps {
     * RNG state, no KMeans fit).
     */
   private[operators] def isotropicCentroids(nlist: Int, dim: Int)
-      : Array[(Int, Array[Double])] = {
+      : Array[(Int, Array[Double])] =
+    Array.tabulate(nlist)(c => (c, isotropicCentroid(c, dim)))
+
+  /** Cell `c`'s row of [[isotropicCentroids]]. */
+  private def isotropicCentroid(c: Int, dim: Int): Array[Double] = {
     def mix(z0: Long): Long = {
       var z = z0 + 0x9E3779B97F4A7C15L
       z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
       z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
       z ^ (z >>> 31)
     }
-    Array.tabulate(nlist) { c =>
-      (c, Array.tabulate(dim) { j =>
-        (mix(c.toLong * 131071L + j) >>> 11).toDouble / (1L << 52).toDouble - 1.0
-      })
+    Array.tabulate(dim) { j =>
+      (mix(c.toLong * 131071L + j) >>> 11).toDouble / (1L << 52).toDouble - 1.0
     }
   }
 
@@ -972,8 +974,11 @@ object SimilarityOps {
       val spark = t.spark
       import spark.implicits._
       val dim = t.embeddings.select(size(col("embedding"))).head().getInt(0)
-      isotropicCentroids(nlist, dim)
-        .map { case (c, a) => (c, a.toSeq) }.toSeq
+      // computed on an executor from the cell range: a table shipped from
+      // the driver made one task as large as the table (9.2 MB at 16384
+      // cells). One file, in cell order.
+      spark.sparkContext.parallelize(0 until nlist)
+        .map(c => (c, isotropicCentroid(c, dim).toSeq))
         .toDF("cell", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
       // a full-corpus backfill into 4096 cells is exactly the shape the

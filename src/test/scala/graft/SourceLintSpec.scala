@@ -21,7 +21,6 @@ class SourceLintSpec extends AnyFunSuite {
 
   private val liveEnvNames = Set(
     "SPARK_GRAFT_BENCH_CSV", "SPARK_GRAFT_BENCH_ONLY",
-    "SPARK_GRAFT_CALIB_BW_REF", "SPARK_GRAFT_CALIB_REF",
     "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY",
     "SPARK_GRAFT_SF_DIR")
 
@@ -110,9 +109,9 @@ class SourceLintSpec extends AnyFunSuite {
 
   test("createTempDirectory appears only in scratchDir and self-deleting sites") {
     // Tables.scratchDir, plus dirs their creator deletes and keeps itself:
-    // Bench's CSV copies and stream output, the CDC feed and WAP staging
+    // the CDC feed and WAP staging
     val allowed = Map(
-      "graft/core/Tables.scala" -> 1, "graft/Bench.scala" -> 3,
+      "graft/core/Tables.scala" -> 1,
       "graft/streaming/CdcStream.scala" -> 1,
       "graft/operators/PublishOps.scala" -> 1)
     val counts = sources

@@ -4,6 +4,7 @@ import graft.SparkTestBase
 import graft.functions.NumericFunctions.roundN
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
+import graft.functions.HofVectorFunctions.l2NormHof
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   *    (nlist = 4096 = the hier threshold) and conserved every vector;
   *  - the gate's curve meets its stated floors and closes exact;
   *  - the synthetic centroid table is deterministic (no RNG state) —
-  *    two derivations are bit-identical.
+  *    two derivations are bit-identical — and the table the index writes
+  *    on the executors is that derivation, row for row.
   */
 class RoutedRecallProbeSpec extends SparkTestBase {
 
@@ -23,6 +24,16 @@ class RoutedRecallProbeSpec extends SparkTestBase {
     assert(a.flatMap(_._2).forall(v => v >= -1.0 && v < 1.0))
     // unstructured: no two centroids collapse to the same point
     assert(a.map(_._2.toSeq).distinct.length == 128)
+  }
+
+  test("the routed index's centroid table is isotropicCentroids row for row") {
+    val path = SimilarityOps.routedIngestIndexFor(t, 4096)
+    val dim = t.embeddings.select(size(col("embedding"))).head().getInt(0)
+    val written = spark.read.parquet(s"$path/centroids").collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1)))
+    val expected = SimilarityOps.isotropicCentroids(4096, dim)
+    assert(written.map(_._1).toSeq == expected.map(_._1).toSeq)
+    assert(written.zip(expected).forall { case ((_, w), (_, e)) => w == e.toSeq })
   }
 
   test("routed index conserves every fixture vector with unique ids") {
