@@ -510,10 +510,10 @@ object Bench {
         k -> s"""{"batches":${m.batches},"data_batches":${m.dataBatches},"state_rows":${m.stateRows},"capped":${m.capped}}""" })
     val failedJson = names(rows.collect { case (n, runs) if reported(runs).isEmpty => n })
     val cpuPctR = math.round(cpuPct * 10) / 10.0
-    // Two JSON lines; the driver keeps only a ~2 KB tail of stdout:
+    // Two JSON lines, for readers that keep only a ~2 KB tail of stdout:
     //  - line 1 (archival, for bench_runs/): the full record, every row's
     //    seconds, CPU, GC, profile and cache misses; too long for the tail.
-    //  - line 2 (final, driver-parsed): suite total, the headline rows, and
+    //  - line 2 (final, the one parsed): suite total, the headline rows, and
     //    the trips and raw runs of those rows only — it fits the tail.
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","input_bytes":$sfBytes,"cpu_percent":$cpuPctR,$hostDegradedJson,"sf1_row_trips":${names(sf1Trips)},"sf01_row_trips":${names(sf01Trips)},"overhead_floor":$overheadFloor,"trimmed_total":$trimmedTotal,"ceiling_rows":${names(results.map(_._1).filter(ceilingRows).sorted)},"variance_rows":${names(results.map(_._1).filter(varianceRows).sorted)},"workload":$workload,"workload_sf1":$workloadSf1,"ml_model_fit_secs":$mlWallsJson,"streaming_meter":$streamMeterJson,"graph_observed_fallbacks":${graft.operators.GraphOps.observedFallbacks.get},"query_cpu_percent":${perRow((r, _) => math.round(r.cpuPct * 10) / 10.0)},"query_gc_sec":${perRow((r, _) => r3(r.gc))},"query_first_run_s":${json(rows.map { case (n, (a, _)) => n -> r3(a.wall) })},"query_cache_misses":${json(rows.map { case (n, (a, b)) => n -> s"[${a.misses},${b.misses}]" })},"query_profile":${json(rows.flatMap(r => profileOf(r, profiles).map(r._1 -> _.json)))},"runs_per_query":2,"aggregation":"min","probe_benched":${names(probeBenched)},"failed_queries":$failedJson,"queries_sf1":${json(sf1Results)},"queries_sf1_runs":${runsJson(sf1Rows)},"queries":${json(results)}}""")
     val headQs = json(headline.flatMap(k => resultMap.get(k).map(v => k -> r3(v))))
