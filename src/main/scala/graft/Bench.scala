@@ -198,7 +198,8 @@ object Bench {
 
     // Each streaming row pays micro-batch engine init (query start, offset
     // log, state store, memory sink) on top of its data cost. This row times
-    // that machinery over a 1-row input: data cost ≈ row − streaming_overhead.
+    // that machinery over a 1-row input through the streaming rows' own
+    // runner, StreamMeter.toMemory: data cost ≈ row − streaming_overhead.
     val streamingOverheadResults =
       if (!runs("streaming_overhead")) Seq.empty
       else {
@@ -206,14 +207,9 @@ object Bench {
         try {
           spark.range(1).toDF("id").write.mode("overwrite").parquet(oneRowDir)
           Seq("streaming_overhead" -> timed("streaming_overhead") {
-            val name = s"bench_overhead_${System.nanoTime()}"
-            val q = spark.readStream.schema("id LONG").parquet(oneRowDir)
-              .groupBy().count()
-              .writeStream.outputMode("complete")
-              .queryName(name).format("memory").start()
-            q.processAllAvailable()
-            q.stop()
-            spark.catalog.dropTempView(name)
+            graft.streaming.StreamMeter.toMemory(
+              spark.readStream.schema("id LONG").parquet(oneRowDir).groupBy().count(),
+              "streaming_overhead", org.apache.spark.sql.streaming.OutputMode.Complete())
             ()
           })
         } catch { case NonFatal(e) =>
@@ -428,8 +424,7 @@ object Bench {
         .filter(col("k1") === col("k2"))
         .write.format("noop").mode("overwrite").save()
       // Streaming engine init (micro-batch planner, state store, memory sink)
-      graft.streaming.EventStream
-        .dedupCounts(spark, sfDir, s"bench_warm_${System.nanoTime()}")
+      graft.streaming.EventStream.dedupCounts(Tables(spark, sfDir))
         .write.format("noop").mode("overwrite").save()
     } catch { case NonFatal(e) =>
       System.err.println(s"[bench] engine warm-up failed: $e") }
@@ -507,7 +502,7 @@ object Bench {
       .map { case ((m, _), v) => m -> v }.sortBy(_._1))
     val streamMeterJson = json(graft.streaming.StreamMeter.snapshot.toSeq.sortBy(_._1)
       .map { case (k, m) =>
-        k -> s"""{"batches":${m.batches},"data_batches":${m.dataBatches},"state_rows":${m.stateRows},"capped":${m.capped}}""" })
+        k -> s"""{"batches":${m.batches},"data_batches":${m.dataBatches},"state_rows":${m.stateRows},"capped":${m.capped},"input_rows":${m.inputRows},"state_partitions":${m.statePartitions}}""" })
     val failedJson = names(rows.collect { case (n, runs) if reported(runs).isEmpty => n })
     val cpuPctR = math.round(cpuPct * 10) / 10.0
     // Two JSON lines, for readers that keep only a ~2 KB tail of stdout:

@@ -187,35 +187,21 @@ object SparkEntry {
     "events_asof_purchase"     -> q(EventOps.nextPurchaseAsof),
     "events_asof_prev"         -> q(EventOps.prevPurchaseAsof),
     "events_gap_fill"          -> q(EventOps.gapFillHourly),
-    "events_hourly_streaming"  -> ((s, dir) =>
-      EventStream.hourlyCounts(s, dir, s"graft_stream_${System.nanoTime()}")),
-    "events_interval_join_streaming" -> ((s, dir) =>
-      EventStream.intervalJoinStreaming(s, dir, s"graft_ivj_${System.nanoTime()}")),
-    "events_sliding_streaming" -> ((s, dir) =>
-      EventStream.slidingCounts(s, dir, s"graft_slide_${System.nanoTime()}")),
-    "events_hourly_streaming_append" -> ((s, dir) =>
-      EventStream.hourlyCountsAppend(s, dir, s"graft_hca_${System.nanoTime()}")),
-    "events_sliding_streaming_append" -> ((s, dir) =>
-      EventStream.slidingCountsAppend(s, dir, s"graft_sca_${System.nanoTime()}")),
-    "events_sessions_streaming" -> ((s, dir) =>
-      EventStream.sessionize(s, dir, s"graft_sess_${System.nanoTime()}")),
-    "events_sessions_native_streaming" -> ((s, dir) =>
-      EventStream.sessionizeNativeWindows(s, dir, s"graft_snw_${System.nanoTime()}")),
-    "events_dedup_streaming" -> ((s, dir) =>
-      EventStream.dedupCounts(s, dir, s"graft_dedup_${System.nanoTime()}")),
-    "events_file_sink" -> ((s, dir) => EventStream.fileSinkRoundtrip(s, dir)),
-    "events_foreach_upsert" -> ((s, dir) => EventStream.foreachBatchUpsert(s, dir)),
-    "events_stream_join" -> ((s, dir) =>
-      EventStream.clickPurchaseJoin(s, dir, s"graft_ssj_${System.nanoTime()}")),
-    "events_stream_left_join" -> ((s, dir) =>
-      EventStream.clickPurchaseLeftJoin(s, dir, s"graft_ssl_${System.nanoTime()}")),
-    "events_stream_full_join" -> ((s, dir) =>
-      EventStream.clickPurchaseFullJoin(s, dir, s"graft_ssf_${System.nanoTime()}")),
-    "dedup_minhash_streaming" -> ((s, dir) =>
-      streaming.DedupStream.minhashPairs(s, dir, s"graft_mhs_${System.nanoTime()}", 0.3)),
-    "dedup_minhash_windowed" -> ((s, dir) =>
-      streaming.DedupStream.minhashPairsWindowed(
-        s, dir, s"graft_mhw_${System.nanoTime()}", 0.3, 200)),
+    "events_hourly_streaming"         -> q(EventStream.hourlyCounts),
+    "events_interval_join_streaming"  -> q(EventStream.intervalJoinStreaming),
+    "events_sliding_streaming"        -> q(EventStream.slidingCounts),
+    "events_hourly_streaming_append"  -> q(EventStream.hourlyCountsAppend),
+    "events_sliding_streaming_append" -> q(EventStream.slidingCountsAppend),
+    "events_sessions_streaming"       -> q(EventStream.sessionize),
+    "events_sessions_native_streaming" -> q(EventStream.sessionizeNativeWindows),
+    "events_dedup_streaming"          -> q(EventStream.dedupCounts),
+    "events_file_sink"                -> q(EventStream.fileSinkRoundtrip),
+    "events_foreach_upsert"           -> q(EventStream.foreachBatchUpsert),
+    "events_stream_join"              -> q(EventStream.clickPurchaseJoin),
+    "events_stream_left_join"         -> q(EventStream.clickPurchaseLeftJoin),
+    "events_stream_full_join"         -> q(EventStream.clickPurchaseFullJoin),
+    "dedup_minhash_streaming" -> q(t => streaming.DedupStream.minhashPairs(t, 0.3)),
+    "dedup_minhash_windowed"  -> q(t => streaming.DedupStream.minhashPairsWindowed(t, 0.3, 200)),
     // --- text analysis (training-data extensions) ---
     "text_token_stats"      -> q(TextOps.tokenStats),
     "text_quality_by_lang"  -> q(TextOps.qualityByLang),
@@ -399,8 +385,7 @@ object SparkEntry {
     "stats_pruned_scan" -> q(t => sources.ParquetStats.prunedScanGate(t)),
     // streaming progress ledger (round-11): monitoring-plane numInputRows
     // reconciled against the sink and the oracle's direct count
-    "events_progress_ledger" -> ((s, dir) =>
-      EventStream.progressLedger(s, dir, s"graft_ledger_${System.nanoTime()}")),
+    "events_progress_ledger" -> q(EventStream.progressLedger),
     // clustering-depth meter (round-11): exact span arithmetic over the
     // footer stats — the re-cluster decision signal, footers only
     "stats_clustering_depth" -> q(t => sources.ParquetStats.documentsClusteringDepth(t)),
@@ -483,8 +468,7 @@ object SparkEntry {
     // hash-gated since round 9: oracle-recomputable exact-dup pair count
     // + LSH-guarantee verdicts (independently recomputed at verify time);
     // the raw engine-specific pair set stays spec-gated
-    "dedup_minhash_mllib" -> ((s, dir) =>
-      DedupOps.minhashMllibVerdictGate(Tables(s, dir), 0.7)),
+    "dedup_minhash_mllib" -> q(t => DedupOps.minhashMllibVerdictGate(t, 0.7)),
     "dedup_simhash"       -> q(t => DedupOps.simhashDupPairs(t, 6)),
     "dedup_edit_distance" -> q(t => DedupOps.editDistancePairs(t)),
     // --- similarity search (training-data extensions) ---

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.core.Tables
 import graft.operators.DedupOps
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
@@ -51,12 +51,9 @@ object DedupStream {
     math.floor(j * 10000.0 + 0.5) / 10000.0
   }
 
-  def minhashPairs(spark: SparkSession, dir: String, queryName: String,
-                   minJaccard: Double = 0.3): DataFrame = {
-    import spark.implicits._
-    val docs = Tables(spark, dir).documentsStream
-    val banded = DedupOps.bandedDocs(docs).as[BandDoc]
-    val out = banded
+  def minhashPairs(t: Tables, minJaccard: Double = 0.3): DataFrame = {
+    import t.spark.implicits._
+    val out = DedupOps.bandedDocs(t.documentsStream).as[BandDoc]
       .groupByKey(_.band)
       .flatMapGroupsWithState[List[(Long, Array[Long])], PairOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -77,15 +74,10 @@ object DedupStream {
           state.update(seen)
           pairs.iterator
       }
-    val q = out.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    StreamMeter.drain(q, "dedup_minhash_streaming")
     // a pair may collide in several bands (and across micro-batches);
     // jaccard is identical for every emission of the pair
-    EventStream.drained(spark, queryName).dropDuplicates("doc_a", "doc_b")
+    StreamMeter.toMemory(out, "dedup_minhash_streaming", OutputMode.Append())
+      .dropDuplicates("doc_a", "doc_b")
   }
 
   /** Trailing-window near-dup pairs with BOUNDED state — the
@@ -160,22 +152,16 @@ object DedupStream {
     * drop rows with ts <= watermark as late, and the initial watermark IS
     * 0, so an event time of exactly 1970-01-01T00:00:00 is always late.
     */
-  def minhashPairsWindowed(spark: SparkSession, dir: String, queryName: String,
-                           minJaccard: Double = 0.3,
+  def minhashPairsWindowed(t: Tables, minJaccard: Double = 0.3,
                            windowSec: Long = 200): DataFrame = {
-    import spark.implicits._
-    val docs = Tables(spark, dir).documentsStream
+    import t.spark.implicits._
+    val docs = t.documentsStream
       .withColumn("ts", timestamp_seconds(col("doc_id") + 86400L))
     val banded = DedupOps.bandedDocs(docs, carry = Seq("ts"))
       .withWatermark("ts", "1 hour")
       .as[TsBandDoc]
-    val out = minhashPairsWindowedOn(banded, windowSec * 1000, minJaccard)
-    val q = out.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    StreamMeter.drain(q, "dedup_minhash_windowed")
-    EventStream.drained(spark, queryName).dropDuplicates("doc_a", "doc_b")
+    StreamMeter.toMemory(minhashPairsWindowedOn(banded, windowSec * 1000, minJaccard),
+      "dedup_minhash_windowed", OutputMode.Append())
+      .dropDuplicates("doc_a", "doc_b")
   }
 }

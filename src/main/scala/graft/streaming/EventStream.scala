@@ -14,43 +14,27 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * model means the same Column expressions run in both modes. For local
   * verification the parquet file is replayed through
   * [[Tables.eventsStream]] (the batch read's cached schema and `ts`
-  * dispatch, with `ts` as `timestamp`) and drained synchronously with
-  * `processAllAvailable()` into a memory sink.
+  * dispatch, with `ts` as `timestamp`). Every memory-sink gate runs
+  * through the one bounded-stream runner, [[StreamMeter.toMemory]]
+  * (start, synchronous drain, meter, capture, drop), inside
+  * [[StreamTuning.withStatePartitions]]; the file-sink and foreachBatch
+  * gates drain through [[StreamMeter.drain]] directly.
   */
 object EventStream {
-
-  /** Capture a drained memory-sink table and DROP its temp view: Dataset
-    * analysis is eager, so the returned plan holds the sink's rows
-    * directly and the catalog entry is just a name binding — without the
-    * drop, every replay (Bench runs each streaming query 2× plus a warmup,
-    * all under fresh nanoTime names) pins its emitted rows in the session
-    * catalog for the JVM's lifetime (round-2 advice).
-    */
-  private[streaming] def drained(spark: SparkSession, queryName: String): DataFrame = {
-    val out = spark.table(queryName)
-    spark.catalog.dropTempView(queryName)
-    out
-  }
 
   /** Windowed streaming aggregation with a watermark: hourly counts + value
     * sums per event type. Late events beyond 2 hours are dropped — state
     * stays bounded however long the stream runs.
     */
-  def hourlyCounts(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir) {
-    val agg = Tables(spark, dir).eventsStream
+  def hourlyCounts(t: Tables): DataFrame =
+    StreamTuning.withStatePartitions(t) {
+    val agg = t.eventsStream
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour").getField("start").as("hour_start"),
         col("event_type"))
       .agg(count(lit(1)).as("n"), roundN(decSum(col("value")), 2).as("total_value"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    StreamMeter.drain(q, "events_hourly_streaming")
     // UTC session ⇒ cast to NTZ keeps wall-clock time; matches the batch twin
-    drained(spark, queryName)
+    StreamMeter.toMemory(agg, "events_hourly_streaming", OutputMode.Complete())
       .withColumn("hour_start", col("hour_start").cast("timestamp_ntz"))
   }
 
@@ -61,20 +45,14 @@ object EventStream {
     * Emits per-type counts of the deduplicated stream; equals the batch
     * distinct count, which the oracle checks.
     */
-  def dedupCounts(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir) {
-    val agg = Tables(spark, dir).eventsStream
+  def dedupCounts(t: Tables): DataFrame =
+    StreamTuning.withStatePartitions(t) {
+    val agg = t.eventsStream
       .withWatermark("ts", "2 hours")
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    StreamMeter.drain(q, "events_dedup_streaming")
-    drained(spark, queryName)
+    StreamMeter.toMemory(agg, "events_dedup_streaming", OutputMode.Complete())
   }
 
   /** Stream–static join: the event stream enriched against a STATIC
@@ -91,24 +69,18 @@ object EventStream {
     * forbids count(DISTINCT), so this emits n_events only — the batch
     * gate keeps the distinct-user column).
     */
-  def intervalJoinStreaming(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir) {
-    val wb = graft.operators.EventOps
-      .busyWindowBuckets(graft.core.Tables(spark, dir), 20)
-    val agg = Tables(spark, dir).eventsStream
+  def intervalJoinStreaming(t: Tables): DataFrame =
+    StreamTuning.withStatePartitions(t) {
+    val wb = graft.operators.EventOps.busyWindowBuckets(t, 20)
+    val agg = t.eventsStream
       .withColumn("ts", col("ts").cast("timestamp_ntz"))
       .withColumn("bucket", date_trunc("hour", col("ts")))
       .join(wb, Seq("bucket"))
       .filter(col("ts") >= col("w_start") && col("ts") < col("w_end"))
       .groupBy("w_start", "w_end")
       .agg(count(lit(1)).as("n_events"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    StreamMeter.drain(q, "events_interval_join_streaming")
-    drained(spark, queryName).orderBy("w_start")
+    StreamMeter.toMemory(agg, "events_interval_join_streaming", OutputMode.Complete())
+      .orderBy("w_start")
   }
 
   /** One (output, checkpoint) temp-dir pair per INPUT dir per JVM, deleted
@@ -133,9 +105,9 @@ object EventStream {
     * straight from the source table, and any dropped or doubled row (e.g.
     * from a replayed micro-batch after recovery) breaks the match.
     */
-  def fileSinkRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val (outDir, ckptDir) = fileSinkDirsFor(dir)
-    val q = Tables(spark, dir).eventsStream
+  def fileSinkRoundtrip(t: Tables): DataFrame = {
+    val (outDir, ckptDir) = fileSinkDirsFor(t.dir)
+    val q = t.eventsStream
       .select("event_id", "event_type", "value")
       .writeStream
       .format("parquet")
@@ -147,10 +119,30 @@ object EventStream {
     // first is a resumed run (batch ids continue mid-sequence) — the
     // meter must not recover a capped count from the final batch id
     StreamMeter.drain(q, "events_file_sink", resumed = true)
-    spark.read.parquet(outDir)
+    t.spark.read.parquet(outDir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), roundN(decSum(col("value")), 2).as("total_value"))
       .orderBy("event_type")
+  }
+
+  /** The stream-join family's one join: clicks (`u`, `click_ts`) and
+    * purchases (`u2`, `buy_ts`), each under a 2-hour watermark, matched
+    * on user with `buy_ts` in (click_ts, click_ts + 1 h].
+    */
+  private def clickBuyJoin(t: Tables, joinType: String): DataFrame = {
+    val clicks = t.eventsStream
+      .filter(col("event_type") === "click")
+      .select(col("user_id").as("u"), col("ts").as("click_ts"))
+      .withWatermark("click_ts", "2 hours")
+    val buys = t.eventsStream
+      .filter(col("event_type") === "purchase")
+      .select(col("user_id").as("u2"), col("ts").as("buy_ts"))
+      .withWatermark("buy_ts", "2 hours")
+    clicks.join(buys,
+      col("u") === col("u2") &&
+        col("buy_ts") > col("click_ts") &&
+        col("buy_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
+      joinType)
   }
 
   /** Stream-stream INNER join with an event-time interval — the funnel
@@ -165,29 +157,11 @@ object EventStream {
     * pair set is exactly the batch interval join, which the oracle states
     * directly; the per-user rollup runs in batch on the drained sink.
     */
-  def clickPurchaseJoin(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir) {
-    val clicks = Tables(spark, dir).eventsStream
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("u"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "2 hours")
-    val buys = Tables(spark, dir).eventsStream
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("u2"), col("ts").as("buy_ts"))
-      .withWatermark("buy_ts", "2 hours")
-    val joined = clicks.join(buys,
-      col("u") === col("u2") &&
-        col("buy_ts") > col("click_ts") &&
-        col("buy_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-    val q = joined
-      .select(col("u").as("user_id"), col("click_ts"), col("buy_ts"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    StreamMeter.drain(q, "events_stream_join")
-    drained(spark, queryName)
+  def clickPurchaseJoin(t: Tables): DataFrame =
+    StreamTuning.withStatePartitions(t) {
+    StreamMeter.toMemory(clickBuyJoin(t, "inner")
+      .select(col("u").as("user_id"), col("click_ts"), col("buy_ts")),
+      "events_stream_join", OutputMode.Append())
       .groupBy("user_id")
       .agg(count(lit(1)).as("click_buy_pairs"))
       .orderBy("user_id")
@@ -217,11 +191,10 @@ object EventStream {
     * item 4). The oracle states that contract directly: batch sessions
     * QUALIFY session_id < max(session_id) per user.
     */
-  def sessionize(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir) {
-    import spark.implicits._
-    val ds = Tables(spark, dir).eventsStream.as[Ev]
-    val out = ds
+  def sessionize(t: Tables): DataFrame =
+    StreamTuning.withStatePartitions(t) {
+    import t.spark.implicits._
+    val out = t.eventsStream.as[Ev]
       .withWatermark("ts", "2 hours")
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, SessionOut](
@@ -256,13 +229,7 @@ object EventStream {
             closed.reverseIterator
           }
       }
-    val q = out.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    StreamMeter.drain(q, "events_sessions_streaming")
-    drained(spark, queryName)
+    StreamMeter.toMemory(out, "events_sessions_streaming", OutputMode.Append())
   }
 
   /** Streaming twin of [[graft.operators.EventOps.slidingTypeCounts]] —
@@ -275,20 +242,14 @@ object EventStream {
     * deployment flips to append + watermark eviction, the mode the
     * session twin exercises).
     */
-  def slidingCounts(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir) {
-    val agg = Tables(spark, dir).eventsStream
+  def slidingCounts(t: Tables): DataFrame =
+    StreamTuning.withStatePartitions(t) {
+    val agg = t.eventsStream
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "2 hours", "1 hour").getField("start").as("win_start"),
         col("event_type"))
       .agg(count(lit(1)).as("n"), roundN(decSum(col("value")), 2).as("total_value"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    StreamMeter.drain(q, "events_sliding_streaming")
-    drained(spark, queryName)
+    StreamMeter.toMemory(agg, "events_sliding_streaming", OutputMode.Complete())
       .withColumn("win_start", col("win_start").cast("timestamp_ntz"))
   }
 
@@ -304,21 +265,15 @@ object EventStream {
     * session twin) — the open tail windows stay in state, and the oracle
     * states that closed-window predicate directly.
     */
-  def hourlyCountsAppend(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir) {
-    val agg = Tables(spark, dir).eventsStream
+  def hourlyCountsAppend(t: Tables): DataFrame =
+    StreamTuning.withStatePartitions(t) {
+    val agg = t.eventsStream
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), roundN(decSum(col("value")), 2).as("total_value"))
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n"), col("total_value"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    StreamMeter.drain(q, "events_hourly_streaming_append")
-    drained(spark, queryName)
+    StreamMeter.toMemory(agg, "events_hourly_streaming_append", OutputMode.Append())
       .withColumn("hour_start", col("hour_start").cast("timestamp_ntz"))
       .orderBy("hour_start", "event_type")
   }
@@ -329,21 +284,15 @@ object EventStream {
     * closes when the watermark passes `win_start + 2 h`, so at any moment
     * at most (delay + width) / slide windows per key are live.
     */
-  def slidingCountsAppend(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir) {
-    val agg = Tables(spark, dir).eventsStream
+  def slidingCountsAppend(t: Tables): DataFrame =
+    StreamTuning.withStatePartitions(t) {
+    val agg = t.eventsStream
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), roundN(decSum(col("value")), 2).as("total_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("total_value"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    StreamMeter.drain(q, "events_sliding_streaming_append")
-    drained(spark, queryName)
+    StreamMeter.toMemory(agg, "events_sliding_streaming_append", OutputMode.Append())
       .withColumn("win_start", col("win_start").cast("timestamp_ntz"))
       .orderBy("win_start", "event_type")
   }
@@ -362,30 +311,11 @@ object EventStream {
     * sessions of the session twin. The gate rolls up per user: matched
     * pair count and closed unmatched count.
     */
-  def clickPurchaseLeftJoin(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir) {
-    val clicks = Tables(spark, dir).eventsStream
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("u"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "2 hours")
-    val buys = Tables(spark, dir).eventsStream
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("u2"), col("ts").as("buy_ts"))
-      .withWatermark("buy_ts", "2 hours")
-    val joined = clicks.join(buys,
-      col("u") === col("u2") &&
-        col("buy_ts") > col("click_ts") &&
-        col("buy_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-      "leftOuter")
-    val q = joined
-      .select(col("u").as("user_id"), col("click_ts"), col("buy_ts"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    StreamMeter.drain(q, "events_stream_left_join")
-    drained(spark, queryName)
+  def clickPurchaseLeftJoin(t: Tables): DataFrame =
+    StreamTuning.withStatePartitions(t) {
+    StreamMeter.toMemory(clickBuyJoin(t, "leftOuter")
+      .select(col("u").as("user_id"), col("click_ts"), col("buy_ts")),
+      "events_stream_left_join", OutputMode.Append())
       .groupBy("user_id")
       .agg(count(col("buy_ts")).as("click_buy_pairs"),
         count(when(col("buy_ts").isNull, 1)).as("closed_unmatched"))
@@ -405,31 +335,12 @@ object EventStream {
     * user: matched pairs, closed unmatched clicks, closed unmatched
     * purchases.
     */
-  def clickPurchaseFullJoin(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir) {
-    val clicks = Tables(spark, dir).eventsStream
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("u"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "2 hours")
-    val buys = Tables(spark, dir).eventsStream
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("u2"), col("ts").as("buy_ts"))
-      .withWatermark("buy_ts", "2 hours")
-    val joined = clicks.join(buys,
-      col("u") === col("u2") &&
-        col("buy_ts") > col("click_ts") &&
-        col("buy_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-      "fullOuter")
-    val q = joined
+  def clickPurchaseFullJoin(t: Tables): DataFrame =
+    StreamTuning.withStatePartitions(t) {
+    StreamMeter.toMemory(clickBuyJoin(t, "fullOuter")
       .select(coalesce(col("u"), col("u2")).as("user_id"),
-        col("click_ts"), col("buy_ts"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    StreamMeter.drain(q, "events_stream_full_join")
-    drained(spark, queryName)
+        col("click_ts"), col("buy_ts")),
+      "events_stream_full_join", OutputMode.Append())
       .groupBy("user_id")
       .agg(
         count(when(col("click_ts").isNotNull && col("buy_ts").isNotNull, 1))
@@ -451,9 +362,9 @@ object EventStream {
     * (max event time − 2 h) — the open tails stay unemitted, and the
     * oracle states that closed-session predicate directly.
     */
-  def sessionizeNativeWindows(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir) {
-    val agg = Tables(spark, dir).eventsStream
+  def sessionizeNativeWindows(t: Tables): DataFrame =
+    StreamTuning.withStatePartitions(t) {
+    val agg = t.eventsStream
       .withWatermark("ts", "2 hours")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
       .agg(
@@ -461,13 +372,7 @@ object EventStream {
         graft.functions.NumericFunctions.roundN(decSum(col("value")), 2).as("total_value"))
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n_events"), col("total_value"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    StreamMeter.drain(q, "events_sessions_native_streaming")
-    drained(spark, queryName).orderBy("user_id", "session_start")
+    StreamMeter.toMemory(agg, "events_sessions_native_streaming", OutputMode.Append()).orderBy("user_id", "session_start")
   }
 
   /** Per-batch latest-event-per-user upsert of one micro-batch into the
@@ -534,8 +439,9 @@ object EventStream {
     (Tables.scratchDir("graft_upsert_"), Tables.scratchDir("graft_upsert_ckpt_"))
   private val upsertCalls = new java.util.concurrent.atomic.AtomicLong(0)
 
-  def foreachBatchUpsert(spark: SparkSession, dir: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir) {
+  def foreachBatchUpsert(t: Tables): DataFrame =
+    StreamTuning.withStatePartitions(t) {
+    val spark = t.spark
     val call = upsertCalls.incrementAndGet()
     val (targetRoot, ckptRoot) = upsertDirs
     // the previous call's final version is dead once a new call begins
@@ -545,7 +451,7 @@ object EventStream {
     val targetDir = s"$targetRoot/call$call"
     val ckptDir   = s"$ckptRoot/call$call"
     @volatile var current: Option[String] = None
-    val q = Tables(spark, dir).eventsStream
+    val q = t.eventsStream
       .select("user_id", "ts", "event_id", "event_type", "value")
       .writeStream
       .option("checkpointLocation", ckptDir)
@@ -578,27 +484,20 @@ object EventStream {
     * end-to-end without a second scan — the monitoring plane
     * (progress events, what a dashboard/alert consumes) is reconciled
     * against the data plane (the sink), and the gate hash-checks both
-    * against the oracle's direct count. `recentProgress` retains the
-    * last 100 triggers; the bounded replay drains in far fewer (a
+    * against the oracle's direct count. The trigger sum is the
+    * `inputRows` [[StreamMeter.drain]] records for the run;
+    * `recentProgress` retains the last 100 triggers; the bounded replay drains in far fewer (a
     * zero-trigger or truncated ledger would break the hash loudly).
     */
-  def progressLedger(spark: SparkSession, dir: String,
-                     queryName: String): DataFrame =
-    StreamTuning.withStatePartitions(spark, dir) {
-    import spark.implicits._
-    val counts = Tables(spark, dir).eventsStream
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val q = counts.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    val rowsIngested = q.recentProgress.map(_.numInputRows).sum
-    StreamMeter.drain(q, "events_progress_ledger")
-    val rowsInSink = drained(spark, queryName)
+  def progressLedger(t: Tables): DataFrame =
+    StreamTuning.withStatePartitions(t) {
+    import t.spark.implicits._
+    val gate = "events_progress_ledger"
+    val rowsInSink = StreamMeter.toMemory(
+      t.eventsStream.groupBy(col("event_type")).agg(count(lit(1)).as("n")),
+      gate, OutputMode.Complete())
       .agg(coalesce(sum("n"), lit(0L))).head().getLong(0)
+    val rowsIngested = StreamMeter.snapshot(gate).inputRows
     Seq((rowsIngested, rowsInSink, rowsIngested == rowsInSink))
       .toDF("rows_ingested", "rows_in_sink", "ledger_balanced")
   }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Tables
 import org.apache.spark.sql.SparkSession
 
 /** Scale-adaptive shuffle/state partitioning for the bounded streaming
@@ -64,7 +65,8 @@ object StreamTuning {
     math.min(configured.toLong, derived).toInt
   }
 
-  /** Run `body` (stream start + synchronous drain) with
+  /** Run `body` (stream start + synchronous drain, usually one
+    * [[StreamMeter.toMemory]] call) over `t`'s fixture with
     * `spark.sql.shuffle.partitions` set to the input-derived state
     * partition count, restoring the session value afterwards. The
     * streaming query clones the session conf when its stream execution
@@ -81,10 +83,10 @@ object StreamTuning {
     * parallelizes gates must scope the override via `spark.newSession()`
     * instead.
     */
-  def withStatePartitions[T](spark: SparkSession, dir: String)(body: => T): T = {
+  def withStatePartitions[T](t: Tables)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, statePartitions(spark, inputBytes(dir)).toString)
-    try body finally spark.conf.set(key, prev)
+    val prev = t.spark.conf.get(key)
+    t.spark.conf.set(key, statePartitions(t.spark, inputBytes(t.dir)).toString)
+    try body finally t.spark.conf.set(key, prev)
   }
 }

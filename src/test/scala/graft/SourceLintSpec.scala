@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GenerationCache`), and the only temp dirs engine code creates by
   * hand are `Tables.scratchDir`'s and the few that delete their own.
   * Every local session starts from `core.LocalSession.builder`, and
-  * every fixture table is opened by `core.Tables`.
+  * every fixture table is opened by `core.Tables`. Memory sinks are
+  * started and named in one place, `StreamMeter.toMemory`.
   */
 class SourceLintSpec extends AnyFunSuite {
   import scala.jdk.CollectionConverters._
@@ -125,5 +126,17 @@ class SourceLintSpec extends AnyFunSuite {
     } yield s"$file:${n + 1}"
     assert(counts == allowed,
       s"take scratch space via Tables.scratchDir or a GenerationCache.dirs: $stray")
+  }
+
+  test("memory sinks are started and named only by StreamMeter.toMemory") {
+    def sites(token: String): Map[String, Int] = sources
+      .map { case (f, text) =>
+        f -> java.util.regex.Pattern.quote(token).r.findAllIn(text).size }
+      .filter(_._2 > 0).toMap
+    val runner = Map("graft/streaming/StreamMeter.scala" -> 1)
+    assert(sites("format(\"memory\")") == runner,
+      "run memory-sink gates through StreamMeter.toMemory")
+    assert(sites(".queryName(") == runner,
+      "StreamMeter.toMemory names every sink")
   }
 }

@@ -149,8 +149,7 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("streaming minhash pairs == batch minhash pairs (same oracle)") {
-    val stream = graft.streaming.DedupStream.minhashPairs(
-      spark, "/root/testdata/sf0.001", s"spec_mhs_${System.nanoTime()}", 0.3)
+    val stream = graft.streaming.DedupStream.minhashPairs(t, 0.3)
     val batch = DedupOps.minhashDupPairs(t, 0.3)
     // set equality, bit-exact including the rounded jaccard doubles
     def asSet(df: org.apache.spark.sql.DataFrame) =
@@ -161,37 +160,45 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("windowed streaming minhash: window contract holds and state is bounded") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.DedupStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import graft.streaming.{DedupStream, StreamMeter}
+    import java.nio.file.{Files, Paths}
     // +1000 s base: event time exactly at epoch 0 is ALWAYS late (stateful
     // ops drop ts <= watermark; initial watermark = 0), so stay clear of it
     def ts(sec: Long) = new java.sql.Timestamp((sec + 1000) * 1000)
     val dup = "the quick brown fox jumps over the lazy dog again and again"
-    val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val docsStream = mem.toDF.toDF("doc_id", "text", "ts")
-    val banded = DedupOps.bandedDocs(docsStream, carry = Seq("ts"))
-      .withWatermark("ts", "0 seconds")
-      .as[DedupStream.TsBandDoc]
-    val out = DedupStream.minhashPairsWindowedOn(banded, 100 * 1000L, 0.3)
-    val name = s"spec_mhw_${System.nanoTime()}"
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName(name).start()
-    try {
+    val batches = Seq(
       // batch 1: dup pair (1,2) 50 s apart — inside the 100 s window
-      mem.addData(
-        (1L, dup, ts(0)), (2L, dup + " with a tail", ts(50)),
-        (100L, "some completely unrelated filler words here", ts(10)))
-      q.processAllAvailable()
+      Seq((1L, dup, ts(0)), (2L, dup + " with a tail", ts(50)),
+        (100L, "some completely unrelated filler words here", ts(10))),
       // batch 2: lone filler far ahead advances the watermark to 10 000 s
-      mem.addData((101L, "more unrelated filler words to advance time", ts(10000)))
-      q.processAllAvailable()
+      Seq((101L, "more unrelated filler words to advance time", ts(10000))),
       // batch 3: doc 3 duplicates doc 1's text but arrives 10 100 s later —
       // outside the window, and doc 1's band entries are already evicted
-      mem.addData((3L, dup, ts(10100)))
-      q.processAllAvailable()
-
-      val pairs = spark.table(name)
+      Seq((3L, dup, ts(10100))))
+    // one parquet file per micro-batch (maxFilesPerTrigger 1), planned in
+    // modification-time order, so one drain replays the three batches
+    val work = Tables.scratchDir("graft_mhw_feed_")
+    val feed = Files.createDirectories(Paths.get(work, "feed"))
+    val t0 = System.currentTimeMillis() - 60000L
+    try {
+      batches.zipWithIndex.foreach { case (rows, i) =>
+        val staged = s"$work/staged_$i"
+        rows.toDF("doc_id", "text", "ts").coalesce(1).write.parquet(staged)
+        Tables.listLocalParquetFiles(staged).foreach { f =>
+          val to = Files.move(Paths.get(f), feed.resolve(s"b$i.parquet"))
+          Files.setLastModifiedTime(to,
+            java.nio.file.attribute.FileTime.fromMillis(t0 + i * 1000L))
+        }
+      }
+      val docsStream = spark.readStream
+        .schema("doc_id LONG, text STRING, ts TIMESTAMP")
+        .option("maxFilesPerTrigger", "1").parquet(feed.toString)
+      val banded = DedupOps.bandedDocs(docsStream, carry = Seq("ts"))
+        .withWatermark("ts", "0 seconds")
+        .as[DedupStream.TsBandDoc]
+      val pairs = StreamMeter.toMemory(
+          DedupStream.minhashPairsWindowedOn(banded, 100 * 1000L, 0.3),
+          "spec_mhw", org.apache.spark.sql.streaming.OutputMode.Append())
         .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
       assert(pairs == Set((1L, 2L)),
         "in-window dup emitted once; cross-window dup (1,3)/(2,3) excluded")
@@ -199,17 +206,14 @@ class DedupSimilaritySpec extends SparkTestBase {
       // bounded state: docs 1/2/100 fanned out 8 band rows each, but after
       // the watermark passed their ts + window only docs 101 and 3 may
       // remain (≤ 16 rows; unbounded variant would hold all 40)
-      val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      assert(stateRows <= 16, s"state rows=$stateRows not evicted")
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(name)
-    }
+      val m = StreamMeter.snapshot("spec_mhw")
+      assert(m.dataBatches == 3, s"one micro-batch per file: $m")
+      assert(m.stateRows <= 16, s"state rows=${m.stateRows} not evicted")
+    } finally Tables.deleteRecursively(work)
   }
 
   test("windowed streaming minhash == batch pairs filtered to the id window") {
-    val got = graft.streaming.DedupStream.minhashPairsWindowed(
-      spark, "/root/testdata/sf0.001", s"spec_mhw2_${System.nanoTime()}", 0.3, 200)
+    val got = graft.streaming.DedupStream.minhashPairsWindowed(t, 0.3, 200)
     val want = DedupOps.minhashDupPairs(t, 0.3)
       .filter($"doc_b" - $"doc_a" <= 200)
     def asSet(df: org.apache.spark.sql.DataFrame) =

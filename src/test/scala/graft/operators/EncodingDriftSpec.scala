@@ -80,8 +80,7 @@ class EncodingDriftSpec extends SparkTestBase {
 
   test("streaming events read is encoding-adaptive: hourlyCounts parity") {
     val results = encodedDirs.map { case (enc, dir) =>
-      enc -> canon(EventStream.hourlyCounts(spark, dir,
-        s"enc_drift_${enc}_${System.nanoTime()}"))
+      enc -> canon(EventStream.hourlyCounts(Tables(spark, dir)))
     }
     val distinct = results.values.toSeq.distinct
     assert(distinct.size == 1,
@@ -113,11 +112,11 @@ class EncodingDriftSpec extends SparkTestBase {
       // id width to its output (int32 on the narrow variant), while the
       // typed streaming operator always emits longs
       val streamed = graft.streaming.DedupStream
-        .minhashPairs(spark, dir, s"docenc_${enc}_${System.nanoTime()}", 0.3)
+        .minhashPairs(Tables(spark, dir), 0.3)
         .collect()
         .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)).toSet
       val batch = graft.operators.DedupOps
-        .minhashDupPairs(graft.core.Tables(spark, dir), 0.3)
+        .minhashDupPairs(Tables(spark, dir), 0.3)
         .collect()
         .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)).toSet
       assert(streamed == batch, s"stream vs batch pair sets differ on $enc")
@@ -153,12 +152,10 @@ class EncodingDriftSpec extends SparkTestBase {
       .coalesce(1).write.mode("overwrite").parquet(s"$root/events.parquet")
 
     writeMicros()
-    val before = canon(EventStream.hourlyCounts(spark, root,
-      s"regen_a_${System.nanoTime()}"))
+    val before = canon(EventStream.hourlyCounts(Tables(spark, root)))
     val batchBefore = canon(EventOps.hourlyTypeCounts(Tables(spark, root)))
     writeNanos() // regeneration-in-place: same dir, different physical type
-    val after = canon(EventStream.hourlyCounts(spark, root,
-      s"regen_b_${System.nanoTime()}"))
+    val after = canon(EventStream.hourlyCounts(Tables(spark, root)))
     assert(before == after,
       "regenerated encoding served through a stale cached streaming schema")
     assert(before.nonEmpty)
@@ -177,13 +174,13 @@ class EncodingDriftSpec extends SparkTestBase {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$droot/documents.parquet")
     val widePairs = graft.streaming.DedupStream
-      .minhashPairs(spark, droot, s"regen_doc_a_${System.nanoTime()}", 0.3)
+      .minhashPairs(Tables(spark, droot), 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     docs.map { case (id, tx) => (id.toInt, tx, "en", "s0", tx.length) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$droot/documents.parquet")
     val narrowPairs = graft.streaming.DedupStream
-      .minhashPairs(spark, droot, s"regen_doc_b_${System.nanoTime()}", 0.3)
+      .minhashPairs(Tables(spark, droot), 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(widePairs == narrowPairs && widePairs.nonEmpty,
       "regenerated documents width served through a stale cached schema")
@@ -215,8 +212,7 @@ class EncodingDriftSpec extends SparkTestBase {
     encodedDirs.foreach { case (enc, dir) =>
       val batch = canon(EventOps.hourlyTypeCounts(Tables(spark, dir))
         .select("hour_start", "event_type", "n"))
-      val stream = canon(EventStream.hourlyCounts(spark, dir,
-        s"enc_bs_${enc}_${System.nanoTime()}")
+      val stream = canon(EventStream.hourlyCounts(Tables(spark, dir))
         .select("hour_start", "event_type", "n"))
       assert(batch == stream, s"batch vs streaming mismatch on $enc")
     }

@@ -56,8 +56,7 @@ class EventsWindowsSpec extends SparkTestBase {
   }
 
   test("stream-static interval join == batch interval join (event counts)") {
-    val streamed = EventStream.intervalJoinStreaming(spark, "/root/testdata/sf0.001",
-      s"spec_ivj_${System.nanoTime()}")
+    val streamed = EventStream.intervalJoinStreaming(t)
       .collect().map(r => (r.getTimestamp(0), r.getTimestamp(1)) -> r.getLong(2)).toMap
     val batch = EventOps.intervalJoinBusyWindows(t, 20)
       .collect().map(r => (r.getTimestamp(0), r.getTimestamp(1)) -> r.getLong(2)).toMap
@@ -65,7 +64,7 @@ class EventsWindowsSpec extends SparkTestBase {
   }
 
   test("streaming parquet file sink: exactly-once roundtrip, idempotent replay") {
-    val first = EventStream.fileSinkRoundtrip(spark, "/root/testdata/sf0.001")
+    val first = EventStream.fileSinkRoundtrip(t)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     val batch = t.events
       .groupBy("event_type")
@@ -77,14 +76,13 @@ class EventsWindowsSpec extends SparkTestBase {
     assert(first.toSeq == batch.toSeq, "file-sink roundtrip must preserve the stream exactly")
     // replay against the same checkpoint: source files already committed →
     // nothing appended, read-back unchanged (the exactly-once contract)
-    val second = EventStream.fileSinkRoundtrip(spark, "/root/testdata/sf0.001")
+    val second = EventStream.fileSinkRoundtrip(t)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(second.toSeq == first.toSeq, "replay must be a no-op, not an append")
   }
 
   test("stream-stream interval join == batch interval join") {
-    val streamed = EventStream.clickPurchaseJoin(spark, "/root/testdata/sf0.001",
-      s"spec_ssj_${System.nanoTime()}")
+    val streamed = EventStream.clickPurchaseJoin(t)
     val clicks = t.events.filter(col("event_type") === "click")
       .select(col("user_id").as("u"), col("ts").as("click_ts"))
     val buys = t.events.filter(col("event_type") === "purchase")
@@ -100,8 +98,7 @@ class EventsWindowsSpec extends SparkTestBase {
   }
 
   test("streaming hourly counts == batch hourly counts") {
-    val stream = EventStream.hourlyCounts(spark, "/root/testdata/sf0.001",
-      s"spec_stream_${System.nanoTime()}")
+    val stream = EventStream.hourlyCounts(t)
     val batch = EventOps.hourlyTypeCounts(t)
     assert(stream.count() == batch.count())
     assert(stream.exceptAll(batch).count() == 0)
@@ -110,8 +107,7 @@ class EventsWindowsSpec extends SparkTestBase {
 
   test("streaming sessionization == batch CLOSED sessions (break or timeout)") {
     import org.apache.spark.sql.expressions.Window
-    val stream = EventStream.sessionize(spark, "/root/testdata/sf0.001",
-      s"spec_sess_${System.nanoTime()}")
+    val stream = EventStream.sessionize(t)
     // closed = ended by a break (a later session exists for the user) OR by
     // event-time timeout (final watermark = max ts - 2h passed end + 30min);
     // each user's open tail session cannot be emitted in Append mode
@@ -180,7 +176,7 @@ class EventsWindowsSpec extends SparkTestBase {
     val raw = spark.read.parquet("/root/testdata/sf0.001/{events}.parquet")
     raw.unionAll(raw).write.parquet(s"$dir/events.parquet")
 
-    val streamed = EventStream.dedupCounts(spark, dir, s"spec_dedup_${System.nanoTime()}")
+    val streamed = EventStream.dedupCounts(graft.core.Tables(spark, dir))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val batch = t.events.groupBy("event_type").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -265,8 +261,7 @@ class EventsWindowsSpec extends SparkTestBase {
 
   test("streaming sliding counts == batch sliding counts") {
     import graft.streaming.EventStream
-    val stream = EventStream.slidingCounts(spark, "/root/testdata/sf0.001",
-      s"spec_slide_${System.nanoTime()}")
+    val stream = EventStream.slidingCounts(t)
       .selectExpr("unix_millis(cast(win_start as timestamp)) AS w", "event_type",
         "n", "total_value")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
@@ -280,8 +275,7 @@ class EventsWindowsSpec extends SparkTestBase {
 
   test("streaming native session windows == batch sessions closed before the final watermark") {
     import graft.streaming.EventStream
-    val got = EventStream.sessionizeNativeWindows(spark, "/root/testdata/sf0.001",
-      s"spec_snw_${System.nanoTime()}")
+    val got = EventStream.sessionizeNativeWindows(t)
       .selectExpr("user_id", "unix_millis(session_start) AS s",
         "unix_millis(session_end) AS e", "n_events")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
@@ -336,8 +330,7 @@ class EventsWindowsSpec extends SparkTestBase {
   }
 
   test("append-mode tumbling twin == batch windows closed under the final watermark") {
-    val got = EventStream.hourlyCountsAppend(spark, "/root/testdata/sf0.001",
-      s"spec_hca_${System.nanoTime()}")
+    val got = EventStream.hourlyCountsAppend(t)
       .selectExpr("unix_millis(cast(hour_start as timestamp)) AS w", "event_type",
         "n", "total_value")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
@@ -357,8 +350,7 @@ class EventsWindowsSpec extends SparkTestBase {
   }
 
   test("append-mode sliding twin == batch windows closed under the final watermark") {
-    val got = EventStream.slidingCountsAppend(spark, "/root/testdata/sf0.001",
-      s"spec_sca_${System.nanoTime()}")
+    val got = EventStream.slidingCountsAppend(t)
       .selectExpr("unix_millis(cast(win_start as timestamp)) AS w", "event_type",
         "n", "total_value")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
@@ -378,8 +370,7 @@ class EventsWindowsSpec extends SparkTestBase {
   }
 
   test("stream-stream full outer join == batch pairs + closed unmatched on both sides") {
-    val got = EventStream.clickPurchaseFullJoin(spark, "/root/testdata/sf0.001",
-      s"spec_ssf_${System.nanoTime()}")
+    val got = EventStream.clickPurchaseFullJoin(t)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val clicks = t.events.filter(col("event_type") === "click")
       .selectExpr("user_id AS u", "unix_millis(cast(ts as timestamp)) AS click_ms")
@@ -413,8 +404,7 @@ class EventsWindowsSpec extends SparkTestBase {
   }
 
   test("stream-stream left outer join == batch pairs + closed unmatched clicks") {
-    val got = EventStream.clickPurchaseLeftJoin(spark, "/root/testdata/sf0.001",
-      s"spec_ssl_${System.nanoTime()}")
+    val got = EventStream.clickPurchaseLeftJoin(t)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val clicks = t.events.filter(col("event_type") === "click")
       .selectExpr("user_id AS u", "unix_millis(cast(ts as timestamp)) AS click_ms")
@@ -447,8 +437,7 @@ class EventsWindowsSpec extends SparkTestBase {
   }
 
   test("progress ledger: monitoring-plane counts reconcile with the sink and the source") {
-    val row = graft.streaming.EventStream.progressLedger(
-      spark, t.dir, s"graft_ledger_spec_${System.nanoTime()}").head()
+    val row = graft.streaming.EventStream.progressLedger(t).head()
     val direct = t.events.count()
     assert(row.getAs[Long]("rows_ingested") == direct,
       s"progress numInputRows ${row.getAs[Long]("rows_ingested")} != source $direct")

@@ -50,7 +50,7 @@ class EventStreamUpsertSpec extends SparkTestBase {
 
   test("foreachBatchUpsert gate equals the batch latest-event-per-user argmax") {
     import org.apache.spark.sql.functions._
-    val got = EventStream.foreachBatchUpsert(spark, "/root/testdata/sf0.001")
+    val got = EventStream.foreachBatchUpsert(t)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3)))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(desc("ts"), desc("event_id"))

@@ -12,19 +12,18 @@ import graft.operators.DedupOps
 class RocksDbStateSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def windowedPairs(tag: String): Set[(Long, Long, Double)] =
-    DedupStream.minhashPairsWindowed(
-      spark, "/root/testdata/sf0.001", s"spec_rocks_${tag}_${System.nanoTime()}", 0.3, 200)
+  private def windowedPairs(): Set[(Long, Long, Double)] =
+    DedupStream.minhashPairsWindowed(t, 0.3, 200)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
   test("windowed minhash pair set is identical under RocksDB state store") {
     val confKey = "spark.sql.streaming.stateStore.providerClass"
     val saved = spark.conf.getOption(confKey)
-    val default = windowedPairs("default")
+    val default = windowedPairs()
     try {
       spark.conf.set(confKey,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val rocks = windowedPairs("rocksdb")
+      val rocks = windowedPairs()
       assert(rocks == default,
         s"provider changed the emitted pairs: only-default=${default -- rocks}, only-rocks=${rocks -- default}")
       // and both equal the batch oracle twin, window-filtered — the same

@@ -41,4 +41,26 @@ class StreamTuningSpec extends SparkTestBase {
       assert(StreamTuning.statePartitions(spark, 1L << 40) == 64)
     }
   }
+
+  test("an unreadable events.parquet runs the gate at the configured count, warns with its path and keeps the rows") {
+    // a `file:` URI dir: Spark reads the fixture through it, java.nio
+    // cannot walk it, so the sizing falls back to the session's count
+    val unsized = graft.core.Tables(spark, s"file:${t.dir}")
+    val sized = EventStream.hourlyCounts(t).collect().toSet
+    val sizedParts = StreamMeter.snapshot("events_hourly_streaming").statePartitions
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    withShufflePartitions(7) {
+      System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+      val got =
+        try EventStream.hourlyCounts(unsized).collect().toSet
+        finally System.setErr(saved)
+      assert(StreamMeter.snapshot("events_hourly_streaming").statePartitions == 7)
+      assert(got.nonEmpty && got == sized, "the fallback must not change the gate's rows")
+    }
+    assert(sizedParts == 4, "the sized run uses the floor at sf0.001")
+    assert(err.toString("UTF-8").linesIterator.exists(l =>
+      l.contains("StreamTuning") && l.contains(s"file:${t.dir}/events.parquet")),
+      s"no StreamTuning warning naming the path in: $err")
+  }
 }
