@@ -91,23 +91,29 @@ object Plans {
       "ivf_assign_cells_hier (two-level reference-object table: coarse top-p + pruned fine argmin in one codegen call, join-free)" ->
         ivfAssignHierPick(t))
 
-  /** The flat assignment plan: 256 deterministic synthetic centroids
-    * (KMeans at k=256 needs more vectors than the plan fixture holds, and
-    * the pick documents the ASSIGNMENT plan, not the quantizer fit)
-    * written once per run, then the production
-    * [[operators.SimilarityOps.ivfAssignCells]] call.
+  /** 256 deterministic synthetic centroids (KMeans at k=256 needs more
+    * vectors than the plan fixture holds, and the picks document the
+    * ASSIGNMENT plans, not the quantizer fit) written to a fresh index
+    * dir, and the embeddings as `(vec_id, label, emb)`.
     */
-  private def ivfAssignFlatPick(t: Tables): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
+  private def syntheticIvf(t: Tables): (String, org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions.col
     val spark = t.spark
     import spark.implicits._
     val dir = Tables.scratchDir("graft_plans_ivf_")
     (0 until 256).map(c => (c, (0 until 64).map(j => math.sin(c * 31 + j * 7) * 10.0)))
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    operators.SimilarityOps.ivfAssignCells(spark, dir,
-      t.embeddings.select(col("vec_id"), col("label"),
-        graft.functions.VectorFunctions.toDoubleArr(col("embedding")).as("emb")))
+    (dir, t.embeddings.select(col("vec_id"), col("label"),
+      graft.functions.VectorFunctions.toDoubleArr(col("embedding")).as("emb")))
+  }
+
+  /** The flat assignment plan: the production
+    * [[operators.SimilarityOps.ivfAssignCells]] call over [[syntheticIvf]].
+    */
+  private def ivfAssignFlatPick(t: Tables): org.apache.spark.sql.DataFrame = {
+    val (dir, emb) = syntheticIvf(t)
+    operators.SimilarityOps.ivfAssignCells(t.spark, dir, emb)
   }
 
   /** The two-level assignment plan over the same synthetic 256-cell
@@ -115,16 +121,8 @@ object Plans {
     * codegen call into the reference-object table, join-free.
     */
   private def ivfAssignHierPick(t: Tables): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val spark = t.spark
-    import spark.implicits._
-    val dir = Tables.scratchDir("graft_plans_ivf_h_")
-    (0 until 256).map(c => (c, (0 until 64).map(j => math.sin(c * 31 + j * 7) * 10.0)))
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    operators.SimilarityOps.ivfAssignCellsHier(spark, dir,
-      t.embeddings.select(col("vec_id"), col("label"),
-        graft.functions.VectorFunctions.toDoubleArr(col("embedding")).as("emb")), 2)
+    val (dir, emb) = syntheticIvf(t)
+    operators.SimilarityOps.ivfAssignCellsHier(t.spark, dir, emb, 2)
   }
 
   def main(args: Array[String]): Unit = {

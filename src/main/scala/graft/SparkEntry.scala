@@ -7,7 +7,7 @@ import graft.operators._
 import graft.streaming.EventStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * `queries` is the SURVEY §2 operator inventory (plus the training-data
   * extensions: dedup / similarity / text analysis / multimodal), one entry
@@ -16,6 +16,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * correctness gate. Non-SQL-expressible entries (xxhash64 sketches, ML
   * fits, the mapPartitions decode) are rows-only checked here and
   * property-tested in src/test.
+  *
+  * Each oracle derivation is stated once: a CTE or expression two oracles
+  * share (snapshots B and C, the minhash pairs and their closure, the
+  * stopword list, the word 3-gram, the md5 digest terms, the 2-place
+  * decimal round-sum) is a named fragment the oracles interpolate, so a
+  * residue or rounding change cannot reach some gates and miss others.
   */
 object SparkEntry {
 
@@ -580,11 +586,6 @@ object SparkEntry {
     // restated closed-form by the oracle
     "multimodal_frame_dedup"  -> q(MultimodalOps.frameDedupStats))
 
-  /** Shared oracle CTE: the md5-minhash candidate pairs with verified
-    * Jaccard (mirrors DedupOps.minhashDupPairs with k=16, 8 bands × 2
-    * rows). Ends with relation `j(doc_a, doc_b, jaccard)`; callers append
-    * their threshold filter.
-    */
   /** Shared DuckDB CTE: the capped co-activity edge list — replays
     * GraphOps.coActivityEdges (cap 10, hour × event_type buckets, per-
     * bucket lowest-10 user ids, unordered distinct pairs u < v).
@@ -807,13 +808,171 @@ object SparkEntry {
        |SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok
        |FROM c WHERE cum0 < $budget""".stripMargin
 
+  /** The word 3-gram at position `i` of the whitespace token list `tk`;
+    * every shingle oracle wraps it in its own list comprehension.
+    */
+  private val shingle3Sql = "tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]"
+
+  /** The quality filters' 10-word stopword list as a DuckDB list literal
+    * (stated independently of TextFunctions.stopwords).
+    */
+  private val intakeStopwordsSql = "['the','a','an','of','and','to','in','is','it','for']"
+
+  /** SQL twin of `roundN(decSum(x), 2)`: exact DECIMAL(28,6) sum, back to
+    * DOUBLE, rounded half-up to 2 places.
+    */
+  private def decSumRound2Sql(x: String): String =
+    s"floor((CAST(sum(CAST($x AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100"
+
+  /** The first 12 hex digits of the md5 hex column `c` as an exact
+    * integer below 2^48, summed nibble by nibble.
+    */
+  private def md5Nibbles48Sql(c: String): String = (0 until 12)
+    .map(i => s"(strpos('0123456789abcdef', substr($c, ${i + 1}, 1)) - 1) * ${math.pow(16, 11 - i).toLong}.0")
+    .mkString(" +\n           ")
+
+  /** The first 12 hex digits of the md5 hex column `c` as the dyadic
+    * fraction Σ d_p / 16^p: every term and partial sum is exact in doubles.
+    */
+  private def md5FractionTermsSql(c: String): String = (1 to 12).map { p =>
+    s"(strpos('0123456789abcdef', substr($c, $p, 1)) - 1) / ${math.pow(16.0, p).toLong}.0"
+  }.mkString("\n        + ")
+
+  /** Snapshot B as SnapshotOps.syntheticSnapshotB derives it from A
+    * (`documents`): `% 7` dropped, `% 11` upper-cased, `% 13` re-added
+    * under +2^40. Ends with relation `b(doc_id, source, text)`.
+    */
+  private val snapshotBCte: String =
+    """b AS (
+      |  SELECT doc_id, source,
+      |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text
+      |  FROM documents WHERE doc_id % 7 <> 0
+      |  UNION ALL
+      |  SELECT doc_id + 1099511627776 AS doc_id, source, text
+      |  FROM documents WHERE doc_id % 13 = 0)""".stripMargin
+
+  /** Snapshot B, then snapshot C as the second hop from it: `% 5` dropped,
+    * ' v2' appended where `% 9` (null text stays null on both engines),
+    * `% 21` re-added under +2^41. Ends with relations `b` and `c`.
+    */
+  private val snapshotBCCtes: String =
+    s"""$snapshotBCte,
+       |c AS (
+       |  SELECT doc_id, source,
+       |         CASE WHEN doc_id % 9 = 0 THEN text || ' v2' ELSE text END AS text
+       |  FROM b WHERE doc_id % 5 <> 0
+       |  UNION ALL
+       |  SELECT doc_id + 2199023255552 AS doc_id, source, text
+       |  FROM b WHERE doc_id % 21 = 0)""".stripMargin
+
+  /** Recursive transitive closure over the pair relation `jp(a, b)`:
+    * `walk(id, r)` reaches every node of id's component, and
+    * `reps(id, rep)` labels each node with its component-min id.
+    */
+  private def pairClosureCtes(a: String, b: String): String =
+    s"""edges AS (
+       |  SELECT $a AS src, $b AS dst FROM jp
+       |  UNION
+       |  SELECT $b AS src, $a AS dst FROM jp),
+       |walk(id, r) AS (
+       |  SELECT src, dst FROM edges
+       |  UNION
+       |  SELECT w.id, e.dst FROM walk w JOIN edges e ON w.r = e.src),
+       |reps AS (
+       |  SELECT id, least(id, min(r)) AS rep FROM walk GROUP BY id)""".stripMargin
+
+  /** The composed intake verdict chain over the non-eval docs: quality
+    * band, repetition keep, md5 winner and eval-shingle leak, first
+    * failing reason wins. Ends with relation `verdict(doc_id, source,
+    * reason)`.
+    */
+  private val intakeVerdictCtes: String =
+    s"""cand AS (
+      |  SELECT doc_id, source, text, string_split_regex(text, '\\s+') AS tk,
+      |         md5(text) AS digest
+      |  FROM documents WHERE source <> 'src15'),
+      |q AS (
+      |  SELECT doc_id, source, tk, len(tk) AS n_tokens,
+      |         CASE WHEN len(tk) = 0 THEN 0.0
+      |              ELSE len(list_filter(tk, t -> list_contains(
+      |                $intakeStopwordsSql, t)))::DOUBLE
+      |                   / len(tk) END AS swr,
+      |         min(doc_id) OVER (PARTITION BY digest) AS winner
+      |  FROM cand),
+      |bgl AS (
+      |  SELECT doc_id, [tk[i] || ' ' || tk[i+1] for i in range(1, len(tk))] AS bg
+      |  FROM cand),
+      |bstat AS (
+      |  SELECT doc_id,
+      |         CASE WHEN len(bg) = 0 THEN 0.0
+      |              ELSE floor((len(bg) - len(list_distinct(bg)))::DOUBLE
+      |                         / len(bg) * 10000 + 0.5) / 10000
+      |         END AS dbf
+      |  FROM bgl),
+      |w AS (SELECT doc_id, unnest(tk) AS w FROM cand),
+      |cnt AS (SELECT doc_id, w, count(*) AS c FROM w GROUP BY doc_id, w),
+      |dom AS (
+      |  SELECT doc_id, floor(CAST(max(c) AS DOUBLE) / CAST(sum(c) AS BIGINT)
+      |                       * 10000 + 0.5) / 10000 AS ttf
+      |  FROM cnt GROUP BY doc_id),
+      |ev AS (
+      |  SELECT DISTINCT unnest(list_distinct(
+      |           [$shingle3Sql
+      |            for i in range(1, len(tk)-1)])) AS s
+      |  FROM (SELECT string_split_regex(text, '\\s+') AS tk
+      |        FROM documents WHERE source = 'src15')),
+      |leaked AS (
+      |  SELECT DISTINCT doc_id
+      |  FROM (SELECT doc_id, unnest(list_distinct(
+      |                 [$shingle3Sql
+      |                  for i in range(1, len(tk)-1)])) AS s
+      |        FROM cand)
+      |  WHERE s IN (SELECT s FROM ev)),
+      |verdict AS (
+      |  SELECT q.doc_id, q.source,
+      |         CASE WHEN NOT (q.n_tokens >= 20 AND q.n_tokens <= 100
+      |                        AND q.swr >= 0.05) THEN 'quality'
+      |              WHEN NOT coalesce(d.ttf <= 0.2 AND b.dbf <= 0.3, false)
+      |                   THEN 'repetition'
+      |              WHEN q.doc_id <> q.winner THEN 'duplicate'
+      |              WHEN q.doc_id IN (SELECT doc_id FROM leaked)
+      |                   THEN 'contaminated'
+      |              ELSE 'kept' END AS reason
+      |  FROM q JOIN bstat b USING (doc_id) LEFT JOIN dom d USING (doc_id))""".stripMargin
+
+  /** Each doc's distinct word 3-grams: ends with relation `sh(doc_id, sh)`. */
+  private val docShinglesCte: String =
+    s"""toks AS (
+       |  SELECT doc_id, string_split_regex(text, '\\s+') AS tk FROM documents),
+       |sh AS (
+       |  SELECT doc_id, list_distinct([$shingle3Sql
+       |                                for i in range(1, len(tk)-1)]) AS sh
+       |  FROM toks)""".stripMargin
+
+  /** Candidate pairs sharing a rare shingle (document frequency ≤ 1000)
+    * with their shingle-set sizes and intersection, as the ngram family
+    * derives them. Ends with relation `pairs(doc_a, doc_b, n_a, n_b,
+    * inter)`; callers state the similarity and its threshold.
+    */
+  private val rareShinglePairsCte: String =
+    s"""$docShinglesCte,
+       |d AS (SELECT doc_id, sh, len(sh) AS n_sh FROM sh WHERE len(sh) > 0),
+       |e AS (SELECT doc_id, n_sh, unnest(sh) AS s FROM d),
+       |rare AS (SELECT s FROM e GROUP BY s HAVING count(*) <= 1000),
+       |er AS (SELECT e.* FROM e JOIN rare USING (s)),
+       |pairs AS (
+       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |         a.n_sh AS n_a, b.n_sh AS n_b, count(*) AS inter
+       |  FROM er a JOIN er b ON a.s = b.s AND a.doc_id < b.doc_id
+       |  GROUP BY 1,2,3,4)""".stripMargin
+
+  /** Shared oracle CTE: the md5-minhash candidate pairs with verified
+    * Jaccard (mirrors DedupOps.minhashDupPairs with k=16, 8 bands × 2
+    * rows). Ends with relation `j(doc_a, doc_b, jaccard)`; callers append
+    * their threshold filter.
+    */
   private val minhashPairsCte: String =
-    """toks AS (
-      |  SELECT doc_id, string_split_regex(text, '\s+') AS tk FROM documents),
-      |sh AS (
-      |  SELECT doc_id, list_distinct([tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-      |                                for i in range(1, len(tk)-1)]) AS sh
-      |  FROM toks),
+    s"""$docShinglesCte,
       |d AS (SELECT doc_id, sh FROM sh WHERE len(sh) > 0),
       |sig AS (
       |  SELECT doc_id, sh,
@@ -835,6 +994,15 @@ object SparkEntry {
       |                / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))))
       |               * 10000 + 0.5) / 10000 AS jaccard
       |  FROM pairs)""".stripMargin
+
+  /** The minhash duplicate clusters: [[minhashPairsCte]] at Jaccard ≥ 0.5
+    * closed transitively. Needs `WITH RECURSIVE`; ends with relation
+    * `reps(id, rep)`.
+    */
+  private val minhashClosureCtes: String =
+    s"""$minhashPairsCte,
+       |jp AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
+       |${pairClosureCtes("doc_a", "doc_b")}""".stripMargin
 
   /** Shared oracle CTE: sign-LSH bucketed embedding near-dup candidate
     * pairs with cosine (mirrors SimilarityOps.embeddingNearDupLsh with 8
@@ -882,25 +1050,6 @@ object SparkEntry {
     "too", "very", "s", "t", "can", "will", "just", "don", "should", "now",
     "cannot", "could", "ought", "would").map(w => s"'$w'").mkString(", ")
 
-  /** DuckDB oracle SQL. Column names/aliases MUST match the Spark output —
-    * the driver sorts columns by name before hashing. Omitted keys (hash
-    * sketches, ML, streaming-only) get the driver's rows-only check.
-    *
-    * TYPE-STABILITY RULE (every output column of every new oracle, enforced
-    * by dev_check.py's TYPE-HAZARD gate):
-    *  1. The DuckDB type of each OUTPUT column must equal the Spark output
-    *     type. DuckDB widens integer `sum()`/windowed sums to HUGEINT —
-    *     always `CAST(sum(...) AS BIGINT)`; INT128 canonicalizes
-    *     differently from int64 in the driver even when values match
-    *     (round-2's three red rows were exactly this).
-    *  2. No DECIMAL or FLOAT outputs: double sums/avgs go through the exact
-    *     DECIMAL(28,6) accumulation idiom and are CAST back to DOUBLE
-    *     (mirrors NumericFunctions.decSum/decAvg).
-    *  3. Rounding is floor(x*10^n+0.5)/10^n on BOTH sides — never round()
-    *     (Spark rounds the decimal string, DuckDB the binary double).
-    *  4. Benign width drift (Spark int32 vs DuckDB BIGINT) is fine; both
-    *     stringify identically.
-    */
   /** Raw production probes benched IN PLACE of verdict gates whose query
     * path embeds heavy verification (round-9 advice: ann_ivf ran a full
     * brute-force sweep, ml_* gates re-fit models, dedup_minhash_mllib
@@ -961,29 +1110,23 @@ object SparkEntry {
     "q2_approx_median"    -> q(CoreQueries.q2ApproxMedianDefault),
     "q2_approx_median_default" -> q(CoreQueries.q2ApproxMedianDefault))
 
+  /** rollup(C) with min/max md5 digests, stated directly from A. */
+  private lazy val rollupOfCSql: String =
+    s"""WITH $snapshotBCCtes
+       |SELECT source, count(*) AS n_docs,
+       |       CAST(coalesce(sum(length(text)), 0) AS BIGINT) AS total_chars,
+       |       min(md5(text)) AS min_digest,
+       |       max(md5(text)) AS max_digest
+       |FROM c GROUP BY source""".stripMargin
+
   /** rollup(C) stated in the rollupStats shape (mod-2^48 BIGINT digest
     * sums) — ONE statement of the maintained view's truth, shared by the
     * batch multi-hop and streamed maintenance oracles so the two gates
     * can never silently assert different answers.
     */
   private lazy val rollupOfCMaintainedSql: String = {
-    val nibbles = (0 until 12)
-      .map(i => s"(strpos('0123456789abcdef', substr(hx, ${i + 1}, 1)) - 1) * ${math.pow(16, 11 - i).toLong}.0")
-      .mkString(" + ")
-    s"""WITH b AS (
-       |  SELECT doc_id, source,
-       |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text
-       |  FROM documents WHERE doc_id % 7 <> 0
-       |  UNION ALL
-       |  SELECT doc_id + 1099511627776 AS doc_id, source, text
-       |  FROM documents WHERE doc_id % 13 = 0),
-       |c AS (
-       |  SELECT doc_id, source,
-       |         CASE WHEN doc_id % 9 = 0 THEN text || ' v2' ELSE text END AS text
-       |  FROM b WHERE doc_id % 5 <> 0
-       |  UNION ALL
-       |  SELECT doc_id + 2199023255552 AS doc_id, source, text
-       |  FROM b WHERE doc_id % 21 = 0),
+    val nibbles = md5Nibbles48Sql("hx")
+    s"""WITH $snapshotBCCtes,
        |h AS (SELECT source, text, md5(text) AS hx FROM c)
        |SELECT source, count(*) AS n_docs,
        |       CAST(coalesce(sum(length(text)), 0) AS BIGINT) AS total_chars,
@@ -992,6 +1135,25 @@ object SparkEntry {
        |FROM h GROUP BY source""".stripMargin
   }
 
+  /** DuckDB oracle SQL. Column names/aliases MUST match the Spark output —
+    * the hash compare sorts columns by name first. Omitted keys (hash
+    * sketches, ML, streaming-only) get a rows-only check.
+    *
+    * TYPE-STABILITY RULE (every output column of every new oracle, enforced
+    * by dev_check.py's TYPE-HAZARD gate):
+    *  1. The DuckDB type of each OUTPUT column must equal the Spark output
+    *     type. DuckDB widens integer `sum()`/windowed sums to HUGEINT —
+    *     always `CAST(sum(...) AS BIGINT)`; INT128 canonicalizes
+    *     differently from int64 in the hash compare even when values match
+    *     (round-2's three red rows were exactly this).
+    *  2. No DECIMAL or FLOAT outputs: double sums/avgs go through the exact
+    *     DECIMAL(28,6) accumulation idiom and are CAST back to DOUBLE
+    *     (mirrors NumericFunctions.decSum/decAvg).
+    *  3. Rounding is floor(x*10^n+0.5)/10^n on BOTH sides — never round()
+    *     (Spark rounds the decimal string, DuckDB the binary double).
+    *  4. Benign width drift (Spark int32 vs DuckDB BIGINT) is fine; both
+    *     stringify identically.
+    */
   def oracleSql: Map[String, String] = oracleSqlBase +
     // the sparse-scored variant shares the dense oracle verbatim: same
     // pipeline, same rounding, bit-identical scores by construction
@@ -1005,7 +1167,18 @@ object SparkEntry {
     // the approximate-boundary layout write is gated on LOSSLESSNESS:
     // whatever boundaries the sketch picked, the probe over the read-back
     // table must equal the same probe over the source table
-    ("layout_zorder_approx_roundtrip" -> oracleSqlBase("layout_zorder_roundtrip"))
+    ("layout_zorder_approx_roundtrip" -> oracleSqlBase("layout_zorder_roundtrip")) +
+    // the streaming twins over a finite replay emit exactly the batch rows
+    // (Complete mode emits every window; the stateful minhash variant the
+    // batch pair set, see DedupStream.minhashPairs)
+    ("events_hourly_streaming" -> oracleSqlBase("events_hourly")) +
+    ("events_sliding_streaming" -> oracleSqlBase("events_sliding")) +
+    ("dedup_minhash_streaming" -> oracleSqlBase("dedup_minhash")) +
+    // the bucketed twin computes the identical rollup — exchange-free
+    // engine-side, same relational statement oracle-side
+    ("join_revenue_bucketed" -> oracleSqlBase("join_revenue_by_priority")) +
+    // both ANN probes state the same verdict contract
+    ("ann_brp_lsh" -> oracleSqlBase("ann_ivf"))
 
   private lazy val oracleSqlBase: Map[String, String] = Map(
     // NOTE on the CAST(sum(CAST(x AS DECIMAL(28,6))) AS DOUBLE) idiom used
@@ -1087,7 +1260,7 @@ object SparkEntry {
     "agg_selectexpr_sum" ->
       "SELECT floor((sum(l_quantity)) * 100 + 0.5) / 100 AS total_qty FROM lineitem",
     "agg_global_sum" ->
-      """SELECT floor((CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS total_revenue,
+      s"""SELECT ${decSumRound2Sql("o_totalprice")} AS total_revenue,
         |       count(*) AS num_orders FROM orders""".stripMargin,
     "filter_range" ->
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
@@ -1171,16 +1344,16 @@ object SparkEntry {
         |       row_number() OVER (ORDER BY o_orderkey) AS row_id
         |FROM orders""".stripMargin,
     "partitioned_roundtrip" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |       floor((CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS revenue
+      s"""SELECT o_orderstatus, count(*) AS n,
+        |       ${decSumRound2Sql("o_totalprice")} AS revenue
         |FROM orders WHERE year(o_orderdate) = 1997
         |GROUP BY o_orderstatus""".stripMargin,
     // partition-SPEC evolution: the oracle states both rollups from the
     // source table — the hash proves the two-spec layout (year= then
     // year=/month=) lost/invented nothing across the boundary
     "partition_spec_rollup" ->
-      """SELECT year(o_orderdate) AS order_year, count(*) AS n_orders,
-        |       floor((CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS total_price,
+      s"""SELECT year(o_orderdate) AS order_year, count(*) AS n_orders,
+        |       ${decSumRound2Sql("o_totalprice")} AS total_price,
         |       count(DISTINCT month(o_orderdate)) AS n_months
         |FROM orders GROUP BY 1""".stripMargin,
     "partition_spec_pruned" ->
@@ -1194,9 +1367,9 @@ object SparkEntry {
     // oracle states it directly; the runtime pruning is the spec's plan
     // assertion
     "join_dpp_pruned" ->
-      """SELECT year(o_orderdate) AS order_year, o_orderstatus,
+      s"""SELECT year(o_orderdate) AS order_year, o_orderstatus,
         |       count(*) AS n,
-        |       floor((CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS revenue
+        |       ${decSumRound2Sql("o_totalprice")} AS revenue
         |FROM orders WHERE year(o_orderdate) IN (1996, 1997)
         |GROUP BY 1, 2""".stripMargin,
     "topk_orders" ->
@@ -1218,36 +1391,28 @@ object SparkEntry {
         |JOIN region ON n_regionkey = r_regionkey
         |GROUP BY r_name""".stripMargin,
     "join_revenue_by_priority" ->
-      """SELECT o_orderpriority,
-        |       floor((CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS revenue,
-        |       count(*) AS num_items
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority""".stripMargin,
-    // the bucketed twin computes the identical rollup — exchange-free
-    // engine-side, same relational statement oracle-side
-    "join_revenue_bucketed" ->
-      """SELECT o_orderpriority,
-        |       floor((CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS revenue,
+      s"""SELECT o_orderpriority,
+        |       ${decSumRound2Sql("l_extendedprice * (1 - l_discount)")} AS revenue,
         |       count(*) AS num_items
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY o_orderpriority""".stripMargin,
     "join_revenue_by_brand" ->
-      """SELECT p_brand, floor((CAST(sum(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS revenue
+      s"""SELECT p_brand, ${decSumRound2Sql("l_extendedprice")} AS revenue
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |GROUP BY p_brand""".stripMargin,
     // the salt sub-key must be invisible: plain equi-join + rollup
     "join_salted_events" ->
-      """WITH dim(event_type, category) AS (VALUES
+      s"""WITH dim(event_type, category) AS (VALUES
         |  ('click', 'engagement'), ('view', 'engagement'),
         |  ('purchase', 'commerce'), ('signup', 'commerce'),
         |  ('error', 'system'))
         |SELECT category, count(*) AS n,
-        |       floor((CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS total_value
+        |       ${decSumRound2Sql("value")} AS total_value
         |FROM events JOIN dim USING (event_type)
         |GROUP BY category""".stripMargin,
     "join_supplier_volume" ->
-      """SELECT r_name, n_name,
-        |       floor((CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS revenue,
+      s"""SELECT r_name, n_name,
+        |       ${decSumRound2Sql("l_extendedprice * (1 - l_discount)")} AS revenue,
         |       CAST(count(DISTINCT s_suppkey) AS BIGINT) AS n_suppliers
         |FROM lineitem
         |JOIN supplier ON l_suppkey = s_suppkey
@@ -1385,14 +1550,9 @@ object SparkEntry {
       """SELECT event_id, CAST(json_extract(props, '$.k') AS INTEGER) AS k
         |FROM events WHERE CAST(json_extract(props, '$.k') AS INTEGER) > 50""".stripMargin,
     "events_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour_start, event_type,
+      s"""SELECT date_trunc('hour', ts) AS hour_start, event_type,
         |       count(*) AS n,
-        |       floor((CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS total_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "events_hourly_streaming" ->
-      """SELECT date_trunc('hour', ts) AS hour_start, event_type,
-        |       count(*) AS n,
-        |       floor((CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS total_value
+        |       ${decSumRound2Sql("value")} AS total_value
         |FROM events GROUP BY 1, 2""".stripMargin,
     // stream-static twin: stateless micro-batch probe of the static
     // window dimension == the batch interval join minus the distinct-user
@@ -1426,9 +1586,9 @@ object SparkEntry {
     // end <= max event time − 2 h, µs precision — the same <= boundary the
     // session twin pins) are ever emitted; open tails stay in state
     "events_hourly_streaming_append" ->
-      """SELECT date_trunc('hour', ts) AS hour_start, event_type,
+      s"""SELECT date_trunc('hour', ts) AS hour_start, event_type,
         |       count(*) AS n,
-        |       floor((CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS total_value
+        |       ${decSumRound2Sql("value")} AS total_value
         |FROM events GROUP BY 1, 2
         |HAVING epoch_ns(date_trunc('hour', ts)) // 1000 + 3600000000
         |       <= (SELECT max(epoch_ns(ts) // 1000) FROM events) - 7200000000""".stripMargin,
@@ -1458,37 +1618,26 @@ object SparkEntry {
         |         AS BIGINT) AS total_doubled
         |FROM e GROUP BY event_type""".stripMargin,
     // sliding 2h/1h windows: each event expands into the two epoch-aligned
-    // hourly starts covering it — mirrors Spark's Expand, no self-join;
-    // the streaming twin (Complete mode over the finite replay) emits
-    // every window, so it shares this oracle verbatim
-    "events_sliding_streaming" ->
-      """WITH e AS (
-        |  SELECT unnest([date_trunc('hour', ts),
-        |                 date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS win_start,
-        |         event_type, value
-        |  FROM events)
-        |SELECT win_start, event_type, count(*) AS n,
-        |       floor((CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS total_value
-        |FROM e GROUP BY 1, 2""".stripMargin,
+    // hourly starts covering it — mirrors Spark's Expand, no self-join
     "events_sliding" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT unnest([date_trunc('hour', ts),
         |                 date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS win_start,
         |         event_type, value
         |  FROM events)
         |SELECT win_start, event_type, count(*) AS n,
-        |       floor((CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS total_value
+        |       ${decSumRound2Sql("value")} AS total_value
         |FROM e GROUP BY 1, 2""".stripMargin,
     // append-mode sliding twin: a 2 h-wide window is closed once
     // win_start + 2 h <= max event time − 2 h (µs, <= boundary)
     "events_sliding_streaming_append" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT unnest([date_trunc('hour', ts),
         |                 date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS win_start,
         |         event_type, value
         |  FROM events)
         |SELECT win_start, event_type, count(*) AS n,
-        |       floor((CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS total_value
+        |       ${decSumRound2Sql("value")} AS total_value
         |FROM e GROUP BY 1, 2
         |HAVING epoch_ns(win_start) // 1000 + 7200000000
         |       <= (SELECT max(epoch_ns(ts) // 1000) FROM events) - 7200000000""".stripMargin,
@@ -1496,7 +1645,7 @@ object SparkEntry {
     // watermark (max event time − 2 h) passes their end — open tails stay
     // in state; µs precision end-to-end
     "events_sessions_native_streaming" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT user_id, ts, value,
         |         CASE WHEN lag(ts) OVER w IS NULL
         |              OR epoch_ns(ts) // 1000 - epoch_ns(lag(ts) OVER w) // 1000
@@ -1511,7 +1660,7 @@ object SparkEntry {
         |       make_timestamp(min(epoch_ns(ts) // 1000)) AS session_start,
         |       make_timestamp(max(epoch_ns(ts) // 1000) + 1800000000) AS session_end,
         |       count(*) AS n_events,
-        |       floor((CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS total_value
+        |       ${decSumRound2Sql("value")} AS total_value
         |FROM s GROUP BY user_id, sid
         |HAVING max(epoch_ns(ts) // 1000) + 1800000000
         |       <= (SELECT max(epoch_ns(ts) // 1000) FROM events) - 7200000000""".stripMargin,
@@ -1519,7 +1668,7 @@ object SparkEntry {
     // min starts a new session, matching [first, last+gap)); start/end
     // truncated to the engine's µs timestamps
     "events_session_native" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT user_id, ts, value,
         |         CASE WHEN lag(ts) OVER w IS NULL
         |              OR epoch_ns(ts) // 1000 - epoch_ns(lag(ts) OVER w) // 1000
@@ -1534,7 +1683,7 @@ object SparkEntry {
         |       make_timestamp(min(epoch_ns(ts) // 1000)) AS session_start,
         |       make_timestamp(max(epoch_ns(ts) // 1000) + 1800000000) AS session_end,
         |       count(*) AS n_events,
-        |       floor((CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS total_value
+        |       ${decSumRound2Sql("value")} AS total_value
         |FROM s GROUP BY user_id, sid""".stripMargin,
     // anomalies: same hourly pre-agg + trailing RANGE window over the
     // epoch-hour index (true calendar window, gap-safe); the verdict is
@@ -1601,13 +1750,7 @@ object SparkEntry {
     // drift: the oracle re-derives snapshot B and restates every count,
     // delta and 5% verdict (exact integer arithmetic end to end)
     "drift_source_distribution" ->
-      """WITH b AS (
-        |  SELECT doc_id, source,
-        |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text
-        |  FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1099511627776 AS doc_id, source, text
-        |  FROM documents WHERE doc_id % 13 = 0),
+      s"""WITH $snapshotBCte,
         |ca AS (SELECT source, count(*) AS n_a FROM documents GROUP BY source),
         |cb AS (SELECT source, count(*) AS n_b FROM b GROUP BY source)
         |SELECT coalesce(ca.source, cb.source) AS source,
@@ -1648,13 +1791,7 @@ object SparkEntry {
     // same keyword queries by tokenizing scan — n_chars from length(text)
     // on both sides
     "index_incremental_lookup" ->
-      """WITH b AS (
-        |  SELECT doc_id, source,
-        |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text
-        |  FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1099511627776 AS doc_id, source, text
-        |  FROM documents WHERE doc_id % 13 = 0)
+      s"""WITH $snapshotBCte
         |SELECT token, count(*) AS n_docs,
         |       CAST(sum(n_chars) AS BIGINT) AS total_chars,
         |       min(doc_id) AS min_doc, max(doc_id) AS max_doc
@@ -1731,8 +1868,8 @@ object SparkEntry {
     // oracle aggregates the source directly — a hash match proves no row
     // was dropped or doubled by the sink.
     "events_file_sink" ->
-      """SELECT event_type, count(*) AS n,
-        |       floor((CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS total_value
+      s"""SELECT event_type, count(*) AS n,
+        |       ${decSumRound2Sql("value")} AS total_value
         |FROM events GROUP BY event_type""".stripMargin,
     // events_foreach_upsert maintains a latest-event-per-user table by
     // merging each micro-batch (foreachBatch); the oracle is the batch
@@ -1748,7 +1885,7 @@ object SparkEntry {
         |SELECT user_id, last_ms, event_type AS last_type, value AS last_value
         |FROM ranked WHERE rn = 1""".stripMargin,
     "events_sessions" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT user_id, event_id, value, ts,
         |         CASE WHEN lag(ts) OVER w IS NULL
         |              OR CAST(floor(epoch(ts)) AS BIGINT)
@@ -1763,7 +1900,7 @@ object SparkEntry {
         |              AS BIGINT) AS session_id
         |  FROM g)
         |SELECT user_id, session_id, count(*) AS events_in_session,
-        |       floor((CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS session_value
+        |       ${decSumRound2Sql("value")} AS session_value
         |FROM s GROUP BY user_id, session_id""".stripMargin,
     // Streaming twin emits exactly the CLOSED sessions: closed by a break
     // (a later event of the same user >30 min after) or by event-time
@@ -1778,7 +1915,7 @@ object SparkEntry {
     // sub-second parts, so a floor-second max would misclassify a session
     // sitting exactly on the 2h30m boundary.
     "events_sessions_streaming" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT user_id, event_id, value, ts,
         |         CASE WHEN lag(ts) OVER w IS NULL
         |              OR CAST(floor(epoch(ts)) AS BIGINT)
@@ -1794,7 +1931,7 @@ object SparkEntry {
         |  FROM g),
         |a AS (
         |  SELECT user_id, session_id, count(*) AS events_in_session,
-        |         floor((CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS session_value,
+        |         ${decSumRound2Sql("value")} AS session_value,
         |         CAST(floor(epoch(max(ts))) AS BIGINT) AS end_sec,
         |         max(max(epoch_ms(ts))) OVER () AS max_ms,
         |         max(session_id) OVER (PARTITION BY user_id) AS max_sid
@@ -1876,11 +2013,11 @@ object SparkEntry {
     // (same argument as dedup_ngram_jaccard), so the text-shingle oracle
     // hash-matches
     "dedup_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source, string_split_regex(text, '\s+') AS tk FROM documents),
+      s"""WITH toks AS (
+        |  SELECT doc_id, source, string_split_regex(text, '\\s+') AS tk FROM documents),
         |sh AS (
         |  SELECT doc_id, source,
-        |         list_distinct([tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
+        |         list_distinct([$shingle3Sql
         |                        for i in range(1, len(tk)-1)]) AS sh
         |  FROM toks),
         |ev AS (SELECT DISTINCT unnest(sh) AS s FROM sh WHERE source = 'src15'),
@@ -1896,11 +2033,11 @@ object SparkEntry {
     // df≥2 positions merged into spans by a lag/running-sum window — the
     // same relational shape as the engine, recomputed from raw text
     "dedup_substring_spans" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source, string_split_regex(text, '\s+') AS tk FROM documents),
+      s"""WITH toks AS (
+        |  SELECT doc_id, source, string_split_regex(text, '\\s+') AS tk FROM documents),
         |ps0 AS (
         |  SELECT doc_id, source, CAST(len(tk) AS BIGINT) AS n_tokens,
-        |         unnest([{'pos': i, 'sh': tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]}
+        |         unnest([{'pos': i, 'sh': $shingle3Sql}
         |                 for i in range(1, len(tk)-1)]) AS e
         |  FROM toks),
         |ps AS (SELECT doc_id, source, n_tokens, e.pos AS pos, e.sh AS sh FROM ps0),
@@ -1933,112 +2070,10 @@ object SparkEntry {
     // repetition keep, md5 winners, eval-shingle leak) re-stated in one
     // CTE chain with the same first-failing-reason precedence.
     "pipeline_intake_decisions" ->
-      """WITH cand AS (
-        |  SELECT doc_id, source, text, string_split_regex(text, '\s+') AS tk,
-        |         md5(text) AS digest
-        |  FROM documents WHERE source <> 'src15'),
-        |q AS (
-        |  SELECT doc_id, source, tk, len(tk) AS n_tokens,
-        |         CASE WHEN len(tk) = 0 THEN 0.0
-        |              ELSE len(list_filter(tk, t -> list_contains(
-        |                ['the','a','an','of','and','to','in','is','it','for'], t)))::DOUBLE
-        |                   / len(tk) END AS swr,
-        |         min(doc_id) OVER (PARTITION BY digest) AS winner
-        |  FROM cand),
-        |bgl AS (
-        |  SELECT doc_id, [tk[i] || ' ' || tk[i+1] for i in range(1, len(tk))] AS bg
-        |  FROM cand),
-        |bstat AS (
-        |  SELECT doc_id,
-        |         CASE WHEN len(bg) = 0 THEN 0.0
-        |              ELSE floor((len(bg) - len(list_distinct(bg)))::DOUBLE
-        |                         / len(bg) * 10000 + 0.5) / 10000
-        |         END AS dbf
-        |  FROM bgl),
-        |w AS (SELECT doc_id, unnest(tk) AS w FROM cand),
-        |cnt AS (SELECT doc_id, w, count(*) AS c FROM w GROUP BY doc_id, w),
-        |dom AS (
-        |  SELECT doc_id, floor(CAST(max(c) AS DOUBLE) / CAST(sum(c) AS BIGINT)
-        |                       * 10000 + 0.5) / 10000 AS ttf
-        |  FROM cnt GROUP BY doc_id),
-        |ev AS (
-        |  SELECT DISTINCT unnest(list_distinct(
-        |           [tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-        |            for i in range(1, len(tk)-1)])) AS s
-        |  FROM (SELECT string_split_regex(text, '\s+') AS tk
-        |        FROM documents WHERE source = 'src15')),
-        |leaked AS (
-        |  SELECT DISTINCT doc_id
-        |  FROM (SELECT doc_id, unnest(list_distinct(
-        |                 [tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-        |                  for i in range(1, len(tk)-1)])) AS s
-        |        FROM cand)
-        |  WHERE s IN (SELECT s FROM ev)),
-        |verdict AS (
-        |  SELECT q.doc_id, q.source,
-        |         CASE WHEN NOT (q.n_tokens >= 20 AND q.n_tokens <= 100
-        |                        AND q.swr >= 0.05) THEN 'quality'
-        |              WHEN NOT coalesce(d.ttf <= 0.2 AND b.dbf <= 0.3, false)
-        |                   THEN 'repetition'
-        |              WHEN q.doc_id <> q.winner THEN 'duplicate'
-        |              WHEN q.doc_id IN (SELECT doc_id FROM leaked)
-        |                   THEN 'contaminated'
-        |              ELSE 'kept' END AS reason
-        |  FROM q JOIN bstat b USING (doc_id) LEFT JOIN dom d USING (doc_id))
+      s"""WITH $intakeVerdictCtes
         |SELECT doc_id, source, reason, (reason = 'kept') AS keep FROM verdict""".stripMargin,
     "pipeline_intake_stats" ->
-      """WITH cand AS (
-        |  SELECT doc_id, source, text, string_split_regex(text, '\s+') AS tk,
-        |         md5(text) AS digest
-        |  FROM documents WHERE source <> 'src15'),
-        |q AS (
-        |  SELECT doc_id, source, tk, len(tk) AS n_tokens,
-        |         CASE WHEN len(tk) = 0 THEN 0.0
-        |              ELSE len(list_filter(tk, t -> list_contains(
-        |                ['the','a','an','of','and','to','in','is','it','for'], t)))::DOUBLE
-        |                   / len(tk) END AS swr,
-        |         min(doc_id) OVER (PARTITION BY digest) AS winner
-        |  FROM cand),
-        |bgl AS (
-        |  SELECT doc_id, [tk[i] || ' ' || tk[i+1] for i in range(1, len(tk))] AS bg
-        |  FROM cand),
-        |bstat AS (
-        |  SELECT doc_id,
-        |         CASE WHEN len(bg) = 0 THEN 0.0
-        |              ELSE floor((len(bg) - len(list_distinct(bg)))::DOUBLE
-        |                         / len(bg) * 10000 + 0.5) / 10000
-        |         END AS dbf
-        |  FROM bgl),
-        |w AS (SELECT doc_id, unnest(tk) AS w FROM cand),
-        |cnt AS (SELECT doc_id, w, count(*) AS c FROM w GROUP BY doc_id, w),
-        |dom AS (
-        |  SELECT doc_id, floor(CAST(max(c) AS DOUBLE) / CAST(sum(c) AS BIGINT)
-        |                       * 10000 + 0.5) / 10000 AS ttf
-        |  FROM cnt GROUP BY doc_id),
-        |ev AS (
-        |  SELECT DISTINCT unnest(list_distinct(
-        |           [tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-        |            for i in range(1, len(tk)-1)])) AS s
-        |  FROM (SELECT string_split_regex(text, '\s+') AS tk
-        |        FROM documents WHERE source = 'src15')),
-        |leaked AS (
-        |  SELECT DISTINCT doc_id
-        |  FROM (SELECT doc_id, unnest(list_distinct(
-        |                 [tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-        |                  for i in range(1, len(tk)-1)])) AS s
-        |        FROM cand)
-        |  WHERE s IN (SELECT s FROM ev)),
-        |verdict AS (
-        |  SELECT q.doc_id, q.source,
-        |         CASE WHEN NOT (q.n_tokens >= 20 AND q.n_tokens <= 100
-        |                        AND q.swr >= 0.05) THEN 'quality'
-        |              WHEN NOT coalesce(d.ttf <= 0.2 AND b.dbf <= 0.3, false)
-        |                   THEN 'repetition'
-        |              WHEN q.doc_id <> q.winner THEN 'duplicate'
-        |              WHEN q.doc_id IN (SELECT doc_id FROM leaked)
-        |                   THEN 'contaminated'
-        |              ELSE 'kept' END AS reason
-        |  FROM q JOIN bstat b USING (doc_id) LEFT JOIN dom d USING (doc_id))
+      s"""WITH $intakeVerdictCtes
         |SELECT source, reason, count(*) AS n FROM verdict
         |GROUP BY source, reason""".stripMargin,
     "text_repetition_stats" ->
@@ -2216,15 +2251,15 @@ object SparkEntry {
     // replayed (quantile_cont ↔ percentile — the agg_exact_percentiles
     // parity), keep = score >= rounded cutoff on both sides
     "text_quality_calibrated" ->
-      """WITH s AS (
-        |  SELECT lang, string_split_regex(text, '\s+') AS tk,
+      s"""WITH s AS (
+        |  SELECT lang, string_split_regex(text, '\\s+') AS tk,
         |         length(text)::DOUBLE AS nchars
         |  FROM documents),
         |m AS (
         |  SELECT lang, len(tk)::DOUBLE AS nt, nchars,
         |         CASE WHEN len(tk)=0 THEN 0.0
         |              ELSE len(list_filter(tk, t -> list_contains(
-        |                ['the','a','an','of','and','to','in','is','it','for'], t)))::DOUBLE
+        |                $intakeStopwordsSql, t)))::DOUBLE
         |                / len(tk) END AS sw
         |  FROM s),
         |qs AS (
@@ -2257,14 +2292,14 @@ object SparkEntry {
     // exact counts and states the tree verdicts as constants (re-fit +
     // recomputed independently by GateInvariants)
     "ml_quality_classifier" ->
-      """WITH s AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS tk
+      s"""WITH s AS (
+        |  SELECT doc_id, string_split_regex(text, '\\s+') AS tk
         |  FROM documents),
         |m AS (
         |  SELECT doc_id, len(tk) AS n_tokens,
         |         CASE WHEN len(tk)=0 THEN 0.0
         |              ELSE len(list_filter(tk, t -> list_contains(
-        |                ['the','a','an','of','and','to','in','is','it','for'], t)))::DOUBLE
+        |                $intakeStopwordsSql, t)))::DOUBLE
         |                / len(tk) END AS sw
         |  FROM s)
         |SELECT count(*) AS n_docs,
@@ -2341,10 +2376,7 @@ object SparkEntry {
     // sample_weighted: every term and partial sum is exact in doubles,
     // the ×8 is an exponent shift, so floor/least replay bit-for-bit
     "pack_shard_manifest" -> {
-      val terms = (1 to 12).map { p =>
-        val den = math.pow(16.0, p).toLong
-        s"(strpos('0123456789abcdef', substr(h, $p, 1)) - 1) / $den.0"
-      }.mkString("\n        + ")
+      val terms = md5FractionTermsSql("h")
       s"""WITH d AS (
          |  SELECT len(string_split_regex(text, '\\s+')) AS n_tok, n_chars,
          |         md5(doc_id::VARCHAR) AS h
@@ -2390,8 +2422,8 @@ object SparkEntry {
     // them back inside one projection; the oracle aggregates the raw source,
     // so a hash match proves the to_csv/from_csv hop is lossless
     "csv_column_roundtrip" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |       floor((CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS total_price
+      s"""SELECT o_orderstatus, count(*) AS n,
+        |       ${decSumRound2Sql("o_totalprice")} AS total_price
         |FROM orders GROUP BY o_orderstatus""".stripMargin,
     "sample_mixture" ->
       """WITH tk AS (
@@ -2436,10 +2468,7 @@ object SparkEntry {
     // priority one correctly-rounded division — bit-identical doubles in
     // both engines with NO rounding helper, by IEEE-754 alone
     "sample_weighted" -> {
-      val terms = (1 to 12).map { p =>
-        val den = math.pow(16.0, p).toLong
-        s"(strpos('0123456789abcdef', substr(h, $p, 1)) - 1) / $den.0"
-      }.mkString("\n        + ")
+      val terms = md5FractionTermsSql("h")
       s"""WITH h AS (
          |  SELECT doc_id, CAST(n_chars + 1 AS DOUBLE) AS weight,
          |         md5(doc_id::VARCHAR) AS h
@@ -2452,10 +2481,7 @@ object SparkEntry {
     // per-group top-k over the same bit-exact priorities: the rank window
     // restates the engine's row_number contract verbatim
     "sample_weighted_per_group" -> {
-      val terms = (1 to 12).map { p =>
-        val den = math.pow(16.0, p).toLong
-        s"(strpos('0123456789abcdef', substr(h, $p, 1)) - 1) / $den.0"
-      }.mkString("\n        + ")
+      val terms = md5FractionTermsSql("h")
       s"""WITH h AS (
          |  SELECT lang, doc_id, CAST(n_chars + 1 AS DOUBLE) AS weight,
          |         md5(doc_id::VARCHAR) AS h
@@ -2502,8 +2528,8 @@ object SparkEntry {
     // the z-layout write path must be lossless: the oracle states the
     // same two-sided probe straight from the source table
     "layout_zorder_roundtrip" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |       floor((CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS revenue
+      s"""SELECT o_orderstatus, count(*) AS n,
+        |       ${decSumRound2Sql("o_totalprice")} AS revenue
         |FROM orders
         |WHERE o_custkey BETWEEN 20 AND 99
         |  AND CAST(o_orderdate AS DATE) - DATE '1970-01-01' BETWEEN 9500 AND 10499
@@ -2511,8 +2537,8 @@ object SparkEntry {
     // the fragment→compact cycle must be lossless: the oracle states the
     // same probe straight from the source table
     "layout_compact_roundtrip" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |       floor((CAST(sum(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100 AS revenue
+      s"""SELECT l_returnflag, l_linestatus, count(*) AS n,
+        |       ${decSumRound2Sql("l_extendedprice")} AS revenue
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1995-01-01'
         |GROUP BY l_returnflag, l_linestatus""".stripMargin,
@@ -2579,22 +2605,22 @@ object SparkEntry {
         |       count(*) AS n
         |FROM documents GROUP BY 1, 2""".stripMargin,
     "text_fingerprints" ->
-      """WITH toks AS (
-        |  SELECT doc_id, text, string_split_regex(text, '\s+') AS tk FROM documents)
+      s"""WITH toks AS (
+        |  SELECT doc_id, text, string_split_regex(text, '\\s+') AS tk FROM documents)
         |SELECT doc_id, md5(text) AS doc_md5,
-        |       list_min([md5(tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
+        |       list_min([md5($shingle3Sql)
         |                 for i in range(1, len(tk)-1)]) AS min_shingle_md5
         |FROM toks""".stripMargin,
     "text_quality_by_lang" ->
-      """WITH s AS (
-        |  SELECT lang, string_split_regex(text, '\s+') AS tk,
+      s"""WITH s AS (
+        |  SELECT lang, string_split_regex(text, '\\s+') AS tk,
         |         length(text)::DOUBLE AS nchars
         |  FROM documents),
         |m AS (
         |  SELECT lang, len(tk)::DOUBLE AS nt, nchars,
         |         CASE WHEN len(tk)=0 THEN 0.0
         |              ELSE len(list_filter(tk, t -> list_contains(
-        |                ['the','a','an','of','and','to','in','is','it','for'], t)))::DOUBLE
+        |                $intakeStopwordsSql, t)))::DOUBLE
         |                / len(tk) END AS sw
         |  FROM s),
         |q AS (
@@ -2609,14 +2635,14 @@ object SparkEntry {
         |       floor((CAST(sum(CAST(sw AS DECIMAL(28,6))) AS DOUBLE) / count(sw))*10000 + 0.5)/10000 AS avg_stopword_ratio
         |FROM q GROUP BY lang""".stripMargin,
     "text_quality_filter" ->
-      """WITH s AS (
-        |  SELECT doc_id, lang, source, string_split_regex(text, '\s+') AS tk
+      s"""WITH s AS (
+        |  SELECT doc_id, lang, source, string_split_regex(text, '\\s+') AS tk
         |  FROM documents),
         |m AS (
         |  SELECT doc_id, lang, source, len(tk) AS n_tokens,
         |         CASE WHEN len(tk)=0 THEN 0.0
         |              ELSE len(list_filter(tk, t -> list_contains(
-        |                ['the','a','an','of','and','to','in','is','it','for'], t)))::DOUBLE
+        |                $intakeStopwordsSql, t)))::DOUBLE
         |                / len(tk) END AS sw
         |  FROM s)
         |SELECT doc_id, lang, source, n_tokens FROM m
@@ -2625,9 +2651,6 @@ object SparkEntry {
     // ANN contract lands as constants the engine derives from its actual
     // result and GateInvariants recomputes independently
     "ann_ivf" ->
-      """SELECT CAST(10 AS BIGINT) AS n_neighbors, TRUE AS scores_exact,
-        |       TRUE AS scores_descending, TRUE AS recall_floor_met""".stripMargin,
-    "ann_brp_lsh" ->
       """SELECT CAST(10 AS BIGINT) AS n_neighbors, TRUE AS scores_exact,
         |       TRUE AS scores_descending, TRUE AS recall_floor_met""".stripMargin,
     // the nprobe tuning curve's statable contract per probe width:
@@ -2710,41 +2733,13 @@ object SparkEntry {
     // as the ngram family, pairs at rounded Jaccard 1.0); the LSH
     // guarantees land as constants
     "dedup_minhash_mllib" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS tk FROM documents),
-        |sh AS (
-        |  SELECT doc_id, list_distinct([tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-        |                                for i in range(1, len(tk)-1)]) AS sh
-        |  FROM toks),
-        |d AS (SELECT doc_id, sh, len(sh) AS n_sh FROM sh WHERE len(sh) > 0),
-        |e AS (SELECT doc_id, n_sh, unnest(sh) AS s FROM d),
-        |rare AS (SELECT s FROM e GROUP BY s HAVING count(*) <= 1000),
-        |er AS (SELECT e.* FROM e JOIN rare USING (s)),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |         a.n_sh AS n_a, b.n_sh AS n_b, count(*) AS inter
-        |  FROM er a JOIN er b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1,2,3,4)
+      s"""WITH $rareShinglePairsCte
         |SELECT count(*) AS n_exact_dup_pairs,
         |       TRUE AS exact_dups_all_found, TRUE AS sims_in_range
         |FROM pairs
         |WHERE floor((inter::DOUBLE / (n_a + n_b - inter)) * 10000 + 0.5)/10000 >= 1.0""".stripMargin,
     "dedup_ngram_jaccard" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS tk FROM documents),
-        |sh AS (
-        |  SELECT doc_id, list_distinct([tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-        |                                for i in range(1, len(tk)-1)]) AS sh
-        |  FROM toks),
-        |d AS (SELECT doc_id, sh, len(sh) AS n_sh FROM sh WHERE len(sh) > 0),
-        |e AS (SELECT doc_id, n_sh, unnest(sh) AS s FROM d),
-        |rare AS (SELECT s FROM e GROUP BY s HAVING count(*) <= 1000),
-        |er AS (SELECT e.* FROM e JOIN rare USING (s)),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |         a.n_sh AS n_a, b.n_sh AS n_b, count(*) AS inter
-        |  FROM er a JOIN er b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1,2,3,4)
+      s"""WITH $rareShinglePairsCte
         |SELECT doc_a, doc_b,
         |       floor((inter::DOUBLE / (n_a + n_b - inter)) * 10000 + 0.5)/10000 AS jaccard
         |FROM pairs
@@ -2753,21 +2748,7 @@ object SparkEntry {
     // rare-shingle candidate pairs — catches doc-in-doc duplication that
     // symmetric Jaccard (and minhash banding) structurally miss
     "dedup_ngram_containment" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS tk FROM documents),
-        |sh AS (
-        |  SELECT doc_id, list_distinct([tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-        |                                for i in range(1, len(tk)-1)]) AS sh
-        |  FROM toks),
-        |d AS (SELECT doc_id, sh, len(sh) AS n_sh FROM sh WHERE len(sh) > 0),
-        |e AS (SELECT doc_id, n_sh, unnest(sh) AS s FROM d),
-        |rare AS (SELECT s FROM e GROUP BY s HAVING count(*) <= 1000),
-        |er AS (SELECT e.* FROM e JOIN rare USING (s)),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |         a.n_sh AS n_a, b.n_sh AS n_b, count(*) AS inter
-        |  FROM er a JOIN er b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1,2,3,4)
+      s"""WITH $rareShinglePairsCte
         |SELECT doc_a, doc_b,
         |       floor((inter::DOUBLE / least(n_a, n_b)) * 10000 + 0.5)/10000 AS containment
         |FROM pairs
@@ -2790,11 +2771,6 @@ object SparkEntry {
          |SELECT CAST(coalesce(count(*), 0) AS BIGINT) AS hot_bands,
          |       CAST(coalesce(sum(n_docs), 0) AS BIGINT) AS docs_in_hot_bands
          |FROM hot""".stripMargin,
-    // The streaming stateful variant emits exactly the batch pair set over
-    // a finite replay (see DedupStream.minhashPairs) — same oracle.
-    "dedup_minhash_streaming" ->
-      s"""WITH $minhashPairsCte
-         |SELECT doc_a, doc_b, jaccard FROM j WHERE jaccard >= 0.3""".stripMargin,
     // Trailing-window variant: event time is timestamp_seconds(doc_id+86400)
     // (one doc per second in id order; the shift keeps doc 0 off epoch 0,
     // which stateful ops always drop as late), so the |Δts| ≤ 200 s window
@@ -2809,35 +2785,13 @@ object SparkEntry {
     // closure, the cluster representative is the component-min doc_id —
     // the oracle for the engine's star-contraction components.
     "dedup_clusters" ->
-      s"""WITH RECURSIVE $minhashPairsCte,
-         |jp AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jp
-         |  UNION
-         |  SELECT doc_b AS src, doc_a AS dst FROM jp),
-         |walk(id, r) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT w.id, e.dst FROM walk w JOIN edges e ON w.r = e.src),
-         |reps AS (
-         |  SELECT id, least(id, min(r)) AS rep FROM walk GROUP BY id)
+      s"""WITH RECURSIVE $minhashClosureCtes
          |SELECT id AS doc_id, rep AS cluster_rep,
          |       count(*) OVER (PARTITION BY rep) AS cluster_size
          |FROM reps""".stripMargin,
     // cluster-size distribution over the same recursive closure
     "dedup_cluster_histogram" ->
-      s"""WITH RECURSIVE $minhashPairsCte,
-         |jp AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jp
-         |  UNION
-         |  SELECT doc_b AS src, doc_a AS dst FROM jp),
-         |walk(id, r) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT w.id, e.dst FROM walk w JOIN edges e ON w.r = e.src),
-         |reps AS (
-         |  SELECT id, least(id, min(r)) AS rep FROM walk GROUP BY id),
+      s"""WITH RECURSIVE $minhashClosureCtes,
          |sizes AS (SELECT rep, count(*) AS cluster_size FROM reps GROUP BY rep)
          |SELECT cluster_size, count(*) AS n_clusters,
          |       cluster_size * count(*) AS n_docs
@@ -2845,21 +2799,8 @@ object SparkEntry {
     // leakage-safe holdout: same recursive closure for the reps, then the
     // md5-mod-5 split replayed digit by digit
     "split_cluster_holdout" -> {
-      val nibbles = (0 until 12)
-        .map(i => s"(strpos('0123456789abcdef', substr(hx, ${i + 1}, 1)) - 1) * ${math.pow(16, 11 - i).toLong}.0")
-        .mkString(" +\n           ")
-      s"""WITH RECURSIVE $minhashPairsCte,
-         |jp AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jp
-         |  UNION
-         |  SELECT doc_b AS src, doc_a AS dst FROM jp),
-         |walk(id, r) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT w.id, e.dst FROM walk w JOIN edges e ON w.r = e.src),
-         |reps AS (
-         |  SELECT id, least(id, min(r)) AS rep FROM walk GROUP BY id),
+      val nibbles = md5Nibbles48Sql("hx")
+      s"""WITH RECURSIVE $minhashClosureCtes,
          |lab AS (
          |  SELECT d.doc_id, coalesce(r.rep, d.doc_id) AS rep
          |  FROM documents d LEFT JOIN reps r ON d.doc_id = r.id),
@@ -2912,18 +2853,7 @@ object SparkEntry {
     // (ties to min doc_id) is kept per cluster, singletons keep
     // themselves. Same recursive closure, then an argmax row_number.
     "dedup_cluster_resolve" ->
-      s"""WITH RECURSIVE $minhashPairsCte,
-         |jp AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jp
-         |  UNION
-         |  SELECT doc_b AS src, doc_a AS dst FROM jp),
-         |walk(id, r) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT w.id, e.dst FROM walk w JOIN edges e ON w.r = e.src),
-         |reps AS (
-         |  SELECT id, least(id, min(r)) AS rep FROM walk GROUP BY id),
+      s"""WITH RECURSIVE $minhashClosureCtes,
          |alldocs AS (
          |  SELECT d.doc_id,
          |         coalesce(reps.rep, d.doc_id) AS cluster_rep,
@@ -3084,16 +3014,7 @@ object SparkEntry {
     "emb_neardup_clusters" ->
       s"""WITH RECURSIVE $embLshPairsCte,
          |jp AS (SELECT vec_a, vec_b FROM p WHERE cos_sim >= 0.35),
-         |edges AS (
-         |  SELECT vec_a AS src, vec_b AS dst FROM jp
-         |  UNION
-         |  SELECT vec_b AS src, vec_a AS dst FROM jp),
-         |walk(id, r) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT w.id, e.dst FROM walk w JOIN edges e ON w.r = e.src),
-         |reps AS (
-         |  SELECT id, least(id, min(r)) AS rep FROM walk GROUP BY id)
+         |${pairClosureCtes("vec_a", "vec_b")}
          |SELECT id AS vec_id, rep AS cluster_rep,
          |       count(*) OVER (PARTITION BY rep) AS cluster_size
          |FROM reps""".stripMargin,
@@ -3222,9 +3143,7 @@ object SparkEntry {
     // k-th digest's first 12 nibbles parsed with the same strpos
     // arithmetic the simhash oracle uses, one exact-double division
     "sketch_kmv_distinct" -> {
-      val nibbles = (0 until 12)
-        .map(i => s"(strpos('0123456789abcdef', substr(hk, ${i + 1}, 1)) - 1) * ${math.pow(16, 11 - i).toLong}.0")
-        .mkString(" +\n         ")
+      val nibbles = md5Nibbles48Sql("hk")
       s"""WITH v AS (
          |  SELECT DISTINCT l_returnflag AS g, md5(CAST(l_partkey AS VARCHAR)) AS h
          |  FROM lineitem),
@@ -3330,13 +3249,7 @@ object SparkEntry {
     // snapshot B DIRECTLY — the engine reconstructs B by applying the
     // derived changes feed to A, so the hash match is the CDC-apply proof
     "merge_apply_roundtrip" ->
-      """WITH b AS (
-        |  SELECT doc_id, source,
-        |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text
-        |  FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1099511627776 AS doc_id, source, text
-        |  FROM documents WHERE doc_id % 13 = 0)
+      s"""WITH $snapshotBCte
         |SELECT source, count(*) AS n_docs,
         |       CAST(sum(length(text)) AS BIGINT) AS total_chars,
         |       min(md5(text)) AS min_digest,
@@ -3346,16 +3259,8 @@ object SparkEntry {
     // three per-bucket accumulators (count, mod-2^48 id sum, mod-2^48
     // content-digest sum), then states the diverged buckets
     "replica_antientropy_diff" -> {
-      val nibbles = (0 until 12)
-        .map(i => s"(strpos('0123456789abcdef', substr(hx, ${i + 1}, 1)) - 1) * ${math.pow(16, 11 - i).toLong}.0")
-        .mkString(" +\n           ")
-      s"""WITH b AS (
-         |  SELECT doc_id, source,
-         |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text
-         |  FROM documents WHERE doc_id % 7 <> 0
-         |  UNION ALL
-         |  SELECT doc_id + 1099511627776 AS doc_id, source, text
-         |  FROM documents WHERE doc_id % 13 = 0),
+      val nibbles = md5Nibbles48Sql("hx")
+      s"""WITH $snapshotBCte,
          |ha AS (
          |  SELECT CAST(doc_id % 32 AS INT) AS bucket, doc_id,
          |         md5(coalesce(source, chr(1)) || '|' || coalesce(text, chr(1))) AS hx
@@ -3389,74 +3294,12 @@ object SparkEntry {
         |       min(md5(text)) AS min_digest,
         |       max(md5(text)) AS max_digest
         |FROM documents GROUP BY source""".stripMargin,
-    // multi-batch CDC gates: the oracle derives snapshot C (the second
-    // hop) as a nested CTE over the same B derivation — doc_id % 5
-    // dropped, ' v2' appended where % 9 (null text stays null on both
-    // engines), % 21 re-added under +2^41 — and states rollup(C)
-    // directly. Sequential-apply and compacted-apply are two independent
-    // engine paths against this ONE oracle.
-    "merge_apply_multibatch" ->
-      """WITH b AS (
-          |  SELECT doc_id, source,
-          |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text
-          |  FROM documents WHERE doc_id % 7 <> 0
-          |  UNION ALL
-          |  SELECT doc_id + 1099511627776 AS doc_id, source, text
-          |  FROM documents WHERE doc_id % 13 = 0),
-          |c AS (
-          |  SELECT doc_id, source,
-          |         CASE WHEN doc_id % 9 = 0 THEN text || ' v2' ELSE text END AS text
-          |  FROM b WHERE doc_id % 5 <> 0
-          |  UNION ALL
-          |  SELECT doc_id + 2199023255552 AS doc_id, source, text
-          |  FROM b WHERE doc_id % 21 = 0)
-          |SELECT source, count(*) AS n_docs,
-          |       CAST(coalesce(sum(length(text)), 0) AS BIGINT) AS total_chars,
-          |       min(md5(text)) AS min_digest,
-          |       max(md5(text)) AS max_digest
-          |FROM c GROUP BY source""".stripMargin,
-    "merge_apply_compacted" ->
-      """WITH b AS (
-          |  SELECT doc_id, source,
-          |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text
-          |  FROM documents WHERE doc_id % 7 <> 0
-          |  UNION ALL
-          |  SELECT doc_id + 1099511627776 AS doc_id, source, text
-          |  FROM documents WHERE doc_id % 13 = 0),
-          |c AS (
-          |  SELECT doc_id, source,
-          |         CASE WHEN doc_id % 9 = 0 THEN text || ' v2' ELSE text END AS text
-          |  FROM b WHERE doc_id % 5 <> 0
-          |  UNION ALL
-          |  SELECT doc_id + 2199023255552 AS doc_id, source, text
-          |  FROM b WHERE doc_id % 21 = 0)
-          |SELECT source, count(*) AS n_docs,
-          |       CAST(coalesce(sum(length(text)), 0) AS BIGINT) AS total_chars,
-          |       min(md5(text)) AS min_digest,
-          |       max(md5(text)) AS max_digest
-          |FROM c GROUP BY source""".stripMargin,
-    // checkpointed apply — the THIRD independent engine path to snapshot
-    // C (stored checkpoint of B + Δ₂), against the same rollup(C) oracle
-    "merge_apply_checkpointed" ->
-      """WITH b AS (
-          |  SELECT doc_id, source,
-          |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text
-          |  FROM documents WHERE doc_id % 7 <> 0
-          |  UNION ALL
-          |  SELECT doc_id + 1099511627776 AS doc_id, source, text
-          |  FROM documents WHERE doc_id % 13 = 0),
-          |c AS (
-          |  SELECT doc_id, source,
-          |         CASE WHEN doc_id % 9 = 0 THEN text || ' v2' ELSE text END AS text
-          |  FROM b WHERE doc_id % 5 <> 0
-          |  UNION ALL
-          |  SELECT doc_id + 2199023255552 AS doc_id, source, text
-          |  FROM b WHERE doc_id % 21 = 0)
-          |SELECT source, count(*) AS n_docs,
-          |       CAST(coalesce(sum(length(text)), 0) AS BIGINT) AS total_chars,
-          |       min(md5(text)) AS min_digest,
-          |       max(md5(text)) AS max_digest
-          |FROM c GROUP BY source""".stripMargin,
+    // multi-batch CDC gates: sequential, compacted and checkpointed apply
+    // (stored checkpoint of B + Δ₂) are three independent engine paths to
+    // snapshot C, against ONE rollup(C) oracle
+    "merge_apply_multibatch" -> rollupOfCSql,
+    "merge_apply_compacted" -> rollupOfCSql,
+    "merge_apply_checkpointed" -> rollupOfCSql,
     // maintained rollup through BOTH batches — same C derivation, stated
     // in the rollupStats shape (mod-2^48 BIGINT digest sums)
     "agg_incremental_rollup_multi" -> rollupOfCMaintainedSql,
@@ -3467,20 +3310,7 @@ object SparkEntry {
     // purge: the oracle derives C and filters AFTER the fact — a hash
     // match proves purging base+changelog commutes with reconstruction
     "retention_purge" ->
-      """WITH b AS (
-        |  SELECT doc_id, source,
-        |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text
-        |  FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1099511627776 AS doc_id, source, text
-        |  FROM documents WHERE doc_id % 13 = 0),
-        |c AS (
-        |  SELECT doc_id, source,
-        |         CASE WHEN doc_id % 9 = 0 THEN text || ' v2' ELSE text END AS text
-        |  FROM b WHERE doc_id % 5 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 2199023255552 AS doc_id, source, text
-        |  FROM b WHERE doc_id % 21 = 0)
+      s"""WITH $snapshotBCCtes
         |SELECT source, count(*) AS n_docs,
         |       CAST(coalesce(sum(length(text)), 0) AS BIGINT) AS total_chars,
         |       min(md5(text)) AS min_digest,
@@ -3491,23 +3321,8 @@ object SparkEntry {
     // its own A/B/C derivations — same nibble digest arithmetic as the
     // maintained-rollup oracles, mod-2^48 BIGINT digest sums
     "time_travel_history" -> {
-      val nibbles = (0 until 12)
-        .map(i => s"(strpos('0123456789abcdef', substr(hx, ${i + 1}, 1)) - 1) * ${math.pow(16, 11 - i).toLong}.0")
-        .mkString(" + ")
-      s"""WITH b AS (
-         |  SELECT doc_id, source,
-         |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text
-         |  FROM documents WHERE doc_id % 7 <> 0
-         |  UNION ALL
-         |  SELECT doc_id + 1099511627776 AS doc_id, source, text
-         |  FROM documents WHERE doc_id % 13 = 0),
-         |c AS (
-         |  SELECT doc_id, source,
-         |         CASE WHEN doc_id % 9 = 0 THEN text || ' v2' ELSE text END AS text
-         |  FROM b WHERE doc_id % 5 <> 0
-         |  UNION ALL
-         |  SELECT doc_id + 2199023255552 AS doc_id, source, text
-         |  FROM b WHERE doc_id % 21 = 0),
+      val nibbles = md5Nibbles48Sql("hx")
+      s"""WITH $snapshotBCCtes,
          |h0 AS (SELECT text, md5(text) AS hx FROM documents),
          |h1 AS (SELECT text, md5(text) AS hx FROM b),
          |h2 AS (SELECT text, md5(text) AS hx FROM c)
@@ -3666,16 +3481,8 @@ object SparkEntry {
     // now an exactly-float-representable int64 on both sides; char sums
     // coalesce to 0 to match the engine's non-null maintenance contract
     "agg_incremental_rollup" -> {
-      val nibbles = (0 until 12)
-        .map(i => s"(strpos('0123456789abcdef', substr(hx, ${i + 1}, 1)) - 1) * ${math.pow(16, 11 - i).toLong}.0")
-        .mkString(" +\n           ")
-      s"""WITH b AS (
-         |  SELECT doc_id, source,
-         |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text
-         |  FROM documents WHERE doc_id % 7 <> 0
-         |  UNION ALL
-         |  SELECT doc_id + 1099511627776 AS doc_id, source, text
-         |  FROM documents WHERE doc_id % 13 = 0),
+      val nibbles = md5Nibbles48Sql("hx")
+      s"""WITH $snapshotBCte,
          |h AS (SELECT source, text, md5(text) AS hx FROM b)
          |SELECT source, count(*) AS n_docs,
          |       CAST(coalesce(sum(length(text)), 0) AS BIGINT) AS total_chars,
@@ -3689,9 +3496,6 @@ object SparkEntry {
     // oracle's shape) — same exact nibble arithmetic, one IEEE division;
     // the equality flag is computed from the two restatements, not assumed
     "sketch_kmv_merge" -> {
-      def nib(c: String) = (0 until 12)
-        .map(i => s"(strpos('0123456789abcdef', substr($c, ${i + 1}, 1)) - 1) * ${math.pow(16, 11 - i).toLong}.0")
-        .mkString(" +\n           ")
       s"""WITH v AS (
          |  SELECT DISTINCT source, md5(text) AS h
          |  FROM documents WHERE text IS NOT NULL),
@@ -3708,7 +3512,7 @@ object SparkEntry {
          |mk AS (SELECT h AS hk FROM mr WHERE rn = 32),
          |me AS (
          |  SELECT CASE WHEN k.hk IS NULL THEN CAST(b.sz AS DOUBLE)
-         |              ELSE 31.0 * 281474976710656.0 / (${nib("k.hk")})
+         |              ELSE 31.0 * 281474976710656.0 / (${md5Nibbles48Sql("k.hk")})
          |         END AS e
          |  FROM mb b LEFT JOIN mk k ON TRUE),
          |d AS (SELECT DISTINCT h FROM v),
@@ -3720,7 +3524,7 @@ object SparkEntry {
          |dk AS (SELECT h AS hk FROM dr WHERE rn = 32),
          |de AS (
          |  SELECT CASE WHEN k.hk IS NULL THEN CAST(b.sz AS DOUBLE)
-         |              ELSE 31.0 * 281474976710656.0 / (${nib("k.hk")})
+         |              ELSE 31.0 * 281474976710656.0 / (${md5Nibbles48Sql("k.hk")})
          |         END AS e
          |  FROM db b LEFT JOIN dk k ON TRUE)
          |SELECT (SELECT count(DISTINCT source) FROM documents) AS n_sources,
@@ -4016,13 +3820,7 @@ object SparkEntry {
     // derives it; the diff compares md5 digests, so "a %11 doc whose text
     // has no letters stays unchanged" falls out identically on both sides
     "snapshot_diff_stats" ->
-      """WITH b AS (
-        |  SELECT doc_id, source,
-        |         CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END AS text
-        |  FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1099511627776 AS doc_id, source, text
-        |  FROM documents WHERE doc_id % 13 = 0),
+      s"""WITH $snapshotBCte,
         |da AS (SELECT doc_id, source AS src_a, md5(text) AS dig_a FROM documents),
         |db AS (SELECT doc_id, source AS src_b, md5(text) AS dig_b FROM b),
         |d AS (

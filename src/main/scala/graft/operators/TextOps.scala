@@ -581,10 +581,7 @@ object TextOps {
     while (i < seqs.length) { addPairs(seqs(i), freqs(i)); i += 1 }
 
     // (cnt desc, pair asc-by-UTF-8-bytes) — the cluster orderBy verbatim
-    def utf8Less(a: String, b: String): Boolean =
-      java.util.Arrays.compareUnsigned(
-        a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
+    import graft.sources.ParquetStats.utf8Less
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var r = 1
     var exhausted = false

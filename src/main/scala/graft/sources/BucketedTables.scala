@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.core.{GenerationCache, Tables}
 import graft.functions.NumericFunctions.{decSum, roundN}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,13 +32,43 @@ object BucketedTables {
 
   def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
 
-  /** One bucketed (lineitem, orders) table pair per input dir per JVM —
-    * the write-once/read-many amortization IS the point of bucketing, so
+  /** One bucketed catalog table per (input dir, fixture generation, table)
+    * — the write-once/read-many amortization IS the point of bucketing, so
     * repeated calls (Verify + Bench min-of-2) pay the bucketed write once
-    * and each re-run measures the exchange-free read path.
+    * and each re-run measures the exchange-free read path. A regenerated
+    * fixture misses and writes a new table; the replaced one is dropped.
     */
-  private val bucketedPair =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  private val bucketed = new GenerationCache[String, String](
+    name => s"$name.parquet",
+    table => { SparkSession.active.sql(s"DROP TABLE IF EXISTS $table"); () })
+  private val bucketedSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** `df`, read from fixture `name`, as a catalog table of 8 buckets
+    * sorted by `key`.
+    */
+  private def bucketedTable(t: Tables, name: String, key: String)(
+      df: => DataFrame): String =
+    bucketed(t.dir, name) {
+      val spark = t.spark
+      // md5 of the path, not hashCode: two input dirs with colliding
+      // hashCodes in one JVM must not silently share bucketed tables; the
+      // sequence number keeps a regeneration's table apart from the one
+      // it replaces
+      val suffix = java.security.MessageDigest.getInstance("MD5")
+        .digest(t.dir.getBytes("UTF-8"))
+        .take(8).map("%02x".format(_)).mkString
+      val table = s"graft_${name}_bucketed_${suffix}_${bucketedSeq.getAndIncrement()}"
+      // the default in-memory catalog forgets tables at JVM exit but
+      // leaves their warehouse directories; a stale location makes the
+      // next JVM's CREATE fail (LOCATION_ALREADY_EXISTS) — sweep it (a
+      // failed delete warns on stderr: the only trace of why the CREATE
+      // below would then die)
+      val wh = java.net.URI.create(spark.conf.get("spark.sql.warehouse.dir")).getPath
+      if (!spark.catalog.tableExists(table))
+        Tables.deleteRecursively(java.nio.file.Paths.get(wh, table).toString)
+      writeBucketed(df, table, key, 8, Seq(key))
+      table
+    }
 
   /** The exchange-free twin of [[graft.operators.JoinOps.revenueByPriority]]
     * (same result, same oracle shape): both join sides written bucketed +
@@ -47,33 +78,12 @@ object BucketedTables {
     * the plan shape; this gate proves the co-located plan computes the
     * identical result to the shuffled one.
     */
-  def revenueByPriorityBucketed(t: graft.core.Tables): DataFrame = {
+  def revenueByPriorityBucketed(t: Tables): DataFrame = {
     val spark = t.spark
-    val (lt, ot) = bucketedPair.getOrElseUpdate(t.dir, {
-      // md5 of the path, not hashCode: two input dirs with colliding
-      // hashCodes in one JVM must not silently share bucketed tables
-      val suffix = java.security.MessageDigest.getInstance("MD5")
-        .digest(t.dir.getBytes("UTF-8"))
-        .take(8).map("%02x".format(_)).mkString
-      val lti = s"graft_li_bucketed_$suffix"
-      val oti = s"graft_ord_bucketed_$suffix"
-      // the default in-memory catalog forgets tables at JVM exit but
-      // leaves their warehouse directories; a stale location makes the
-      // next JVM's CREATE fail (LOCATION_ALREADY_EXISTS) — sweep it (a
-      // failed delete warns on stderr: the only trace of why the CREATE
-      // below would then die)
-      val wh = java.net.URI.create(spark.conf.get("spark.sql.warehouse.dir")).getPath
-      Seq(lti, oti).filterNot(spark.catalog.tableExists).foreach { name =>
-        graft.core.Tables.deleteRecursively(java.nio.file.Paths.get(wh, name).toString)
-      }
-      writeBucketed(
-        t.lineitem.select("l_orderkey", "l_extendedprice", "l_discount"),
-        lti, "l_orderkey", 8, Seq("l_orderkey"))
-      writeBucketed(
-        t.orders.select("o_orderkey", "o_orderpriority"),
-        oti, "o_orderkey", 8, Seq("o_orderkey"))
-      (lti, oti)
-    })
+    val lt = bucketedTable(t, "lineitem", "l_orderkey")(
+      t.lineitem.select("l_orderkey", "l_extendedprice", "l_discount"))
+    val ot = bucketedTable(t, "orders", "o_orderkey")(
+      t.orders.select("o_orderkey", "o_orderpriority"))
     table(spark, lt)
       .join(table(spark, ot), col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_orderpriority")

@@ -259,19 +259,13 @@ object ParquetStats {
     * binary collation for VARCHAR min/max, so cross-row-group aggregation
     * agrees with both independent implementations on non-ASCII data too
     * (String.compareTo's UTF-16 code-unit order would diverge above
-    * U+FFFF).
+    * U+FFFF). Also Spark's string ordering, so driver-side loops that
+    * replay a cluster `orderBy` tie-break with it.
     */
-  private def utf8Less(a: String, b: String): Boolean = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    x.length < y.length
-  }
+  def utf8Less(a: String, b: String): Boolean =
+    java.util.Arrays.compareUnsigned(
+      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
 
   /** [[footerStats]] generalized past INT64: one row per (file, column)
     * with min/max carried in the TYPED column pair matching the parquet

@@ -100,8 +100,8 @@ object CdcStream {
         publish(staged1, "b1")
         q.processAllAvailable()
         publish(staged2, "b2")
-        q.processAllAvailable()
-      } finally q.stop()
+        StreamMeter.drain(q, "agg_incremental_rollup_streamed")
+      } finally if (q.isActive) q.stop()
 
       // the gate's output is the FINAL stored version — localized (the
       // rollup is #sources rows) so the temp state can be reclaimed

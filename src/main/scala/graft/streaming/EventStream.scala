@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.Tables
+import graft.core.{GenerationCache, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.NumericFunctions.{decSum, roundN}
 import org.apache.spark.sql.functions._
@@ -83,18 +83,16 @@ object EventStream {
       .orderBy("w_start")
   }
 
-  /** One (output, checkpoint) temp-dir pair per INPUT dir per JVM, deleted
-    * on exit. Keyed by input dir because the checkpoint tracks consumed
-    * source files: reusing it for the same input makes replays no-ops (the
-    * committed output is simply re-read — idempotent under Bench's
-    * min-of-2), while a different input dir must get a fresh checkpoint or
-    * its rows would APPEND onto the previous corpus's output.
+  /** One temp dir holding the sink's `out` and `ckpt` dirs per (input dir,
+    * events generation), deleted on eviction or exit. The checkpoint tracks
+    * consumed source files: reusing it for the same input makes replays
+    * no-ops (the committed output is simply re-read — idempotent under
+    * Bench's min-of-2), while a different input dir or a regenerated
+    * `events.parquet` gets a fresh pair, or its rows would APPEND onto the
+    * previous corpus's output (or be skipped as already seen).
     */
   private val fileSinkDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-  private def fileSinkDirsFor(dir: String): (String, String) =
-    fileSinkDirs.getOrElseUpdate(dir,
-      (Tables.scratchDir("graft_fsink_out_"), Tables.scratchDir("graft_fsink_ckpt_")))
+    GenerationCache.dirs[Unit]("events.parquet", "graft_fsink_")
 
   /** Streaming parquet FILE sink roundtrip — the continuous-ingest landing
     * path (readStream → stateless transform → exactly-once parquet files).
@@ -106,16 +104,17 @@ object EventStream {
     * from a replayed micro-batch after recovery) breaks the match.
     */
   def fileSinkRoundtrip(t: Tables): DataFrame = {
-    val (outDir, ckptDir) = fileSinkDirsFor(t.dir)
+    val sinkDir = fileSinkDirs(t.dir, ())(_ => ())
+    val outDir = s"$sinkDir/out"
     val q = t.eventsStream
       .select("event_id", "event_type", "value")
       .writeStream
       .format("parquet")
       .option("path", outDir)
-      .option("checkpointLocation", ckptDir)
+      .option("checkpointLocation", s"$sinkDir/ckpt")
       .outputMode(OutputMode.Append())
       .start()
-    // the checkpoint is REUSED per input dir, so every call after the
+    // the checkpoint is REUSED per input generation, so every call after the
     // first is a resumed run (batch ids continue mid-sequence) — the
     // meter must not recover a capped count from the final batch id
     StreamMeter.drain(q, "events_file_sink", resumed = true)

@@ -15,7 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * hand are `Tables.scratchDir`'s and the few that delete their own.
   * Every local session starts from `core.LocalSession.builder`, and
   * every fixture table is opened by `core.Tables`. Memory sinks are
-  * started and named in one place, `StreamMeter.toMemory`.
+  * started and named in one place, `StreamMeter.toMemory`. Each shared
+  * oracle derivation (snapshot B/C, the pair-closure walk, the stopword
+  * list, the word 3-gram, the 2-place decimal round-sum) is written once,
+  * as a named fragment in `SparkEntry`.
   */
 class SourceLintSpec extends AnyFunSuite {
   import scala.jdk.CollectionConverters._
@@ -138,5 +141,23 @@ class SourceLintSpec extends AnyFunSuite {
       "run memory-sink gates through StreamMeter.toMemory")
     assert(sites(".queryName(") == runner,
       "StreamMeter.toMemory names every sink")
+  }
+
+  test("each shared oracle derivation is written once, in SparkEntry") {
+    // a second copy of one of these is the same decision stated twice,
+    // free to drift; interpolate SparkEntry's named fragment instead
+    val fragments = Seq(
+      "doc_id % 11 = 0 THEN upper(text)",                         // snapshotBCte
+      "doc_id % 9 = 0 THEN text || ' v2'",                        // snapshotBCCtes
+      "SELECT w.id, e.dst FROM walk w JOIN edges e ON w.r = e.src", // pairClosureCtes
+      "['the','a','an','of','and','to','in','is','it','for']",    // intakeStopwordsSql
+      "tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]",                // shingle3Sql
+      "AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100")        // decSumRound2Sql
+    val copies = fragments.map { frag =>
+      frag -> sources.map { case (f, text) =>
+        f -> java.util.regex.Pattern.quote(frag).r.findAllIn(text).size }
+        .filter(_._2 > 0).toMap
+    }.filter(_._2 != Map("graft/SparkEntry.scala" -> 1))
+    assert(copies.isEmpty, s"oracle derivations written more than once: $copies")
   }
 }

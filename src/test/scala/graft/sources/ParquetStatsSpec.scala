@@ -129,6 +129,14 @@ class ParquetStatsSpec extends SparkTestBase {
       "column absent from every row group must not read stats_complete=true")
   }
 
+  test("utf8Less is UTF-8 byte order: a supplementary character sorts after a BMP one") {
+    val bmp = "\uFF5E"        // UTF-8 EF BD 9E
+    val supp = "\uD83D\uDE00" // U+1F600, UTF-8 F0 9F 98 80
+    assert(supp.compareTo(bmp) < 0, "UTF-16 order is the one that differs")
+    assert(ParquetStats.utf8Less(bmp, supp) && !ParquetStats.utf8Less(supp, bmp))
+    assert(ParquetStats.utf8Less("a", "ab") && !ParquetStats.utf8Less("a", "a"))
+  }
+
   test("typed footer stats match a full data scan for string, double and timestamp columns") {
     val stats = ParquetStats.ordersFooterStatsTyped(t).collect()
       .map(r => r.getString(1) -> r).toMap

@@ -18,5 +18,8 @@ class CdcStreamSpec extends SparkTestBase {
     assert(streamed.exceptAll(batch).isEmpty &&
       batch.exceptAll(streamed).isEmpty)
     assert(streamed.count() > 0)
+    // both published batches drain through the meter under the gate name
+    assert(StreamMeter.snapshot.get("agg_incremental_rollup_streamed")
+      .map(_.dataBatches).contains(2))
   }
 }
