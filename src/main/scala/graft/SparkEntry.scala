@@ -1026,6 +1026,99 @@ object SparkEntry {
       |                     / (a.nrm*b.nrm) END) * 1000000 + 0.5)/1000000 AS cos_sim
       |  FROM n a JOIN n b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)""".stripMargin
 
+  /** The 2 h / 1 h sliding windows: each event under the two
+    * epoch-aligned hourly starts covering it. Ends with relation
+    * `e(win_start, event_type, value)`.
+    */
+  private val slidingWindowsCte: String =
+    """e AS (
+      |  SELECT unnest([date_trunc('hour', ts),
+      |                 date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS win_start,
+      |         event_type, value
+      |  FROM events)""".stripMargin
+
+  /** The interval-join windows: the 20 busiest hours (ties by hour), each
+    * widened to [h + 10 min, h + 100 min). Ends with relation
+    * `w(w_start, w_end)`.
+    */
+  private val busyWindowsCtes: String =
+    """busy AS (
+      |  SELECT date_trunc('hour', ts) AS h, count(*) AS n
+      |  FROM events GROUP BY 1 ORDER BY n DESC, h ASC LIMIT 20),
+      |w AS (
+      |  SELECT h + INTERVAL 10 MINUTE AS w_start,
+      |         h + INTERVAL 100 MINUTE AS w_end
+      |  FROM busy)""".stripMargin
+
+  /** Native session windows at µs precision: a gap >= 30 min starts a
+    * new session (the half-open [first, last + gap) break). Ends with
+    * relation `s(user_id, ts, value, brk, sid)`.
+    */
+  private val nativeSessionCtes: String =
+    """g AS (
+      |  SELECT user_id, ts, value,
+      |         CASE WHEN lag(ts) OVER w IS NULL
+      |              OR epoch_ns(ts) // 1000 - epoch_ns(lag(ts) OVER w) // 1000
+      |                 >= 1800000000 THEN 1 ELSE 0 END AS brk
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+      |s AS (
+      |  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
+      |                           ROWS UNBOUNDED PRECEDING) AS sid
+      |  FROM g)""".stripMargin
+
+  /** Sessionize's break flag at whole-second resolution: a gap of more
+    * than 1800 s starts a new session, ties ordered by event_id. Ends
+    * with relation `g(user_id, event_id, value, ts, brk)`.
+    */
+  private val sessionBreaksCte: String =
+    """g AS (
+      |  SELECT user_id, event_id, value, ts,
+      |         CASE WHEN lag(ts) OVER w IS NULL
+      |              OR CAST(floor(epoch(ts)) AS BIGINT)
+      |                 - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
+      |              THEN 1 ELSE 0 END AS brk
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC))""".stripMargin
+
+  /** Per-document quality inputs by language: token count, character
+    * count and stopword ratio. Ends with relations `s` and
+    * `m(lang, nt, nchars, sw)`.
+    */
+  private val langQualityCtes: String =
+    s"""s AS (
+       |  SELECT lang, string_split_regex(text, '\\s+') AS tk,
+       |         length(text)::DOUBLE AS nchars
+       |  FROM documents),
+       |m AS (
+       |  SELECT lang, len(tk)::DOUBLE AS nt, nchars,
+       |         CASE WHEN len(tk)=0 THEN 0.0
+       |              ELSE len(list_filter(tk, t -> list_contains(
+       |                $intakeStopwordsSql, t)))::DOUBLE
+       |                / len(tk) END AS sw
+       |  FROM s)""".stripMargin
+
+  /** The adaptive LSH sign-bit count (SimilarityOps.adaptiveSignBits in
+    * integer SQL): the smallest b in [1, 16] with 128·2^b >= n, else 16.
+    * Ends with relation `p(bits)`.
+    */
+  private val adaptiveSignBitsCte: String =
+    """p AS (
+      |  SELECT coalesce(min(b), 16) AS bits
+      |  FROM range(1, 17) t(b), (SELECT count(*) AS n FROM embeddings) nn
+      |  WHERE 128 * (1 << b) >= n)""".stripMargin
+
+  /** The hash split's bucket: the first two md5 hex digits of each
+    * doc_id's decimal string, as an integer in [0, 256). Ends with
+    * relation `h(n_chars, bucket)`.
+    */
+  private val md5SplitBucketCte: String =
+    """h AS (
+      |  SELECT n_chars,
+      |         (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16 +
+      |         (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) AS bucket
+      |  FROM documents)""".stripMargin
+
   /** MLlib's default English stop-word list (StopWordsRemover resource
     * `org/apache/spark/ml/feature/stopwords/english.txt`, 181 words) MINUS
     * the 50 contractions containing an apostrophe: the recommender's
@@ -1558,26 +1651,14 @@ object SparkEntry {
     // window dimension == the batch interval join minus the distinct-user
     // column (streaming forbids count(DISTINCT))
     "events_interval_join_streaming" ->
-      """WITH busy AS (
-        |  SELECT date_trunc('hour', ts) AS h, count(*) AS n
-        |  FROM events GROUP BY 1 ORDER BY n DESC, h ASC LIMIT 20),
-        |w AS (
-        |  SELECT h + INTERVAL 10 MINUTE AS w_start,
-        |         h + INTERVAL 100 MINUTE AS w_end
-        |  FROM busy)
+      s"""WITH $busyWindowsCtes
         |SELECT w_start, w_end, count(*) AS n_events
         |FROM w JOIN events e ON e.ts >= w_start AND e.ts < w_end
         |GROUP BY w_start, w_end""".stripMargin,
     // interval join: the oracle states the naive range join directly —
     // the engine's bucket-explode equi-join must produce the same matches
     "events_interval_join" ->
-      """WITH busy AS (
-        |  SELECT date_trunc('hour', ts) AS h, count(*) AS n
-        |  FROM events GROUP BY 1 ORDER BY n DESC, h ASC LIMIT 20),
-        |w AS (
-        |  SELECT h + INTERVAL 10 MINUTE AS w_start,
-        |         h + INTERVAL 100 MINUTE AS w_end
-        |  FROM busy)
+      s"""WITH $busyWindowsCtes
         |SELECT w_start, w_end, count(*) AS n_events,
         |       count(DISTINCT e.user_id) AS n_users
         |FROM w JOIN events e ON e.ts >= w_start AND e.ts < w_end
@@ -1620,22 +1701,14 @@ object SparkEntry {
     // sliding 2h/1h windows: each event expands into the two epoch-aligned
     // hourly starts covering it — mirrors Spark's Expand, no self-join
     "events_sliding" ->
-      s"""WITH e AS (
-        |  SELECT unnest([date_trunc('hour', ts),
-        |                 date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS win_start,
-        |         event_type, value
-        |  FROM events)
+      s"""WITH $slidingWindowsCte
         |SELECT win_start, event_type, count(*) AS n,
         |       ${decSumRound2Sql("value")} AS total_value
         |FROM e GROUP BY 1, 2""".stripMargin,
     // append-mode sliding twin: a 2 h-wide window is closed once
     // win_start + 2 h <= max event time − 2 h (µs, <= boundary)
     "events_sliding_streaming_append" ->
-      s"""WITH e AS (
-        |  SELECT unnest([date_trunc('hour', ts),
-        |                 date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS win_start,
-        |         event_type, value
-        |  FROM events)
+      s"""WITH $slidingWindowsCte
         |SELECT win_start, event_type, count(*) AS n,
         |       ${decSumRound2Sql("value")} AS total_value
         |FROM e GROUP BY 1, 2
@@ -1645,17 +1718,7 @@ object SparkEntry {
     // watermark (max event time − 2 h) passes their end — open tails stay
     // in state; µs precision end-to-end
     "events_sessions_native_streaming" ->
-      s"""WITH g AS (
-        |  SELECT user_id, ts, value,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |              OR epoch_ns(ts) // 1000 - epoch_ns(lag(ts) OVER w) // 1000
-        |                 >= 1800000000 THEN 1 ELSE 0 END AS brk
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |s AS (
-        |  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |                           ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM g)
+      s"""WITH $nativeSessionCtes
         |SELECT user_id,
         |       make_timestamp(min(epoch_ns(ts) // 1000)) AS session_start,
         |       make_timestamp(max(epoch_ns(ts) // 1000) + 1800000000) AS session_end,
@@ -1668,17 +1731,7 @@ object SparkEntry {
     // min starts a new session, matching [first, last+gap)); start/end
     // truncated to the engine's µs timestamps
     "events_session_native" ->
-      s"""WITH g AS (
-        |  SELECT user_id, ts, value,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |              OR epoch_ns(ts) // 1000 - epoch_ns(lag(ts) OVER w) // 1000
-        |                 >= 1800000000 THEN 1 ELSE 0 END AS brk
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |s AS (
-        |  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |                           ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM g)
+      s"""WITH $nativeSessionCtes
         |SELECT user_id,
         |       make_timestamp(min(epoch_ns(ts) // 1000)) AS session_start,
         |       make_timestamp(max(epoch_ns(ts) // 1000) + 1800000000) AS session_end,
@@ -1885,14 +1938,7 @@ object SparkEntry {
         |SELECT user_id, last_ms, event_type AS last_type, value AS last_value
         |FROM ranked WHERE rn = 1""".stripMargin,
     "events_sessions" ->
-      s"""WITH g AS (
-        |  SELECT user_id, event_id, value, ts,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |              OR CAST(floor(epoch(ts)) AS BIGINT)
-        |                 - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
-        |              THEN 1 ELSE 0 END AS brk
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
+      s"""WITH $sessionBreaksCte,
         |s AS (
         |  SELECT user_id, value,
         |         CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
@@ -1915,14 +1961,7 @@ object SparkEntry {
     // sub-second parts, so a floor-second max would misclassify a session
     // sitting exactly on the 2h30m boundary.
     "events_sessions_streaming" ->
-      s"""WITH g AS (
-        |  SELECT user_id, event_id, value, ts,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |              OR CAST(floor(epoch(ts)) AS BIGINT)
-        |                 - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
-        |              THEN 1 ELSE 0 END AS brk
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
+      s"""WITH $sessionBreaksCte,
         |s AS (
         |  SELECT user_id, value, ts,
         |         CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
@@ -2251,17 +2290,7 @@ object SparkEntry {
     // replayed (quantile_cont ↔ percentile — the agg_exact_percentiles
     // parity), keep = score >= rounded cutoff on both sides
     "text_quality_calibrated" ->
-      s"""WITH s AS (
-        |  SELECT lang, string_split_regex(text, '\\s+') AS tk,
-        |         length(text)::DOUBLE AS nchars
-        |  FROM documents),
-        |m AS (
-        |  SELECT lang, len(tk)::DOUBLE AS nt, nchars,
-        |         CASE WHEN len(tk)=0 THEN 0.0
-        |              ELSE len(list_filter(tk, t -> list_contains(
-        |                $intakeStopwordsSql, t)))::DOUBLE
-        |                / len(tk) END AS sw
-        |  FROM s),
+      s"""WITH $langQualityCtes,
         |qs AS (
         |  SELECT lang,
         |         floor(((least(nt/50.0, 1.0) + least(sw*5.0, 1.0) +
@@ -2612,17 +2641,7 @@ object SparkEntry {
         |                 for i in range(1, len(tk)-1)]) AS min_shingle_md5
         |FROM toks""".stripMargin,
     "text_quality_by_lang" ->
-      s"""WITH s AS (
-        |  SELECT lang, string_split_regex(text, '\\s+') AS tk,
-        |         length(text)::DOUBLE AS nchars
-        |  FROM documents),
-        |m AS (
-        |  SELECT lang, len(tk)::DOUBLE AS nt, nchars,
-        |         CASE WHEN len(tk)=0 THEN 0.0
-        |              ELSE len(list_filter(tk, t -> list_contains(
-        |                $intakeStopwordsSql, t)))::DOUBLE
-        |                / len(tk) END AS sw
-        |  FROM s),
+      s"""WITH $langQualityCtes,
         |q AS (
         |  SELECT lang, sw,
         |         floor(((least(nt/50.0, 1.0) + least(sw*5.0, 1.0) +
@@ -2949,10 +2968,7 @@ object SparkEntry {
     // dim = 0, where list_aggregate([]) returns NULL (not '') and the
     // inner coalesce keeps the all-zeros bucket the engine emits.
     "ann_knn_join" ->
-      """WITH p AS (
-        |  SELECT coalesce(min(b), 16) AS bits
-        |  FROM range(1, 17) t(b), (SELECT count(*) AS n FROM embeddings) nn
-        |  WHERE 128 * (1 << b) >= n),
+      s"""WITH $adaptiveSignBitsCte,
         |e AS (
         |  SELECT vec_id, [x::DOUBLE for x in embedding] AS emb FROM embeddings),
         |n AS (
@@ -2978,10 +2994,7 @@ object SparkEntry {
     // codes (the ann_quantized quantization CTE): buckets from the raw
     // signs, codes/norms/scores replayed bit-for-bit
     "ann_knn_join_q8" ->
-      """WITH p AS (
-        |  SELECT coalesce(min(b), 16) AS bits
-        |  FROM range(1, 17) t(b), (SELECT count(*) AS n FROM embeddings) nn
-        |  WHERE 128 * (1 << b) >= n),
+      s"""WITH $adaptiveSignBitsCte,
         |e AS (
         |  SELECT vec_id, [x::DOUBLE for x in embedding] AS emb FROM embeddings),
         |qz AS (
@@ -3424,11 +3437,7 @@ object SparkEntry {
     // of every doc_id's decimal string, so each doc's train/val/test
     // assignment must agree, not just the totals
     "split_hash_counts" ->
-      """WITH h AS (
-        |  SELECT n_chars,
-        |         (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16 +
-        |         (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) AS bucket
-        |  FROM documents),
+      s"""WITH $md5SplitBucketCte,
         |s AS (
         |  SELECT CASE WHEN bucket < 205 THEN 'train'
         |              WHEN bucket < 230 THEN 'val'
@@ -3442,11 +3451,7 @@ object SparkEntry {
     // KS-style split-representativeness: same bucketing, equal-width
     // integer grid, cross-multiplied integer ppm gaps — all replayed
     "dq_split_distribution" ->
-      """WITH h AS (
-        |  SELECT n_chars,
-        |         (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16 +
-        |         (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) AS bucket
-        |  FROM documents),
+      s"""WITH $md5SplitBucketCte,
         |s AS (
         |  SELECT CASE WHEN bucket < 205 THEN 'train'
         |              WHEN bucket < 230 THEN 'val'

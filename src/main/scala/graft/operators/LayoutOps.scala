@@ -184,23 +184,14 @@ object LayoutOps {
   // on-disk listing, not a row-count guess.
   // ---------------------------------------------------------------------
 
-  /** Total parquet bytes under `dir` via the RECURSIVE Hadoop FS listing
-    * (the same interface an object store exposes) — data files only, at
-    * any partitioning depth (a Hive-partitioned `dt=.../part-*.parquet`
-    * layout keeps its data one level down; a top-level-only listing would
-    * size it at zero). */
+  /** Total parquet bytes under `dir` via the shared RECURSIVE Hadoop FS
+    * listing ([[graft.sources.ParquetStats.listParquetSizes]]) — data
+    * files only, at any partitioning depth (a Hive-partitioned
+    * `dt=.../part-*.parquet` layout keeps its data one level down; a
+    * top-level-only listing would size it at zero). */
   private[operators] def parquetBytes(spark: org.apache.spark.sql.SparkSession,
-                                      dir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    var sum = 0L
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.getPath.getName.endsWith(".parquet")) sum += s.getLen
-    }
-    sum
-  }
+                                      dir: String): Long =
+    graft.sources.ParquetStats.listParquetSizes(spark, dir).map(_._2).sum
 
   /** Compact `srcDir` into `ceil(bytes/targetBytes)` files.
     *

@@ -1,7 +1,8 @@
 package graft.sources
 
 import graft.core.{GenerationCache, Tables}
-import org.apache.spark.sql.DataFrame
+import graft.functions.NumericFunctions.{decSum, roundN}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Parquet footer statistics as a TABLE — the manifest / zone-map
@@ -14,45 +15,53 @@ import org.apache.spark.sql.functions._
   * [[graft.operators.LayoutOps]]' z-order write exists to sharpen, and
   * the hand-rolled version of Iceberg/Delta manifests).
   *
-  * The stats scan is distributed: the driver lists file paths
-  * (O(#files) strings), executors each open only their partition's
-  * footers via `ParquetFileReader` — so a million-file corpus reads a
-  * million footers across the cluster, not through the driver.
+  * Every footer read is one distributed sweep ([[footerSweep]]): the
+  * driver lists file paths (O(#files) strings), executors each open only
+  * their partition's footers — a million-file corpus reads a million
+  * footers across the cluster, not through the driver. One typed loop
+  * decodes the statistics ([[footerStatsTypedRaw]]); [[footerStats]]
+  * (INT64) and [[footerStatsTyped]] (every type) are its two
+  * projections, and every zone-map pruned scan keeps files by one rule
+  * ([[zoneMapScan]]).
   */
 object ParquetStats {
 
-  /** Recursive parquet listing through the Hadoop FS interface (what an
-    * object store exposes), not java.io — the same posture as
-    * LayoutOps.parquetBytes. Recursion covers hive-partitioned layouts
-    * (bucket=N/ subdirs) with the same sweep as flat dirs; non-parquet
-    * markers (_SUCCESS) filter out. Shared by every footer sweep in this
-    * file so a listing fix can never drift between them.
+  /** (path, bytes) of every parquet data file under `dir`, sorted by
+    * path — the one recursive listing, through the Hadoop FS interface
+    * (what an object store exposes). Recursion covers hive-partitioned
+    * layouts (bucket=N/ subdirs); non-parquet markers (_SUCCESS) filter
+    * out. Every footer sweep here and `LayoutOps.parquetBytes` read it.
     */
-  private[sources] def listParquetFiles(t: Tables, dir: String): Seq[String] = {
+  private[graft] def listParquetSizes(spark: SparkSession,
+                                      dir: String): Seq[(String, Long)] = {
     val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(t.spark.sparkContext.hadoopConfiguration)
+    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val it = fs.listFiles(dirPath, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     while (it.hasNext) {
       val s = it.next()
       if (s.isFile && s.getPath.getName.endsWith(".parquet"))
-        buf += s.getPath.toString
+        buf += s.getPath.toString -> s.getLen
     }
-    buf.toSeq.sorted
+    buf.toSeq.sortBy(_._1)
   }
+
+  /** The paths of [[listParquetSizes]]. */
+  private[sources] def listParquetFiles(t: Tables, dir: String): Seq[String] =
+    listParquetSizes(t.spark, dir).map(_._1)
 
   /** The session's Hadoop conf as plain entries, shippable to executors
     * (object-store credentials/endpoints live there; Configuration
     * itself is not serializable and Spark's wrapper is private).
     */
-  private[sources] def hadoopConfEntries(t: Tables): Map[String, String] = {
+  private def hadoopConfEntries(t: Tables): Map[String, String] = {
     import scala.jdk.CollectionConverters._
     t.spark.sparkContext.hadoopConfiguration.iterator().asScala
       .map(e => e.getKey -> e.getValue).toMap
   }
 
   /** Executor-side footer open from a shipped conf-entry map. */
-  private[sources] def openFooterReader(
+  private def openFooterReader(
       p: String, confEntries: Map[String, String])
       : org.apache.parquet.hadoop.ParquetFileReader = {
     val conf = new org.apache.hadoop.conf.Configuration()
@@ -62,77 +71,36 @@ object ParquetStats {
         new org.apache.hadoop.fs.Path(p), conf))
   }
 
-  /** One row per (file, INT64 column): total rows, null count, min, max
-    * — aggregated across the file's row groups from footer statistics
-    * only, skipping stats-less groups the way a SQL min/max over the
-    * metadata rows skips NULLs; `stats_complete` reports whether every
-    * group contributed (pruning treats an incomplete file as
-    * un-skippable).
+  /** The one per-file footer sweep: list the parquet files under `dir`,
+    * ship the Hadoop conf, and run `body` on each file's (path, open
+    * footer reader) on the executors — at most 32 partitions, the reader
+    * closed whatever `body` does. Every footer consumer here (stats,
+    * blooms, column sizes) is a `body`.
     */
-  def footerStats(t: Tables, fileGlobDir: String,
-                  cols: Seq[String]): DataFrame = {
-    val spark = t.spark
-    import spark.implicits._
-    val paths = listParquetFiles(t, fileGlobDir)
-    val wanted = cols.toSet
+  private def footerSweep[T: Encoder](t: Tables, dir: String)(
+      body: (String, org.apache.parquet.hadoop.ParquetFileReader) => Seq[T])
+      : Dataset[T] = {
+    val paths = listParquetFiles(t, dir)
     val confEntries = hadoopConfEntries(t)
-    spark.createDataset(paths)
+    t.spark.createDataset(paths)(Encoders.STRING)
       .repartition(math.min(paths.size, 32).max(1))
       .flatMap { p =>
         val reader = openFooterReader(p, confEntries)
-        try {
-          import scala.jdk.CollectionConverters._
-          val blocks = reader.getFooter.getBlocks.asScala.toSeq
-          val fileName = new org.apache.hadoop.fs.Path(p).getName
-          wanted.toSeq.sorted.map { c =>
-            var rows = 0L; var nulls = 0L
-            var mn: Option[Long] = None; var mx: Option[Long] = None
-            var complete = true
-            var found = false
-            var nullsKnown = true
-            blocks.foreach { b =>
-              b.getColumns.asScala
-                .find(_.getPath.toDotString == c)
-                .foreach { chunk =>
-                  found = true
-                  rows += b.getRowCount
-                  val st = chunk.getStatistics
-                  // nulls_known is tracked separately from
-                  // stats_complete: pruning only needs min/max, but a
-                  // metadata-only COUNT(col) must refuse when any
-                  // chunk's null count is unset
-                  if (st != null && st.isNumNullsSet) nulls += st.getNumNulls
-                  else nullsKnown = false
-                  // min/max aggregate over the row groups that HAVE
-                  // stats (a SQL min/max over the metadata rows skips
-                  // NULLs the same way — the oracle's semantics);
-                  // `stats_complete` records whether every group
-                  // contributed, which is what pruning must consult —
-                  // a partial min/max says nothing about the rows in
-                  // the stats-less groups
-                  if (st == null || !st.hasNonNullValue) complete = false
-                  else {
-                    val lo = st.genericGetMin.asInstanceOf[Number].longValue
-                    val hi = st.genericGetMax.asInstanceOf[Number].longValue
-                    mn = Some(mn.fold(lo)(math.min(_, lo)))
-                    mx = Some(mx.fold(hi)(math.max(_, hi)))
-                  }
-                }
-            }
-            // a file that lacks the column ENTIRELY (schema evolution:
-            // an old-generation file before the column existed) must
-            // not report stats_complete=true with null min/max — a
-            // pruning consumer trusting the flag would treat the file
-            // as provably non-matching (round-11 advice). complete=true
-            // must imply a usable min/max.
-            (fileName, p, c, rows, nulls, mn, mx, complete && found,
-              nullsKnown && found)
-          }
-        } finally reader.close()
+        try body(p, reader) finally reader.close()
       }
-      .toDF("file_name", "file_path", "column", "n_rows", "null_count",
-        "min_value", "max_value", "stats_complete", "nulls_known")
   }
+
+  /** One row per (file, INT64 column): rows, null count, min, max,
+    * `stats_complete` and `nulls_known` — the INT64 projection of the
+    * one footer sweep ([[footerStatsTypedRaw]], whose `min_long`/
+    * `max_long` read here as `min_value`/`max_value`).
+    */
+  def footerStats(t: Tables, fileGlobDir: String,
+                  cols: Seq[String]): DataFrame =
+    footerStatsTypedRaw(t, fileGlobDir, cols).select(col("file_name"),
+      col("file_path"), col("column"), col("n_rows"), col("null_count"),
+      col("min_long").as("min_value"), col("max_long").as("max_value"),
+      col("stats_complete"), col("nulls_known"))
 
   /** Gate query: footer stats of the fixture's `documents.parquet` over
     * its INT64 columns, ordered for the hash. The oracle reads the SAME
@@ -147,37 +115,57 @@ object ParquetStats {
       .drop("file_path", "nulls_known")
       .orderBy("file_name", "column")
 
-  /** Manifest-driven scan: consult [[footerStats]] and hand Spark ONLY
-    * the files whose [min, max] zone map can contain `[lo, hi]` rows —
-    * files are skipped before they are OPENED (Spark's own row-group
-    * pruning still needs a footer read per file; at 100 TB on an object
-    * store, not issuing those GETs is the win, and it is exactly what an
-    * Iceberg/Delta manifest buys). Files without stats are kept — "can't
-    * prove it can't match" never skips. The result is
-    * boundary-independent: pruning only drops files the residual filter
-    * would have emptied anyway, so correctness never depends on HOW the
-    * data was laid out — only the skip COUNT does (measured in the spec).
-    * The driver-side file-name collect is O(#files), the same order as
-    * the directory listing itself.
+  /** Manifest-driven scan: consult the INT64 zone maps and hand Spark
+    * ONLY the files whose [min, max] can contain `[lo, hi]` rows — files
+    * are skipped before they are OPENED (Spark's own row-group pruning
+    * still needs a footer read per file; at 100 TB on an object store,
+    * not issuing those GETs is the win, and it is exactly what an
+    * Iceberg/Delta manifest buys). The result is boundary-independent:
+    * pruning only drops files the residual filter would have emptied
+    * anyway, so correctness never depends on HOW the data was laid out —
+    * only the skip COUNT does (measured in the spec).
     */
   def prunedScan(t: Tables, dir: String, column: String,
-                 lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val stats = footerStats(t, dir, Seq(column)).collect()
-    val total = stats.length
+                 lo: Long, hi: Long): (DataFrame, Int, Int) =
+    zoneMapScan[Long](t, dir, column, "long",
+        col(column) >= lo && col(column) <= hi) { (mn, mx) =>
+      mx >= lo && mn <= hi
+    }
+
+  /** The one zone-map keep rule: a file is kept if its stats are
+    * incomplete (a partial min/max says nothing about the stats-less
+    * groups), if its min or max is missing, or if `overlaps(min, max)`
+    * on the typed `pair` of [[footerStatsTypedRaw]] — "can't prove it
+    * can't match" never skips. The driver-side collect is O(#files).
+    */
+  private def zoneMapScan[A](t: Tables, dir: String, column: String,
+                             pair: String, residual: Column)(
+      overlaps: (A, A) => Boolean): (DataFrame, Int, Int) = {
+    val stats = footerStatsTypedRaw(t, dir, Seq(column)).collect()
     val keep = stats.filter { r =>
-      val mn = Option(r.getAs[java.lang.Long]("min_value"))
-      val mx = Option(r.getAs[java.lang.Long]("max_value"))
-      // a file whose stats are incomplete can't be skipped: its partial
-      // min/max says nothing about the rows in the stats-less groups
+      val mn = Option(r.getAs[A](s"min_$pair"))
+      val mx = Option(r.getAs[A](s"max_$pair"))
       !r.getAs[Boolean]("stats_complete") ||
-        mn.isEmpty || mx.isEmpty || (mx.get >= lo && mn.get <= hi)
+        mn.isEmpty || mx.isEmpty || overlaps(mn.get, mx.get)
     }.map(_.getAs[String]("file_path"))
-    val df =
-      if (keep.isEmpty)
-        t.spark.read.parquet(dir).filter(lit(false))
-      else t.spark.read.parquet(keep.toIndexedSeq: _*)
-    (df.filter(col(column) >= lo && col(column) <= hi), keep.length, total)
+    prunedResidual(t, dir, keep.toIndexedSeq, stats.length, residual)
   }
+
+  /** Shared tail of every pruned scan: read ONLY the kept files, apply
+    * the residual filter (pruning is an optimization, never the filter
+    * itself — correctness stays layout-independent), report
+    * (result, kept, total).
+    */
+  private def prunedResidual(t: Tables, dir: String, keep: Seq[String],
+                             total: Int, residual: Column)
+      : (DataFrame, Int, Int) =
+    (readOnly(t, dir, keep).filter(residual), keep.length, total)
+
+  /** A read of exactly `files` — or, when none is left, an empty frame
+    * with `dir`'s schema. */
+  private def readOnly(t: Tables, dir: String, files: Seq[String]): DataFrame =
+    if (files.isEmpty) t.spark.read.parquet(dir).filter(lit(false))
+    else t.spark.read.parquet(files: _*)
 
   /** Clustering-depth METER over the stats table — the decision input
     * for "is this column worth re-clustering": `span_sum / global_span`
@@ -222,6 +210,27 @@ object ParquetStats {
       .write.mode("overwrite").parquet(base)
   }
 
+  /** The min and max `o_orderkey` as longs — the key span the pruned-scan
+    * gate's window, the bucket layouts and the bloom probe key derive
+    * from. */
+  private[graft] def orderKeyBounds(t: Tables): (Long, Long) = {
+    val b = t.orders.agg(
+      min("o_orderkey").cast("long"), max("o_orderkey").cast("long")).head()
+    (b.getLong(0), b.getLong(1))
+  }
+
+  /** Shared tail of the pruned-scan gates: the pruned rows rolled up per
+    * `k` (order count and 2-place decimal price sum), with whether
+    * pruning skipped any file. */
+  private def prunedRollup(k: String, scan: (DataFrame, Int, Int)): DataFrame = {
+    val (df, kept, total) = scan
+    df.groupBy(k)
+      .agg(count(lit(1)).as("n_orders"),
+        roundN(decSum(col("o_totalprice")), 2).as("total_price"))
+      .withColumn("skipped_some", lit(kept < total))
+      .orderBy(k)
+  }
+
   /** Gate query: manifest-pruned scan of the range-clustered orders copy
     * over the middle half of the KEY SPACE (lo/hi from integer min/max
     * arithmetic, so the oracle derives them identically), rolled up per
@@ -234,20 +243,11 @@ object ParquetStats {
     * write no file) and deliberately not hashed — the spec reports them.
     */
   def prunedScanGate(t: Tables): DataFrame = {
-    val bounds = t.orders.agg(
-      min("o_orderkey").cast("long"), max("o_orderkey").cast("long")).head()
-    val (lo0, hi0) = (bounds.getLong(0), bounds.getLong(1))
+    val (lo0, hi0) = orderKeyBounds(t)
     val lo = lo0 + (hi0 - lo0) / 4
     val hi = lo0 + 3 * (hi0 - lo0) / 4
-    val (df, kept, total) = prunedScan(
-      t, rangeClusteredOrdersDir(t), "o_orderkey", lo, hi)
-    df.groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n_orders"),
-        graft.functions.NumericFunctions.roundN(
-          graft.functions.NumericFunctions.decSum(col("o_totalprice")), 2)
-          .as("total_price"))
-      .withColumn("skipped_some", lit(kept < total))
-      .orderBy("o_orderstatus")
+    prunedRollup("o_orderstatus",
+      prunedScan(t, rangeClusteredOrdersDir(t), "o_orderkey", lo, hi))
   }
 
   // ---------------------------------------------------------------------
@@ -267,22 +267,22 @@ object ParquetStats {
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
 
-  /** [[footerStats]] generalized past INT64: one row per (file, column)
-    * with min/max carried in the TYPED column pair matching the parquet
-    * physical+logical type — `min_long`/`max_long` for INT32/INT64,
-    * `min_double`/`max_double` for FLOAT/DOUBLE, `min_string`/`max_string`
-    * for UTF8 binary, `min_ts`/`max_ts` for TIMESTAMP(MICROS) — the other
-    * pairs null. A real manifest prunes on strings, dates and doubles as
-    * much as on integer keys; the same footer-only distributed sweep
-    * applies (executors open footers, never data pages). The oracle is
+  /** One row per (file, column) with min/max carried in the TYPED column
+    * pair matching the parquet physical+logical type — `min_long`/
+    * `max_long` for INT32/INT64, `min_double`/`max_double` for
+    * FLOAT/DOUBLE, `min_string`/`max_string` for UTF8 binary,
+    * `min_ts`/`max_ts` for TIMESTAMP(MICROS) — the other pairs null: the
+    * typed projection of the one footer sweep ([[footerStatsTypedRaw]];
+    * [[footerStats]] is its INT64 projection). A real manifest prunes on
+    * strings, dates and doubles as much as on integer keys. The oracle is
     * DuckDB's `parquet_metadata()` with per-type casts of its VARCHAR
     * stats rendering — two independent parquet stats decoders agreeing
     * per type.
     */
   def footerStatsTyped(t: Tables, fileGlobDir: String,
                        cols: Seq[String]): DataFrame = {
-    val raw = footerStatsTypedRaw(t, fileGlobDir, cols)
-    raw.select(col("file_name"), col("column"), col("n_rows"),
+    footerStatsTypedRaw(t, fileGlobDir, cols).select(
+      col("file_name"), col("column"), col("n_rows"),
       col("null_count"), col("min_long"), col("max_long"),
       col("min_double"), col("max_double"),
       col("min_string"), col("max_string"),
@@ -291,90 +291,90 @@ object ParquetStats {
       col("stats_complete"))
   }
 
-  /** [[footerStatsTyped]] before the timestamp conversion — timestamp
-    * extents as raw epoch micros, which is what the pruning predicates
-    * compare against. */
+  /** The one footer statistics loop: per (file, column), rows and null
+    * count summed over the file's row groups, and min/max aggregated in
+    * the typed pair over the groups that HAVE stats (a SQL min/max over
+    * the metadata rows skips NULLs the same way — the oracle's
+    * semantics), timestamp extents as raw epoch micros (what the pruning
+    * predicates compare against). `stats_complete` records whether every
+    * group contributed a usable min/max — what pruning must consult;
+    * `nulls_known` whether every chunk set its null count — what a
+    * metadata-only COUNT(col) must consult.
+    */
   private[sources] def footerStatsTypedRaw(t: Tables, fileGlobDir: String,
                                            cols: Seq[String]): DataFrame = {
     val spark = t.spark
     import spark.implicits._
-    val paths = listParquetFiles(t, fileGlobDir)
-    val wanted = cols.toSet
-    val confEntries = hadoopConfEntries(t)
-    spark.createDataset(paths)
-      .repartition(math.min(paths.size, 32).max(1))
-      .flatMap { p =>
-        val reader = openFooterReader(p, confEntries)
-        try {
-          import scala.jdk.CollectionConverters._
-          import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-          import org.apache.parquet.schema.LogicalTypeAnnotation
-          val blocks = reader.getFooter.getBlocks.asScala.toSeq
-          val fileName = new org.apache.hadoop.fs.Path(p).getName
-          wanted.toSeq.sorted.map { c =>
-            var rows = 0L; var nulls = 0L
-            var mnL: Option[Long] = None; var mxL: Option[Long] = None
-            var mnD: Option[Double] = None; var mxD: Option[Double] = None
-            var mnS: Option[String] = None; var mxS: Option[String] = None
-            var mnT: Option[Long] = None; var mxT: Option[Long] = None
-            var complete = true
-            var found = false
-            blocks.foreach { b =>
-              b.getColumns.asScala
-                .find(_.getPath.toDotString == c)
-                .foreach { chunk =>
-                  found = true
-                  rows += b.getRowCount
-                  val st = chunk.getStatistics
-                  if (st != null && st.isNumNullsSet) nulls += st.getNumNulls
-                  if (st == null || !st.hasNonNullValue) complete = false
-                  else {
-                    val pt = chunk.getPrimitiveType
-                    val logical = pt.getLogicalTypeAnnotation
-                    val isTsMicros = logical.isInstanceOf[
-                        LogicalTypeAnnotation.TimestampLogicalTypeAnnotation] &&
-                      logical.asInstanceOf[
-                          LogicalTypeAnnotation.TimestampLogicalTypeAnnotation]
-                        .getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
-                    pt.getPrimitiveTypeName match {
-                      case INT64 if isTsMicros =>
-                        val lo = st.genericGetMin.asInstanceOf[Number].longValue
-                        val hi = st.genericGetMax.asInstanceOf[Number].longValue
-                        mnT = Some(mnT.fold(lo)(math.min(_, lo)))
-                        mxT = Some(mxT.fold(hi)(math.max(_, hi)))
-                      case INT64 | INT32 =>
-                        val lo = st.genericGetMin.asInstanceOf[Number].longValue
-                        val hi = st.genericGetMax.asInstanceOf[Number].longValue
-                        mnL = Some(mnL.fold(lo)(math.min(_, lo)))
-                        mxL = Some(mxL.fold(hi)(math.max(_, hi)))
-                      case DOUBLE | FLOAT =>
-                        val lo = st.genericGetMin.asInstanceOf[Number].doubleValue
-                        val hi = st.genericGetMax.asInstanceOf[Number].doubleValue
-                        mnD = Some(mnD.fold(lo)(math.min(_, lo)))
-                        mxD = Some(mxD.fold(hi)(math.max(_, hi)))
-                      case BINARY =>
-                        val lo = st.genericGetMin
-                          .asInstanceOf[org.apache.parquet.io.api.Binary]
-                          .toStringUsingUTF8
-                        val hi = st.genericGetMax
-                          .asInstanceOf[org.apache.parquet.io.api.Binary]
-                          .toStringUsingUTF8
-                        mnS = Some(mnS.fold(lo)(m => if (utf8Less(lo, m)) lo else m))
-                        mxS = Some(mxS.fold(hi)(m => if (utf8Less(m, hi)) hi else m))
-                      case _ => complete = false
-                    }
-                  }
+    val wanted = cols.distinct.sorted
+    footerSweep(t, fileGlobDir) { (p, reader) =>
+      import scala.jdk.CollectionConverters._
+      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+      import org.apache.parquet.schema.LogicalTypeAnnotation._
+      import org.apache.parquet.io.api.Binary
+      val blocks = reader.getFooter.getBlocks.asScala.toSeq
+      val fileName = new org.apache.hadoop.fs.Path(p).getName
+      wanted.map { c =>
+        var rows = 0L; var nulls = 0L
+        var mnL: Option[Long] = None; var mxL: Option[Long] = None
+        var mnD: Option[Double] = None; var mxD: Option[Double] = None
+        var mnS: Option[String] = None; var mxS: Option[String] = None
+        var mnT: Option[Long] = None; var mxT: Option[Long] = None
+        var complete = true; var nullsKnown = true; var found = false
+        blocks.foreach { b =>
+          b.getColumns.asScala
+            .find(_.getPath.toDotString == c)
+            .foreach { chunk =>
+              found = true
+              rows += b.getRowCount
+              val st = chunk.getStatistics
+              if (st != null && st.isNumNullsSet) nulls += st.getNumNulls
+              else nullsKnown = false
+              if (st == null || !st.hasNonNullValue) complete = false
+              else {
+                val pt = chunk.getPrimitiveType
+                val isTsMicros = pt.getLogicalTypeAnnotation match {
+                  case ts: TimestampLogicalTypeAnnotation =>
+                    ts.getUnit == TimeUnit.MICROS
+                  case _ => false
                 }
+                pt.getPrimitiveTypeName match {
+                  case INT64 | INT32 =>
+                    val lo = st.genericGetMin.asInstanceOf[Number].longValue
+                    val hi = st.genericGetMax.asInstanceOf[Number].longValue
+                    if (isTsMicros) {
+                      mnT = Some(mnT.fold(lo)(math.min(_, lo)))
+                      mxT = Some(mxT.fold(hi)(math.max(_, hi)))
+                    } else {
+                      mnL = Some(mnL.fold(lo)(math.min(_, lo)))
+                      mxL = Some(mxL.fold(hi)(math.max(_, hi)))
+                    }
+                  case DOUBLE | FLOAT =>
+                    val lo = st.genericGetMin.asInstanceOf[Number].doubleValue
+                    val hi = st.genericGetMax.asInstanceOf[Number].doubleValue
+                    mnD = Some(mnD.fold(lo)(math.min(_, lo)))
+                    mxD = Some(mxD.fold(hi)(math.max(_, hi)))
+                  case BINARY =>
+                    val lo = st.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8
+                    val hi = st.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8
+                    mnS = Some(mnS.fold(lo)(m => if (utf8Less(lo, m)) lo else m))
+                    mxS = Some(mxS.fold(hi)(m => if (utf8Less(m, hi)) hi else m))
+                  case _ => complete = false
+                }
+              }
             }
-            (fileName, p, c, rows, nulls, mnL, mxL, mnD, mxD, mnS, mxS,
-              mnT, mxT, complete && found)
-          }
-        } finally reader.close()
+        }
+        // a file that lacks the column ENTIRELY (schema evolution: an
+        // old-generation file before the column existed) must not report
+        // stats_complete=true with null min/max — a pruning consumer
+        // trusting the flag would treat the file as provably
+        // non-matching. complete=true must imply a usable min/max.
+        (fileName, p, c, rows, nulls, mnL, mxL, mnD, mxD, mnS, mxS,
+          mnT, mxT, complete && found, nullsKnown && found)
       }
-      .toDF("file_name", "file_path", "column", "n_rows", "null_count",
-        "min_long", "max_long", "min_double", "max_double",
-        "min_string", "max_string", "min_ts_us", "max_ts_us",
-        "stats_complete")
+    }.toDF("file_name", "file_path", "column", "n_rows", "null_count",
+      "min_long", "max_long", "min_double", "max_double",
+      "min_string", "max_string", "min_ts_us", "max_ts_us",
+      "stats_complete", "nulls_known")
   }
 
   /** Gate query: typed footer stats of the fixture's `orders.parquet` —
@@ -415,9 +415,7 @@ object ParquetStats {
     * what lets the oracle recompute the depth meter exactly.
     */
   def bucketLayoutsDir(t: Tables): String = bucketLayoutCache(t.dir, ()) { base =>
-    val bounds = t.orders.agg(
-      min("o_orderkey").cast("long"), max("o_orderkey").cast("long")).head()
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val (lo, hi) = orderKeyBounds(t)
     val w = hi - lo + 1
     val src = t.orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
     src.withColumn("bucket",
@@ -493,92 +491,54 @@ object ParquetStats {
 
   /** Date-window file pruning over TIMESTAMP(MICROS) zone maps: files
     * whose [min_ts, max_ts] cannot intersect [loMicros, hiMicros] are
-    * never opened. Same keep rules as the INT64 path — incomplete or
-    * missing stats never skip.
+    * never opened (the keep rule of [[zoneMapScan]], compared as epoch
+    * micros).
     */
   def prunedScanTs(t: Tables, dir: String, column: String,
-                   loMicros: Long, hiMicros: Long): (DataFrame, Int, Int) = {
-    val stats = footerStatsTypedRaw(t, dir, Seq(column)).collect()
-    val keep = stats.filter { r =>
-      val mn = Option(r.getAs[java.lang.Long]("min_ts_us"))
-      val mx = Option(r.getAs[java.lang.Long]("max_ts_us"))
-      !r.getAs[Boolean]("stats_complete") ||
-        mn.isEmpty || mx.isEmpty ||
-        (mx.get >= loMicros && mn.get <= hiMicros)
-    }.map(_.getAs[String]("file_path"))
-    prunedResidual(t, dir, keep.toIndexedSeq, stats.length,
-      unix_micros(col(column).cast("timestamp")).between(loMicros, hiMicros))
-  }
+                   loMicros: Long, hiMicros: Long): (DataFrame, Int, Int) =
+    zoneMapScan[Long](t, dir, column, "ts_us",
+        unix_micros(col(column).cast("timestamp")).between(loMicros, hiMicros)) {
+      (mn, mx) => mx >= loMicros && mn <= hiMicros
+    }
 
   /** String-equality file pruning over UTF8 zone maps: keep a file iff
     * min_string <= value <= max_string in unsigned byte order (parquet's
-    * and DuckDB's collation) — or its stats can't prove otherwise.
+    * and DuckDB's collation) — or its stats can't prove otherwise (the
+    * keep rule of [[zoneMapScan]]).
     */
   def prunedScanString(t: Tables, dir: String, column: String,
-                       value: String): (DataFrame, Int, Int) = {
-    val stats = footerStatsTypedRaw(t, dir, Seq(column)).collect()
-    val keep = stats.filter { r =>
-      val mn = Option(r.getAs[String]("min_string"))
-      val mx = Option(r.getAs[String]("max_string"))
-      !r.getAs[Boolean]("stats_complete") ||
-        mn.isEmpty || mx.isEmpty ||
-        (!utf8Less(value, mn.get) && !utf8Less(mx.get, value))
-    }.map(_.getAs[String]("file_path"))
-    prunedResidual(t, dir, keep.toIndexedSeq, stats.length,
-      col(column) === value)
-  }
-
-  /** Shared tail of every pruned scan: read ONLY the kept files, apply
-    * the residual filter (pruning is an optimization, never the filter
-    * itself — correctness stays layout-independent), report
-    * (result, kept, total).
-    */
-  private def prunedResidual(t: Tables, dir: String, keep: Seq[String],
-                             total: Int,
-                             residual: org.apache.spark.sql.Column)
-      : (DataFrame, Int, Int) = {
-    val df =
-      if (keep.isEmpty) t.spark.read.parquet(dir).filter(lit(false))
-      else t.spark.read.parquet(keep: _*)
-    (df.filter(residual), keep.length, total)
-  }
+                       value: String): (DataFrame, Int, Int) =
+    zoneMapScan[String](t, dir, column, "string", col(column) === value) {
+      (mn, mx) => !utf8Less(value, mn) && !utf8Less(mx, value)
+    }
 
   /** Point-lookup file pruning via parquet BLOOM FILTERS: each file's
     * bloom for `column` is probed with the key — a negative PROVES the
     * key is absent from the file (blooms have no false negatives), so
     * the file is skipped before any data page is read; a positive or a
-    * missing bloom keeps it. The probe is distributed like the stats
-    * sweeps (executors read footers + bloom pages only); the driver
-    * collects O(#files) booleans. This is the skip mechanism for
-    * point lookups on SCATTERED high-cardinality keys, where every
-    * file's [min,max] spans the probe and zone maps keep everything.
+    * missing bloom keeps it. The probe rides the footer sweep (executors
+    * read footers + bloom pages only); the driver collects O(#files)
+    * booleans. This is the skip mechanism for point lookups on SCATTERED
+    * high-cardinality keys, where every file's [min,max] spans the probe
+    * and zone maps keep everything.
     */
   def bloomPrunedLookup(t: Tables, dir: String, column: String,
                         key: Long): (DataFrame, Int, Int) = {
     val spark = t.spark
     import spark.implicits._
-    val paths = listParquetFiles(t, dir)
-    val confEntries = hadoopConfEntries(t)
-    val flags = spark.createDataset(paths)
-      .repartition(math.min(paths.size, 32).max(1))
-      .map { p =>
-        val reader = openFooterReader(p, confEntries)
-        try {
-          import scala.jdk.CollectionConverters._
-          val mightContain = reader.getFooter.getBlocks.asScala.exists { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == column) match {
-              case None => true // column absent: can't prove, keep
-              case Some(chunk) =>
-                val bf = reader.getBloomFilterDataReader(b)
-                  .readBloomFilter(chunk)
-                // no bloom written for this chunk: can't prove, keep
-                bf == null || bf.findHash(bf.hash(key))
-            }
-          }
-          (p, mightContain)
-        } finally reader.close()
+    val flags = footerSweep(t, dir) { (p, reader) =>
+      import scala.jdk.CollectionConverters._
+      val mightContain = reader.getFooter.getBlocks.asScala.exists { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == column) match {
+          case None => true // column absent: can't prove, keep
+          case Some(chunk) =>
+            val bf = reader.getBloomFilterDataReader(b).readBloomFilter(chunk)
+            // no bloom written for this chunk: can't prove, keep
+            bf == null || bf.findHash(bf.hash(key))
+        }
       }
-      .collect()
+      Seq((p, mightContain))
+    }.collect()
     val keep = flags.filter(_._2).map(_._1)
     prunedResidual(t, dir, keep.toIndexedSeq, flags.length,
       col(column) === key)
@@ -603,15 +563,8 @@ object ParquetStats {
     */
   def datePrunedScanGate(t: Tables): DataFrame = {
     val (lo, hi) = dateWindow(t)
-    val (df, kept, total) = prunedScanTs(
-      t, s"${typedLayoutsDir(t)}/date", "o_orderdate", lo, hi)
-    df.groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_orders"),
-        graft.functions.NumericFunctions.roundN(
-          graft.functions.NumericFunctions.decSum(col("o_totalprice")), 2)
-          .as("total_price"))
-      .withColumn("skipped_some", lit(kept < total))
-      .orderBy("o_orderpriority")
+    prunedRollup("o_orderpriority", prunedScanTs(
+      t, s"${typedLayoutsDir(t)}/date", "o_orderdate", lo, hi))
   }
 
   /** The string probe value: fixed mid-scale priority, present at every
@@ -623,25 +576,16 @@ object ParquetStats {
     * the probe (4 of 5 here), and the per-status rollup hash proves the
     * skip lost nothing.
     */
-  def stringPrunedScanGate(t: Tables): DataFrame = {
-    val (df, kept, total) = prunedScanString(
-      t, s"${typedLayoutsDir(t)}/priority", "o_orderpriority", priorityProbe)
-    df.groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n_orders"),
-        graft.functions.NumericFunctions.roundN(
-          graft.functions.NumericFunctions.decSum(col("o_totalprice")), 2)
-          .as("total_price"))
-      .withColumn("skipped_some", lit(kept < total))
-      .orderBy("o_orderstatus")
-  }
+  def stringPrunedScanGate(t: Tables): DataFrame =
+    prunedRollup("o_orderstatus", prunedScanString(
+      t, s"${typedLayoutsDir(t)}/priority", "o_orderpriority", priorityProbe))
 
   /** The lookup key both the bloom gate and its invariant derive: one
     * third into the key span (keys are dense in the fixture, so it
     * exists at every SF — and the oracle derives the same value). */
   private[graft] def bloomProbeKey(t: Tables): Long = {
-    val b = t.orders.agg(min("o_orderkey").cast("long"),
-      max("o_orderkey").cast("long")).head()
-    b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 3
+    val (lo, hi) = orderKeyBounds(t)
+    lo + (hi - lo) / 3
   }
 
   /** Gate query: bloom-pruned point lookup on the mod-scattered layout.
@@ -708,15 +652,10 @@ object ParquetStats {
     */
   def vacuumOrphanGate(t: Tables): DataFrame = {
     val (_, orphans) = vacuumPartition(t)
-    val df =
-      if (orphans.isEmpty)
-        t.spark.read.parquet(s"${bucketLayoutsDir(t)}/range").filter(lit(false))
-      else t.spark.read.parquet(orphans: _*)
-    df.groupBy("o_orderstatus")
+    readOnly(t, s"${bucketLayoutsDir(t)}/range", orphans)
+      .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_orders"),
-        graft.functions.NumericFunctions.roundN(
-          graft.functions.NumericFunctions.decSum(col("o_totalprice")), 2)
-          .as("total_price"),
+        roundN(decSum(col("o_totalprice")), 2).as("total_price"),
         min("o_orderkey").cast("long").as("min_key"),
         max("o_orderkey").cast("long").as("max_key"))
       .withColumn("found_orphans", lit(orphans.nonEmpty))
@@ -731,32 +670,22 @@ object ParquetStats {
   // ---------------------------------------------------------------------
 
   /** Per-column byte totals across every file under `dir`, summed over
-    * row-group column chunks from footer metadata only — same
-    * distributed footer sweep as [[footerStats]] (executors read
-    * footers, never data pages). `compression_x10` is the ratio
-    * uncompressed/compressed ×10 floored to an exact integer, so the
-    * gate carries no floats.
+    * row-group column chunks from footer metadata only — the same
+    * footer sweep as the stats (executors read footers, never data
+    * pages). `compression_x10` is the ratio uncompressed/compressed ×10
+    * floored to an exact integer, so the gate carries no floats.
     */
   def columnSizes(t: Tables, dir: String): DataFrame = {
     val spark = t.spark
     import spark.implicits._
-    val paths = listParquetFiles(t, dir)
-    val confEntries = hadoopConfEntries(t)
-    spark.createDataset(paths)
-      .repartition(math.min(paths.size, 32).max(1))
-      .flatMap { p =>
-        val reader = openFooterReader(p, confEntries)
-        try {
-          import scala.jdk.CollectionConverters._
-          reader.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
-            b.getColumns.asScala.map { c =>
-              (c.getPath.toDotString, c.getTotalSize,
-                c.getTotalUncompressedSize)
-            }
-          }
-        } finally reader.close()
+    footerSweep(t, dir) { (_, reader) =>
+      import scala.jdk.CollectionConverters._
+      reader.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
+        b.getColumns.asScala.map { c =>
+          (c.getPath.toDotString, c.getTotalSize, c.getTotalUncompressedSize)
+        }
       }
-      .toDF("column", "compressed", "uncompressed")
+    }.toDF("column", "compressed", "uncompressed")
       .groupBy("column")
       .agg(
         sum("compressed").cast("long").as("compressed_bytes"),
@@ -766,7 +695,6 @@ object ParquetStats {
           .cast("long"))
       .orderBy("column")
   }
-
   /** Gate query: the documents table's storage audit, vs DuckDB's
     * `parquet_metadata()` reading the same footers independently.
     */

@@ -17,8 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * every fixture table is opened by `core.Tables`. Memory sinks are
   * started and named in one place, `StreamMeter.toMemory`. Each shared
   * oracle derivation (snapshot B/C, the pair-closure walk, the stopword
-  * list, the word 3-gram, the 2-place decimal round-sum) is written once,
-  * as a named fragment in `SparkEntry`.
+  * list, the word 3-gram, the 2-place decimal round-sum, the sliding,
+  * busy-hour and session windows, the per-language quality inputs, the
+  * adaptive sign bits, the md5 split bucket) is written once, as a named
+  * fragment in `SparkEntry`. Parquet footers are opened by one sweep and
+  * their statistics decoded by one loop, in `ParquetStats`.
   */
 class SourceLintSpec extends AnyFunSuite {
   import scala.jdk.CollectionConverters._
@@ -39,6 +42,13 @@ class SourceLintSpec extends AnyFunSuite {
       .toVector
     finally stream.close()
   }
+
+  /** Per-file count of literal `token` in main sources (files with none
+    * left out). */
+  private def sites(token: String): Map[String, Int] = sources
+    .map { case (f, text) =>
+      f -> java.util.regex.Pattern.quote(token).r.findAllIn(text).size }
+    .filter(_._2 > 0).toMap
 
   test("main sources are found") {
     assert(sources.exists(_._1 == "graft/core/Tables.scala"))
@@ -132,10 +142,6 @@ class SourceLintSpec extends AnyFunSuite {
   }
 
   test("memory sinks are started and named only by StreamMeter.toMemory") {
-    def sites(token: String): Map[String, Int] = sources
-      .map { case (f, text) =>
-        f -> java.util.regex.Pattern.quote(token).r.findAllIn(text).size }
-      .filter(_._2 > 0).toMap
     val runner = Map("graft/streaming/StreamMeter.scala" -> 1)
     assert(sites("format(\"memory\")") == runner,
       "run memory-sink gates through StreamMeter.toMemory")
@@ -152,12 +158,30 @@ class SourceLintSpec extends AnyFunSuite {
       "SELECT w.id, e.dst FROM walk w JOIN edges e ON w.r = e.src", // pairClosureCtes
       "['the','a','an','of','and','to','in','is','it','for']",    // intakeStopwordsSql
       "tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]",                // shingle3Sql
-      "AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100")        // decSumRound2Sql
-    val copies = fragments.map { frag =>
-      frag -> sources.map { case (f, text) =>
-        f -> java.util.regex.Pattern.quote(frag).r.findAllIn(text).size }
-        .filter(_._2 > 0).toMap
-    }.filter(_._2 != Map("graft/SparkEntry.scala" -> 1))
+      "AS DECIMAL(28,6))) AS DOUBLE)) * 100 + 0.5) / 100",        // decSumRound2Sql
+      "date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS win_start",  // slidingWindowsCte
+      "h + INTERVAL 100 MINUTE AS w_end",                         // busyWindowsCtes
+      "- epoch_ns(lag(ts) OVER w) // 1000",                       // nativeSessionCtes
+      "- CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800",    // sessionBreaksCte
+      "length(text)::DOUBLE AS nchars",                           // langQualityCtes
+      "WHERE 128 * (1 << b) >= n",                                // adaptiveSignBitsCte
+      "substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)")               // md5SplitBucketCte
+    val copies = fragments.map(frag => frag -> sites(frag))
+      .filter(_._2 != Map("graft/SparkEntry.scala" -> 1))
     assert(copies.isEmpty, s"oracle derivations written more than once: $copies")
+  }
+
+  test("parquet footers are opened and decoded in one sweep") {
+    // ParquetStats.footerSweep is the only caller of openFooterReader and
+    // footerStatsTypedRaw the only statistics decoder; Tables.rowGroups
+    // counts row groups on the driver and reads no statistics
+    val stats = "graft/sources/ParquetStats.scala"
+    assert(sites("openFooterReader(") == Map(stats -> 2),
+      "open footers through ParquetStats' one sweep (definition + one call)")
+    assert(sites(".getStatistics") == Map(stats -> 1),
+      "decode footer statistics in footerStatsTypedRaw only")
+    assert(sites("ParquetFileReader.open") ==
+      Map(stats -> 1, "graft/core/Tables.scala" -> 1),
+      "ParquetFileReader.open belongs to openFooterReader and Tables.rowGroups")
   }
 }

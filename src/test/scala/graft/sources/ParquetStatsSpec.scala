@@ -92,6 +92,26 @@ class ParquetStatsSpec extends SparkTestBase {
       "all-null chunk should mark the file's stats incomplete")
   }
 
+  test("timestamp pruning keeps files whose stats are missing (can't-skip fallback)") {
+    val dir = graft.core.Tables.scratchDir("graft_stats_noskip_ts")
+    Seq[(java.sql.Timestamp, String)]((null, "a"), (null, "b"))
+      .toDF("ts", "k").coalesce(1).write.mode("overwrite").parquet(dir)
+    val (pruned, kept, total) = ParquetStats.prunedScanTs(t, dir, "ts", 0L, 10L)
+    assert(total == 1 && kept == 1,
+      s"stats-less file was skipped ($kept of $total)")
+    assert(pruned.count() == 0)
+  }
+
+  test("string pruning keeps files whose stats are missing (can't-skip fallback)") {
+    val dir = graft.core.Tables.scratchDir("graft_stats_noskip_str")
+    Seq[(String, String)]((null, "a"), (null, "b"))
+      .toDF("s", "k").coalesce(1).write.mode("overwrite").parquet(dir)
+    val (pruned, kept, total) = ParquetStats.prunedScanString(t, dir, "s", "x")
+    assert(total == 1 && kept == 1,
+      s"stats-less file was skipped ($kept of $total)")
+    assert(pruned.count() == 0)
+  }
+
   test("clustering depth separates a range-clustered layout from a shuffled one") {
     val clustered = ParquetStats.rangeClusteredOrdersDir(t)
     val shuffled = graft.core.Tables.scratchDir("graft_shuffled_orders")
