@@ -182,6 +182,7 @@ object Bench {
     PricePipeline.resetModelFitWalls()
     graft.streaming.StreamMeter.reset()
     graft.operators.GraphOps.observedFallbacks.set(0L)
+    graft.operators.GraphOps.narrowedRounds.set(0L)
     val cpuT0 = osBean.getProcessCpuTime
     val wallT0 = System.nanoTime()
     def runs(name: String): Boolean = only.forall(_(name))
@@ -510,7 +511,7 @@ object Bench {
     //    seconds, CPU, GC, profile and cache misses; too long for the tail.
     //  - line 2 (final, the one parsed): suite total, the headline rows, and
     //    the trips and raw runs of those rows only — it fits the tail.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","input_bytes":$sfBytes,"cpu_percent":$cpuPctR,$hostDegradedJson,"sf1_row_trips":${names(sf1Trips)},"sf01_row_trips":${names(sf01Trips)},"overhead_floor":$overheadFloor,"trimmed_total":$trimmedTotal,"ceiling_rows":${names(results.map(_._1).filter(ceilingRows).sorted)},"variance_rows":${names(results.map(_._1).filter(varianceRows).sorted)},"workload":$workload,"workload_sf1":$workloadSf1,"ml_model_fit_secs":$mlWallsJson,"streaming_meter":$streamMeterJson,"graph_observed_fallbacks":${graft.operators.GraphOps.observedFallbacks.get},"query_cpu_percent":${perRow((r, _) => math.round(r.cpuPct * 10) / 10.0)},"query_gc_sec":${perRow((r, _) => r3(r.gc))},"query_first_run_s":${json(rows.map { case (n, (a, _)) => n -> r3(a.wall) })},"query_cache_misses":${json(rows.map { case (n, (a, b)) => n -> s"[${a.misses},${b.misses}]" })},"query_profile":${json(rows.flatMap(r => profileOf(r, profiles).map(r._1 -> _.json)))},"runs_per_query":2,"aggregation":"min","probe_benched":${names(probeBenched)},"failed_queries":$failedJson,"queries_sf1":${json(sf1Results)},"queries_sf1_runs":${runsJson(sf1Rows)},"queries":${json(results)}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","input_bytes":$sfBytes,"cpu_percent":$cpuPctR,$hostDegradedJson,"sf1_row_trips":${names(sf1Trips)},"sf01_row_trips":${names(sf01Trips)},"overhead_floor":$overheadFloor,"trimmed_total":$trimmedTotal,"ceiling_rows":${names(results.map(_._1).filter(ceilingRows).sorted)},"variance_rows":${names(results.map(_._1).filter(varianceRows).sorted)},"workload":$workload,"workload_sf1":$workloadSf1,"ml_model_fit_secs":$mlWallsJson,"streaming_meter":$streamMeterJson,"graph_observed_fallbacks":${graft.operators.GraphOps.observedFallbacks.get},"graph_cc_narrowed_rounds":${graft.operators.GraphOps.narrowedRounds.get},"query_cpu_percent":${perRow((r, _) => math.round(r.cpuPct * 10) / 10.0)},"query_gc_sec":${perRow((r, _) => r3(r.gc))},"query_first_run_s":${json(rows.map { case (n, (a, _)) => n -> r3(a.wall) })},"query_cache_misses":${json(rows.map { case (n, (a, b)) => n -> s"[${a.misses},${b.misses}]" })},"query_profile":${json(rows.flatMap(r => profileOf(r, profiles).map(r._1 -> _.json)))},"runs_per_query":2,"aggregation":"min","probe_benched":${names(probeBenched)},"failed_queries":$failedJson,"queries_sf1":${json(sf1Results)},"queries_sf1_runs":${runsJson(sf1Rows)},"queries":${json(results)}}""")
     val headQs = json(headline.flatMap(k => resultMap.get(k).map(v => k -> r3(v))))
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","input_bytes":$sfBytes,"cpu_percent":$cpuPctR,$hostDegradedJson,"sf1_row_trips":${names(sf1Trips)},"sf01_row_trips":${names(sf01Trips.filter(headline.contains))},"overhead_floor":$overheadFloor,"trimmed_total":$trimmedTotal,"workload":$workload,"fixture_digest_sf1":"$sf1Digest","n_queries":${results.size},"runs_per_query":2,"aggregation":"min","failed_queries":$failedJson,"queries_sf1":${json(sf1Results.map { case (k, v) => k -> r3(v) })},"queries_sf1_runs":${runsJson(sf1Rows.filter(r => sf1Trips.contains(r._1.stripPrefix("sf1:"))))},"queries":$headQs}""")
   }

@@ -15,6 +15,10 @@ object GraphOps {
     * face of a degraded convergence-scalar read. */
   private[graft] val observedFallbacks = new java.util.concurrent.atomic.AtomicLong
 
+  /** Process-wide count of [[connectedComponents]] rounds whose shuffles
+    * ran narrower than the session's configured width. */
+  private[graft] val narrowedRounds = new java.util.concurrent.atomic.AtomicLong
+
   /** The observed metrics row, with the wait BOUNDED (round-18 advice):
     * `Observation.get` blocks on the listener bus delivering the metrics
     * event, so a dropped event (bus overload) would hang the driver where
@@ -65,12 +69,39 @@ object GraphOps {
     * positive needs a 64-bit hash-sum collision between consecutive
     * rounds, which is negligible against the cost of an exact `EXCEPT`
     * every round at 100 TB.
+    *
+    * Shuffle width: each round sizes its widest exchange from the edge
+    * count the previous checkpoint observed (the input checkpoint's for
+    * round 1). When [[graft.core.ShuffleWidth.forBytes]] gives that size
+    * width 1 — under default confs at most `minPartitionSize`, 1 MB or
+    * about 20,000 edges of long ids, which AQE would coalesce to one
+    * partition anyway — the round coalesces its input to one partition.
+    * That partition holds every key, so the round runs as one stage with
+    * no exchange, where the planner's exchanges would have one map task
+    * write the session's configured width of partition files. The final
+    * per-`id` min does the same on its own row count. Larger rounds keep
+    * the planner's exchanges. Rounds that ran narrower than the
+    * configured width are counted in [[narrowedRounds]].
     */
   def connectedComponents(pairs: DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
     val Array(ca, cb) = pairs.columns.take(2)
+    val nExpr = count(lit(1)).as("n")
     // materialize the (possibly expensive) pair pipeline ONCE: both the
-    // node set and the first contraction round read it
-    val p = pairs.select(col(ca).as("src"), col(cb).as("dst")).localCheckpoint(true)
+    // node set and the first contraction round read it; its edge count
+    // rides the same job and sizes round 1
+    val (p, input) = checkpointObserved(
+      pairs.select(col(ca).as("src"), col(cb).as("dst")), "graft_cc_input", nExpr)
+    val inputEdges = input.getAs[Long]("n")
+
+    // whether `rows` exchange rows take width 1, each row sized as
+    // Catalyst's plan statistics size one (8 bytes of header + the
+    // columns' default sizes); a round's widest exchange carries 2 rows per
+    // edge (largeStar's symmetrised list, smallStar's exploded links)
+    val rowBytes = 8L + p.schema.defaultSize
+    def fitsOne(rows: Long): Boolean = graft.core.ShuffleWidth.forBytes(spark,
+      if (rows > Long.MaxValue / rowBytes) Long.MaxValue else rows * rowBytes) == 1
+    val wide = spark.sessionState.conf.numShufflePartitions > 1
 
     // convergence scalars ride the checkpoint job via observe()
     // (round-17): the loop is driver-latency-bound on a small edge list,
@@ -79,27 +110,26 @@ object GraphOps {
     // own pass, so each round is ONE job; the checkpointed frame's
     // lineage is already truncated past the metrics node, so downstream
     // consumers never re-fire it.
-    def checkpointWithSig(e: DataFrame, round: Int): (DataFrame, (Long, Long)) = {
-      val nExpr = count(lit(1)).as("n")
-      val hExpr = coalesce(sum(xxhash64(col("src"), col("dst"))), lit(0L)).as("h")
-      val obs = org.apache.spark.sql.Observation(s"graft_cc_sig_$round")
-      val out = e.observe(obs, nExpr, hExpr).localCheckpoint(true)
-      val m = observedRow(obs.future, out.agg(nExpr, hExpr).head())
-      (out, (m.getAs[Long]("n"), m.getAs[Long]("h")))
-    }
+    val hExpr = coalesce(sum(xxhash64(col("src"), col("dst"))), lit(0L)).as("h")
 
     // round 1 reads the raw pairs straight from `p`: largeStar and
     // smallStar drop self-loops and smallStar ends in a distinct(), so
     // neither needs a pass of its own, and a round-0 signature would only
     // match round 1's when the input is already a star forest
     var edges  = p
+    var n      = inputEdges
     var sig    = Option.empty[(Long, Long)]
     var rounds = 0
     var done   = false
     while (!done && rounds < maxStarRounds) {
-      val (next, nextSig) = checkpointWithSig(smallStar(largeStar(edges)), rounds + 1)
+      val one = fitsOne(2 * n)
+      val (next, m) = checkpointObserved(smallStar(largeStar(edges, one)),
+        s"graft_cc_sig_${rounds + 1}", nExpr, hExpr)
+      if (one && wide) narrowedRounds.incrementAndGet()
+      val nextSig = (m.getAs[Long]("n"), m.getAs[Long]("h"))
       done = sig.contains(nextSig)
       edges = next
+      n = nextSig._1
       sig = Some(nextSig)
       rounds += 1
     }
@@ -110,7 +140,20 @@ object GraphOps {
     p.select(explode(array(col("src"), col("dst"))).as("id"))
       .select(col("id"), col("id").as("label"))
       .union(edges.select(col("src").as("id"), col("dst").as("label")))
+      .transform(u => if (fitsOne(2 * inputEdges + n)) u.coalesce(1) else u)
       .groupBy("id").agg(min("label").as("label"))
+  }
+
+  /** `e` eagerly checkpointed, with `metrics` observed on the checkpoint's
+    * own job and read through [[observedRow]] (fallback: the same
+    * aggregates over the checkpointed rows).
+    */
+  private def checkpointObserved(e: DataFrame, name: String,
+                                 metrics: org.apache.spark.sql.Column*)
+      : (DataFrame, org.apache.spark.sql.Row) = {
+    val obs = org.apache.spark.sql.Observation(name)
+    val out = e.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint(true)
+    (out, observedRow(obs.future, out.agg(metrics.head, metrics.tail: _*).head()))
   }
 
   /** Per-node window over an edge list keyed by `src`: each edge row gets
@@ -121,10 +164,13 @@ object GraphOps {
 
   /** Large-star: every node attaches its strictly-larger neighbours to the
     * minimum of its closed neighbourhood. One exchange, hash partitioned
-    * on `src`.
+    * on `src`; none when `one`, which coalesces the symmetrised list to
+    * one partition — that partition holds every key, and smallStar's
+    * window and distinct above inherit it, so the round plans no exchange.
     */
-  private def largeStar(edges: DataFrame): DataFrame = {
-    val sym = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
+  private def largeStar(edges: DataFrame, one: Boolean): DataFrame = {
+    val union = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val sym = if (one) union.coalesce(1) else union
     // round-18 fusion: no intermediate dedup — every round ends in
     // smallStar's distinct(), whose output SET (and thus the convergence
     // signature and the final star map) is identical with or without it:
@@ -144,7 +190,8 @@ object GraphOps {
   /** Small-star: every node attaches its smaller-or-equal neighbours (and
     * itself) to the minimum among them. Edges are first oriented
     * large→small so each undirected edge is processed at its larger
-    * endpoint. Two exchanges: the window on `src`, then the distinct.
+    * endpoint. Two exchanges: the window on `src`, then the distinct;
+    * none over one partition.
     */
   private def smallStar(edges: DataFrame): DataFrame = {
     val oriented = edges.select(

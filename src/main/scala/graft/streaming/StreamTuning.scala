@@ -19,7 +19,8 @@ import org.apache.spark.sql.SparkSession
   * stream-stream joins at ~8.7 s against 142 total state rows.
   *
   * [[statePartitions]] derives the partition count from the INPUT SIZE
-  * (one state partition per ~16 MB of replayed input, floor 4), capped at
+  * (one state partition per ~16 MB of replayed input, floor 4, through
+  * [[graft.core.ShuffleWidth.forTarget]]), capped at
   * the session's configured shuffle partitions so a production session —
   * where the conf is already sized to the cluster and the state volume —
   * is NEVER re-tuned upward or downward beyond its own setting: with
@@ -58,12 +59,8 @@ object StreamTuning {
       }
     }
 
-  private[streaming] def statePartitions(spark: SparkSession, bytes: Long): Int = {
-    val configured = spark.sessionState.conf.numShufflePartitions
-    // ceiling division that cannot overflow at bytes = Long.MaxValue
-    val derived = math.max(4L, (bytes - 1) / bytesPerPartition + 1)
-    math.min(configured.toLong, derived).toInt
-  }
+  private[streaming] def statePartitions(spark: SparkSession, bytes: Long): Int =
+    graft.core.ShuffleWidth.forTarget(spark, bytes, bytesPerPartition, 4)
 
   /** Run `body` (stream start + synchronous drain, usually one
     * [[StreamMeter.toMemory]] call) over `t`'s fixture with

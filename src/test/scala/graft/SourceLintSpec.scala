@@ -21,7 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * busy-hour and session windows, the per-language quality inputs, the
   * adaptive sign bits, the md5 split bucket) is written once, as a named
   * fragment in `SparkEntry`. Parquet footers are opened by one sweep and
-  * their statistics decoded by one loop, in `ParquetStats`.
+  * their statistics decoded by one loop, in `ParquetStats`. The
+  * `defaultParallelism` width sites stay at their pinned count: new
+  * shuffle widths come from `core.ShuffleWidth`.
   */
 class SourceLintSpec extends AnyFunSuite {
   import scala.jdk.CollectionConverters._
@@ -169,6 +171,20 @@ class SourceLintSpec extends AnyFunSuite {
     val copies = fragments.map(frag => frag -> sites(frag))
       .filter(_._2 != Map("graft/SparkEntry.scala" -> 1))
     assert(copies.isEmpty, s"oracle derivations written more than once: $copies")
+  }
+
+  test("defaultParallelism call sites do not grow: new widths go through ShuffleWidth") {
+    // a ratchet: ROADMAP direction 2 moves these sites onto the one
+    // size-derived rule (core.ShuffleWidth, which reads defaultParallelism
+    // as AQE's coalescing does); a change that removes a site lowers the
+    // pin with it
+    val calls = for {
+      (file, text) <- sources if file != "graft/core/ShuffleWidth.scala"
+      (line, n) <- text.linesIterator.zipWithIndex
+      if !line.trim.startsWith("*") && !line.trim.startsWith("//")
+      if line.contains(".defaultParallelism")
+    } yield s"$file:${n + 1}"
+    assert(calls.size == 6, s"size new shuffles with core.ShuffleWidth: $calls")
   }
 
   test("parquet footers are opened and decoded in one sweep") {

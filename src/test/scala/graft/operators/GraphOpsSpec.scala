@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Connected components by star contraction, checked against a
   * driver-side union-find. The path graph is the adversarial case the
@@ -14,6 +15,101 @@ class GraphOpsSpec extends SparkTestBase {
   private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     df.select(col("id").cast("long"), col("label").cast("long"))
       .as[(Long, Long)].collect().toMap
+
+  /** Driver-side union-find over `pairs`: every id -> its component's
+    * minimum id. */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(x => x -> find(x)).toMap
+  }
+
+  /** A session on the shared context with `spark.sql.shuffle.partitions`
+    * set to `width`. */
+  private def sessionOfWidth(width: Int): org.apache.spark.sql.SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", width.toString)
+    s
+  }
+
+  /** (labels, widths of every shuffle executed, rounds counted in
+    * [[GraphOps.narrowedRounds]]) of connected components over `pairs` in
+    * session `s`. The wide-session test below proves the listener sees
+    * every CC execution, so an empty width list means no shuffle ran. */
+  private def ccShuffles(s: org.apache.spark.sql.SparkSession, pairs: Seq[(Long, Long)])
+      : (Map[Long, Long], Seq[Int], Long) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        Plans.collect(qe.executedPlan) { case e: ShuffleExchangeLike => e.numPartitions }
+          .foreach(widths.add)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val before = GraphOps.narrowedRounds.get()
+    s.listenerManager.register(listener)
+    // `observe` returns once the listener bus has delivered every event of
+    // `body`, the query-execution ends included (same shared queue)
+    var got = Map.empty[Long, Long]
+    try observe {
+      got = labelMap(GraphOps.connectedComponents(s.createDataFrame(pairs).toDF("a", "b")))
+    } finally s.listenerManager.unregister(listener)
+    (got, widths.asScala.toSeq, GraphOps.narrowedRounds.get() - before)
+  }
+
+  test("ShuffleWidth.forBytes: one partition per AQE target size, clamped to [1, configured]") {
+    import graft.core.ShuffleWidth.forBytes
+    import org.apache.spark.sql.internal.SQLConf
+    // parallelism-first off: the target is the advisory size
+    val s = sessionOfWidth(200)
+    s.conf.set(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST.key, "false")
+    val advisory = s.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    assert(forBytes(s, 0L) == 1)
+    assert(forBytes(s, advisory) == 1)
+    assert(forBytes(s, advisory + 1) == 2)
+    assert(forBytes(s, Long.MaxValue) == 200, "no overflow: the ceiling is the configured width")
+    assert(forBytes(sessionOfWidth(1), Long.MaxValue) == 1)
+    // default confs on 4 cores: AQE fills the cores down to minPartitionSize,
+    // so anything above it already takes more than one partition
+    val d = sessionOfWidth(200)
+    val minSize = d.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    assert(forBytes(d, minSize) == 1)
+    assert(forBytes(d, minSize + 1) == 2)
+    assert(forBytes(d, 4 * advisory) == 4)
+    assert(forBytes(d, Long.MaxValue) == 200)
+  }
+
+  test("connected components on a small graph run unshuffled at any session width") {
+    val pairs = (0L until 999L).map(i => (i, i + 1))
+    val (got, widths, narrowed) = ccShuffles(sessionOfWidth(200), pairs)
+    assert(got == unionFind(pairs))
+    assert(narrowed > 1, "every round of a 1,000-edge graph runs narrower than 200")
+    // width 1: one partition holds every key, so no round needs an exchange
+    assert(widths.isEmpty, s"shuffle widths: $widths")
+  }
+
+  test("connected components above one partition's size keep the planner's exchanges") {
+    val pairs = (0L until 999L).map(i => (i, i + 1))
+    val (_, _, rounds) = ccShuffles(sessionOfWidth(200), pairs)
+    // at a 1 KB minPartitionSize, a round of the 1,000-node path (~48 KB
+    // through its widest exchange) sizes above width 1
+    val s = sessionOfWidth(200)
+    s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1024")
+    val (got, widths, narrowed) = ccShuffles(s, pairs)
+    assert(got == unionFind(pairs))
+    assert(narrowed == 0)
+    assert(widths.size == 3 * rounds + 1 && widths.forall(_ == 200),
+      s"three exchanges per round plus the final per-id min, at the session's width: $widths")
+  }
 
   test("star contraction converges on a 1,000-node path graph in O(log n) rounds") {
     val path = (0L until 999L).map(i => (i, i + 1)).toDF("a", "b")
@@ -72,17 +168,7 @@ class GraphOpsSpec extends SparkTestBase {
       (5000L, 5000L))
     val pairs = cliques ++ chain ++ chain.map(_.swap) ++ extra
     val got = labelMap(GraphOps.connectedComponents(pairs.toDF("a", "b")))
-
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val expect = parent.keys.toSeq.map(x => x -> find(x)).toMap
+    val expect = unionFind(pairs)
     assert(expect.size == 20 * 4 + 99 + 1)
     assert(got == expect)
     assert(got(5000L) == 5000L, "a self-loop-only id is its own singleton")
