@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{GenerationCache, LocalSession, QueryProfile, Tables}
+import graft.core.{Ledger, LocalSession, QueryProfile, Tables}
 import graft.ml.PricePipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
@@ -27,7 +27,8 @@ import scala.util.control.NonFatal
   * Every row's runs are profiled by a [[QueryProfile]] registered on the
   * bench's own session: jobs, stages, tasks, task run/CPU/GC time,
   * shuffle, spill, scan bytes and driver gap, shipped per row for the
-  * reported run (`query_profile`). The same profile is the tilt signal:
+  * reported run (`query_profile`), and each run's [[Ledger]] delta, the
+  * decisions it took (`query_ledger`). The same profile is the tilt signal:
   * a row whose tasks spent most of their run time off the CPU was starved
   * of cores or disk by something else on the host, and is listed in
   * `sf01_row_trips` (suite rows) or `sf1_row_trips` (sf1 leg rows);
@@ -38,11 +39,10 @@ object Bench {
 
   /** One timed run of a row: wall seconds (-1 when the run failed),
     * process CPU as a percent of all cores, stop-the-world GC seconds,
-    * and the [[GenerationCache]] misses, i.e. the cached values the run
-    * had to build.
+    * and the [[Ledger]] tallies the run added.
     */
   private[graft] final case class Run(wall: Double, cpuPct: Double, gc: Double,
-                                      misses: Long)
+                                      ledger: Map[String, Long])
 
   private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
@@ -67,19 +67,19 @@ object Bench {
     */
   private[graft] def timeRun(profile: QueryProfile, name: String, run: Int)
                             (body: => Unit): Run = {
-    val m0 = GenerationCache.misses.get()
+    val l0 = Ledger.snapshot()
     val g0 = gcTotalSec()
     val c0 = osBean.getProcessCpuTime
     val t0 = System.nanoTime()
     try profile.timed(name, run)(body)
     catch { case NonFatal(e) =>
       System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      return Run(-1.0, -1.0, -1.0, GenerationCache.misses.get() - m0)
+      return Run(-1.0, -1.0, -1.0, Ledger.delta(l0))
     }
     val wall = (System.nanoTime() - t0) / 1e9
     val cpu = (osBean.getProcessCpuTime - c0) / 1e9
     Run(wall, 100.0 * cpu / (wall * Runtime.getRuntime.availableProcessors()),
-      gcTotalSec() - g0, GenerationCache.misses.get() - m0)
+      gcTotalSec() - g0, Ledger.delta(l0))
   }
 
   /** The reported run of a row: the faster of its two, numbered 1 or 2;
@@ -178,11 +178,8 @@ object Bench {
   private def runSuite(spark: SparkSession, sfDir: String,
                        only: Option[Set[String]], suite: Suite)
       : (Seq[(String, Double)], Seq[(String, Double)], Double) = {
-    // the warm-ups fed these registries; the artifact reports the suite's
-    PricePipeline.resetModelFitWalls()
+    // the warm-ups fed the stream meters; the artifact reports the suite's
     graft.streaming.StreamMeter.reset()
-    graft.operators.GraphOps.observedFallbacks.set(0L)
-    graft.operators.GraphOps.narrowedRounds.set(0L)
     val cpuT0 = osBean.getProcessCpuTime
     val wallT0 = System.nanoTime()
     def runs(name: String): Boolean = only.forall(_(name))
@@ -314,7 +311,8 @@ object Bench {
     * (30.3 → 33.5 → 44.8 s across calibration-green captures for the
     * 9-model table). Tagged like `ceiling_rows` so the cross-round
     * comparison rule can exclude fit variance explicitly; the per-model
-    * breakdown ships in `ml_model_fit_secs` for attribution.
+    * fit walls ship per run in `query_ledger` (`ml.fit_ms.<model>`) for
+    * attribution.
     */
   private val varianceRows = Set("ml_price_metrics_full")
 
@@ -493,14 +491,10 @@ object Bench {
       json(rs.map { case (n, (a, b)) => n.stripPrefix("sf1:") -> s"[${r3(a.wall)},${r3(b.wall)}]" })
     def perRow(f: (Run, Int) => Any): String =
       json(rows.map { case (n, runs) => n -> reported(runs).fold[Any](-1.0)(r => f(r._1, r._2)) })
-    // per-model fit walls (item 5): the registry is keyed by (model,
-    // pool size) so the 3-model gate can't blend into the 9-model row's
-    // breakdown; the artifact ships the LARGEST pool that ran (the
-    // ml_price_metrics_full attribution this field exists for)
-    val mlWallsAll = PricePipeline.modelFitWalls.toSeq
-    val mlPool = if (mlWallsAll.isEmpty) 0 else mlWallsAll.map(_._1._2).max
-    val mlWallsJson = json(mlWallsAll.filter(_._1._2 == mlPool)
-      .map { case ((m, _), v) => m -> v }.sortBy(_._1))
+    // per row, each ledger key either run moved: {key: [run 1, run 2]}
+    val ledgerJson = json(rows.collect { case (n, (a, b)) if (a.ledger ++ b.ledger).nonEmpty =>
+      n -> json((a.ledger.keySet ++ b.ledger.keySet).toSeq.sorted.map(k =>
+        k -> s"[${a.ledger.getOrElse(k, 0L)},${b.ledger.getOrElse(k, 0L)}]")) })
     val streamMeterJson = json(graft.streaming.StreamMeter.snapshot.toSeq.sortBy(_._1)
       .map { case (k, m) =>
         k -> s"""{"batches":${m.batches},"data_batches":${m.dataBatches},"state_rows":${m.stateRows},"capped":${m.capped},"input_rows":${m.inputRows},"state_partitions":${m.statePartitions}}""" })
@@ -508,10 +502,10 @@ object Bench {
     val cpuPctR = math.round(cpuPct * 10) / 10.0
     // Two JSON lines, for readers that keep only a ~2 KB tail of stdout:
     //  - line 1 (archival, for bench_runs/): the full record, every row's
-    //    seconds, CPU, GC, profile and cache misses; too long for the tail.
+    //    seconds, CPU, GC, profile and ledger; too long for the tail.
     //  - line 2 (final, the one parsed): suite total, the headline rows, and
     //    the trips and raw runs of those rows only — it fits the tail.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","input_bytes":$sfBytes,"cpu_percent":$cpuPctR,$hostDegradedJson,"sf1_row_trips":${names(sf1Trips)},"sf01_row_trips":${names(sf01Trips)},"overhead_floor":$overheadFloor,"trimmed_total":$trimmedTotal,"ceiling_rows":${names(results.map(_._1).filter(ceilingRows).sorted)},"variance_rows":${names(results.map(_._1).filter(varianceRows).sorted)},"workload":$workload,"workload_sf1":$workloadSf1,"ml_model_fit_secs":$mlWallsJson,"streaming_meter":$streamMeterJson,"graph_observed_fallbacks":${graft.operators.GraphOps.observedFallbacks.get},"graph_cc_narrowed_rounds":${graft.operators.GraphOps.narrowedRounds.get},"query_cpu_percent":${perRow((r, _) => math.round(r.cpuPct * 10) / 10.0)},"query_gc_sec":${perRow((r, _) => r3(r.gc))},"query_first_run_s":${json(rows.map { case (n, (a, _)) => n -> r3(a.wall) })},"query_cache_misses":${json(rows.map { case (n, (a, b)) => n -> s"[${a.misses},${b.misses}]" })},"query_profile":${json(rows.flatMap(r => profileOf(r, profiles).map(r._1 -> _.json)))},"runs_per_query":2,"aggregation":"min","probe_benched":${names(probeBenched)},"failed_queries":$failedJson,"queries_sf1":${json(sf1Results)},"queries_sf1_runs":${runsJson(sf1Rows)},"queries":${json(results)}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","input_bytes":$sfBytes,"cpu_percent":$cpuPctR,$hostDegradedJson,"sf1_row_trips":${names(sf1Trips)},"sf01_row_trips":${names(sf01Trips)},"overhead_floor":$overheadFloor,"trimmed_total":$trimmedTotal,"ceiling_rows":${names(results.map(_._1).filter(ceilingRows).sorted)},"variance_rows":${names(results.map(_._1).filter(varianceRows).sorted)},"workload":$workload,"workload_sf1":$workloadSf1,"streaming_meter":$streamMeterJson,"query_cpu_percent":${perRow((r, _) => math.round(r.cpuPct * 10) / 10.0)},"query_gc_sec":${perRow((r, _) => r3(r.gc))},"query_first_run_s":${json(rows.map { case (n, (a, _)) => n -> r3(a.wall) })},"query_profile":${json(rows.flatMap(r => profileOf(r, profiles).map(r._1 -> _.json)))},"query_ledger":$ledgerJson,"runs_per_query":2,"aggregation":"min","probe_benched":${names(probeBenched)},"failed_queries":$failedJson,"queries_sf1":${json(sf1Results)},"queries_sf1_runs":${runsJson(sf1Rows)},"queries":${json(results)}}""")
     val headQs = json(headline.flatMap(k => resultMap.get(k).map(v => k -> r3(v))))
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","input_bytes":$sfBytes,"cpu_percent":$cpuPctR,$hostDegradedJson,"sf1_row_trips":${names(sf1Trips)},"sf01_row_trips":${names(sf01Trips.filter(headline.contains))},"overhead_floor":$overheadFloor,"trimmed_total":$trimmedTotal,"workload":$workload,"fixture_digest_sf1":"$sf1Digest","n_queries":${results.size},"runs_per_query":2,"aggregation":"min","failed_queries":$failedJson,"queries_sf1":${json(sf1Results.map { case (k, v) => k -> r3(v) })},"queries_sf1_runs":${runsJson(sf1Rows.filter(r => sf1Trips.contains(r._1.stripPrefix("sf1:"))))},"queries":$headQs}""")
   }

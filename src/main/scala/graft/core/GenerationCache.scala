@@ -17,7 +17,9 @@ package graft.core
   *  - a value computed while the fixture changed is returned but not
   *    cached — it was derived from files the regeneration replaced;
   *  - when two threads compute one key, the losing value is evicted and
-  *    the winner returned.
+  *    the winner returned;
+  *  - every lookup that computes adds one `generation_cache.miss` to the
+  *    [[Ledger]], so a span's delta counts what the span built.
   *
   * `fixtureOf` names the fixture under `dir` that a key derives from;
   * most caches derive from one fixture for every key.
@@ -34,7 +36,7 @@ final class GenerationCache[K, V](fixtureOf: K => String, evict: V => Unit) {
     entries.get(k) match {
       case Some(v) => v
       case None =>
-        GenerationCache.misses.incrementAndGet()
+        Ledger.add("generation_cache.miss")
         val v = compute
         if (Tables.fixtureStamp(s"$dir/$fixture") != stamp) v
         else entries.putIfAbsent(k, v) match {
@@ -53,11 +55,6 @@ final class GenerationCache[K, V](fixtureOf: K => String, evict: V => Unit) {
 }
 
 object GenerationCache {
-  /** Lookups that had to compute their value, over every cache in the
-    * process: a delta across a timed span counts what the span built.
-    */
-  val misses = new java.util.concurrent.atomic.AtomicLong()
-
   /** Values derived from `dir/<fixture>`; eviction just drops them. */
   def apply[K, V](fixture: String): GenerationCache[K, V] =
     new GenerationCache[K, V](_ => fixture, _ => ())

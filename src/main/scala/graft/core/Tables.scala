@@ -99,10 +99,12 @@ final case class Tables(spark: SparkSession, dir: String) {
     * "assume parallel", so [[balancedByKey]] never adds an exchange on a
     * layout it didn't actually measure (round-18 advice; 0 would have
     * made the condition fire unconditionally). Either fallback warns on
-    * stderr with the path.
+    * stderr with the path and adds `tables.scan_units_fallback` to the
+    * [[Ledger]], once per table generation.
     */
   private def rowGroups(name: String): Int = {
     def assumeParallel(why: String): Int = {
+      Ledger.add("tables.scan_units_fallback")
       System.err.println(s"[graft] Tables.scanUnits: ${path(name)} $why; " +
         "assuming a parallel layout")
       Int.MaxValue
@@ -143,7 +145,8 @@ final case class Tables(spark: SparkSession, dir: String) {
     * false and NO exchange is added, so this never ships corpus bytes
     * through an extra shuffle at scale: the decision derives from the
     * input layout, not a constant tuned for either local mode or a
-    * cluster.
+    * cluster. Each call adds `tables.rebalance.fired` or
+    * `tables.rebalance.kept` to the [[Ledger]].
     */
   private def balancedByKey(df: DataFrame, name: String, key: String): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
@@ -152,8 +155,8 @@ final case class Tables(spark: SparkSession, dir: String) {
     // corpus right back to one post-shuffle partition — exactly the
     // bottleneck this exchange exists to break. An explicit count is
     // user-specified partitioning, which AQE leaves alone.
-    if (scanUnits(name) >= par) df
-    else df.repartition(par, col(key))
+    if (scanUnits(name) >= par) { Ledger.add("tables.rebalance.kept"); df }
+    else { Ledger.add("tables.rebalance.fired"); df.repartition(par, col(key)) }
   }
 
   /** [[documents]] with scan parallelism restored for per-row-HEAVY

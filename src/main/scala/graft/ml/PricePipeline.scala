@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.core.Tables
+import graft.core.{Ledger, Tables}
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
 import org.apache.spark.ml.regression._
@@ -145,34 +145,12 @@ object PricePipeline {
     (name, m.r2, m.r2, m.meanSquaredError, m.rootMeanSquaredError, m.meanAbsoluteError)
   }
 
-  /** Per-model fit+eval wall seconds from [[metricsTable]] loops —
-    * min-aggregated since the last [[resetModelFitWalls]] (round-14
-    * verdict item 5: `ml_price_metrics_full` is the suite's largest and
-    * noisiest row, and it is NINE fits; the artifact needs the breakdown
-    * to attribute a cross-round move to a model instead of to "ML fit
-    * variance" at row granularity). These are IN-POOL walls — the loop
-    * interleaves 3 fits, so each wall includes scheduler contention from
-    * its neighbors; they attribute movement (which model, roughly how
-    * much) rather than stating isolated cost. Min across runs matches
-    * the suite's min-of-2 row aggregation. Keyed by (model, POOL SIZE):
-    * the 3-model and 9-model gates interleave differently, so a
-    * name-only min would blend a model's lighter 3-pool wall into the
-    * 9-pool breakdown and the full row's walls would stop reconciling
-    * with its total (round-15 review finding).
-    */
-  val modelFitWalls =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Double]
-  def resetModelFitWalls(): Unit = modelFitWalls.clear()
-  private def recordFitWall(name: String, poolSize: Int, sec: Double): Unit = {
-    val rounded = math.round(sec * 1000) / 1000.0
-    modelFitWalls.updateWith((name, poolSize)) {
-      case Some(prev) => Some(math.min(prev, rounded))
-      case None => Some(rounded)
-    }
-  }
-
   /** Run a subset of models end-to-end → metrics table with the reference's
-    * comparison-table shape (`price-prediction.py:503-527`).
+    * comparison-table shape (`price-prediction.py:503-527`). Each fit adds
+    * its fit+eval wall to the [[Ledger]] as `ml.fit_ms.<model>`,
+    * so a move of the 9-model row is attributed to a model. The walls are
+    * in-pool: the loop interleaves 3 fits, so each includes its
+    * neighbours' contention.
     */
   def metricsTable(t: Tables, modelNames: Seq[String]): DataFrame = {
     val spark = t.spark
@@ -242,12 +220,13 @@ object PricePipeline {
                   val par = sc.defaultParallelism
                   val regrain = n == "FMRegressor" &&
                     train.rdd.getNumPartitions < par
+                  if (regrain) Ledger.add("ml.fm_regrain")
                   val fitTrain =
                     if (regrain) train.repartition(par).persist() else train
                   val row =
                     try fitEval(n, r, fitTrain, test)
                     finally if (regrain) { fitTrain.unpersist(); () }
-                  recordFitWall(n, selected.length, (System.nanoTime() - t0) / 1e9)
+                  Ledger.add(s"ml.fit_ms.$n", (System.nanoTime() - t0) / 1000000)
                   row
                 } finally sc.setLocalProperty("spark.scheduler.pool", null)
               }

@@ -11,14 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Process-wide count of [[observedRow]] fallbacks — the observable
-    * face of a degraded convergence-scalar read. */
-  private[graft] val observedFallbacks = new java.util.concurrent.atomic.AtomicLong
-
-  /** Process-wide count of [[connectedComponents]] rounds whose shuffles
-    * ran narrower than the session's configured width. */
-  private[graft] val narrowedRounds = new java.util.concurrent.atomic.AtomicLong
-
   /** The observed metrics row, with the wait BOUNDED (round-18 advice):
     * `Observation.get` blocks on the listener bus delivering the metrics
     * event, so a dropped event (bus overload) would hang the driver where
@@ -27,7 +19,8 @@ object GraphOps {
     * explicit aggregate over the already-checkpointed frame, whose lineage
     * is truncated, so the fallback is one cheap job over materialized rows
     * and is value-identical (same aggregates over the same rows). Every
-    * fallback warns on stderr and bumps [[observedFallbacks]].
+    * fallback warns on stderr and adds `graph.observed_fallback` to the
+    * [[graft.core.Ledger]].
     */
   private[operators] def observedRow(
       observed: scala.concurrent.Future[org.apache.spark.sql.Row],
@@ -37,7 +30,7 @@ object GraphOps {
       scala.concurrent.Await.result(observed, 60.seconds)
     } catch {
       case scala.util.control.NonFatal(e) =>
-        observedFallbacks.incrementAndGet()
+        graft.core.Ledger.add("graph.observed_fallback")
         System.err.println(s"[graft] GraphOps: observed metrics unavailable " +
           s"($e); recomputing the convergence scalar with an explicit aggregate")
         fallback
@@ -80,8 +73,8 @@ object GraphOps {
     * no exchange, where the planner's exchanges would have one map task
     * write the session's configured width of partition files. The final
     * per-`id` min does the same on its own row count. Larger rounds keep
-    * the planner's exchanges. Rounds that ran narrower than the
-    * configured width are counted in [[narrowedRounds]].
+    * the planner's exchanges. Each round that ran narrower than the
+    * configured width adds `graph.cc_narrowed_round` to the ledger.
     */
   def connectedComponents(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
@@ -125,7 +118,7 @@ object GraphOps {
       val one = fitsOne(2 * n)
       val (next, m) = checkpointObserved(smallStar(largeStar(edges, one)),
         s"graft_cc_sig_${rounds + 1}", nExpr, hExpr)
-      if (one && wide) narrowedRounds.incrementAndGet()
+      if (one && wide) graft.core.Ledger.add("graph.cc_narrowed_round")
       val nextSig = (m.getAs[Long]("n"), m.getAs[Long]("h"))
       done = sig.contains(nextSig)
       edges = next

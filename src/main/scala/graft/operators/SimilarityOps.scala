@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{GenerationCache, Tables}
+import graft.core.{GenerationCache, Ledger, Tables}
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.DataFrame
 import graft.functions.NumericFunctions.{decAvg, roundN}
@@ -385,10 +385,9 @@ object SimilarityOps {
     * per-pass cost the round-14 AssignBench advice flagged). Centroids
     * are FROZEN between rebuilds by the append contract, and a rebuild
     * rewrites the centroids dir, which moves the generation stamp and
-    * evicts the stale table.
+    * evicts the stale table. Each build adds its route to the ledger:
+    * `ivf.ingest_table.flat` or `ivf.ingest_table.two_level`.
     */
-  private[operators] val ingestPlanBuilds =
-    new java.util.concurrent.atomic.AtomicLong(0L)
   private val ingestAssignPlans =
     GenerationCache[Unit, graft.plans.IvfCentroidTable]("centroids")
   private def ingestTableFor(spark: org.apache.spark.sql.SparkSession,
@@ -401,9 +400,10 @@ object SimilarityOps {
     ingestAssignPlans.evictWhere((dir, _) =>
       !java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir)))
     ingestAssignPlans(path, ()) {
-      ingestPlanBuilds.incrementAndGet()
       val cents = readCentroids(spark, path)
-      if (cents.length >= ingestHierCells) twoLevelTable(cents, ingestPcoarse)
+      val twoLevel = cents.length >= ingestHierCells
+      Ledger.add(if (twoLevel) "ivf.ingest_table.two_level" else "ivf.ingest_table.flat")
+      if (twoLevel) twoLevelTable(cents, ingestPcoarse)
       else graft.plans.IvfCentroidTable.fromFlat(cents)
     }
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.Tables
+import graft.core.{Ledger, Tables}
 import org.apache.spark.sql.SparkSession
 
 /** Scale-adaptive shuffle/state partitioning for the bounded streaming
@@ -40,7 +40,8 @@ object StreamTuning {
     * events fixture — the replay volume the partition count is derived
     * from (every stateful gate replays `events`). A path that cannot be
     * walked reads as `Long.MaxValue`, so the configured partition count
-    * is used; that fallback warns on stderr with the path.
+    * is used; that fallback warns on stderr with the path and adds
+    * `stream_tuning.size_fallback` to the [[Ledger]].
     */
   private val bytesCache = graft.core.GenerationCache[Unit, Long]("events.parquet")
 
@@ -53,6 +54,7 @@ object StreamTuning {
           .mapToLong(java.nio.file.Files.size(_)).sum()
         finally stream.close()
       } catch { case scala.util.control.NonFatal(e) =>
+        Ledger.add("stream_tuning.size_fallback")
         System.err.println(s"[graft] StreamTuning: cannot size $path " +
           s"($e); using the configured shuffle partitions")
         Long.MaxValue

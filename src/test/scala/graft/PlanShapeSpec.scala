@@ -247,9 +247,11 @@ class PlanShapeSpec extends SparkTestBase {
       val tt = graft.core.Tables(spark, dir)
       assert(tt.scanUnits("documents") >= par,
         "fixture setup: expected one row group per core")
+      val before = graft.core.Ledger.snapshot()
       val p = plan(tt.documentsBalanced)
       assert(!p.contains("Exchange"),
         s"balancedByKey added an exchange on a >=cores layout:\n$p")
+      assert(graft.core.Ledger.delta(before) == Map("tables.rebalance.kept" -> 1L))
     } finally graft.core.Tables.deleteRecursively(dir)
   }
 
@@ -263,7 +265,9 @@ class PlanShapeSpec extends SparkTestBase {
     val par = spark.sparkContext.defaultParallelism
     assert(t.scanUnits("documents") < par,
       "fixture expectation: sf0.001 documents ships fewer row groups than cores")
+    val before = graft.core.Ledger.snapshot()
     val balanced = t.documentsBalanced
+    assert(graft.core.Ledger.delta(before) == Map("tables.rebalance.fired" -> 1L))
     assert(plan(balanced).contains("REPARTITION_BY_NUM"),
       "rebalance must request an explicit, AQE-stable partition count")
     assert(balanced.rdd.getNumPartitions == par,

@@ -23,7 +23,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * fragment in `SparkEntry`. Parquet footers are opened by one sweep and
   * their statistics decoded by one loop, in `ParquetStats`. The
   * `defaultParallelism` width sites stay at their pinned count: new
-  * shuffle widths come from `core.ShuffleWidth`.
+  * shuffle widths come from `core.ShuffleWidth`. Every counted decision
+  * is a `core.Ledger` tally, and `Bench` reads no other object's counter.
   */
 class SourceLintSpec extends AnyFunSuite {
   import scala.jdk.CollectionConverters._
@@ -199,5 +200,22 @@ class SourceLintSpec extends AnyFunSuite {
     assert(sites("ParquetFileReader.open") ==
       Map(stats -> 1, "graft/core/Tables.scala" -> 1),
       "ParquetFileReader.open belongs to openFooterReader and Tables.rowGroups")
+  }
+
+  test("counted decisions go through core.Ledger, and Bench reads no other counter") {
+    // AtomicLong is left to the four id sequences that name memory sinks,
+    // upsert calls, layout writes and bucketed tables; a new counter is
+    // one Ledger.add line, which Bench ships per run as query_ledger
+    assert(sites("AtomicLong") == Map(
+      "graft/core/Ledger.scala" -> 3,
+      "graft/streaming/StreamMeter.scala" -> 1,
+      "graft/streaming/EventStream.scala" -> 1,
+      "graft/operators/LayoutOps.scala" -> 1,
+      "graft/sources/BucketedTables.scala" -> 1),
+      "count a decision with core.Ledger.add")
+    val bench = sources.toMap.apply("graft/Bench.scala")
+    val read = Seq("GraphOps.", "GenerationCache.misses", "PricePipeline.modelFitWalls")
+      .filter(bench.contains)
+    assert(read.isEmpty, s"Bench reads counters outside the ledger: $read")
   }
 }

@@ -509,7 +509,19 @@ class TextMlMultimodalSpec extends SparkTestBase {
   }
 
   test("all nine reference regressor configs fit and evaluate") {
+    val before = graft.core.Ledger.snapshot()
+    val t0 = System.nanoTime()
     val rows = PricePipeline.fullMetrics(t).collect()
+    val wallMs = (System.nanoTime() - t0) / 1000000
+    val ledger = graft.core.Ledger.delta(before)
+    // the shared frame's 2 partitions are below the session's 4 cores
+    assert(ledger.get("ml.fm_regrain").contains(1L), s"FM re-grain not counted: $ledger")
+    val fitMs = ledger.collect { case (k, v) if k.startsWith("ml.fit_ms.") =>
+      k.stripPrefix("ml.fit_ms.") -> v }
+    assert(fitMs.keySet == PricePipeline.regressors.map(_._1).toSet,
+      s"one ml.fit_ms key per model: $ledger")
+    assert(fitMs.values.forall(_ <= wallMs),
+      s"a fit's wall within the table's $wallMs ms: $fitMs")
     assert(rows.length == 9)
     assert(rows.map(_.getString(0)).toSet == PricePipeline.regressors.map(_._1).toSet)
     rows.foreach { r =>

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * rule [[Bench]] reads from it: the profile of a known plan is pinned,
   * sleeping tasks read off-CPU and busy ones do not, the rule is strict at
   * both constants, failed rows never trip, and `host_degraded` sums task
-  * time over rows. Also the per-run [[GenerationCache]] misses Bench ships
-  * beside each row.
+  * time over rows. Also the per-run [[Ledger]] delta Bench ships beside
+  * each row.
   */
 class QueryProfileSpec extends SparkTestBase {
   import QueryProfile.{Profile, maxOffCpuShare, minTaskRunS, offCpuShare}
@@ -26,8 +26,8 @@ class QueryProfileSpec extends SparkTestBase {
   private def prof(run: Double, cpu: Double, gc: Double = 0.0): Profile =
     Profile(1, 1, 1, run, run, cpu, gc, 0L, 0L, 0.0, 0L, 0L, 0.0)
 
-  private def ok(wall: Double) = Bench.Run(wall, 50.0, 0.0, 0L)
-  private val failed = Bench.Run(-1.0, -1.0, -1.0, 0L)
+  private def ok(wall: Double) = Bench.Run(wall, 50.0, 0.0, Map.empty)
+  private val failed = Bench.Run(-1.0, -1.0, -1.0, Map.empty)
 
   test("a 4-slice range through a groupBy into the noop sink has a pinned profile") {
     val p = profileOf {
@@ -128,11 +128,25 @@ class QueryProfileSpec extends SparkTestBase {
     val profile = new QueryProfile
     def row(n: String) = SparkEntry.queries(n)(spark, dir)
       .write.format("noop").mode("overwrite").save()
-    def misses(n: String) = (1 to 2).map(run => Bench.timeRun(profile, n, run)(row(n)).misses)
+    def misses(n: String) = (1 to 2).map(run =>
+      Bench.timeRun(profile, n, run)(row(n)).ledger.getOrElse("generation_cache.miss", 0L))
     val bpe = misses("text_bpe_merges")
     assert(bpe(0) >= 1 && bpe(1) == 0, s"text_bpe_merges misses $bpe")
     // opening a table caches its schema once per fixture: open it first
     row("q1_group_count_avg")
     assert(misses("q1_group_count_avg") == Seq(0L, 0L))
+  }
+
+  test("a tally added on a pool thread inside the span counts in that run") {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val run = Bench.timeRun(new QueryProfile, "pooled", 1) {
+        (1 to 2).map(_ => pool.submit(new Runnable {
+          def run(): Unit = Ledger.add("spec.pooled", 3L)
+        })).foreach(_.get())
+      }
+      assert(run.ledger == Map("spec.pooled" -> 6L))
+      assert(Bench.timeRun(new QueryProfile, "pooled", 2)(()).ledger.isEmpty)
+    } finally pool.shutdown()
   }
 }

@@ -27,11 +27,13 @@ class TablesSpec extends SparkTestBase {
     val hive = Tables(spark, dir)
     val err = new java.io.ByteArrayOutputStream()
     val saved = System.err
+    val before = Ledger.snapshot()
     System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
     val units =
       try hive.scanUnits("documents")
       finally System.setErr(saved)
     assert(units == Int.MaxValue)
+    assert(Ledger.delta(before).get("tables.scan_units_fallback").contains(1L))
     assert(err.toString("UTF-8").linesIterator.exists(l =>
       l.contains("Tables.scanUnits") && l.contains(s"$dir/documents.parquet")),
       s"no scanUnits warning naming the path in: $err")

@@ -39,8 +39,8 @@ class GraphOpsSpec extends SparkTestBase {
     s
   }
 
-  /** (labels, widths of every shuffle executed, rounds counted in
-    * [[GraphOps.narrowedRounds]]) of connected components over `pairs` in
+  /** (labels, widths of every shuffle executed, rounds counted as
+    * `graph.cc_narrowed_round` in the ledger) of connected components over `pairs` in
     * session `s`. The wide-session test below proves the listener sees
     * every CC execution, so an empty width list means no shuffle ran. */
   private def ccShuffles(s: org.apache.spark.sql.SparkSession, pairs: Seq[(Long, Long)])
@@ -55,7 +55,7 @@ class GraphOpsSpec extends SparkTestBase {
           .foreach(widths.add)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val before = GraphOps.narrowedRounds.get()
+    val before = graft.core.Ledger.snapshot()
     s.listenerManager.register(listener)
     // `observe` returns once the listener bus has delivered every event of
     // `body`, the query-execution ends included (same shared queue)
@@ -63,7 +63,8 @@ class GraphOpsSpec extends SparkTestBase {
     try observe {
       got = labelMap(GraphOps.connectedComponents(s.createDataFrame(pairs).toDF("a", "b")))
     } finally s.listenerManager.unregister(listener)
-    (got, widths.asScala.toSeq, GraphOps.narrowedRounds.get() - before)
+    (got, widths.asScala.toSeq,
+      graft.core.Ledger.delta(before).getOrElse("graph.cc_narrowed_round", 0L))
   }
 
   test("ShuffleWidth.forBytes: one partition per AQE target size, clamped to [1, configured]") {
@@ -140,7 +141,7 @@ class GraphOpsSpec extends SparkTestBase {
     val obs = org.apache.spark.sql.Observation("graft_spec_sig")
     val out = edges.observe(obs, nExpr, hExpr).localCheckpoint(true)
     val observed = GraphOps.observedRow(obs.future, fail("observation must deliver"))
-    val before = GraphOps.observedFallbacks.get()
+    val before = graft.core.Ledger.snapshot()
     val err = new java.io.ByteArrayOutputStream()
     val saved = System.err
     System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
@@ -150,7 +151,7 @@ class GraphOpsSpec extends SparkTestBase {
         out.agg(nExpr, hExpr).head())
       finally System.setErr(saved)
     assert(fellBack == observed, "fallback must be value-identical to the observation")
-    assert(GraphOps.observedFallbacks.get() == before + 1)
+    assert(graft.core.Ledger.delta(before) == Map("graph.observed_fallback" -> 1L))
     assert(err.toString("UTF-8").contains("bus dropped"))
   }
 

@@ -93,14 +93,17 @@ class IvfAppendRoutingSpec extends SparkTestBase {
     // without the per-generation cache every batch would re-read the
     // centroid parquet and re-run the driver Lloyd quantizer (~1 s at
     // 16384 cells per batch)
+    import graft.core.Ledger
+    def builds(before: Map[String, Long]) =
+      Ledger.delta(before).filter(_._1.startsWith("ivf.ingest_table."))
     val dir = writeCentroids(4096)
-    val before = SimilarityOps.ingestPlanBuilds.get()
+    val before = Ledger.snapshot()
     val a = cellsOf(SimilarityOps.ivfAssignForIngest(spark, dir, batch))
-    val mid = SimilarityOps.ingestPlanBuilds.get()
+    assert(builds(before) == Map("ivf.ingest_table.two_level" -> 1L),
+      "the first call at 4096 cells must build the two-level table")
+    val mid = Ledger.snapshot()
     val b = cellsOf(SimilarityOps.ivfAssignForIngest(spark, dir, batch))
-    val after = SimilarityOps.ingestPlanBuilds.get()
-    assert(mid == before + 1, "first call must build the plan")
-    assert(after == mid, "second call on the same generation must reuse it")
+    assert(builds(mid).isEmpty, "second call on the same generation must reuse it")
     assert(a == b)
     // a rewritten centroids dir (= index rebuild) moves the generation
     // stamp and rebuilds the plan instead of serving the stale table
@@ -110,9 +113,10 @@ class IvfAppendRoutingSpec extends SparkTestBase {
       .map(c => (c, (0 until dim).map(j => math.sin(c * 31 + j * 7) * 10.0)))
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+    val after = Ledger.snapshot()
     val df = SimilarityOps.ivfAssignForIngest(spark, dir, batch)
-    assert(SimilarityOps.ingestPlanBuilds.get() == after + 1,
-      "a regenerated centroids dir must rebuild the ingest plan")
+    assert(builds(after) == Map("ivf.ingest_table.flat" -> 1L),
+      "a regenerated 16-cell centroids dir must rebuild a flat ingest table")
     assert(planOf(df).contains("IvfCentroidTable(nlist=16, ncoarse=1, pcoarse=1)"),
       "the rebuilt 16-cell index must route to the flat table")
   }
